@@ -20,3 +20,9 @@ Spark-first:
 """
 
 __version__ = "0.1.0"
+
+# Every Python worker imports this package when it unpickles an engine
+# UDF, which is where the per-task zip re-read has to be cut.
+from . import zipimport_guard as _zipimport_guard  # noqa: E402
+
+_zipimport_guard.install()
