@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -29,9 +31,20 @@ def ensure_session_confs(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
 
 
-#: (path → StructType) parquet-footer memo — metadata only, see
-#: load_table. Keyed by full path so distinct SF dirs never collide.
+#: ((path, size, mtime_ns) → StructType) parquet-footer memo — metadata
+#: only, see load_table. The stat stamp makes a table rewritten under the
+#: same path miss the memo instead of keeping its old schema.
 _SCHEMA_CACHE: dict = {}
+
+
+def _schema_key(path: str):
+    """Memo key for ``path``, or None when it cannot be stat'ed (a remote
+    URI, or a missing path that Spark should report itself)."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    return (path, st.st_size, st.st_mtime_ns)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -52,14 +65,17 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     launches a footer-read job at PLAN-CONSTRUCTION time, so a query
     referencing N tables paid N driver jobs per invocation before any
     data moved. The cache holds metadata only (a StructType — never
-    rows), is per-process, and the first read each process still reads
-    the real footer, so a changed file is picked up by a fresh run."""
+    rows) and is per-process. It is keyed on the path's size and mtime,
+    so a table rewritten in place is re-read; a path that cannot be
+    stat'ed is never memoized."""
     ensure_session_confs(spark)
     path = f"{sf_dir}/{name}.parquet"
-    schema = _SCHEMA_CACHE.get(path)
+    key = _schema_key(path)
+    schema = _SCHEMA_CACHE.get(key) if key is not None else None
     if schema is None:
         df = spark.read.parquet(path)
-        _SCHEMA_CACHE[path] = df.schema
+        if key is not None:
+            _SCHEMA_CACHE[key] = df.schema
     else:
         df = spark.read.schema(schema).parquet(path)
     if name == "events":
@@ -114,8 +130,6 @@ def _env_choice(name: str, default: str, allowed: tuple[str, ...]) -> str:
     (ADVICE r16: ``SPARK_GRAFT_SPREAD=off`` silently kept the
     full-corpus repartition on the very deployment the knob exists to
     protect — fail loud instead)."""
-    import os
-
     v = os.environ.get(name, default)
     if v not in allowed:
         raise ValueError(

@@ -35,3 +35,22 @@ def test_loader_self_heals_plain_session(spark, sf_small, name):
     df = load_table(spark, sf_small, name)
     assert df.count() > 0
     assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+
+
+def test_schema_memo_sees_table_rewritten_in_place(spark, tmp_path):
+    """The footer-schema memo must not outlive the table it describes: a
+    table overwritten under the same path with an extra column is loaded
+    with the new schema, not the memoized old one."""
+    sf_dir = str(tmp_path)
+    path = f"{sf_dir}/region.parquet"
+    spark.createDataFrame([(1, "a")], "r_id int, r_name string").write.parquet(
+        path
+    )
+    assert load_table(spark, sf_dir, "region").columns == ["r_id", "r_name"]
+
+    spark.createDataFrame(
+        [(1, "a", "x")], "r_id int, r_name string, r_comment string"
+    ).write.mode("overwrite").parquet(path)
+    df = load_table(spark, sf_dir, "region")
+    assert df.columns == ["r_id", "r_name", "r_comment"]
+    assert df.collect()[0].r_comment == "x"
