@@ -29,12 +29,6 @@ from flink_cep_examples_spark.streaming.quality_stream import (  # noqa: F401
     nb_quality_score,
     train_nb_quality_model,
 )
-from flink_cep_examples_spark.streaming.keyed_process_tws import (  # noqa: F401
-    HAVE_TWS_RUNTIME,
-    ROCKSDB_PROVIDER,
-    billing_low_level_alerts_tws,
-    keyed_process_tws,
-)
 from flink_cep_examples_spark.streaming.sketch_stream import (  # noqa: F401
     cms_frequency_stream,
     hll_distinct_stream,

@@ -34,8 +34,9 @@ vectorized in Spark SQL before the shuffle, exactly as in batch.
 
 ``transformWithStateInPandas`` (Spark 4.x) could replace
 ``applyInPandasWithState`` here 1:1 (ValueState handles + native
-timers); we stay on the older API because it runs on the default HDFS
-state store without extra RocksDB configuration.
+timers). We stay on the older API because the newer one needs the
+``protobuf`` package at runtime, and a RocksDB state store; the older
+one runs on the default HDFS state store with no extra dependency.
 """
 
 from __future__ import annotations
