@@ -71,7 +71,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ensure_session_confs(spark)
     path = f"{sf_dir}/{name}.parquet"
     key = _schema_key(path)
-    schema = _SCHEMA_CACHE.get(key) if key is not None else None
+    schema = _SCHEMA_CACHE.get(key)
     if schema is None:
         df = spark.read.parquet(path)
         if key is not None:
