@@ -616,13 +616,15 @@ class AlternationSpec:
     alternative (SQL:2016 derivation order), then the alternative's
     own quantifier preference.
 
-    Scope (validated): ONE ROW PER MATCH, strategies SKIP PAST LAST
-    ROW / SKIP TO NEXT ROW / NO_SKIP, no timeout channel, no trailing
-    absence variables, no SUBSET/PERMUTE. Batch runs the lockstep
+    Scope (validated): ONE ROW PER MATCH (ALL ROWS for fixed-width
+    strict alternatives), strategies SKIP PAST LAST ROW / SKIP TO NEXT
+    ROW / NO_SKIP, no timeout channel, no trailing absence variables,
+    no SUBSET/PERMUTE inside an alternative. Batch runs the lockstep
     coordinator (or the compiled TO-NEXT closed form); streaming runs
     the same coordination core per key in the bucketed state store
-    (streaming/cep_stream.py::match_pattern_stream_alternation,
-    first/last/count/classifier measures).
+    (streaming/cep_stream.py::match_pattern_stream, the one stream
+    operator for both spec kinds; the same measures as a single
+    pattern).
     MEASURES live here (not on the alternatives): a measure over a
     variable the matched alternative lacks yields its ``default``
     (SQL:2016: unmatched variable → NULL); ``CLASSIFIER()``

@@ -1093,10 +1093,10 @@ def match_recognize(
         spec = spec.with_updates(**updates)
         if df.isStreaming:
             from flink_cep_examples_spark.streaming.cep_stream import (
-                match_pattern_stream_alternation,
+                match_pattern_stream,
             )
 
-            return match_pattern_stream_alternation(
+            return match_pattern_stream(
                 df, spec, watermark_delay=watermark_delay
             )
         from flink_cep_examples_spark.operators.fast_path import (
@@ -1131,12 +1131,12 @@ def match_recognize(
                 permute_to_alternation,
             )
             from flink_cep_examples_spark.streaming.cep_stream import (
-                match_pattern_stream_alternation,
+                match_pattern_stream,
             )
 
             if emit_timeouts:
                 raise ValueError("PERMUTE has no timeout channel")
-            return match_pattern_stream_alternation(
+            return match_pattern_stream(
                 df,
                 permute_to_alternation(spec),
                 watermark_delay=watermark_delay,

@@ -26,6 +26,22 @@ the Spark-idiomatic equivalent of Flink's CepOperator on a keyed stream
 - **side outputs**: match + timeout rows share one schema with a
   ``tag`` column (no OutputTag in Structured Streaming; SURVEY §2.3).
 
+One operator, :func:`match_pattern_stream`, serves both spec kinds — a
+single pattern (``PatternSpec``) and a top-level alternation
+(``AlternationSpec``, which PERMUTE compiles to) — as Flink's one
+CepOperator serves every pattern. Buffering, late drop, release and
+sort, navigation, measure emission, the reorder hold and state
+persistence are shared; only three things differ by kind (and with
+them the reorder hold's key, which an alternation widens to
+``(start, end, alternative)``):
+
+- per-key state: one ``NfaState`` (single) or one per alternative plus
+  the leftmost-derivation held completions (alternation);
+- the per-row step: ``Nfa.step`` (single) or
+  ``coordinate_alternation_row`` (alternation);
+- the watermark advance: a single pattern emits matches and timeouts;
+  an alternation resolves its held completions.
+
 State per key = (event buffer beyond the watermark) + (open partial
 matches within the ``within`` horizon) — both bounded by the
 watermark-delay / within horizons, so state size is O(events per key
@@ -53,7 +69,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from flink_cep_examples_spark.operators.cep_batch import output_schema
+from flink_cep_examples_spark.operators.cep_batch import (
+    all_rows_output_schema,
+    output_schema,
+)
 from flink_cep_examples_spark.operators.nfa import (
     Nfa,
     NfaState,
@@ -62,6 +81,8 @@ from flink_cep_examples_spark.operators.nfa import (
 )
 from flink_cep_examples_spark.plans.pattern import (
     AGG_FNS,
+    NILADIC_FNS,
+    AlternationSpec,
     PatternSpec,
     SKIP_PAST_LAST_EVENT,
 )
@@ -71,9 +92,27 @@ _PRED_PREFIX = "__cep_p_"
 _TS_COL = "__cep_ts_us"
 _BUCKET_COL = "__cep_bucket"
 
-#: state: one pickled blob per KEY-BUCKET =
-#: dict[key_tuple -> (buffer: list[row tuple], NfaState)]
+#: state: one pickled blob per KEY-BUCKET — a tuple holding a prefix of
+#: its kind's _STATE_FIELDS layout
 _STATE_SCHEMA = T.StructType([T.StructField("blob", T.BinaryType(), True)])
+
+#: per-kind layout of the state tuple, by spec type. A query stores
+#: the prefix its spec needs (``pending_out`` only with the reorder
+#: hold, ``nav_tails`` only with PREV/NEXT), and shorter prefixes are
+#: the legacy checkpoint shapes, so any of them restores: a single
+#: pattern's 2-tuple predates MATCH_NUMBER (round 5); an alternation's
+#: 2-tuple predates leftmost derivation and its 3-tuple MATCH_NUMBER.
+#: ``states`` maps key → NfaState (single) or key → list of NfaState,
+#: one per alternative; ``helds`` maps key → the alternation's
+#: leftmost held completions.
+_STATE_FIELDS = {
+    PatternSpec: (
+        "buffer", "states", "match_nos", "nav_tails", "pending_out"
+    ),
+    AlternationSpec: (
+        "buffer", "states", "helds", "match_nos", "nav_tails", "pending_out"
+    ),
+}
 
 
 # --- ALL ROWS capture accumulator (round 12, ADVICE r11 low) ----------
@@ -174,7 +213,9 @@ _NAV_SQL_KEYWORDS = {
 }
 
 
-def _compile_stream_nav(spec: PatternSpec, df_cols: list[str]) -> dict:
+def _compile_stream_nav(
+    spec: PatternSpec | AlternationSpec, df_cols: list[str]
+) -> dict:
     """Validate nav-referencing predicates against the Spark≡DuckDB
     token gate and plan the in-operator evaluation. Returns
     ``{"pred_idx": set, "needed": tuple, "max_prev": int,
@@ -396,7 +437,7 @@ def _nav_transform(
 
 def _prepare_stream(
     df: DataFrame,
-    spec: PatternSpec,
+    spec: PatternSpec | AlternationSpec,
     extra_cols: tuple[str, ...] = (),
     skip_pred_idx: frozenset[int] = frozenset(),
 ) -> DataFrame:
@@ -421,7 +462,7 @@ def _prepare_stream(
 
 def match_pattern_stream(
     df: DataFrame,
-    spec: PatternSpec,
+    spec: PatternSpec | AlternationSpec,
     watermark_delay: str = "6 minutes",
     n_buckets: int | None = None,
 ) -> DataFrame:
@@ -434,6 +475,16 @@ def match_pattern_stream(
     per-key 0-based match_seq + FINAL measures, one output row per
     consumed row of each completed match.
 
+    ``spec`` may also be a top-level PATTERN alternation
+    (:class:`AlternationSpec`, which PERMUTE compiles to): one
+    NfaState PER ALTERNATIVE per key rides the state store, released
+    rows feed every alternative in lockstep, and emission runs the same
+    union skip discipline as batch (operators/nfa.py::
+    coordinate_alternation_row — the shared core, so the two tiers
+    cannot drift). Its output has no ``tag`` column (alternation has no
+    timeout channel), as in batch; per-row cost is the sum of the
+    alternatives' live branches.
+
     Scale note (the 100 TB lever): state is grouped by a HASH BUCKET of
     the key, not by the key itself — ``applyInPandasWithState`` invokes
     Python and (un)pickles state once per group per micro-batch, so
@@ -444,14 +495,10 @@ def match_pattern_stream(
     ``n_buckets`` defaults to 4× ``spark.sql.shuffle.partitions`` —
     enough groups to spread across state-store tasks, few enough that
     Arrow/pickle overhead amortizes."""
+    alt = isinstance(spec, AlternationSpec)
     spec.validate()
-    unsupported = {
-        m.fn
-        for m in spec.measures
-        if m.fn
-        not in ("first", "last", "count", "classifier", "match_number")
-        + AGG_FNS
-    }
+    allowed = ("first", "last", "count", *NILADIC_FNS, *AGG_FNS)
+    unsupported = {m.fn for m in spec.measures if m.fn not in allowed}
     if unsupported:
         # CLASSIFIER() reads the match's own span ordinals;
         # MATCH_NUMBER() (round 5) is a per-key monotone counter in
@@ -464,9 +511,14 @@ def match_pattern_stream(
         # matched-row retention. SUBSET unions (round 11) merge the
         # component spans at emission, the batch _resolve_spans rule.
         raise NotImplementedError(
-            f"streaming measures support first/last/count/classifier/"
-            f"match_number/{'/'.join(AGG_FNS)}, got {sorted(unsupported)}"
+            f"streaming measures support {'/'.join(allowed)}, "
+            f"got {sorted(unsupported)}"
         )
+    # PREV/NEXT navigation (round 13): in-operator nav columns + token-
+    # gated DuckDB predicate evaluation (_nav_transform); under
+    # alternation the holdback clock cap applies to EVERY alternative's
+    # advance (lockstep is preserved — advance_time never touches row
+    # ordinals)
     nav_conf = (
         _compile_stream_nav(spec, df.columns) if spec.nav_cols else None
     )
@@ -481,33 +533,31 @@ def match_pattern_stream(
                 "in-operator via duckdb, which is not importable: "
                 f"{ex}; use the batch operator inside foreachBatch"
             ) from ex
-    # batch renumbers longest-derivation matches by (start, end)
-    # ordinal. Under SKIP PAST LAST (round 12) matches are DISJOINT
-    # and holds resolve sequentially by start, so streaming emission
-    # order IS start order and a per-key counter reproduces the batch
-    # numbering directly. With overlapping matches (NO_SKIP / SKIP TO
-    # NEXT) held resolution can in principle emit a LATER start first
-    # (a later start's run dying while the earlier still extends) —
-    # round 13 closes the former loud reject with a per-key
-    # START-ORDER REORDER HOLD: completed matches are buffered by
-    # start ordinal and released (numbered) only once no live run or
-    # held completion with an earlier start remains. Under longest
-    # each start yields at most one match, so start order ≡ batch's
-    # (start, end) order. Note strict contiguity makes concurrent
-    # runs re-synchronize at iteration boundaries (they consume the
-    # same rows and usually die on the same break row), so the hold
-    # often releases immediately — the point is that emission order
-    # is now correct BY CONSTRUCTION instead of by that structural
-    # argument, for every expressible grammar.
+    alts = spec.alternatives if alt else (spec,)
+    all_rows = alts[0].rows_per_match == "all"
+    measures = list(spec.measures)
+    has_mn = any(m.fn == "match_number" for m in measures)
+    # batch numbers matches in (start, end[, alternative]) order. Under
+    # SKIP PAST LAST (round 12) matches are DISJOINT and resolve
+    # sequentially by start, so emission order IS start order and a
+    # per-key counter reproduces the batch numbering directly. With
+    # overlapping matches (NO_SKIP / SKIP TO NEXT) a later start can
+    # complete first: a longest-derivation start's run dying while an
+    # earlier one still extends, or alternatives of different lengths,
+    # e.g. (A C | A D{3}), start s completing via the 4-row branch
+    # AFTER start s+1 completed via the 2-row one (round-13 probe) —
+    # and leftmost held resolution can likewise emit out of start
+    # order. Round 13's per-key START-ORDER REORDER HOLD buffers
+    # completed matches by start and releases (numbers) them only once
+    # no live run or held completion with an earlier start remains, so
+    # emission order is correct BY CONSTRUCTION for every expressible
+    # grammar. An eager single pattern needs no hold: it emits each
+    # completion as its row is fed, in start order.
     reorder_starts = (
-        spec.derivation == "longest"
+        (alt or spec.derivation == "longest")
         and spec.after_match != SKIP_PAST_LAST_EVENT
-        and (
-            spec.rows_per_match == "all"
-            or any(m.fn == "match_number" for m in spec.measures)
-        )
+        and (all_rows or has_mn)
     )
-    all_rows = spec.rows_per_match == "all"
     if all_rows:
         # ALL ROWS PER MATCH streams since round 11: the span fold
         # captures each consumed row's (data columns, release ordinal),
@@ -518,20 +568,11 @@ def match_pattern_stream(
         # only on streams.
         if spec.emit_timeouts:
             raise ValueError("ALL ROWS PER MATCH has no timeout channel")
-        # every output row carries match_seq; under longest with
-        # overlapping strategies the start-order reorder hold above
-        # supplies batch's (start, end) numbering
-        # RUNNING measures compute at emission from the captured
-        # rows (round 11) — an incremental walk per match, the batch
-        # _running_series semantics
-    if all_rows:
-        from flink_cep_examples_spark.operators.cep_batch import (
-            all_rows_output_schema,
-        )
-
         out_schema = all_rows_output_schema(df, spec)
     else:
         out_schema = output_schema(df, spec)
+        if alt:  # no timeout channel → no tag column (as batch)
+            out_schema = T.StructType(out_schema.fields[:-1])
     if n_buckets is None:
         try:
             n_buckets = 4 * int(
@@ -557,40 +598,32 @@ def match_pattern_stream(
     )
 
     data_cols = list(df.columns)
-    n_vars = len(spec.pred_exprs)
     key_cols = list(spec.key_cols)
-    measures = list(spec.measures)
     tiebreak = spec.tiebreak_col
+    after = spec.after_match
     subset_map = dict(spec.subsets)
 
     def _components(mvar: str) -> tuple[str, ...]:
         return subset_map.get(mvar, (mvar,))
 
-    # per-variable tuple of srcs that variable must remember — a
-    # measure over a SUBSET union attaches its src to every component
-    var_srcs: dict[str, list[str]] = {
-        v.name: sorted(
-            {
-                m.src
-                for m in measures
-                if v.name in _components(m.var) and m.fn != "count"
-            }
-        )
-        for v in spec.variables
-    }
-    all_srcs = sorted({s for srcs in var_srcs.values() for s in srcs})
+    # the span payload tuple: every measure source column (a SUBSET
+    # measure's src rides every component variable's spans), in sorted
+    # order — a checkpointed span's payload is positional in it
+    all_srcs = sorted(
+        {m.src for m in measures if m.fn not in ("count", *NILADIC_FNS)}
+    )
     if all_rows:
         # every input column is output, so payloads carry them all
-        # (measure srcs are a subset — nav_cols are rejected above)
         all_srcs = sorted(set(data_cols) | set(all_srcs))
-    pred_cols = [f"{_PRED_PREFIX}{i}" for i in range(n_vars)]
+    pred_cols = [f"{_PRED_PREFIX}{i}" for i in range(len(spec.pred_exprs))]
     out_names = [f.name for f in out_schema.fields]
-    excluded_vars = {v.name for v in spec.variables if v.excluded}
+    excluded_vars = {v.name for a in alts for v in a.variables if v.excluded}
     payload_idx = {c: i for i, c in enumerate(all_srcs)}
 
-    # one compiled NFA shared by every bucket group on the worker (it is
-    # key-stateless: per-key state lives in NfaState).
-    nfa = Nfa(spec)
+    # compiled NFAs shared by every bucket group on the worker (they are
+    # key-stateless: per-key state lives in NfaState)
+    nfas = [Nfa(a) for a in alts]
+    nfa = nfas[0]
     # aggregate MEASURES (round 11, VERDICT r10 item 2): fold
     # (sum, n_nonnull, min, max) per aggregated source column into each
     # span's 6th field as the variable consumes rows — O(1) extra state
@@ -603,13 +636,14 @@ def match_pattern_stream(
         for m in measures
         if m.fn in AGG_FNS
     }
+    fold = None
     if all_rows:
         # ALL ROWS (round 11): the fold captures every consumed row —
         # (payload..., release ordinal) — so emission expands a match
         # to its rows; aggregates then compute from the captured rows
         # directly (no separate accumulator needed). Round 12: shared
         # append-only log, O(1) amortized per row (_cap_fold).
-        nfa.enable_payload_fold(_cap_init, _cap_fold)
+        fold = (_cap_init, _cap_fold)
     elif agg_srcs:
         agg_pos = [all_srcs.index(s) for s in agg_srcs]
 
@@ -629,12 +663,27 @@ def match_pattern_stream(
                 v if mx is None or v > mx else mx,
             )
 
-        nfa.enable_payload_fold(
+        fold = (
             lambda payload, _o: tuple(_acc1(payload[j]) for j in agg_pos),
             lambda acc, payload, _o: tuple(
                 _fold1(a, payload[j]) for a, j in zip(acc, agg_pos)
             ),
         )
+    if fold is not None:
+        for nf in nfas:
+            nf.enable_payload_fold(*fold)
+    if alt:
+        # each alternative's slice of the concatenated predicate columns
+        offsets = []
+        pos = 0
+        for a in alts:
+            offsets.append((pos, len(a.pred_exprs)))
+            pos += len(a.pred_exprs)
+        begin_pred_cols = [
+            tuple(s + bp for bp in nf.begin_preds)
+            for (s, _), nf in zip(offsets, nfas)
+        ]
+        leftmost = spec.derivation == "leftmost"
     # columns the buffer must retain (stable order, no duplicates)
     buf_cols = list(
         dict.fromkeys(
@@ -651,36 +700,106 @@ def match_pattern_stream(
         if nav_conf is not None
         else {}
     )
+    state_fields = _STATE_FIELDS[type(spec)]
+    # stored prefix: the reorder hold is the last field, nav_tails the
+    # one before it (None when the spec has no nav)
+    n_stored = len(state_fields) - (
+        0 if reorder_starts else 1 if nav_conf is not None else 2
+    )
+
+    def _measure_value(m, match: dict, mn):
+        """FINAL value of measure ``m`` for one match. A SUBSET union
+        merges its ordered component spans — FIRST from the earliest,
+        LAST from the span with the largest LAST ordinal (the batch
+        _make_measure_eval rule), COUNT summed, aggregates combined
+        over the var's ACTUAL rows, NULL/NaN skipped (SQL)."""
+        if m.fn == "match_number":
+            return mn
+        if m.fn == "classifier":
+            # variable that consumed the match's LAST row: the span
+            # with the largest per-key row ordinal
+            return (
+                max(match.items(), key=lambda kv: kv[1][4])[0]
+                if match
+                else None
+            )
+        spans = sorted(
+            (match[c] for c in _components(m.var) if match.get(c)),
+            key=lambda sp: sp[3],
+        )
+        if not spans:
+            return 0 if m.fn in ("count", "count_col") else m.default
+        if m.fn == "count":
+            return sum(sp[2] for sp in spans)
+        if m.fn == "first":
+            return spans[0][0][payload_idx[m.src]]
+        if m.fn == "last":
+            return max(spans, key=lambda sp: sp[4])[1][payload_idx[m.src]]
+        if all_rows:  # aggregate over the captured rows
+            j = payload_idx[m.src]
+            parts = [
+                (v, 1, v, v)
+                for sp in spans
+                for p in _cap_rows(sp[5])
+                if (v := p[j]) is not None and v == v
+            ]
+        else:
+            # each span's folded accumulator (6th field); a 5-field
+            # span can only come from a checkpoint written without
+            # aggregates — the registered state schema is a fixed
+            # binary blob, so Spark CANNOT reject such a restart
+            # itself: fail loud naming the cause instead of an opaque
+            # IndexError
+            if any(len(sp) < 6 for sp in spans):
+                raise RuntimeError(
+                    "restored span has no aggregate accumulator: this "
+                    "checkpoint was written by a query without aggregate "
+                    "measures; restart from a fresh checkpoint directory"
+                )
+            parts = [sp[5][agg_slot[m.name]] for sp in spans]
+        s = n = 0
+        lo = hi = None
+        for s1, n1, lo1, hi1 in parts:
+            s, n = s + s1, n + n1
+            if lo1 is not None and (lo is None or lo1 < lo):
+                lo = lo1
+            if hi1 is not None and (hi is None or hi1 > hi):
+                hi = hi1
+        if m.fn == "count_col":
+            return n
+        if n == 0:
+            return None  # SQL: all-NULL rows
+        if m.fn == "sum":
+            return _dec2f(s)
+        if m.fn == "avg":
+            return _dec2f(s / n)
+        return lo if m.fn == "min" else hi
+
+    running_ms = [
+        m
+        for m in measures
+        if m.running and m.fn not in ("classifier", "match_number")
+    ]
 
     def process(
         bucket: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
         wm_us = state.getCurrentWatermarkMs() * 1000
-        # bucket state = (columnar event buffer as a pandas DataFrame —
-        # pickles as a handful of numpy blocks, ~6× smaller and ~100×
-        # fewer objects than per-row tuples — and the per-key NFA states)
-        nav_tails = None  # per-key PREV tail rows (nav specs only)
-        pending_out: dict = {}  # per-key start-ordered reorder hold
-        if state.exists:
-            stored = pickle.loads(state.get[0])
-            if len(stored) == 2:  # pre-round-5 checkpoint: no counters
-                buffer, nfa_states = stored
-                match_nos: dict = {}
-            elif len(stored) == 3:
-                buffer, nfa_states, match_nos = stored
-            elif len(stored) == 4:  # round 13: nav PREV tail frame
-                buffer, nfa_states, match_nos, nav_tails = stored
-            else:  # round 13: longest-overlap reorder hold
-                (
-                    buffer,
-                    nfa_states,
-                    match_nos,
-                    nav_tails,
-                    pending_out,
-                ) = stored
-        else:
-            buffer, nfa_states, match_nos = None, {}, {}
-        track_match_no = any(m.fn == "match_number" for m in measures)
+        # bucket state (_STATE_FIELDS): the columnar event buffer as a
+        # pandas DataFrame — pickles as a handful of numpy blocks, ~6×
+        # smaller and ~100× fewer objects than per-row tuples — and the
+        # per-key NFA state(s); fields a legacy shape lacks start empty
+        stored = (
+            dict(zip(state_fields, pickle.loads(state.get[0])))
+            if state.exists
+            else {}
+        )
+        buffer = stored.get("buffer")
+        nfa_states: dict = stored.get("states", {})
+        alt_helds: dict = stored.get("helds", {})  # alternation, leftmost
+        match_nos: dict = stored.get("match_nos", {})
+        nav_tails = stored.get("nav_tails")  # per-key PREV tail rows
+        pending_out: dict = stored.get("pending_out", {})  # reorder hold
 
         frames = [] if buffer is None else [buffer]
         if not state.hasTimedOut:
@@ -702,75 +821,8 @@ def match_pattern_stream(
         # one output accumulator for the whole bucket
         data: dict[str, list] = {c: [] for c in out_names}
 
-        def _measure_values(match: dict, mn) -> dict:
-            """FINAL measure values for one match (ALL ROWS emission:
-            computed once, repeated on every expanded row). Aggregates
-            evaluate over the captured rows of the component spans —
-            the var's ACTUAL rows, NULL/NaN skipped (SQL)."""
-            out: dict = {}
-            for m in measures:
-                if m.fn == "match_number":
-                    out[m.name] = mn
-                    continue
-                if m.fn == "classifier":
-                    out[m.name] = (
-                        max(match.items(), key=lambda kv_: kv_[1][4])[0]
-                        if match
-                        else None
-                    )
-                    continue
-                spans = sorted(
-                    (
-                        match[c]
-                        for c in _components(m.var)
-                        if match.get(c)
-                    ),
-                    key=lambda sp: sp[3],
-                )
-                if not spans:
-                    out[m.name] = (
-                        0 if m.fn in ("count", "count_col") else m.default
-                    )
-                elif m.fn == "count":
-                    out[m.name] = sum(sp[2] for sp in spans)
-                elif m.fn in AGG_FNS:
-                    j = payload_idx[m.src]
-                    vals = [
-                        v
-                        for sp in spans
-                        for p in _cap_rows(sp[5])
-                        if (v := p[j]) is not None and v == v
-                    ]
-                    if m.fn == "count_col":
-                        out[m.name] = len(vals)
-                    elif not vals:
-                        out[m.name] = None  # SQL: all-NULL rows
-                    elif m.fn == "sum":
-                        out[m.name] = _dec2f(sum(vals))
-                    elif m.fn == "avg":
-                        out[m.name] = _dec2f(sum(vals) / len(vals))
-                    elif m.fn == "min":
-                        out[m.name] = min(vals)
-                    else:
-                        out[m.name] = max(vals)
-                elif m.fn == "first":
-                    out[m.name] = spans[0][0][payload_idx[m.src]]
-                else:  # last: max by LAST ordinal
-                    payload = max(spans, key=lambda sp: sp[4])[1]
-                    out[m.name] = payload[payload_idx[m.src]]
-            return out
-
-        running_ms = [
-            m
-            for m in measures
-            if m.running and m.fn not in ("classifier", "match_number")
-        ]
-
-        def emit_all_rows(key: tuple, match: dict, tag: str) -> None:
-            if tag != MATCH_TAG:  # no timeout channel under ALL ROWS
-                raise AssertionError("timeout emission under ALL ROWS")
-            mn = match_nos[key] = match_nos.get(key, 0) + 1
-            mvals = _measure_values(match, mn)
+        def emit_all_rows(match: dict, mn: int) -> None:
+            mvals = {m.name: _measure_value(m, match, mn) for m in measures}
             entries = [
                 (p[-1], vname, p)  # (NFA ordinal, classifier, row)
                 for vname, sp in match.items()
@@ -858,101 +910,34 @@ def match_pattern_stream(
                         data[m.name].append(mvals[m.name])
 
         def _emit_now(key: tuple, match: dict, tag: str) -> None:
-            if all_rows:
-                emit_all_rows(key, match, tag)
-                return
-            if track_match_no and tag == MATCH_TAG:
+            if tag == MATCH_TAG and (all_rows or has_mn):
                 mn = match_nos[key] = match_nos.get(key, 0) + 1
             else:
                 mn = None  # timeout rows carry NULL, as in batch
+            if all_rows:
+                if tag != MATCH_TAG:  # no timeout channel under ALL ROWS
+                    raise AssertionError("timeout emission under ALL ROWS")
+                emit_all_rows(match, mn)
+                return
             for k, kv in zip(key_cols, key):
                 data[k].append(kv)
             for m in measures:
-                if m.fn == "match_number":
-                    data[m.name].append(mn)
-                    continue
-                if m.fn == "classifier":
-                    # variable that consumed the match's LAST row: the
-                    # span with the largest per-key row ordinal
-                    data[m.name].append(
-                        max(match.items(), key=lambda kv_: kv_[1][4])[0]
-                        if match
-                        else None
-                    )
-                    continue
-                # SUBSET unions (round 11): ordered component spans
-                # merge — FIRST from the earliest, LAST from the span
-                # with the largest LAST ordinal (the batch
-                # _make_measure_eval rule), COUNT summed, aggregate
-                # accumulators combined
-                spans = sorted(
-                    (
-                        match[c]
-                        for c in _components(m.var)
-                        if match.get(c)
-                    ),
-                    key=lambda sp: sp[3],
-                )
-                if not spans:
-                    data[m.name].append(
-                        0 if m.fn in ("count", "count_col") else m.default
-                    )
-                elif m.fn == "count":
-                    data[m.name].append(sum(sp[2] for sp in spans))
-                elif m.fn in AGG_FNS:
-                    # each span's folded accumulator (6th field); a
-                    # 5-field span can only come from a checkpoint
-                    # written without aggregates — the registered
-                    # state schema is a fixed binary blob, so Spark
-                    # CANNOT reject such a restart itself: fail loud
-                    # naming the cause instead of an opaque IndexError
-                    s = n = 0
-                    mn = mx = None
-                    for sp in spans:
-                        if len(sp) < 6:
-                            raise RuntimeError(
-                                "restored span has no aggregate "
-                                "accumulator: this checkpoint was "
-                                "written by a query without aggregate "
-                                "measures; restart from a fresh "
-                                "checkpoint directory"
-                            )
-                        s1, n1, mn1, mx1 = sp[5][agg_slot[m.name]]
-                        s, n = s + s1, n + n1
-                        if mn1 is not None and (mn is None or mn1 < mn):
-                            mn = mn1
-                        if mx1 is not None and (mx is None or mx1 > mx):
-                            mx = mx1
-                    if m.fn == "count_col":
-                        data[m.name].append(n)
-                    elif n == 0:
-                        data[m.name].append(None)  # SQL: all-NULL rows
-                    elif m.fn == "sum":
-                        data[m.name].append(_dec2f(s))
-                    elif m.fn == "avg":
-                        data[m.name].append(_dec2f(s / n))
-                    elif m.fn == "min":
-                        data[m.name].append(mn)
-                    else:
-                        data[m.name].append(mx)
-                elif m.fn == "first":
-                    data[m.name].append(
-                        spans[0][0][all_srcs.index(m.src)]
-                    )
-                else:  # last: max by LAST ordinal, not last-sorted
-                    payload = max(spans, key=lambda sp: sp[4])[1]
-                    data[m.name].append(payload[all_srcs.index(m.src)])
-            data["tag"].append(tag)
+                data[m.name].append(_measure_value(m, match, mn))
+            if not alt:
+                data["tag"].append(tag)
 
-        def emit(key: tuple, match: dict, tag: str) -> None:
+        def emit(key: tuple, match: dict, tag: str, ai: int = 0) -> None:
             if reorder_starts and tag == MATCH_TAG:
-                # longest-overlap reorder hold: buffer by start
-                # ordinal; released (and numbered) in start order once
-                # no earlier start is still undecided. Timeout rows
-                # carry no number and emit immediately.
-                start = min(
-                    sp[3] for sp in match.values() if sp is not None
-                )
+                # reorder hold: buffer by start ordinal; released (and
+                # numbered) in start order once no earlier start is
+                # still undecided. Timeout rows carry no number and
+                # emit immediately. Alternation keys batch's exact sort
+                # key (start, end, alternative): NO_SKIP can emit
+                # several matches per start, one per alternative length.
+                start = min(sp[3] for sp in match.values() if sp is not None)
+                if alt:
+                    end = max(sp[4] for sp in match.values() if sp is not None)
+                    start = (start, end, ai)
                 pending_out.setdefault(key, {})[start] = match
                 return
             _emit_now(key, match, tag)
@@ -1002,39 +987,80 @@ def match_pattern_stream(
                 for pi, pv in pred_over.items():
                     pred_arr[:, pi] = pv
                 src_arr = release[all_srcs].to_numpy() if all_srcs else None
-                # rows that can't start a run and have no run to extend
-                # are no-ops — skip the step() call entirely
-                can_begin = (
-                    pred_arr[:, nfa.begin_preds[0]]
-                    if len(nfa.begin_preds) == 1
-                    else pred_arr[:, list(nfa.begin_preds)].any(axis=1)
-                )
                 kt: tuple | None = None
-                nst = None
                 single = key_arrs[0] if len(key_arrs) == 1 else None
-                for i in range(len(release)):
-                    rkt = (
-                        (single[i],)
-                        if single is not None
-                        else tuple(a[i] for a in key_arrs)
+                if alt:
+                    sts = None
+                    for i in range(len(release)):
+                        rkt = (
+                            (single[i],)
+                            if single is not None
+                            else tuple(a[i] for a in key_arrs)
+                        )
+                        if rkt != kt:
+                            kt = rkt
+                            sts = nfa_states.get(kt)
+                            if sts is None:
+                                sts = nfa_states[kt] = [
+                                    NfaState() for _ in nfas
+                                ]
+                        # skip only when EVERY alternative is inert on
+                        # the row (ordinals must advance in lockstep)
+                        if not any(
+                            st.runs or any(pred_arr[i, fp] for fp in fps)
+                            for st, fps in zip(sts, begin_pred_cols)
+                        ):
+                            continue
+                        row = pred_arr[i]
+                        pred_rows = [
+                            tuple(bool(x) for x in row[s : s + k])
+                            for s, k in offsets
+                        ]
+                        payload = (
+                            tuple(src_arr[i]) if src_arr is not None else ()
+                        )
+                        for ai, match in coordinate_alternation_row(
+                            nfas, sts, int(ts_arr[i]), pred_rows, payload,
+                            after,
+                            helds=(
+                                alt_helds.setdefault(kt, {})
+                                if leftmost
+                                else None
+                            ),
+                        ):
+                            emit(kt, match, MATCH_TAG, ai)
+                else:
+                    # rows that can't start a run and have no run to
+                    # extend are no-ops — skip the step() call entirely
+                    can_begin = (
+                        pred_arr[:, nfa.begin_preds[0]]
+                        if len(nfa.begin_preds) == 1
+                        else pred_arr[:, list(nfa.begin_preds)].any(axis=1)
                     )
-                    if rkt != kt:
-                        kt = rkt
-                        nst = nfa_states.get(kt)
-                        if nst is None:
-                            nst = nfa_states[kt] = NfaState()
-                    if not nst.runs and not can_begin[i]:
-                        continue
-                    m, to = nfa.step(
-                        nst,
-                        int(ts_arr[i]),
-                        pred_arr[i],
-                        tuple(src_arr[i]) if src_arr is not None else (),
-                    )
-                    for x in m:
-                        emit(kt, x, MATCH_TAG)
-                    for x in to:
-                        emit(kt, x, TIMEOUT_TAG)
+                    nst = None
+                    for i in range(len(release)):
+                        rkt = (
+                            (single[i],)
+                            if single is not None
+                            else tuple(a[i] for a in key_arrs)
+                        )
+                        if rkt != kt:
+                            kt = rkt
+                            nst = nfa_states.get(kt)
+                            if nst is None:
+                                nst = nfa_states[kt] = NfaState()
+                        if not nst.runs and not can_begin[i]:
+                            continue
+                        m, to = nfa.step(
+                            nst,
+                            int(ts_arr[i]),
+                            pred_arr[i],
+                            tuple(src_arr[i]) if src_arr is not None else (),
+                        )
+                        for x in m:
+                            emit(kt, x, MATCH_TAG)
+                        for x in to:
+                            emit(kt, x, TIMEOUT_TAG)
 
         if buffer is not None and len(buffer):
             # computed AFTER the nav transform — held-back rows joined
@@ -1053,24 +1079,50 @@ def match_pattern_stream(
         # is exactly feed-equivalent).
         pending: list[int] = []
         for kt in list(nfa_states):
-            nst = nfa_states[kt]
-            wm_matches, wm_timeouts = nfa.advance_time(
-                nst, min(wm_us, held_min_ts.get(kt, wm_us))
-            )
-            for x in wm_matches:
-                emit(kt, x, MATCH_TAG)
-            for x in wm_timeouts:
-                emit(kt, x, TIMEOUT_TAG)
-            if not nst.runs and not nst.helds:
+            adv = min(wm_us, held_min_ts.get(kt, wm_us))
+            if alt:
+                pairs = list(zip(nfas, nfa_states[kt]))
+                for nf, st in pairs:
+                    if nf.advance_time(st, adv)[0]:  # survives python -O
+                        raise AssertionError(
+                            "alternation state yielded pending completions "
+                            "at watermark — validator must reject trailing "
+                            "absence variables in alternatives"
+                        )
+                # watermark-expired runs may unblock held leftmost
+                # completions (the earlier-listed branch died of its
+                # within deadline)
+                if alt_helds.get(kt):
+                    for ai, match in resolve_alternation_helds(
+                        nfas, nfa_states[kt], after, alt_helds[kt],
+                        final=False,
+                    ):
+                        emit(kt, match, MATCH_TAG, ai)
+                idle = not alt_helds.get(kt) and not any(
+                    st.runs for _, st in pairs
+                )
+            else:
+                nst = nfa_states[kt]
+                pairs = ((nfa, nst),)
+                wm_matches, wm_timeouts = nfa.advance_time(nst, adv)
+                for x in wm_matches:
+                    emit(kt, x, MATCH_TAG)
+                for x in wm_timeouts:
+                    emit(kt, x, TIMEOUT_TAG)
                 # helds ⊆ starts with live runs (advance_time resolves
                 # them the moment the last run dies), so the second
                 # test is belt-and-braces against losing a held match
+                idle = not nst.runs and not nst.helds
+            if idle:
                 if kt not in buffered_keys:
                     del nfa_states[kt]
-            elif nfa.within_us is not None:
-                pending.extend(
-                    run.start_ts + nfa.within_us for run in nst.runs
-                )
+                    alt_helds.pop(kt, None)
+            else:
+                for nf, st in pairs:
+                    if nf.within_us is not None:
+                        pending.extend(
+                            run.start_ts + nf.within_us for run in st.runs
+                        )
 
         if reorder_starts:
             # release the reorder hold: per key, emit (and number)
@@ -1079,21 +1131,29 @@ def match_pattern_stream(
             # completion starting earlier could still produce the
             # preceding match
             for kt in list(pending_out):
-                nst = nfa_states.get(kt)
-                undecided = None
-                if nst is not None:
-                    cands = [r.start_ord for r in nst.runs]
-                    cands.extend(nst.helds)
-                    if cands:
-                        undecided = min(cands)
+                sts = nfa_states.get(kt)
+                sts = () if sts is None else sts if alt else (sts,)
+                cands = [r.start_ord for st in sts for r in st.runs]
+                for st in sts:
+                    cands.extend(st.helds)
+                cands.extend(alt_helds.get(kt) or ())
+                undecided = min(cands, default=None)
                 pend = pending_out[kt]
                 for s in sorted(pend):
-                    if undecided is not None and s >= undecided:
+                    # alternation: a same-start live run can only
+                    # complete at a LATER end, which sorts after every
+                    # pending entry — only a strictly-earlier start blocks
+                    if undecided is not None and (
+                        s[0] > undecided if alt else s >= undecided
+                    ):
                         break
                     _emit_now(kt, pend.pop(s), MATCH_TAG)
                 if not pend:
                     del pending_out[kt]
 
+        # keep state alive while match_nos is non-empty even if no runs
+        # remain: dropping it would restart MATCH_NUMBER at 1 after a
+        # quiescent period, diverging from batch numbering
         if (
             buffer is None
             and not nfa_states
@@ -1103,735 +1163,24 @@ def match_pattern_stream(
         ):
             state.remove()
         else:
-            if reorder_starts:
-                # the reorder hold appends a 5th element; nav_tails
-                # rides along (None when the spec has no nav)
-                blob = pickle.dumps(
-                    (buffer, nfa_states, match_nos, nav_tails,
-                     pending_out)
-                )
-            elif nav_conf is not None:
-                # nav specs append the PREV tail frame (O(max_prev)
-                # rows per key ever fed — the same per-key-forever
-                # growth class as match_nos; Flink keyed state without
-                # TTL likewise)
-                blob = pickle.dumps(
-                    (buffer, nfa_states, match_nos, nav_tails)
-                )
-            else:
-                blob = pickle.dumps((buffer, nfa_states, match_nos))
-            state.update((blob,))
-            if buffer is not None:
-                pending.append(int(buffer[_TS_COL].min()))
-            if pending:
-                state.setTimeoutTimestamp(
-                    max(
-                        min(pending) // 1000,
-                        state.getCurrentWatermarkMs() + 1,
-                    )
-                )
-        if data["match_seq" if all_rows else "tag"]:
-            yield pd.DataFrame(data, columns=out_names)
-
-    return prepared.groupBy(_BUCKET_COL).applyInPandasWithState(
-        process,
-        outputStructType=out_schema,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-def match_pattern_stream_alternation(
-    df: DataFrame,
-    aspec,
-    watermark_delay: str = "6 minutes",
-    n_buckets: int | None = None,
-) -> DataFrame:
-    """Streaming top-level PATTERN alternation: one NfaState PER
-    ALTERNATIVE per key rides the bucketed state store, rows released
-    in event-time order feed every alternative in lockstep, and
-    emission runs the same union skip discipline as batch
-    (operators/nfa.py::coordinate_alternation_row — the shared core,
-    so the two tiers cannot drift). Output: append-mode stream with
-    keys + measures (no tag — alternation has no timeout channel).
-
-    Same scale design as :func:`match_pattern_stream` (hash-bucketed
-    state, columnar buffers); per-row cost is the sum of the
-    alternatives' live branches, exactly as in batch."""
-    from flink_cep_examples_spark.plans.pattern import AlternationSpec
-
-    if not isinstance(aspec, AlternationSpec):
-        raise TypeError(
-            f"match_alternation_stream needs an AlternationSpec, got "
-            f"{type(aspec).__name__}"
-        )
-    aspec.validate()
-    alt_all_rows = aspec.alternatives[0].rows_per_match == "all"
-    # Numbering vs batch (round 13): batch sorts alternation matches
-    # by (start, end, alternative) before numbering. Under SKIP PAST
-    # LAST matches are disjoint and resolution is sequential by start,
-    # so the streaming per-key counter agrees directly. With
-    # overlapping strategies (NO_SKIP / SKIP TO NEXT) a later start
-    # can COMPLETE first — concretely: alternatives of different
-    # lengths, e.g. (A C | A D{3}), start s completing via the 4-row
-    # branch AFTER start s+1 completed via the 2-row one (this
-    # silently mis-numbered the previously-allowed eager path; the
-    # round-13 probe pinned it) — and leftmost held-resolution can
-    # likewise emit out of start order. The START-ORDER REORDER HOLD
-    # below fixes all of these: completed matches buffer by start
-    # ordinal and release only when no alternative has a live run or
-    # held completion with an earlier start (the coordinator decides
-    # each start exactly once, so start order ≡ batch's
-    # (start, end, alternative) order). The former ALL-ROWS and
-    # leftmost-MATCH_NUMBER rejects are closed by the same hold.
-    alt_reorder = aspec.after_match != SKIP_PAST_LAST_EVENT and (
-        alt_all_rows
-        or any(m.fn == "match_number" for m in aspec.measures)
-    )
-    allowed = {
-        "first", "last", "count", "classifier", "match_number", *AGG_FNS
-    }
-    unsupported = {m.fn for m in aspec.measures if m.fn not in allowed}
-    if unsupported:
-        raise NotImplementedError(
-            f"streaming alternation measures support {sorted(allowed)}, "
-            f"got {sorted(unsupported)}"
-        )
-    # PREV/NEXT navigation (round 13): the same in-operator nav columns
-    # + token-gated DuckDB predicate evaluation as the single-pattern
-    # tier (_nav_transform); the holdback clock cap applies to EVERY
-    # alternative's advance (lockstep is preserved — advance_time never
-    # touches row ordinals)
-    nav_conf = (
-        _compile_stream_nav(aspec, df.columns) if aspec.nav_cols else None
-    )
-    if nav_conf is not None:
-        try:
-            import duckdb  # noqa: F401
-        except ImportError as ex:  # pragma: no cover — baked into env
-            raise NotImplementedError(
-                "streaming PREV()/NEXT() evaluates nav predicates "
-                "in-operator via duckdb, which is not importable: "
-                f"{ex}; use the batch operator inside foreachBatch"
-            ) from ex
-    alts = aspec.alternatives
-    from flink_cep_examples_spark.operators.cep_batch import (
-        all_rows_output_schema as _batch_all_rows_schema,
-    )
-    from flink_cep_examples_spark.operators.cep_batch import (
-        output_schema as _batch_output_schema,
-    )
-
-    if alt_all_rows:
-        out_schema = _batch_all_rows_schema(df, aspec)
-    else:
-        out_schema = T.StructType(
-            _batch_output_schema(df, aspec).fields[:-1]
-        )
-    if n_buckets is None:
-        try:
-            n_buckets = 4 * int(
-                df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-            )
-        except (TypeError, ValueError):
-            n_buckets = 4 * df.sparkSession.sparkContext.defaultParallelism
-    prepared = (
-        _prepare_stream(
-            df,
-            aspec,
-            extra_cols=(tuple(df.columns) if alt_all_rows else ())
-            + (nav_conf["needed"] if nav_conf is not None else ()),
-            skip_pred_idx=frozenset(
-                nav_conf["pred_idx"] if nav_conf is not None else ()
-            ),
-        )
-        .withColumn(
-            _BUCKET_COL,
-            F.pmod(F.xxhash64(*aspec.key_cols), F.lit(n_buckets)).cast("int"),
-        )
-        .withWatermark(aspec.order_col, watermark_delay)
-    )
-
-    offsets = []
-    pos = 0
-    for alt in alts:
-        offsets.append((pos, len(alt.pred_exprs)))
-        pos += len(alt.pred_exprs)
-    n_vars = pos
-    key_cols = list(aspec.key_cols)
-    measures = list(aspec.measures)
-    after = aspec.after_match
-    tiebreak = aspec.tiebreak_col
-    all_srcs = sorted(
-        {
-            m.src
-            for m in measures
-            if m.fn not in ("count", "classifier", "match_number")
-        }
-    )
-    data_cols = list(df.columns)
-    if alt_all_rows:
-        # every input column is output, so payloads carry them all
-        all_srcs = sorted(set(data_cols) | set(all_srcs))
-    pred_cols = [f"{_PRED_PREFIX}{i}" for i in range(n_vars)]
-    out_names = [f.name for f in out_schema.fields]
-    payload_idx = {c: i for i, c in enumerate(all_srcs)}
-    excluded_vars = {
-        v.name for alt in alts for v in alt.variables if v.excluded
-    }
-
-    nfas = [Nfa(alt) for alt in alts]
-    # aggregate MEASURES (round 11): the same incremental span fold as
-    # the single-pattern tier, enabled on EVERY alternative's NFA (the
-    # payload tuple is shared, all_srcs order); emission merges the
-    # component spans' accumulators (SUBSET-union semantics)
-    agg_srcs = sorted({m.src for m in measures if m.fn in AGG_FNS})
-    agg_slot = {
-        m.name: agg_srcs.index(m.src)
-        for m in measures
-        if m.fn in AGG_FNS
-    }
-    if agg_srcs:
-        agg_pos = [all_srcs.index(s) for s in agg_srcs]
-
-        def _acc1(v):
-            if v is None or v != v:
-                return (0, 0, None, None)
-            return (v, 1, v, v)
-
-        def _fold1(acc, v):
-            if v is None or v != v:
-                return acc
-            s, n, mn, mx = acc
-            return (
-                s + v,
-                n + 1,
-                v if mn is None or v < mn else mn,
-                v if mx is None or v > mx else mx,
-            )
-
-        def _init(payload, _ord):
-            return tuple(_acc1(payload[j]) for j in agg_pos)
-
-        def _fold(acc, payload, _ord):
-            return tuple(
-                _fold1(a, payload[j]) for a, j in zip(acc, agg_pos)
-            )
-
-        if not alt_all_rows:
-            for nf in nfas:
-                nf.enable_payload_fold(_init, _fold)
-    if alt_all_rows:
-        # ALL ROWS (round 11): capture every consumed row with the
-        # NFA ordinal; aggregates compute from the captured rows.
-        # Round 12: shared append-only log, O(1) amortized per row.
-        for nf in nfas:
-            nf.enable_payload_fold(_cap_init, _cap_fold)
-    subset_map = dict(aspec.subsets)
-    has_mn = any(m.fn == "match_number" for m in aspec.measures)
-    derivation = aspec.derivation
-    begin_pred_cols = [
-        tuple(s + bp for bp in nf.begin_preds)
-        for (s, _), nf in zip(offsets, nfas)
-    ]
-    buf_cols = list(
-        dict.fromkeys(
-            [*key_cols, _TS_COL, tiebreak, *pred_cols, *all_srcs]
-            + (list(nav_conf["needed"]) if nav_conf is not None else [])
-        )
-    )
-    nav_specs = list(aspec.nav_cols)
-    nav_pred_sql = (
-        {
-            i: f"coalesce(({aspec.pred_exprs[i]}), false) AS p{i}"
-            for i in sorted(nav_conf["pred_idx"])
-        }
-        if nav_conf is not None
-        else {}
-    )
-
-    def process(
-        bucket: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        nav_tails = None  # per-key PREV tail rows (nav specs only)
-        pending_out: dict = {}  # per-key start-ordered reorder hold
-        if state.exists:
-            stored = pickle.loads(state.get[0])
-            if len(stored) == 2:  # pre-leftmost checkpoint shape
-                buffer, alt_states = stored
-                alt_helds: dict = {}
-                match_nos: dict = {}
-            elif len(stored) == 3:  # pre-match-number checkpoint shape
-                buffer, alt_states, alt_helds = stored
-                match_nos = {}
-            elif len(stored) == 4:
-                buffer, alt_states, alt_helds, match_nos = stored
-            elif len(stored) == 5:  # round 13: nav PREV tail frame
-                buffer, alt_states, alt_helds, match_nos, nav_tails = stored
-            else:  # round 13: longest/leftmost-overlap reorder hold
+            # nav specs store the PREV tail frame (O(max_prev) rows per
+            # key ever fed — the same per-key-forever growth class as
+            # match_nos; Flink keyed state without TTL likewise)
+            fields = {
+                "buffer": buffer,
+                "states": nfa_states,
+                "helds": {k: h for k, h in alt_helds.items() if h},
+                "match_nos": match_nos,
+                "nav_tails": nav_tails,
+                "pending_out": pending_out,
+            }
+            state.update(
                 (
-                    buffer,
-                    alt_states,
-                    alt_helds,
-                    match_nos,
-                    nav_tails,
-                    pending_out,
-                ) = stored
-        else:
-            buffer, alt_states, alt_helds, match_nos = None, {}, {}, {}
-
-        frames = [] if buffer is None else [buffer]
-        if not state.hasTimedOut:
-            for pdf in pdfs:
-                if len(pdf):
-                    live = pdf[pdf[_TS_COL].to_numpy() >= wm_us]
-                    if len(live):
-                        frames.append(live[buf_cols])
-        allbuf = (
-            frames[0]
-            if len(frames) == 1
-            else pd.concat(frames, ignore_index=True)
-            if frames
-            else None
-        )
-
-        data: dict[str, list] = {c: [] for c in out_names}
-
-        def _alt_measure_values(match: dict, mn) -> dict:
-            """FINAL measure values for one ALL ROWS match —
-            SUBSET-union component merge over the captured rows."""
-            out: dict = {}
-            for m in measures:
-                if m.fn == "match_number":
-                    out[m.name] = mn
-                    continue
-                if m.fn == "classifier":
-                    out[m.name] = (
-                        max(match.items(), key=lambda kv_: kv_[1][4])[0]
-                        if match
-                        else None
-                    )
-                    continue
-                spans = sorted(
-                    (
-                        match[c]
-                        for c in subset_map.get(m.var, (m.var,))
-                        if match.get(c)
+                    pickle.dumps(
+                        tuple(fields[f] for f in state_fields[:n_stored])
                     ),
-                    key=lambda sp: sp[3],
                 )
-                if not spans:
-                    out[m.name] = (
-                        0 if m.fn in ("count", "count_col") else m.default
-                    )
-                elif m.fn == "count":
-                    out[m.name] = sum(sp[2] for sp in spans)
-                elif m.fn in AGG_FNS:
-                    j = payload_idx[m.src]
-                    vals = [
-                        v
-                        for sp in spans
-                        for p in _cap_rows(sp[5])
-                        if (v := p[j]) is not None and v == v
-                    ]
-                    if m.fn == "count_col":
-                        out[m.name] = len(vals)
-                    elif not vals:
-                        out[m.name] = None
-                    elif m.fn == "sum":
-                        out[m.name] = _dec2f(sum(vals))
-                    elif m.fn == "avg":
-                        out[m.name] = _dec2f(sum(vals) / len(vals))
-                    elif m.fn == "min":
-                        out[m.name] = min(vals)
-                    else:
-                        out[m.name] = max(vals)
-                elif m.fn == "first":
-                    out[m.name] = spans[0][0][payload_idx[m.src]]
-                else:  # last: max by LAST ordinal
-                    payload = max(spans, key=lambda sp: sp[4])[1]
-                    out[m.name] = payload[payload_idx[m.src]]
-            return out
-
-        running_ms = [
-            m
-            for m in measures
-            if m.running and m.fn not in ("classifier", "match_number")
-        ]
-
-        def emit_all_rows(key: tuple, match: dict) -> None:
-            mn = match_nos[key] = match_nos.get(key, 0) + 1
-            mvals = _alt_measure_values(match, mn)
-            entries = [
-                (p[-1], vname, p)  # (NFA ordinal, classifier, row)
-                for vname, sp in match.items()
-                for p in _cap_rows(sp[5])
-            ]
-            entries.sort(key=lambda e: e[0])
-            # RUNNING measures (round 12, ADVICE r11 high): the same
-            # incremental clipped-prefix walk the single-pattern tier
-            # runs (emit_all_rows at match_pattern_stream) — previously
-            # this path silently emitted FINAL values for RUNNING
-            # SUM/COUNT/etc. Batch semantics: count counts rows,
-            # NULL/NaN skip aggregation, FIRST/LAST keep the row's
-            # value null or not, empty prefix → NULL; excluded-var
-            # rows advance the state but emit nothing.
-            run_rows: dict[str, list] = {}
-            run_st: dict[str, list] = {}
-            for m in running_ms:
-                j = payload_idx.get(m.src)
-                rows_m = sorted(
-                    (
-                        (p[-1], None if j is None else p[j])
-                        for c in subset_map.get(m.var, (m.var,))
-                        if match.get(c)
-                        for p in _cap_rows(match[c][5])
-                    ),
-                    key=lambda t: t[0],  # ordinals are unique; never
-                    # compare the (possibly None) values
-                )
-                run_rows[m.name] = rows_m
-                # [next_idx, count, n_vals, total, mn_, mx_, first,
-                # last] — total lazy-inits from the FIRST value so a
-                # DECIMAL source folds exactly in decimal.Decimal (the
-                # float 0.0 seed raised TypeError; the batch
-                # _running_series got the same round-13 fix)
-                run_st[m.name] = [0, 0, 0, None, None, None, None, None]
-
-            def _running_value(m, ord_):
-                rows_m = run_rows[m.name]
-                st = run_st[m.name]
-                i, cnt, nv, tot, mn_, mx_, first, last = st
-                while i < len(rows_m) and rows_m[i][0] <= ord_:
-                    v = rows_m[i][1]
-                    cnt += 1
-                    if cnt == 1:
-                        first = v  # first ROW's value, null or not
-                    last = v
-                    if v is not None and v == v:
-                        nv += 1
-                        if m.fn in ("sum", "avg"):
-                            tot = v if tot is None else tot + v
-                        mn_ = v if mn_ is None or v < mn_ else mn_
-                        mx_ = v if mx_ is None or v > mx_ else mx_
-                    i += 1
-                st[:] = [i, cnt, nv, tot, mn_, mx_, first, last]
-                if m.fn == "count":
-                    return cnt
-                if m.fn == "count_col":
-                    return nv
-                if m.fn == "first":
-                    return first if cnt else None
-                if m.fn == "last":
-                    return last if cnt else None
-                if nv == 0:
-                    return None  # SQL: aggregate over empty prefix
-                if m.fn == "sum":
-                    return _dec2f(tot)
-                if m.fn == "avg":
-                    a = tot / nv
-                    return a if isinstance(a, float) else float(a)
-                return mn_ if m.fn == "min" else mx_
-
-            for ord_, vname, p in entries:
-                row_runs = {
-                    m.name: _running_value(m, ord_) for m in running_ms
-                }
-                if vname in excluded_vars:
-                    continue  # {- var -}: consumed but not emitted
-                for c in data_cols:
-                    data[c].append(p[payload_idx[c]])
-                data["classifier"].append(vname)
-                data["match_seq"].append(mn - 1)  # 0-based, as batch
-                for m in measures:
-                    if m.name in row_runs:
-                        data[m.name].append(row_runs[m.name])
-                    elif m.running and m.fn == "classifier":
-                        data[m.name].append(vname)
-                    else:
-                        data[m.name].append(mvals[m.name])
-
-        def _emit_now(key: tuple, match: dict) -> None:
-            if alt_all_rows:
-                emit_all_rows(key, match)
-                return
-            for k, kv in zip(key_cols, key):
-                data[k].append(kv)
-            if has_mn:
-                match_nos[key] = match_nos.get(key, 0) + 1
-            for m in measures:
-                if m.fn == "match_number":
-                    data[m.name].append(match_nos[key])
-                    continue
-                if m.fn == "classifier":
-                    data[m.name].append(
-                        max(match.items(), key=lambda kv_: kv_[1][4])[0]
-                        if match
-                        else None
-                    )
-                    continue
-                # SUBSET unions (incl. the parser's auto-generated
-                # group-copy unions, round 5): ordered component spans
-                # merge — FIRST from the earliest, LAST from the
-                # latest, COUNT summed (the batch _resolve_spans rule)
-                spans = sorted(
-                    (
-                        match[c]
-                        for c in subset_map.get(m.var, (m.var,))
-                        if match.get(c)
-                    ),
-                    key=lambda sp: sp[3],
-                )
-                if not spans:
-                    data[m.name].append(
-                        0 if m.fn in ("count", "count_col") else m.default
-                    )
-                elif m.fn == "count":
-                    data[m.name].append(sum(sp[2] for sp in spans))
-                elif m.fn in AGG_FNS:
-                    # merge the components' folded accumulators; a
-                    # 5-field span restores only from a checkpoint
-                    # written without aggregates (the state blob
-                    # schema never changes, so Spark can't reject the
-                    # restart) — fail loud naming the cause
-                    s = n = 0
-                    mn = mx = None
-                    for sp in spans:
-                        if len(sp) < 6:
-                            raise RuntimeError(
-                                "restored span has no aggregate "
-                                "accumulator: this checkpoint was "
-                                "written by a query without aggregate "
-                                "measures; restart from a fresh "
-                                "checkpoint directory"
-                            )
-                        s1, n1, mn1, mx1 = sp[5][agg_slot[m.name]]
-                        s, n = s + s1, n + n1
-                        if mn1 is not None and (mn is None or mn1 < mn):
-                            mn = mn1
-                        if mx1 is not None and (mx is None or mx1 > mx):
-                            mx = mx1
-                    if m.fn == "count_col":
-                        data[m.name].append(n)
-                    elif n == 0:
-                        data[m.name].append(None)  # SQL: all-NULL rows
-                    elif m.fn == "sum":
-                        data[m.name].append(_dec2f(s))
-                    elif m.fn == "avg":
-                        data[m.name].append(_dec2f(s / n))
-                    elif m.fn == "min":
-                        data[m.name].append(mn)
-                    else:
-                        data[m.name].append(mx)
-                else:
-                    payload = (
-                        spans[0][0] if m.fn == "first" else spans[-1][1]
-                    )
-                    data[m.name].append(payload[all_srcs.index(m.src)])
-
-        def emit(key: tuple, match: dict, alt_idx: int = 0) -> None:
-            if alt_reorder:
-                # overlap reorder hold: buffer by batch's exact sort
-                # key (start, end, alternative) — NO_SKIP can emit
-                # MULTIPLE matches per start (one per alternative
-                # length, the round-13 probe's k0 case), so the start
-                # alone under-keys. Released in that order once no
-                # alternative holds an undecided STRICTLY-EARLIER
-                # start (a same-start live run can only complete at a
-                # LATER end, which sorts after every pending entry).
-                start = min(
-                    sp[3] for sp in match.values() if sp is not None
-                )
-                end = max(
-                    sp[4] for sp in match.values() if sp is not None
-                )
-                pending_out.setdefault(key, {})[
-                    (start, end, alt_idx)
-                ] = match
-                return
-            _emit_now(key, match)
-
-        buffer = None
-        buffered_keys: set = set()
-        held_min_ts: dict[tuple, int] = {}
-        if allbuf is not None and len(allbuf):
-            rel_mask = allbuf[_TS_COL].to_numpy() <= wm_us
-            release = allbuf[rel_mask]
-            buffer = allbuf[~rel_mask]
-            if len(buffer) == 0:
-                buffer = None
-            else:
-                buffer = buffer.reset_index(drop=True)
-            if len(release):
-                release = release.sort_values(
-                    [*key_cols, _TS_COL, tiebreak], kind="mergesort"
-                )
-                pred_over: dict[int, Any] = {}
-                if nav_conf is not None:
-                    (
-                        release,
-                        buffer,
-                        nav_tails,
-                        held_min_ts,
-                        pred_over,
-                    ) = _nav_transform(
-                        release,
-                        buffer,
-                        nav_tails,
-                        key_cols,
-                        tiebreak,
-                        buf_cols,
-                        nav_specs,
-                        nav_pred_sql,
-                        nav_conf["needed"],
-                        nav_conf["max_prev"],
-                        nav_conf["max_next"],
-                    )
-                key_arrs = [release[k].to_numpy() for k in key_cols]
-                ts_arr = release[_TS_COL].to_numpy()
-                pred_arr = release[pred_cols].to_numpy(dtype=bool)
-                for pi, pv in pred_over.items():
-                    pred_arr[:, pi] = pv
-                src_arr = release[all_srcs].to_numpy() if all_srcs else None
-                kt: tuple | None = None
-                sts = None
-                single = key_arrs[0] if len(key_arrs) == 1 else None
-                for i in range(len(release)):
-                    rkt = (
-                        (single[i],)
-                        if single is not None
-                        else tuple(a[i] for a in key_arrs)
-                    )
-                    if rkt != kt:
-                        kt = rkt
-                        sts = alt_states.get(kt)
-                        if sts is None:
-                            sts = alt_states[kt] = [
-                                NfaState() for _ in nfas
-                            ]
-                    # skip only when EVERY alternative is inert on the
-                    # row (ordinals must advance in lockstep)
-                    if not any(
-                        st.runs or any(pred_arr[i, fp] for fp in fps)
-                        for st, fps in zip(sts, begin_pred_cols)
-                    ):
-                        continue
-                    row = pred_arr[i]
-                    pred_rows = [
-                        tuple(bool(x) for x in row[s : s + k])
-                        for s, k in offsets
-                    ]
-                    payload = tuple(src_arr[i]) if src_arr is not None else ()
-                    helds = (
-                        alt_helds.setdefault(kt, {})
-                        if derivation == "leftmost"
-                        else None
-                    )
-                    for ai, match in coordinate_alternation_row(
-                        nfas, sts, int(ts_arr[i]), pred_rows, payload, after,
-                        helds=helds,
-                    ):
-                        emit(kt, match, ai)
-
-        if buffer is not None and len(buffer):
-            # computed AFTER the nav transform — held-back rows joined
-            # the buffer and must keep their key's states alive
-            if len(key_cols) == 1:
-                buffered_keys = {(k,) for k in buffer[key_cols[0]]}
-            else:
-                buffered_keys = set(zip(*(buffer[k] for k in key_cols)))
-
-        # watermark prunes expired partials per alternative (no
-        # pendings — alternatives cannot end in absence variables).
-        # A key with held-back rows (NEXT holdback) advances only to
-        # the first held row's timestamp — in EVERY alternative, so
-        # the lockstep stays feed-equivalent.
-        pending: list[int] = []
-        for kt in list(alt_states):
-            sts = alt_states[kt]
-            kt_adv = min(wm_us, held_min_ts.get(kt, wm_us))
-            for nf, st in zip(nfas, sts):
-                wm_matches, _ = nf.advance_time(st, kt_adv)
-                if wm_matches:  # survives python -O, unlike assert
-                    raise AssertionError(
-                        "alternation state yielded pending completions "
-                        "at watermark — validator must reject trailing "
-                        "absence variables in alternatives"
-                    )
-            # watermark-expired runs may unblock held leftmost
-            # completions (the earlier-listed branch died of its
-            # within deadline)
-            helds = alt_helds.get(kt)
-            if helds:
-                for ai, match in resolve_alternation_helds(
-                    nfas, sts, after, helds, final=False
-                ):
-                    emit(kt, match, ai)
-            if helds is not None and not helds:
-                del alt_helds[kt]
-            if not any(st.runs for st in sts) and not alt_helds.get(kt):
-                if kt not in buffered_keys:
-                    del alt_states[kt]
-                    alt_helds.pop(kt, None)
-            else:
-                for nf, st in zip(nfas, sts):
-                    if nf.within_us is not None:
-                        pending.extend(
-                            run.start_ts + nf.within_us for run in st.runs
-                        )
-
-        if alt_reorder:
-            # release the reorder hold: per key, emit (and number)
-            # buffered matches in start order up to the first start
-            # any alternative still holds undecided
-            for kt in list(pending_out):
-                sts = alt_states.get(kt)
-                cands: list[int] = []
-                if sts is not None:
-                    for st in sts:
-                        cands.extend(r.start_ord for r in st.runs)
-                cands.extend(alt_helds.get(kt) or ())
-                undecided = min(cands) if cands else None
-                pend = pending_out[kt]
-                for s in sorted(pend):
-                    if undecided is not None and s[0] > undecided:
-                        break  # a strictly-earlier start is undecided
-                    _emit_now(kt, pend.pop(s))
-                if not pend:
-                    del pending_out[kt]
-
-        # keep state alive while match_nos is non-empty even if no runs
-        # remain: dropping it would restart MATCH_NUMBER at 1 after a
-        # quiescent period, diverging from batch numbering (the
-        # single-pattern operator guards the same case above)
-        if (
-            buffer is None
-            and not alt_states
-            and not match_nos
-            and not pending_out
-            and (nav_tails is None or not len(nav_tails))
-        ):
-            state.remove()
-        else:
-            alt_helds = {k: h for k, h in alt_helds.items() if h}
-            if alt_reorder:
-                # the reorder hold appends a 6th element; nav_tails
-                # rides along (None when the spec has no nav)
-                blob = pickle.dumps(
-                    (buffer, alt_states, alt_helds, match_nos,
-                     nav_tails, pending_out)
-                )
-            elif nav_conf is not None:
-                blob = pickle.dumps(
-                    (buffer, alt_states, alt_helds, match_nos, nav_tails)
-                )
-            else:
-                blob = pickle.dumps(
-                    (buffer, alt_states, alt_helds, match_nos)
-                )
-            state.update((blob,))
+            )
             if buffer is not None:
                 pending.append(int(buffer[_TS_COL].min()))
             if pending:
@@ -1841,7 +1190,7 @@ def match_pattern_stream_alternation(
                         state.getCurrentWatermarkMs() + 1,
                     )
                 )
-        if any(data[c] for c in out_names):
+        if data[out_names[0]]:
             yield pd.DataFrame(data, columns=out_names)
 
     return prepared.groupBy(_BUCKET_COL).applyInPandasWithState(

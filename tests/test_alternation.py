@@ -973,7 +973,7 @@ def test_streaming_alternation_eager_no_skip_numbering(spark, tmp_path):
         AlternationSpec as ASpec,
     )
     from flink_cep_examples_spark.streaming.cep_stream import (
-        match_pattern_stream_alternation,
+        match_pattern_stream,
     )
 
     mk = lambda *vs: PatternSpec(
@@ -1007,7 +1007,7 @@ def test_streaming_alternation_eager_no_skip_numbering(spark, tmp_path):
         src = tmp_path / name
         df.coalesce(1).write.parquet(str(src))
         stream = spark.readStream.schema(df.schema).parquet(str(src))
-        out = match_pattern_stream_alternation(
+        out = match_pattern_stream(
             stream, spec, watermark_delay="0 seconds"
         )
         q = (
@@ -1055,6 +1055,57 @@ def test_streaming_alternation_eager_no_skip_numbering(spark, tmp_path):
     assert run_case(rows, "eager_random") >= 50
 
 
+def test_streaming_alternation_subset_last_over_loop_branches(
+    spark, tmp_path
+):
+    """LAST over a SUBSET of a multi-branch loop group's variables
+    inside an alternation: the union's LAST row is the component span
+    with the latest LAST row (A's seq 2), not the span that started
+    last (B's seq 1). Stream must equal batch."""
+    from flink_cep_examples_spark.streaming.cep_stream import (
+        match_pattern_stream,
+    )
+
+    spec = parse_match_recognize(
+        """
+        PARTITION BY id ORDER BY event_time, seq
+        MEASURES LAST(U.seq) AS lu, CLASSIFIER() AS cls
+        ONE ROW PER MATCH
+        AFTER MATCH SKIP PAST LAST ROW
+        PATTERN ((A | B)+ C | D E)
+        SUBSET U = (A, B)
+        DEFINE A AS fa, B AS fb, C AS fc, D AS fd, E AS fe
+        """
+    )
+    assert isinstance(spec, AlternationSpec)
+    t0 = dt.datetime(2020, 5, 1, 12, 0, 0)
+    rows = [
+        ("k", t0 + dt.timedelta(minutes=i), i, *(v == x for x in "ABCDE"))
+        for i, v in enumerate("ABAC")
+    ]
+    df = spark.createDataFrame(
+        rows,
+        "id string, event_time timestamp, seq long, fa boolean, "
+        "fb boolean, fc boolean, fd boolean, fe boolean",
+    )
+    batch = sorted(map(tuple, match_pattern_alternation(df, spec).collect()))
+    assert batch == [("k", 2, "C")]
+    src = tmp_path / "src"
+    df.coalesce(1).write.parquet(str(src))
+    stream = spark.readStream.schema(df.schema).parquet(str(src))
+    q = (
+        match_pattern_stream(stream, spec, watermark_delay="0 seconds")
+        .writeStream.format("memory")
+        .queryName("alt_subset_last")
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    got = sorted(map(tuple, spark.table("alt_subset_last").collect()))
+    assert got == batch
+
+
 def test_streaming_alternation_reorder_hold_survives_restart(
     spark, tmp_path
 ):
@@ -1079,7 +1130,7 @@ def test_streaming_alternation_reorder_hold_survives_restart(
         AlternationSpec as ASpec,
     )
     from flink_cep_examples_spark.streaming.cep_stream import (
-        match_pattern_stream_alternation,
+        match_pattern_stream,
     )
 
     mk = lambda *vs: PatternSpec(
@@ -1131,7 +1182,7 @@ def test_streaming_alternation_reorder_hold_survives_restart(
         stream = spark.readStream.schema(df.schema).option(
             "recursiveFileLookup", "true"
         ).parquet(str(src))
-        out = match_pattern_stream_alternation(
+        out = match_pattern_stream(
             stream, spec, watermark_delay="0 seconds"
         )
         q = (
@@ -1184,7 +1235,7 @@ def test_streaming_alternation_overlap_combo_differential(
         AlternationSpec as ASpec,
     )
     from flink_cep_examples_spark.streaming.cep_stream import (
-        match_pattern_stream_alternation,
+        match_pattern_stream,
     )
 
     after = NO_SKIP if after_name == "no_skip" else SKIP_TO_NEXT
@@ -1244,7 +1295,7 @@ def test_streaming_alternation_overlap_combo_differential(
     src = tmp_path / name
     df.coalesce(1).write.parquet(str(src))
     stream = spark.readStream.schema(df.schema).parquet(str(src))
-    out = match_pattern_stream_alternation(
+    out = match_pattern_stream(
         stream, spec, watermark_delay="0 seconds"
     )
     q = (

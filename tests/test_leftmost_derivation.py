@@ -197,12 +197,12 @@ def test_leftmost_streaming_matches_batch(spark, tmp_path):
     )
 
     from flink_cep_examples_spark.streaming.cep_stream import (
-        match_pattern_stream_alternation,
+        match_pattern_stream,
     )
     src_dir = tmp_path / "src"
     df.coalesce(1).write.parquet(str(src_dir))
     stream = spark.readStream.schema(df.schema).parquet(str(src_dir))
-    out = match_pattern_stream_alternation(
+    out = match_pattern_stream(
         stream, spec, watermark_delay="0 seconds"
     )
     q = (
@@ -486,7 +486,7 @@ def test_streaming_alternation_match_number_agrees_with_batch(spark, tmp_path):
         alternation,
     )
     from flink_cep_examples_spark.streaming.cep_stream import (
-        match_pattern_stream_alternation,
+        match_pattern_stream,
     )
 
     spec = alternation(
@@ -508,7 +508,7 @@ def test_streaming_alternation_match_number_agrees_with_batch(spark, tmp_path):
     src = tmp_path / "src"
     df.coalesce(1).write.parquet(str(src))
     stream = spark.readStream.schema(df.schema).parquet(str(src))
-    out = match_pattern_stream_alternation(
+    out = match_pattern_stream(
         stream, spec, watermark_delay="0 seconds"
     )
     q = (
@@ -662,7 +662,7 @@ def test_leftmost_helds_survive_checkpoint_restart(spark, tmp_path):
         match_pattern_alternation,
     )
     from flink_cep_examples_spark.streaming.cep_stream import (
-        match_pattern_stream_alternation,
+        match_pattern_stream,
     )
 
     spec = _dsl_leftmost_spec()
@@ -688,7 +688,7 @@ def test_leftmost_helds_survive_checkpoint_restart(spark, tmp_path):
         stream = spark.readStream.schema(schema).option(
             "recursiveFileLookup", "true"
         ).parquet(str(src))
-        out = match_pattern_stream_alternation(
+        out = match_pattern_stream(
             stream, spec, watermark_delay="0 seconds"
         )
         q = (

@@ -145,7 +145,6 @@ def test_streaming_navigation_gate(spark, tmp_path):
     fails loud at build; streaming ALTERNATION nav stays batch-tier."""
     from flink_cep_examples_spark.streaming.cep_stream import (
         match_pattern_stream,
-        match_pattern_stream_alternation,
     )
 
     d = tmp_path / "in"
@@ -203,7 +202,7 @@ def test_streaming_navigation_gate(spark, tmp_path):
                U AS U.balanceAfter > PREV(U.balanceAfter)
         """
     )
-    assert match_pattern_stream_alternation(stream, alt).isStreaming
+    assert match_pattern_stream(stream, alt).isStreaming
     gated_alt = parse_match_recognize(
         """
         PARTITION BY id ORDER BY event_time
@@ -218,7 +217,7 @@ def test_streaming_navigation_gate(spark, tmp_path):
         """
     )
     with pytest.raises(NotImplementedError, match="token subset"):
-        match_pattern_stream_alternation(stream, gated_alt)
+        match_pattern_stream(stream, gated_alt)
 
 
 def _nav_walk_rows(keys=("a", "b", "c"), n=60, seed=7):

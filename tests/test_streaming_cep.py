@@ -945,7 +945,7 @@ def test_streaming_aggregate_measures_match_batch(spark, sf_small, tmp_path):
     MEASURES FIRST(A.ts) AS a_ts,
              SUM(B.value) AS sum_b, AVG(B.value) AS avg_b,
              MIN(B.value) AS min_b, MAX(B.value) AS max_b,
-             COUNT(B.value) AS n_b
+             COUNT(B.value) AS n_b, MATCH_NUMBER() AS mno
     ONE ROW PER MATCH
     AFTER MATCH SKIP PAST LAST ROW
     PATTERN (A B* C) WITHIN INTERVAL '2' DAY
@@ -963,6 +963,7 @@ def test_streaming_aggregate_measures_match_batch(spark, sf_small, tmp_path):
             r.min_b,
             r.max_b,
             r.n_b,
+            r.mno,  # after the aggregates: must not read their state
         )
 
     batch_df = spark.read.parquet(src)
