@@ -106,11 +106,14 @@ SELECT *, 'timeout' AS tag FROM ({_TIMEOUTS_SELECT})
 #: FlinkProcessFunctionExample.scala:73-77) and no top-up row sits
 #: between that alarm and it (an intervening in-window top-up consumed
 #: the alert; an out-of-window one implies this one is out too).
+#: "Between" compares (ts, event_id) positions, not timestamps: a top-up
+#: that shares its timestamp with a later alarm precedes that alarm.
 ORACLE_KEYED_PROCESS = f"""
 WITH billing AS (
   SELECT CAST(user_id AS VARCHAR) AS id,
          ts, event_id,
          epoch_us(ts) AS tus,
+         ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS pos,
          COALESCE(LAG(value) OVER (PARTITION BY user_id ORDER BY ts, event_id), 50.0) AS bb,
          value AS ba
   FROM events
@@ -122,7 +125,8 @@ flagged AS (
 lasts AS (
   SELECT *,
          MAX(CASE WHEN is_a THEN tus END) OVER w AS last_a_tus,
-         MAX(CASE WHEN is_c THEN tus END) OVER w AS last_c_tus
+         MAX(CASE WHEN is_a THEN pos END) OVER w AS last_a_pos,
+         MAX(CASE WHEN is_c THEN pos END) OVER w AS last_c_pos
   FROM flagged
   WINDOW w AS (PARTITION BY id ORDER BY ts, event_id
                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
@@ -133,7 +137,7 @@ SELECT id,
 FROM lasts
 WHERE is_c AND last_a_tus IS NOT NULL
   AND tus - last_a_tus < 3600000000
-  AND (last_c_tus IS NULL OR last_c_tus < last_a_tus)
+  AND (last_c_pos IS NULL OR last_c_pos < last_a_pos)
 """
 
 _MR_BODY = """
