@@ -918,7 +918,12 @@ def test_streaming_aggregate_measures_match_batch(spark, sf_small, tmp_path):
         "user_id", "ts", "event_id", "value"
     )
     sentinel = spark.createDataFrame(
-        [(-1, "2031-01-01 00:00:00", 4, 0.0)],  # 4 % 4 == 0: inert
+        [
+            # user -2: A then C, an empty B* (NULL aggregates, n_b 0)
+            (-2, "2030-12-31 23:00:00", 5, 7.0),
+            (-2, "2030-12-31 23:01:00", 7, 8.0),
+            (-1, "2031-01-01 00:00:00", 4, 0.0),  # 4 % 4 == 0: inert
+        ],
         "user_id long, dt string, event_id long, value double",
     ).select(
         "user_id", F.to_timestamp("dt").alias("ts"), "event_id", "value"
@@ -974,7 +979,9 @@ def test_streaming_aggregate_measures_match_batch(spark, sf_small, tmp_path):
         ).collect()
     )
     assert batch, "expected matches in the fixture"
-    assert any(r[6] == 0 for r in batch) or True  # empty-B* may occur
+    # user -2's match: NULL SUM/AVG/MIN/MAX, COUNT 0, first match
+    empty_b = [r[:1] + r[2:] for r in batch if r[0] == -2]
+    assert empty_b == [(-2, None, None, None, None, 0, 1)]
 
     stream = (
         spark.readStream.schema(batch_df.schema)
