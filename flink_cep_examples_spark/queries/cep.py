@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from flink_cep_examples_spark.operators.cep_batch import match_pattern
-from flink_cep_examples_spark.operators.fast_path import match_pattern_fast_abc
+from flink_cep_examples_spark.operators.planner import run_pattern
 from flink_cep_examples_spark.operators.keyed_process import billing_low_level_alerts
 from flink_cep_examples_spark.plans.pattern import billing_pattern
 from flink_cep_examples_spark.queries import register
@@ -162,7 +162,7 @@ def _matches_only(df: DataFrame) -> DataFrame:
 
 def cep_alert_reactions(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _matches_only(
-        match_pattern_fast_abc(events_as_billing(spark, sf_dir), billing_pattern())
+        run_pattern(events_as_billing(spark, sf_dir), billing_pattern())
     )
 
 
@@ -173,7 +173,7 @@ def cep_alert_reactions_nfa(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def cep_alerts_with_timeouts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return match_pattern_fast_abc(
+    return run_pattern(
         events_as_billing(spark, sf_dir), billing_pattern(emit_timeouts=True)
     )
 
@@ -425,15 +425,11 @@ def cep_sliced_absence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def cep_absence_not_followed_by(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Timed-absence on the compiled closed-form path (one window over
-    one key Exchange, zero Python); the NFA tier is the
-    differential-tested fallback (tests/test_pattern_features.py)."""
-    from flink_cep_examples_spark.operators.fast_path import (
-        match_pattern_fast_absence,
-    )
-
+    """Timed-absence: the tier table picks the compiled closed form (one
+    window over one key Exchange, zero Python); the NFA tier is the
+    differential-tested reference (tests/test_pattern_features.py)."""
     return _matches_only(
-        match_pattern_fast_absence(events_as_billing(spark, sf_dir), absence_spec())
+        run_pattern(events_as_billing(spark, sf_dir), absence_spec())
     )
 
 
@@ -624,12 +620,11 @@ def until_pattern_spec():
 
 
 def cep_until_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """until() on the compiled fast path: the billing algebra keeps the
-    A/C selection identical to the base pattern and until() only
-    truncates the B count at the first stop row — closed-form per the
-    oracle; NFA tier is the differential-tested fallback."""
+    """until() over the billing pattern: the A/C selection is the base
+    pattern's and until() only truncates the B count at the first stop
+    row — closed-form per the oracle."""
     return _matches_only(
-        match_pattern_fast_abc(events_as_billing(spark, sf_dir), until_pattern_spec())
+        run_pattern(events_as_billing(spark, sf_dir), until_pattern_spec())
     )
 
 
@@ -668,17 +663,12 @@ def skip_to_last_spec():
 
 
 def cep_skip_to_last(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Compiled positional fast path (round 4): the dense all-true
-    fixed-width shape is pure row-ordinal arithmetic — the same algebra
-    as the DuckDB oracle below. NFA twin kept as the differential."""
-    from flink_cep_examples_spark.operators.fast_path import (
-        match_pattern_fast_positional,
-    )
-
+    """The tier table picks the compiled positional tier: the dense
+    all-true fixed-width shape is pure row-ordinal arithmetic — the same
+    algebra as the DuckDB oracle below. NFA twin kept as the
+    differential."""
     return _matches_only(
-        match_pattern_fast_positional(
-            events_as_billing(spark, sf_dir), skip_to_last_spec()
-        )
+        run_pattern(events_as_billing(spark, sf_dir), skip_to_last_spec())
     )
 
 
@@ -1179,13 +1169,10 @@ def cep_group_zigzag(spark: SparkSession, sf_dir: str) -> DataFrame:
 def events_signup_no_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CEP on the RAW events table (no billing mapping): signups with
     no purchase within 2 hours — the funnel-drop absence sweep, keyed
-    by user over (ts, event_id). Compiles to the timed-absence closed
-    form (one window over one key Exchange, zero Python)."""
+    by user over (ts, event_id). The tier table picks the timed-absence
+    closed form (one window over one key Exchange, zero Python)."""
     from pyspark.sql import functions as F
 
-    from flink_cep_examples_spark.operators.fast_path import (
-        match_pattern_fast_absence,
-    )
     from flink_cep_examples_spark.plans.pattern import (
         Measure,
         NO_SKIP,
@@ -1213,7 +1200,7 @@ def events_signup_no_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
             measures=(Measure("signup_ts", "S", "ts_str", "first"),),
         )
     )
-    return match_pattern_fast_absence(events, spec).drop("tag")
+    return run_pattern(events, spec).drop("tag")
 
 
 #: Absence closed form on raw events: a signup emits iff the first

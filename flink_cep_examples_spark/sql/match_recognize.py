@@ -63,23 +63,7 @@ import re
 
 from pyspark.sql import DataFrame
 
-from flink_cep_examples_spark.operators.cep_batch import (
-    match_pattern,
-    match_pattern_all_rows,
-    match_pattern_alternation,
-)
-from flink_cep_examples_spark.operators.fast_path import (
-    fast_abc_applicable,
-    fast_abc_semantics_hold,
-    fast_group_preds_disjoint,
-    fast_loop_chain_applicable,
-    fast_positional_applicable,
-    loop_chain_agg_needs_disjoint,
-    match_pattern_fast_abc,
-    match_pattern_fast_abc_all_rows,
-    match_pattern_fast_loop_chain,
-    match_pattern_fast_positional,
-)
+from flink_cep_examples_spark.operators.planner import run_pattern
 from flink_cep_examples_spark.plans.pattern import (
     AGG_FNS,
     NILADIC_FNS,
@@ -1061,10 +1045,11 @@ def match_recognize(
     A streaming ``df`` dispatches to the Structured-Streaming pattern
     operator (the reference's SQL path is itself a streaming program,
     FlinkSqlMatchRecognizeExample.scala:48-70) with ``watermark_delay``
-    bounding out-of-orderness. A batch ``df`` picks the compiled
-    pure-DataFrame fast path when the pattern shape qualifies (caller
-    may disable to force the general NFA), exactly as a query planner
-    would; both produce identical results (differential-tested).
+    bounding out-of-orderness. A batch ``df`` runs the first compiled
+    tier of the tier table (operators/planner.py) whose checks pass on
+    the spec and the data, else the NFA reference; ``use_fast_path=False``
+    forces the reference. Both produce identical results
+    (differential-tested).
 
     Fast-path dispatch may run (and memoize, per session + analyzed
     plan + predicates) a one-off data check on ``df``'s source — e.g.
@@ -1091,192 +1076,16 @@ def match_recognize(
         updates["order_col"] = order_col
     if isinstance(spec, AlternationSpec):
         spec = spec.with_updates(**updates)
-        if df.isStreaming:
-            from flink_cep_examples_spark.streaming.cep_stream import (
-                match_pattern_stream,
-            )
-
-            return match_pattern_stream(
-                df, spec, watermark_delay=watermark_delay
-            )
-        from flink_cep_examples_spark.operators.fast_path import (
-            fast_alternation_applicable,
-            fast_star_chain_applicable,
-            match_pattern_alternation_fast,
-            match_pattern_fast_star_chain,
-        )
-
-        if spec.alternatives[0].rows_per_match == "all":
-            from flink_cep_examples_spark.operators.cep_batch import (
-                match_pattern_alternation_all_rows,
-            )
-
-            return match_pattern_alternation_all_rows(df, spec)
-        if use_fast_path and fast_star_chain_applicable(spec):
-            # greedy (X..Y)* with a suffix compiles to ONE chain-kernel
-            # pass (round 7.2) instead of the 2-NFA lockstep coordinator
-            return match_pattern_fast_star_chain(df, spec)
-        if use_fast_path and fast_alternation_applicable(spec):
-            return match_pattern_alternation_fast(df, spec)
-        return match_pattern_alternation(df, spec)
-    spec = dataclasses.replace(spec, **updates)
-    if spec.permute:
-        if df.isStreaming:
-            # round 5: PERMUTE on a stream compiles to the alternation
-            # coordinator (one alternative per ordering, lexicographic
-            # preference = leftmost-alternative preference); the
-            # lockstep per-key state machinery already runs in the
-            # bucketed state store.
-            from flink_cep_examples_spark.plans.pattern import (
-                permute_to_alternation,
-            )
-            from flink_cep_examples_spark.streaming.cep_stream import (
-                match_pattern_stream,
-            )
-
-            if emit_timeouts:
-                raise ValueError("PERMUTE has no timeout channel")
-            return match_pattern_stream(
-                df,
-                permute_to_alternation(spec),
-                watermark_delay=watermark_delay,
-            )
-        from flink_cep_examples_spark.operators.fast_path import (
-            match_pattern_permute,
-        )
-
-        out = match_pattern_permute(df, spec)
-        if not emit_timeouts:
-            out = out.drop("tag")
-        return out
-    if df.isStreaming:
-        # ALL ROWS PER MATCH streams too (round 11): the span fold
-        # captures consumed rows, emission expands each match
-        from flink_cep_examples_spark.streaming.cep_stream import (
-            match_pattern_stream,
-        )
-
-        out = match_pattern_stream(df, spec, watermark_delay=watermark_delay)
-        if not emit_timeouts:
-            out = out.drop("tag")
-        return out
-    if spec.rows_per_match == "all":
-        if emit_timeouts:
-            raise ValueError("ALL ROWS PER MATCH has no timeout channel")
-        from flink_cep_examples_spark.operators.fast_path import (
-            fast_branch_all_rows_applicable,
-            fast_loop_chain_all_rows_applicable,
-            fast_nested_chain_all_rows_applicable,
-            match_pattern_fast_branch_all_rows,
-            match_pattern_fast_loop_chain_all_rows,
-            match_pattern_fast_nested_chain_all_rows,
-        )
-
-        if use_fast_path and fast_branch_all_rows_applicable(spec, df):
-            # branch-group all-rows emission compiles to the islands
-            # kernel (round 10) — per-row classifier from the break-
-            # mask tiling, any widths, zero per-match Python; round 12
-            # adds RUNNING series (df passed for the dtype gate)
-            return match_pattern_fast_branch_all_rows(df, spec)
-        if use_fast_path and fast_nested_chain_all_rows_applicable(
-            spec, df
-        ):
-            # nested-group all-rows emission rides the two-level chain
-            # kernel (round 10) — match spans expand with one
-            # repeat/arange pass, per-row classifier from predicates;
-            # round 12 adds RUNNING series (df passed for dtype gate)
-            return match_pattern_fast_nested_chain_all_rows(df, spec)
-        if use_fast_path and fast_loop_chain_all_rows_applicable(spec, df):
-            # loop-group all-rows emission compiles to the chain kernel
-            # (round 7.2) — positional classifier + exclusion masks;
-            # round 12 adds RUNNING MIN/MAX (segmented extrema) for
-            # plain-numeric sources (df passed for the dtype check)
-            return match_pattern_fast_loop_chain_all_rows(df, spec)
-        # fast_abc_applicable doesn't check until(), but the all-rows
-        # closed form rejects it — guard here so an until-carrying spec
-        # falls back to the NFA tier instead of raising. RUNNING /
-        # aggregate / niladic measures compile on this path since
-        # round 11 (cumulative conditional windows over the segment
-        # partition — previously the NFA tier's slowest benched shape).
-        if (
-            use_fast_path
-            and fast_abc_applicable(spec)
-            and spec.variables[1].until is None
-            # data-verified B ≡ ¬C and A ∧ C = ∅ (round 11) — the
-            # closed form is exact only under them; else NFA tier
-            and fast_abc_semantics_hold(df, spec)
-        ):
-            return match_pattern_fast_abc_all_rows(df, spec)
-        return match_pattern_all_rows(df, spec)
-    from flink_cep_examples_spark.operators.fast_path import (
-        fast_group_absence_applicable,
-        match_pattern_fast_group_absence,
-    )
-
-    from flink_cep_examples_spark.operators.fast_path import (
-        fast_mixed_branch_applicable,
-        fast_nested3_chain_applicable,
-        fast_nested_chain_applicable,
-        match_pattern_fast_mixed_branch,
-        match_pattern_fast_nested3_chain,
-        match_pattern_fast_nested_chain,
-    )
-
-    if use_fast_path and fast_group_absence_applicable(spec):
-        # timeout-channel loop groups under start-independent skip
-        # compile to a per-start closed form (round 8 — the NFA tier
-        # measured 3.48x at 10x on this shape)
-        out = match_pattern_fast_group_absence(df, spec)
-    elif use_fast_path and fast_mixed_branch_applicable(spec):
-        # mixed-width multi-branch groups compile to the break-mask
-        # islands kernel (round 10) — one vectorized pass, zero
-        # per-match Python; runtime disjointness + NFA fallback
-        out = match_pattern_fast_mixed_branch(df, spec)
-    elif use_fast_path and fast_nested3_chain_applicable(spec):
-        # THREE-level nested unbounded groups compile to the chain
-        # kernel one level up (superunits = unit-chain + suffix2;
-        # round 10) with the same runtime disjointness check and
-        # per-segment NFA fallback
-        out = match_pattern_fast_nested3_chain(df, spec)
-    elif use_fast_path and fast_nested_chain_applicable(spec):
-        # nested unbounded groups compile to a TWO-LEVEL chain
-        # (units = the single-level shape; outer = unit adjacency)
-        # with a runtime predicate-disjointness check and per-segment
-        # NFA fallback (round 8)
-        out = match_pattern_fast_nested_chain(df, spec)
-    elif (
-        use_fast_path
-        and fast_loop_chain_applicable(spec)
-        # branch-group aggregates select rows by predicate — exact
-        # only under data-verified group-predicate disjointness
-        # (round 11); violations fall back to the NFA tier, whose
-        # classify path raises its named ambiguity reject
-        and (
-            not loop_chain_agg_needs_disjoint(spec)
-            or fast_group_preds_disjoint(df, spec)
-        )
-    ):
-        # trailing-loop-group longest derivation compiles to the
-        # vectorized chain kernel (round 7 — the NFA's held-completion
-        # Python loop was the one perf-weak shape in round 6)
-        out = match_pattern_fast_loop_chain(df, spec)
-    elif (
-        use_fast_path
-        and fast_abc_applicable(spec)
-        # data-verified B ≡ ¬C and A ∧ C = ∅ (round 11): the segment
-        # closed form silently mis-matches (and aggregates non-B rows)
-        # when B is not the complement of C — caught by the streaming
-        # aggregate-measures differential; violations → NFA tier
-        and fast_abc_semantics_hold(df, spec)
-    ):
-        out = match_pattern_fast_abc(df, spec)
-    elif use_fast_path and fast_positional_applicable(spec):
-        # fast_positional_applicable rejects emit_timeouts itself, so
-        # this arm never swallows the timeout channel
-        out = match_pattern_fast_positional(df, spec)
     else:
-        out = match_pattern(df, spec)
-    if not emit_timeouts:
+        spec = dataclasses.replace(spec, **updates)
+    out = run_pattern(
+        df, spec, use_fast_path=use_fast_path, watermark_delay=watermark_delay
+    )
+    if (
+        not emit_timeouts
+        and isinstance(spec, PatternSpec)
+        and spec.rows_per_match != "all"
+    ):
         out = out.drop("tag")
     return out
 
