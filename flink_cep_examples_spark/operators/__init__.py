@@ -3,9 +3,6 @@ from flink_cep_examples_spark.operators.cep_batch import (  # noqa: F401
     match_pattern_alternation,
     match_pattern_time_sliced,
 )
-from flink_cep_examples_spark.operators.fast_path import (  # noqa: F401
-    match_pattern_fast_abc,
-)
 from flink_cep_examples_spark.operators.planner import (  # noqa: F401
     choose_tier,
     run_pattern,

@@ -18,10 +18,10 @@ for scale:
    emulation, Flink OutputTag → union schema,
    FlinkCEPAbsenceOfEventExample.scala:77,95-106).
 
-Prefer :func:`flink_cep_examples_spark.operators.fast_path.
-match_pattern_fast_abc` when the pattern qualifies — it is pure
-DataFrame (no Python at all). This general operator handles every
-pattern the DSL can express.
+This general operator handles every pattern the DSL can express; it is
+the reference the compiled kernels of operators/fast_path.py are
+differential-tested against. Front-ends pick between them through the
+tier table (operators/planner.py::run_pattern).
 """
 
 from __future__ import annotations

@@ -1,40 +1,14 @@
-"""Compiled pure-DataFrame fast path for ``A B* C``-class patterns.
+"""Compiled kernels for the pattern shapes where they beat the NFA tier.
 
-When a pattern has the shape
-
-    PATTERN (A B* C) WITHIN <t> AFTER MATCH SKIP PAST LAST ROW
-
-with **B ≡ NOT C** (B's predicate covers every non-C row) and **A ∧ C
-unsatisfiable** — exactly the reference pattern's structure
-(FlinkSqlMatchRecognizeExample.scala:62-66: B = ``balanceBefore >=
-balanceAfter`` is the complement of C = ``balanceBefore <
-balanceAfter``, and A requires ``balanceAfter < 10 ≤ balanceBefore``
-which contradicts C) — the NFA admits a *closed form*, provable from the
-NFA semantics (operators/nfa.py):
-
-- Every row after an A is either a B (run extends) or a C (run
-  completes or dies), so a partial can never die from a contiguity
-  break, and **no A-run survives past the next C row**: if the next C
-  is within the deadline it completes/discards the run; otherwise the
-  run is pruned by ``within`` first.
-- Hence each match pairs a C row with the **earliest A row after the
-  previous C row** whose gap ``ts_C - ts_A < within`` (skip-past-last
-  discards the later candidates; the previous C row is the skip
-  cursor — rows before it can never host a surviving A).
-- A timeout (absence alert) is exactly an A row whose next C row is
-  missing or ≥ ``within`` later.
-
-That closed form is pure window functions: one shuffle on the key, one
-sort, zero Python, whole-stage codegen end-to-end — the plan you want
-for 100 TB. The general NFA operator remains the fallback for every
-other pattern; differential tests pin both paths to identical output.
-
-Three shapes compile here:
-- :func:`match_pattern_fast_abc` — ONE ROW PER MATCH (+ timeouts);
-- :func:`match_pattern_fast_abc_all_rows` — ALL ROWS PER MATCH (the
-  match row set is a segment filter, classifier is positional);
-- :func:`match_pattern_fast_absence` — ``A notFollowedBy(N) within T``
-  timed absence (match ⇔ no N row before the deadline).
+Each kernel is exact, by a derivation from the NFA semantics
+(operators/nfa.py), on the shapes its ``*_applicable`` check admits:
+window closed forms with one hash Exchange on the key and no Python
+(timed absence, positional skips, PERMUTE, SKIP TO NEXT ROW
+alternation) and vectorized numpy scans over key groups (the loop,
+nested and branch group chains). The tier table (operators/planner.py)
+is their only dispatcher: it runs a kernel after its structural and
+data checks pass, and the NFA reference otherwise. Differential tests
+pin each kernel to the NFA's output.
 """
 
 from __future__ import annotations
@@ -58,7 +32,6 @@ from flink_cep_examples_spark.plans.pattern import (
     SKIP_TO_NEXT,
     STRICT,
     TIMES,
-    ZERO_OR_MORE,
     AlternationSpec,
     Measure,
     PatternSpec,
@@ -66,120 +39,13 @@ from flink_cep_examples_spark.plans.pattern import (
 from flink_cep_examples_spark.schemas import MATCH_TAG, TIMEOUT_TAG
 
 
-def fast_abc_applicable(spec: PatternSpec) -> bool:
-    """Structural check only — the caller is responsible for the
-    semantic guarantees (B ≡ ¬C, A ∧ C = ∅); differential tests against
-    the NFA path verify them on real data.
-
-    Measures: A/C first-last and COUNT(B.*) everywhere; aggregates
-    over B, CLASSIFIER() and MATCH_NUMBER() additionally compile on
-    the one-row no-timeout shape (B rows are the segment slice between
-    the anchor and the C row — a windowed conditional aggregate)."""
-    v = spec.variables
-    if spec.loop_groups:
-        return False
-    if not (
-        len(v) == 3
-        and not any(vv.negated for vv in v)
-        and v[0].quantifier == ONCE
-        and v[1].quantifier == ZERO_OR_MORE
-        and not v[1].combinations
-        and v[2].quantifier == ONCE
-        and not spec.nav_cols  # PREV/NEXT columns exist only in the NFA tier's prepare
-        and not spec.subsets
-        and spec.after_match == SKIP_PAST_LAST_EVENT
-    ):
-        return False
-    extended_ok = not spec.emit_timeouts and v[1].until is None
-    return all(
-        (m.fn in ("first", "last") and m.var in (v[0].name, v[2].name))
-        or (m.fn == "count" and m.var == v[1].name)
-        or (m.fn in AGG_FNS and m.var == v[1].name and extended_ok)
-        or (m.fn in NILADIC_FNS and extended_ok)
-        for m in spec.measures
-    )
-
-
-def fast_abc_semantics_hold(df: DataFrame, spec: PatternSpec) -> bool:
-    """The A B* C closed forms assume two ROW-LOCAL semantic facts the
-    structural check cannot see (``fast_abc_applicable``: "the caller
-    is responsible"): **B ≡ ¬C** (every non-C row qualifies as B, so
-    strict contiguity is automatic and greedy B* never competes with
-    the closing C) and **A ∧ C ≡ ∅** (a segment-closing row can never
-    anchor the next match). The reference's billing pattern satisfies
-    both per row (B/C are a flipped comparison on the same operands;
-    A∧C is arithmetically impossible), but an arbitrary user query need
-    not — round 11's streaming aggregate differential caught the
-    dispatcher sending ``B AS event_id % 4 = 2`` here, silently
-    producing wrong matches AND summing non-B rows.
-
-    Verified ON THE DATA: one column-pruned job over the three
-    predicate expressions, short-circuited by ``limit(1)`` the moment a
-    violating row is found. Clean data → the closed form is exact for
-    this input; any violation → the caller falls back to the NFA tier.
-    NULL predicate values count as False, matching the NFA prepare —
-    which is also why a purely syntactic complement prover would be
-    UNSOUND: a NULL/NaN operand makes BOTH ``x >= y`` and ``x < y``
-    false, so even a textbook comparison flip can violate B ≡ ¬C on
-    real rows. At scale the check reads only the predicate input
-    columns (projection pushdown), a fraction of the kernel's own
-    shuffle — and the verdict is MEMOIZED per (session, analyzed-plan
-    semantic hash, predicate triple), so repeated queries over the same
-    immutable source pay it once per session.
-
-    The memo assumes the data under a semantically identical plan does
-    not change mid-session (the engine's sources are immutable snapshot
-    reads). If a source CAN gain rows under the same path/plan (files
-    appended to a parquet directory between queries), disable the memo
-    with ``spark.conf.set(
-    "spark.flinkCepExamplesSpark.abcDataCheckMemo.disabled", "true")``
-    (``ABC_MEMO_DISABLE_CONF``) — every call then re-runs the data
-    check. Round 12 (ADVICE r11): the memo is keyed on the
-    live session OBJECT via a WeakKeyDictionary, so entries die with
-    their session and a recycled ``id()`` can never resurrect a stale
-    verdict."""
-    a_pred, b_pred, c_pred = (v.predicate for v in spec.variables)
-    sess = df.sparkSession
-    key = None
-    try:  # classic PySpark only; any failure just skips the memo
-        if (
-            str(sess.conf.get(ABC_MEMO_DISABLE_CONF, "false")).lower()
-            != "true"
-        ):
-            plan_hash = df._jdf.queryExecution().analyzed().semanticHash()
-            key = (plan_hash, a_pred, b_pred, c_pred)
-    except Exception:  # noqa: BLE001
-        pass
-    if key is not None:
-        try:
-            per_sess = _ABC_SEMANTICS_MEMO.get(sess)
-        except TypeError:  # session not weakref-able (ADVICE r12 low):
-            per_sess = None  # WeakKeyDictionary.get calls ref(key)
-        if per_sess is not None and key in per_sess:
-            return per_sess[key]
-    pa, pb, pc = (
-        F.coalesce(F.expr(p).cast("boolean"), F.lit(False))
-        for p in (a_pred, b_pred, c_pred)
-    )
-    ok = df.where((pb == pc) | (pa & pc)).isEmpty()
-    if key is not None:
-        try:
-            per_sess = _ABC_SEMANTICS_MEMO.setdefault(sess, {})
-        except TypeError:  # session not weakref-able: skip the memo
-            return ok
-        if len(per_sess) >= 256:
-            per_sess.clear()  # tiny bound; rebuilt on demand
-        per_sess[key] = ok
-    return ok
-
-
 #: escape hatch for mutable-under-identical-plan sources: set to "true"
-#: to re-run the B≡¬C / A∧C=∅ data check on every dispatch
+#: to re-run the group-predicate disjointness check on every dispatch
 ABC_MEMO_DISABLE_CONF = (
     "spark.flinkCepExamplesSpark.abcDataCheckMemo.disabled"
 )
 
-#: session (weak) → {(plan semantic hash, A/B/C predicates): verdict};
+#: session (weak) → {(plan semantic hash, predicates): verdict};
 #: entries are dropped when their session is garbage-collected
 _ABC_SEMANTICS_MEMO: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 
@@ -253,401 +119,6 @@ def match_pattern_fast_absence(df: DataFrame, spec: PatternSpec) -> DataFrame:
             F.lit(MATCH_TAG).alias("tag"),
         )
     )
-    target = output_schema(df, spec)
-    return out.select(
-        *[F.col(f.name).cast(f.dataType).alias(f.name) for f in target.fields]
-    )
-
-
-def _segment_anchors(
-    df: DataFrame,
-    spec: PatternSpec,
-    carry_cols: list[str],
-    include_c_payload: bool = False,
-) -> tuple[DataFrame, Window]:
-    """Shared closed-form segmentation for the A B* C shapes — ONE
-    definition so the one-row and all-rows paths cannot drift:
-
-    - ``__seg``  — number of C rows strictly before this row (a C row
-      closes the segment it terminates);
-    - ``__rn``   — per-key row position in (order, tiebreak) sequence;
-    - ``__c``    — the segment's closing-C struct ``(ts, rn)`` — plus
-      the C-side measure payload columns when ``include_c_payload``
-      (the all-rows path reads them; the one-row path reads C measures
-      off the C row itself and skips the struct width). NULL for a
-      trailing segment with no C — every match condition must check it
-      (the anchor ``__a`` below already does: its deadline references
-      ``__c.ts``, and with no ``within`` the explicit ``__c IS NOT
-      NULL`` conjunct takes over);
-    - ``__a``    — the anchor struct ``(rn, s_<src>…)`` of the EARLIEST
-      A row whose gap to the segment's C is inside ``within`` (``rn``
-      leads, and is monotone in (order, tiebreak), so the struct-min IS
-      the earliest row); NULL when the segment has no C row or no
-      qualifying A;
-    - ``__is_u`` / ``__u_rn`` — the until() stop predicate and the
-      first stop row after the anchor, when the loop variable carries
-      an until() condition.
-
-    Returns (annotated frame, the per-key ordering window) — all
-    columns computed over one hash Exchange on the key."""
-    a_var, _, c_var = (v.name for v in spec.variables)
-    a_pred, _, c_pred = (v.predicate for v in spec.variables)
-    keys = list(spec.key_cols)
-    within_us = (
-        int(spec.within.total_seconds() * 1_000_000)
-        if spec.within is not None
-        else None
-    )
-    until_pred = spec.variables[1].until
-    a_srcs = sorted(
-        {m.src for m in spec.measures if m.var == a_var and m.fn != "count"}
-    )
-    c_srcs = sorted(
-        {m.src for m in spec.measures if m.var == c_var and m.fn != "count"}
-    )
-
-    base = df.select(
-        *carry_cols,
-        F.unix_micros(F.col(spec.order_col).cast(T.TimestampType())).alias("__ts"),
-        F.col(spec.tiebreak_col).alias("__tb"),
-        F.expr(a_pred).alias("__is_a"),
-        F.expr(c_pred).alias("__is_c"),
-        *([F.expr(until_pred).alias("__is_u")] if until_pred else []),
-    )
-    w_ord = Window.partitionBy(*keys).orderBy("__ts", "__tb")
-    base = base.withColumn(
-        "__seg",
-        F.coalesce(
-            F.sum(F.col("__is_c").cast("long")).over(
-                w_ord.rowsBetween(Window.unboundedPreceding, -1)
-            ),
-            F.lit(0),
-        ),
-    ).withColumn("__rn", F.row_number().over(w_ord))
-
-    w_seg = Window.partitionBy(*keys, "__seg")
-    c_fields = [F.col("__ts").alias("ts"), F.col("__rn").alias("rn")]
-    if include_c_payload:
-        c_fields += [F.col(s).alias(f"s_{s}") for s in c_srcs]
-    out = base.withColumn(
-        "__c",
-        F.max(F.when(F.col("__is_c"), F.struct(*c_fields))).over(w_seg),
-    )
-    deadline_ok = (
-        F.col("__c").isNotNull()
-        if within_us is None
-        else (F.col("__c.ts") - F.col("__ts")) < F.lit(within_us)
-    )
-    out = out.withColumn(
-        "__a",
-        F.min(
-            F.when(
-                F.col("__is_a") & deadline_ok,
-                F.struct(
-                    F.col("__rn").alias("rn"),
-                    *[F.col(s).alias(f"s_{s}") for s in a_srcs],
-                ),
-            )
-        ).over(w_seg),
-    )
-    if until_pred:
-        # Flink until(): the first stop row after the match's A closes
-        # the loop — B rows from it on (the stop row included) are not
-        # consumed, truncating the count; the match itself survives
-        # (relaxed contiguity carries the run to its C). Same window
-        # partitioning → no extra Exchange.
-        out = out.withColumn(
-            "__u_rn",
-            F.min(
-                F.when(
-                    F.col("__is_u") & (F.col("__rn") > F.col("__a.rn")),
-                    F.col("__rn"),
-                )
-            ).over(w_seg),
-        )
-    return out, w_ord
-
-
-def match_pattern_fast_abc_all_rows(df: DataFrame, spec: PatternSpec) -> DataFrame:
-    """ALL ROWS PER MATCH on the same A B* C closed form (same semantic
-    guarantees as :func:`match_pattern_fast_abc`): a match's row set is
-    exactly its segment's rows from the anchor A onward (the segment
-    ends at its C row), so the expansion is a filter — no NFA, no
-    Python. classifier is positional (anchor → A, closing C → C, rest →
-    B), match_seq the per-key dense rank of the matched segment (the
-    NFA's emission order), FINAL measures are whole-segment windows.
-
-    RUNNING measures (round 11 — these previously forced the NFA tier,
-    the slowest benched CEP shape): a RUNNING aggregate over B is a
-    CUMULATIVE conditional window over the same (key, __seg) partition
-    ordered by __rn — the partitioning the frame already has, so the
-    running series costs one extra sorted window pass, zero Exchange.
-    RUNNING COUNT(B.*) is pure arithmetic (interior rows are all B
-    under the data-verified B ≡ ¬C); A-variable measures are constants
-    of the anchor struct (the anchor is every match's first row, so
-    RUNNING == FINAL for A); C-variable RUNNING measures unmask at the
-    closing row. RUNNING FIRST/LAST use a struct wrapper so a NULL
-    first/last B value survives (SQL keeps the row's value, null or
-    not — the bare column would make ignorenulls skip it). Output
-    schema identical to
-    :func:`~flink_cep_examples_spark.operators.cep_batch.match_pattern_all_rows`;
-    differential-tested against it (tests/test_loop_all_rows.py)."""
-    if (
-        not fast_abc_applicable(spec)
-        or spec.variables[1].until is not None
-    ):
-        raise ValueError("pattern not eligible for the A B* C all-rows path")
-    spec.validate()
-    from flink_cep_examples_spark.operators.cep_batch import (
-        all_rows_output_schema,
-    )
-
-    a_var, b_var, c_var = (v.name for v in spec.variables)
-    keys = list(spec.key_cols)
-    data_cols = list(df.columns)
-
-    with_a, _ = _segment_anchors(df, spec, data_cols, include_c_payload=True)
-    # the anchor implies a closing C (its deadline references __c), but
-    # assert the invariant structurally: a match needs BOTH ends.
-    kept = with_a.filter(
-        F.col("__a").isNotNull()
-        & F.col("__c").isNotNull()
-        & (F.col("__rn") >= F.col("__a.rn"))
-    )
-    # per-key 0-based match index in emission (= segment) order; same
-    # partitioning as w_ord → no additional Exchange.
-    match_seq = (
-        F.dense_rank().over(Window.partitionBy(*keys).orderBy("__seg")) - 1
-    ).cast("long")
-    classifier = (
-        F.when(F.col("__rn") == F.col("__a.rn"), F.lit(a_var))
-        .when(F.col("__is_c"), F.lit(c_var))
-        .otherwise(F.lit(b_var))
-    )
-
-    w_seg_full = Window.partitionBy(*keys, "__seg")
-    w_run = (
-        Window.partitionBy(*keys, "__seg")
-        .orderBy("__rn")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    in_b = (F.col("__rn") > F.col("__a.rn")) & (
-        F.col("__rn") < F.col("__c.rn")
-    )
-    _AGG = {
-        "sum": F.sum,
-        "min": F.min,
-        "max": F.max,
-        "avg": F.avg,
-        "count_col": F.count,
-    }
-
-    def _single_row_agg(m: Measure, value):
-        """Aggregate over a one-row span (the A or C row)."""
-        if m.fn == "count_col":
-            return value.isNotNull().cast("long")
-        if m.fn == "avg":
-            return value.cast("double")
-        return value  # sum/min/max/first/last of one value
-
-    def measure(m: Measure):
-        if m.fn == "match_number":
-            # RUNNING == FINAL (constant per match); 1-based per key
-            return match_seq + F.lit(1)
-        if m.fn == "classifier":
-            # RUNNING = current row's variable; FINAL = the match's
-            # last row's variable, which is always the closing C
-            return classifier if m.running else F.lit(c_var)
-        if m.var == b_var:
-            if m.fn == "count":
-                if m.running:
-                    # B rows seen so far: interior rows up to this one
-                    return F.greatest(
-                        F.lit(0),
-                        F.least(F.col("__rn"), F.col("__c.rn") - 1)
-                        - F.col("__a.rn"),
-                    ).cast("long")
-                return (F.col("__c.rn") - F.col("__a.rn") - 1).cast("long")
-            if m.fn in ("first", "last"):
-                # full-frame window must be ORDERED for deterministic
-                # first/last; aggregates are order-insensitive
-                win = (
-                    w_run
-                    if m.running
-                    else Window.partitionBy(*keys, "__seg")
-                    .orderBy("__rn")
-                    .rowsBetween(
-                        Window.unboundedPreceding, Window.unboundedFollowing
-                    )
-                )
-                fn = F.first if m.fn == "first" else F.last
-                wrapped = F.when(in_b, F.struct(F.col(m.src).alias("v")))
-                return fn(wrapped, ignorenulls=True).over(win)["v"]
-            win = w_run if m.running else w_seg_full
-            return _AGG[m.fn](F.when(in_b, F.col(m.src))).over(win)
-        if m.var == a_var:
-            # the anchor is the match's FIRST row → RUNNING == FINAL
-            if m.fn == "count":
-                return F.lit(1).cast("long")
-            return _single_row_agg(m, F.col(f"__a.s_{m.src}"))
-        # C variable: one row at the segment's end; RUNNING measures
-        # see it only from that row on (i.e. only the C row itself)
-        if m.fn == "count":
-            if m.running:
-                return F.col("__is_c").cast("long")
-            return F.lit(1).cast("long")
-        value = F.col(f"__c.s_{m.src}")
-        if m.running:
-            value = F.when(F.col("__is_c"), value)
-        return _single_row_agg(m, value)
-
-    out = kept.select(
-        *data_cols,
-        classifier.alias("classifier"),
-        match_seq.alias("match_seq"),
-        *[measure(m).alias(m.name) for m in spec.measures],
-    )
-    # SQL:2016 {- var -}: excluded variables' rows drop from the output
-    # only — the match itself (anchors, measures, match_seq) is computed
-    # above on the full segment, so this is a plain post-filter
-    excluded = [v.name for v in spec.variables if v.excluded]
-    if excluded:
-        out = out.filter(~F.col("classifier").isin(excluded))
-    target = all_rows_output_schema(df, spec)
-    return out.select(
-        *[F.col(f.name).cast(f.dataType).alias(f.name) for f in target.fields]
-    )
-
-
-def match_pattern_fast_abc(df: DataFrame, spec: PatternSpec) -> DataFrame:
-    """Closed-form evaluation; output schema identical to
-    :func:`~flink_cep_examples_spark.operators.cep_batch.match_pattern`."""
-    if not fast_abc_applicable(spec):
-        raise ValueError("pattern not eligible for the A B* C fast path")
-    spec.validate()
-    a_var, b_var, c_var = (v.name for v in spec.variables)
-    keys = list(spec.key_cols)
-    within_us = (
-        int(spec.within.total_seconds() * 1_000_000)
-        if spec.within is not None
-        else None
-    )
-    until_pred = spec.variables[1].until
-
-    srcs = sorted(
-        {
-            m.src
-            for m in spec.measures
-            if m.fn != "count" and m.fn not in NILADIC_FNS and m.src
-        }
-        - set(keys)
-    )
-    with_a, w_ord = _segment_anchors(df, spec, [*keys, *srcs])
-    agg_measures = [m for m in spec.measures if m.fn in AGG_FNS]
-    if agg_measures:
-        # B rows of a match are the segment slice strictly between the
-        # anchor A and the closing C — a windowed conditional aggregate
-        # over the SAME (key, __seg) partition (no new exchange).
-        # Empty slice → NULL (COUNT → 0), matching the NFA evaluator.
-        w_seg = Window.partitionBy(*keys, "__seg")
-        in_b = (F.col("__rn") > F.col("__a.rn")) & (
-            F.col("__rn") < F.col("__c.rn")
-        )
-        _AGG = {
-            "sum": F.sum,
-            "min": F.min,
-            "max": F.max,
-            "avg": F.avg,
-            "count_col": F.count,
-        }
-        with_a = with_a.withColumns(
-            {
-                f"__bagg_{m.name}": _AGG[m.fn](
-                    F.when(in_b, F.col(m.src))
-                ).over(w_seg)
-                for m in agg_measures
-            }
-        )
-    if spec.emit_timeouts:
-        # Same window partitioning/ordering as __seg/__rn → one Window
-        # stage, no extra shuffle. Because A ∧ C is unsatisfiable, a row
-        # is either a match anchor (C row) or a timeout anchor (A row),
-        # never both — so matches and timeouts are emitted from ONE
-        # filtered frame with CASE WHEN projections (single scan, single
-        # exchange; no union of two subplans).
-        with_a = with_a.withColumn(
-            "__next_c",
-            F.min(F.when(F.col("__is_c"), F.col("__ts"))).over(
-                w_ord.rowsBetween(1, Window.unboundedFollowing)
-            ),
-        )
-
-    is_match_row = F.col("__is_c") & F.col("__a").isNotNull()
-    if spec.emit_timeouts:
-        nc = F.col("__next_c")
-        timed_out_cond = (
-            nc.isNull()
-            if within_us is None
-            else nc.isNull() | ((nc - F.col("__ts")) >= F.lit(within_us))
-        )
-        is_timeout_row = F.col("__is_a") & timed_out_cond
-        keep = is_match_row | is_timeout_row
-    else:
-        keep = is_match_row
-
-    def match_measure(m: Measure):
-        if m.fn in AGG_FNS:
-            return F.col(f"__bagg_{m.name}")
-        if m.fn == "classifier":
-            return F.lit(c_var)  # a match's last row is always its C
-        if m.fn == "match_number":
-            # per-key emission ordinal: matches emit at their C rows in
-            # event-time order; same key partitioning → no new exchange
-            return F.row_number().over(w_ord)
-        if m.var == c_var:
-            return F.col(m.src)
-        if m.var == a_var:
-            return F.col(f"__a.s_{m.src}")
-        # B count = rows strictly between the A row and the C row,
-        # truncated at the first until() stop row when one exists
-        # (evaluated on the C row, where __rn is the C position)
-        end = F.col("__rn")
-        if until_pred:
-            end = F.least(end, F.coalesce(F.col("__u_rn"), end))
-        return (end - F.col("__a.rn") - 1).cast("long")
-
-    def timeout_measure(m: Measure):
-        # NOTE (documented deviation): 'count' measures on timeout rows
-        # are 0 here, whereas the NFA reports rows actually consumed
-        # before pruning. The reference's timeout output projects
-        # nothing from B (FlinkCEPAbsenceOfEventExample.scala:97-101),
-        # so parity is unaffected; use the general operator if partial
-        # B-counts matter.
-        if m.var == a_var and m.fn in ("first", "last"):
-            return F.col(m.src)
-        if m.fn == "count":
-            return F.lit(0).cast("long")
-        return F.lit(m.default)
-
-    def measure(m: Measure):
-        if not spec.emit_timeouts:
-            return match_measure(m).alias(m.name)
-        return (
-            F.when(is_match_row, match_measure(m))
-            .otherwise(timeout_measure(m))
-            .alias(m.name)
-        )
-
-    tag = (
-        F.when(is_match_row, F.lit(MATCH_TAG)).otherwise(F.lit(TIMEOUT_TAG))
-        if spec.emit_timeouts
-        else F.lit(MATCH_TAG)
-    )
-    out = with_a.filter(keep).select(
-        *keys, *[measure(m) for m in spec.measures], tag.alias("tag")
-    )
-
-    # align column types with the general operator's output schema
     target = output_schema(df, spec)
     return out.select(
         *[F.col(f.name).cast(f.dataType).alias(f.name) for f in target.fields]
@@ -1223,7 +694,7 @@ def fast_loop_chain_applicable(spec) -> bool:
         # under pairwise-disjoint group predicates, which the
         # DISPATCHER verifies on the data (fast_group_preds_disjoint)
         # before routing here; a direct caller takes that
-        # responsibility (the fast_abc convention)
+        # responsibility
         comps = subset_map.get(m.var, (m.var,))
         if not all(c in names for c in comps):
             return False
@@ -1255,8 +726,7 @@ def fast_group_preds_disjoint(df: DataFrame, spec) -> bool:
     """Data-verified pairwise disjointness of the loop-group
     variables' predicates — the fact that makes predicate-selected
     aggregate rows equal the NFA's classify row sets (and the NFA's
-    own runtime ambiguity reject unreachable). Same mechanics as
-    :func:`fast_abc_semantics_hold`: one column-pruned limit-1 job,
+    own runtime ambiguity reject unreachable). One column-pruned limit-1 job,
     memoized per live-session object + analyzed-plan hash + predicates
     (same WeakKeyDictionary, same ``ABC_MEMO_DISABLE_CONF`` escape
     hatch for mutable-under-identical-plan sources); NULL predicate

@@ -27,8 +27,6 @@ from flink_cep_examples_spark.operators.cep_batch import (
     match_pattern_alternation_all_rows,
 )
 from flink_cep_examples_spark.operators.fast_path import (
-    fast_abc_applicable,
-    fast_abc_semantics_hold,
     fast_absence_applicable,
     fast_alternation_applicable,
     fast_branch_all_rows_applicable,
@@ -44,8 +42,6 @@ from flink_cep_examples_spark.operators.fast_path import (
     fast_star_chain_applicable,
     loop_chain_agg_needs_disjoint,
     match_pattern_alternation_fast,
-    match_pattern_fast_abc,
-    match_pattern_fast_abc_all_rows,
     match_pattern_fast_absence,
     match_pattern_fast_branch_all_rows,
     match_pattern_fast_group_absence,
@@ -132,14 +128,6 @@ TIERS: tuple[Tier, ...] = (
         and fast_loop_chain_all_rows_applicable(s, df),
         match_pattern_fast_loop_chain_all_rows,
     ),
-    Tier(
-        "abc_all_rows",
-        lambda s, df: _single(s, "all")
-        and fast_abc_applicable(s)
-        and s.variables[1].until is None
-        and fast_abc_semantics_hold(df, s),
-        match_pattern_fast_abc_all_rows,
-    ),
     # ONE ROW PER MATCH
     Tier(
         "absence",
@@ -170,13 +158,6 @@ TIERS: tuple[Tier, ...] = (
         "loop_chain",
         lambda s, df: _single(s, "one") and _loop_chain_applies(s, df),
         match_pattern_fast_loop_chain,
-    ),
-    Tier(
-        "abc",
-        lambda s, df: _single(s, "one")
-        and fast_abc_applicable(s)
-        and fast_abc_semantics_hold(df, s),
-        match_pattern_fast_abc,
     ),
     Tier(
         "positional",

@@ -3,20 +3,25 @@
 The events table is mapped onto the billing shape (FIXTURES.md §4:
 ``user_id → id``, ``ts → event_time``, balance walk from ``value``), and
 the reference pattern (A B* C within 1h, skip past last,
-FlinkCEPExample.scala:58-74) runs through every execution tier:
+FlinkCEPExample.scala:58-74) runs through every front-end:
 
-- ``cep_alert_reactions``        — compiled pure-DataFrame fast path
-- ``cep_alert_reactions_nfa``    — general NFA (same spec ⇒ same oracle)
+- ``cep_alert_reactions``        — the tier table (operators/planner.py)
+- ``cep_alert_reactions_nfa``    — ``match_pattern``, the NFA reference
+  (same spec ⇒ same oracle)
 - ``cep_alerts_with_timeouts``   — absence variant, match+timeout union
 - ``cep_match_recognize``        — MATCH_RECOGNIZE front-end
 - ``cep_keyed_process``          — example-4 state machine (different,
   documented semantics: latest alarm, >= expiry)
 
 The DuckDB oracles are *independent derivations*: closed-form window-SQL
-translations of the NFA semantics (see operators/fast_path.py for the
-proof sketch), written directly against the parquet views — so Spark's
-NFA, Spark's window fast path, and DuckDB's evaluation are three
-independent implementations pinned to one answer.
+translations of the NFA semantics, written directly against the parquet
+views. The billing predicates make B the complement of C and A ∧ C
+unsatisfiable on every row with a non-NULL ``value`` (the oracles
+assume no NULL values), so every row after an A is a B or a C: each match pairs a C row with the EARLIEST
+A row after the previous C row whose gap is under ``within``, and a
+timeout is an A row whose next C row is missing or ``within`` or more
+later. Spark's tiers and DuckDB's evaluation are independent
+implementations pinned to one answer.
 """
 
 from __future__ import annotations
@@ -34,8 +39,8 @@ from flink_cep_examples_spark.sql.match_recognize import sql_with_match_recogniz
 WITHIN_US = 3_600_000_000  # 1 hour, microseconds
 
 #: Shared oracle prelude: the events→billing mapping + predicate flags +
-#: skip-cursor segmentation, exactly mirroring events_as_billing and the
-#: fast-path derivation.
+#: skip-cursor segmentation, mirroring events_as_billing and the closed
+#: form derived in the module docstring.
 _ORACLE_BASE = f"""
 WITH billing AS (
   SELECT CAST(user_id AS VARCHAR) AS id,
@@ -253,8 +258,8 @@ WHERE a_tus IS NOT NULL AND c_tus IS NOT NULL
 def cep_match_recognize_excl(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL:2016 ``{- B* -}`` pattern exclusion (round 4): identical
     matches to cep_match_recognize_all_rows, but the excluded loop
-    variable's rows are omitted from the output — on the compiled
-    all-rows fast path this is a post-filter on the classifier."""
+    variable's rows are omitted from the output, a post-filter on the
+    classifier."""
     df = events_as_billing(spark, sf_dir)
     query = f"SELECT * FROM billing MATCH_RECOGNIZE ({_MR_EXCL_BODY}) t"
     out = sql_with_match_recognize(spark, query, {"billing": df})

@@ -121,7 +121,7 @@ def events_as_billing(spark: SparkSession, sf_dir: str) -> DataFrame:
     # referencing the same attribute here lets Catalyst satisfy both
     # stages with ONE hash Exchange (cast is bijective on integers, so
     # keying by the string changes nothing; verified by
-    # tests/test_plans.py::test_cep_fast_path_single_exchange).
+    # tests/test_plans.py::test_cep_match_single_exchange).
     base = ev.select(
         F.col("user_id").cast("string").alias("id"),
         F.col("ts").alias(EVENT_TIME_COL),

@@ -65,8 +65,6 @@ from pyspark.sql import DataFrame
 
 from flink_cep_examples_spark.operators.planner import run_pattern
 from flink_cep_examples_spark.plans.pattern import (
-    AGG_FNS,
-    NILADIC_FNS,
     ONCE,
     ONE_OR_MORE,
     OPTIONAL,

@@ -10,7 +10,7 @@ from __future__ import annotations
 import pytest
 
 from flink_cep_examples_spark.operators.cep_batch import match_pattern
-from flink_cep_examples_spark.operators.fast_path import match_pattern_fast_abc
+from flink_cep_examples_spark.operators.planner import run_pattern
 from flink_cep_examples_spark.plans.pattern import billing_pattern
 from flink_cep_examples_spark.schemas import MATCH_TAG, TIMEOUT_TAG
 from flink_cep_examples_spark.sources.billing import billing_from_rows
@@ -38,7 +38,7 @@ def golden_df(spark):
     return billing_from_rows(spark, GOLDEN_INPUT_ROWS)
 
 
-@pytest.mark.parametrize("operator", [match_pattern, match_pattern_fast_abc])
+@pytest.mark.parametrize("operator", [match_pattern, run_pattern])
 def test_golden_with_timeouts(golden_df, operator):
     spec = billing_pattern(emit_timeouts=True)
     matches, timeouts = _collect_tagged(operator(golden_df, spec))
@@ -46,7 +46,7 @@ def test_golden_with_timeouts(golden_df, operator):
     assert timeouts == EXPECTED_TIMEOUTS
 
 
-@pytest.mark.parametrize("operator", [match_pattern, match_pattern_fast_abc])
+@pytest.mark.parametrize("operator", [match_pattern, run_pattern])
 def test_golden_matches_only(golden_df, operator):
     spec = billing_pattern(emit_timeouts=False)
     matches, timeouts = _collect_tagged(operator(golden_df, spec))

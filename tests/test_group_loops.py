@@ -216,12 +216,10 @@ def test_validate_rejects_optional_group_end():
 def test_loop_group_not_fast_path_eligible():
     from flink_cep_examples_spark.operators.fast_path import (
         _fixed_counts,
-        fast_abc_applicable,
         fast_positional_applicable,
     )
 
     assert _fixed_counts(_XYZ) is None
-    assert not fast_abc_applicable(_XYZ)
     assert not fast_positional_applicable(_XYZ)
 
 

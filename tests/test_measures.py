@@ -262,17 +262,12 @@ def test_running_measures_all_rows(spark):
 
 def test_agg_measures_fast_path_matches_nfa(spark, sf_small):
     """Aggregate MEASURES + CLASSIFIER + MATCH_NUMBER on the A B* C
-    shape compile to windowed conditional aggregates
-    (fast_path.py::match_pattern_fast_abc) — must equal the NFA tier
-    on the real events-as-billing corpus, NULL-empty segments
-    included."""
+    shape through the tier table must equal the NFA reference on the
+    real events-as-billing corpus, NULL-empty segments included."""
     import dataclasses
 
     from flink_cep_examples_spark.operators.cep_batch import match_pattern
-    from flink_cep_examples_spark.operators.fast_path import (
-        fast_abc_applicable,
-        match_pattern_fast_abc,
-    )
+    from flink_cep_examples_spark.operators.planner import run_pattern
     from flink_cep_examples_spark.plans.pattern import billing_pattern
     from flink_cep_examples_spark.sources.billing import events_as_billing
 
@@ -288,10 +283,9 @@ def test_agg_measures_fast_path_matches_nfa(spark, sf_small):
             Measure("mno", "", "", "match_number"),
         ),
     )
-    assert fast_abc_applicable(spec)
     df = events_as_billing(spark, sf_small)
     nfa_rows = sorted(map(tuple, match_pattern(df, spec).collect()))
-    fast_rows = sorted(map(tuple, match_pattern_fast_abc(df, spec).collect()))
+    fast_rows = sorted(map(tuple, run_pattern(df, spec).collect()))
     assert nfa_rows and nfa_rows == fast_rows
 
 
@@ -322,21 +316,12 @@ def test_running_bare_column_measure(spark):
 
 
 def test_abc_kernel_gate_non_complement_b(spark):
-    """Round-11 correctness fix: the A B* C closed form assumes B ≡ ¬C
-    and A ∧ C = ∅ per row ('the caller is responsible',
-    fast_path.py::fast_abc_applicable) — but the dispatcher never
-    checked, so ``B AS event_id % 4 = 2`` silently mis-matched AND
-    summed non-B rows (found by the round-11 streaming aggregate
-    differential). fast_abc_semantics_hold now verifies on the data and
-    falls back to the NFA tier. Pins the exact divergence strings."""
+    """A B* C where B is NOT the complement of C (``B AS event_id % 4 =
+    2``): a segment closed form pairing A with the next C would
+    mis-match AND sum non-B rows (found by the streaming aggregate
+    differential). The tier table must equal the NFA reference on the
+    exact divergence strings, and on a true complement B."""
     import datetime as dt
-
-    from flink_cep_examples_spark.operators.fast_path import (
-        fast_abc_semantics_hold,
-    )
-    from flink_cep_examples_spark.sql.match_recognize import (
-        parse_match_recognize,
-    )
 
     body = """
     PARTITION BY user_id ORDER BY ts, event_id
@@ -361,9 +346,6 @@ def test_abc_kernel_gate_non_complement_b(spark):
             "user_id long, ts timestamp, event_id long, value double",
         )
 
-    spec = parse_match_recognize(body)
-    # the '.'-free strings violate B ≡ ¬C (the 'a' between is neither)
-    assert not fast_abc_semantics_hold(df_of("abac"), spec)
     for s in ("abac", "a.c", ".abacba.ccbba", "abacb", "abbc.abc"):
         df = df_of(s)
         fast = sorted(
@@ -379,14 +361,11 @@ def test_abc_kernel_gate_non_complement_b(spark):
             ).collect()
         )
         assert fast == nfa, s
-    # a true complement B (≡ ¬C) with disjoint A/C passes the gate and
-    # keeps the kernel — and kernel == NFA there
+    # a true complement B (≡ ¬C) with disjoint A/C
     comp_body = body.replace(
         "B AS event_id % 4 = 2", "B AS event_id % 4 <> 3"
     )
-    spec2 = parse_match_recognize(comp_body)
     df2 = df_of("abac")
-    assert fast_abc_semantics_hold(df2, spec2)
     fast2 = sorted(
         (r.a_ts.minute, r.sum_b, r.n_b)
         for r in match_recognize(
@@ -403,49 +382,27 @@ def test_abc_kernel_gate_non_complement_b(spark):
 
 
 def test_abc_semantics_memo_lifecycle(spark):
-    """Round 12 (ADVICE r11 low): the data-check memo is keyed on the
-    live session OBJECT (WeakKeyDictionary — a recycled id() can't
-    resurrect a stale verdict) and honors the escape hatch conf for
-    sources that can gain rows under an identical plan: with the conf
-    set, every call re-runs the check instead of reading the memo."""
-    import datetime as dt
-
+    """The group-predicate disjointness memo is keyed on the live
+    session OBJECT (WeakKeyDictionary — a recycled id() can't resurrect
+    a stale verdict) and honors the escape hatch conf for sources that
+    can gain rows under an identical plan: with the conf set, every
+    call re-runs the check instead of reading the memo."""
     from flink_cep_examples_spark.operators import fast_path as fp
-    from flink_cep_examples_spark.sql.match_recognize import (
-        parse_match_recognize,
-    )
 
-    body = """
-    PARTITION BY user_id ORDER BY ts, event_id
-    MEASURES FIRST(A.ts) AS a_ts
-    ONE ROW PER MATCH
-    AFTER MATCH SKIP PAST LAST ROW
-    PATTERN (A B* C) WITHIN INTERVAL '2' DAY
-    DEFINE A AS event_id % 4 = 1,
-           B AS event_id % 4 = 2,
-           C AS event_id % 4 = 3
-    """
-    base = dt.datetime(2024, 1, 1)
-    df = spark.createDataFrame(
-        [
-            (1, base + dt.timedelta(minutes=i), c, float(i))
-            for i, c in enumerate((1, 2, 3, 4))
-        ],
-        "user_id long, ts timestamp, event_id long, value double",
-    )
-    spec = parse_match_recognize(body)
+    df = _group_df(spark)
+    spec = parse_match_recognize(_OVERLAPPING_GROUP_BODY)
     fp._ABC_SEMANTICS_MEMO.pop(spark, None)
-    assert not fp.fast_abc_semantics_hold(df, spec)  # '.' row: B ≢ ¬C
+    assert not fp.fast_group_preds_disjoint(df, spec)  # event_id 1: D and U
     per_sess = fp._ABC_SEMANTICS_MEMO.get(spark)
     assert per_sess and list(per_sess.values()) == [False]
     # memo hit: poison the stored verdict and observe it read back
     key = next(iter(per_sess))
     per_sess[key] = True
-    assert fp.fast_abc_semantics_hold(df, spec) is True
+    assert fp.fast_group_preds_disjoint(df, spec) is True
     # escape hatch: the conf bypasses the (poisoned) memo entirely
     spark.conf.set(fp.ABC_MEMO_DISABLE_CONF, "true")
     try:
-        assert fp.fast_abc_semantics_hold(df, spec) is False
+        assert fp.fast_group_preds_disjoint(df, spec) is False
     finally:
         spark.conf.unset(fp.ABC_MEMO_DISABLE_CONF)
         per_sess[key] = False
@@ -455,14 +412,36 @@ def test_abc_semantics_memo_lifecycle(spark):
     assert isinstance(fp._ABC_SEMANTICS_MEMO, weakref.WeakKeyDictionary)
 
 
+#: every D row (event_id % 4 = 1) is also a U row, so the group's
+#: predicates are not disjoint
+_OVERLAPPING_GROUP_BODY = """
+PARTITION BY user_id ORDER BY ts, event_id
+MEASURES COUNT(D.*) AS nd
+ONE ROW PER MATCH
+AFTER MATCH SKIP PAST LAST ROW
+PATTERN ((D U)+)
+DEFINE D AS event_id % 4 = 1, U AS event_id % 2 = 1
+"""
+
+
+def _group_df(spark):
+    base = dt.datetime(2024, 1, 1)
+    return spark.createDataFrame(
+        [
+            (1, base + dt.timedelta(minutes=i), c, float(i))
+            for i, c in enumerate((1, 2, 3, 4))
+        ],
+        "user_id long, ts timestamp, event_id long, value double",
+    )
+
+
 def test_abc_semantics_memo_non_weakrefable_session(spark):
     """ADVICE r12 low: ``WeakKeyDictionary.get`` calls ``ref(key)``, so
     a non-weakref-able session raised TypeError on the memo READ path
     (only the WRITE path caught it) — the documented 'skip the memo'
-    fallback was unreachable and the query crashed instead. Pin: both
-    memoized data checks fall through to the actual check for such a
+    fallback was unreachable and the query crashed instead. Pin: the
+    memoized data check falls through to the actual check for such a
     session, at both the read and write sites."""
-    import datetime as dt
     import weakref
 
     from flink_cep_examples_spark.operators import fast_path as fp
@@ -497,30 +476,12 @@ def test_abc_semantics_memo_non_weakrefable_session(spark):
     with pytest.raises(TypeError):
         weakref.ref(sess)  # the hazard this pin exists for
 
-    base = dt.datetime(2024, 1, 1)
-    df = spark.createDataFrame(
-        [
-            (1, base + dt.timedelta(minutes=i), c, float(i))
-            for i, c in enumerate((1, 2, 3, 4))
-        ],
-        "user_id long, ts timestamp, event_id long, value double",
-    )
-    spec = parse_match_recognize(
-        """
-        PARTITION BY user_id ORDER BY ts, event_id
-        MEASURES FIRST(A.ts) AS a_ts
-        ONE ROW PER MATCH
-        AFTER MATCH SKIP PAST LAST ROW
-        PATTERN (A B* C) WITHIN INTERVAL '2' DAY
-        DEFINE A AS event_id % 4 = 1,
-               B AS event_id % 4 = 2,
-               C AS event_id % 4 = 3
-        """
-    )
+    df = _group_df(spark)
+    spec = parse_match_recognize(_OVERLAPPING_GROUP_BODY)
     wrapped = _Df(df, sess)
-    # '.' (event_id=4) row: B ≢ ¬C — check runs, memo silently skipped
-    assert fp.fast_abc_semantics_hold(wrapped, spec) is False
-    assert fp.fast_abc_semantics_hold(wrapped, spec) is False  # again
+    # overlapping predicates — check runs, memo silently skipped
+    assert fp.fast_group_preds_disjoint(wrapped, spec) is False
+    assert fp.fast_group_preds_disjoint(wrapped, spec) is False  # again
 
     spec_g = parse_match_recognize(
         """

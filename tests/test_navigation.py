@@ -100,7 +100,6 @@ def test_first_last_in_define_fixed_offset_now_compiles():
 
 def test_nav_disables_fast_paths():
     from flink_cep_examples_spark.operators.fast_path import (
-        fast_abc_applicable,
         fast_positional_applicable,
     )
 
@@ -117,7 +116,6 @@ def test_nav_disables_fast_paths():
         """
     )
     assert spec.nav_cols
-    assert not fast_abc_applicable(spec)
     assert not fast_positional_applicable(spec)
 
 

@@ -118,21 +118,21 @@ def test_fast_absence_tie_rows_void_like_nfa(spark):
 
 
 def test_fast_all_rows_matches_nfa_differential(spark, sf_small):
-    """ALL ROWS PER MATCH closed form vs the NFA tier: identical row
-    multisets (every input column + classifier + match_seq + final
-    measures) on the events-derived billing stream."""
+    """ALL ROWS PER MATCH through the tier table vs the NFA tier:
+    identical row multisets (every input column + classifier +
+    match_seq + final measures) on the events-derived billing stream."""
+    import dataclasses
+
     from flink_cep_examples_spark.operators.cep_batch import (
         match_pattern_all_rows,
     )
-    from flink_cep_examples_spark.operators.fast_path import (
-        match_pattern_fast_abc_all_rows,
-    )
+    from flink_cep_examples_spark.operators.planner import run_pattern
     from flink_cep_examples_spark.plans.pattern import billing_pattern
     from flink_cep_examples_spark.sources.billing import events_as_billing
 
     df = events_as_billing(spark, sf_small)
-    spec = billing_pattern()
-    fast = match_pattern_fast_abc_all_rows(df, spec)
+    spec = dataclasses.replace(billing_pattern(), rows_per_match="all")
+    fast = run_pattern(df, spec)
     nfa = match_pattern_all_rows(df, spec)
     assert fast.columns == nfa.columns
     f_rows = sorted(map(tuple, fast.collect()))
@@ -141,32 +141,30 @@ def test_fast_all_rows_matches_nfa_differential(spark, sf_small):
 
 
 def test_fast_until_matches_nfa_differential(spark, sf_small):
-    """until() count truncation on the fast path vs the NFA tier —
+    """until() count truncation through the tier table vs the NFA tier —
     identical rows, n_b truncation included."""
     from flink_cep_examples_spark.operators.cep_batch import match_pattern
-    from flink_cep_examples_spark.operators.fast_path import (
-        match_pattern_fast_abc,
-    )
+    from flink_cep_examples_spark.operators.planner import run_pattern
     from flink_cep_examples_spark.queries.cep import until_pattern_spec
     from flink_cep_examples_spark.sources.billing import events_as_billing
 
     df = events_as_billing(spark, sf_small)
     spec = until_pattern_spec()
-    fast = sorted(map(tuple, match_pattern_fast_abc(df, spec).collect()))
+    fast = sorted(map(tuple, run_pattern(df, spec).collect()))
     nfa = sorted(map(tuple, match_pattern(df, spec).collect()))
     assert fast == nfa and fast
 
 
 def test_fast_all_rows_no_phantom_match_without_within(spark):
     """A trailing segment holding an A but no C must emit NOTHING even
-    when the pattern has no WITHIN (regression: the all-rows closed
-    form once dropped the closing-C invariant when within was None)."""
+    when the pattern has no WITHIN (regression: an all-rows closed form
+    once dropped the closing-C invariant when within was None)."""
+    import dataclasses
+
     from flink_cep_examples_spark.operators.cep_batch import (
         match_pattern_all_rows,
     )
-    from flink_cep_examples_spark.operators.fast_path import (
-        match_pattern_fast_abc_all_rows,
-    )
+    from flink_cep_examples_spark.operators.planner import run_pattern
     from flink_cep_examples_spark.plans.pattern import Measure, Pattern
     from flink_cep_examples_spark.sources.billing import billing_from_rows
 
@@ -193,7 +191,14 @@ def test_fast_all_rows_no_phantom_match_without_within(spark):
         ("1", "2020-05-01 12:10:00", 5, 4),    # trailing B
     ]
     df = billing_from_rows(spark, rows)
-    fast = sorted(map(tuple, match_pattern_fast_abc_all_rows(df, spec).collect()))
+    fast = sorted(
+        map(
+            tuple,
+            run_pattern(
+                df, dataclasses.replace(spec, rows_per_match="all")
+            ).collect(),
+        )
+    )
     nfa = sorted(map(tuple, match_pattern_all_rows(df, spec).collect()))
     assert fast == nfa
     # exactly the first match's two rows; nothing from the trailing segment

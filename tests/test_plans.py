@@ -1,7 +1,7 @@
 """Physical-plan audits: the scale properties the docstrings claim must
 actually appear in the executed plan — filters pushed to the parquet
 scan, columns pruned, dimension joins broadcast, top-k as TakeOrdered,
-and the CEP fast path at exactly one Exchange."""
+and the CEP pattern match at exactly one Exchange."""
 
 from __future__ import annotations
 
@@ -107,9 +107,10 @@ def test_cosine_dup_pair_join_ships_keys_not_vectors(plans):
             assert "embedding" not in line
 
 
-def test_cep_fast_path_single_exchange(plans):
-    """One scan, one hash Exchange on the key — the whole pattern match
-    rides a single shuffle (operators/fast_path.py contract)."""
+def test_cep_match_single_exchange(plans):
+    """One scan, one hash Exchange on the key — the balance window and
+    the pattern match ride a single shuffle (sources/billing.py keys the
+    window by the match key)."""
     assert plans["cep_alert_reactions"].count("Exchange") == 1
 
 

@@ -6,13 +6,13 @@ closed-form reference implementation of the billing pattern
 closed form is exact: is_b is the complement of is_c and is_a ⊂ is_b,
 so a match is (earliest A whose next C is < 1h away, that C), and a
 timeout is an A whose next C is missing or ≥ 1h away (the same
-derivation as operators/fast_path.py — but re-derived here in ~20
-lines of pure Python, with no shared code).
+derivation as the DuckDB oracles of queries/cep.py — but re-derived
+here in ~20 lines of pure Python, with no shared code).
 
-Spark-level: one job runs ~50 random key groups through BOTH execution
-tiers (general NFA via applyInPandas, compiled window fast path) and
-requires identical output — cross-tier differential (§5 strategy #2)
-on random data, not just the golden fixtures.
+Spark-level: one job runs ~50 random key groups through the NFA
+reference and through the tier table's entry point (``run_pattern``)
+and requires identical output — cross-front-end differential (§5
+strategy #2) on random data, not just the golden fixtures.
 """
 
 from __future__ import annotations
@@ -103,11 +103,12 @@ def test_nfa_invariants(seq):
 
 @pytest.mark.slow
 def test_cross_tier_differential_random(spark):
-    """~50 random key groups in ONE DataFrame through both tiers."""
+    """~50 random key groups in ONE DataFrame through the NFA reference
+    and the tier table."""
     import random
 
     from flink_cep_examples_spark.operators.cep_batch import match_pattern
-    from flink_cep_examples_spark.operators.fast_path import match_pattern_fast_abc
+    from flink_cep_examples_spark.operators.planner import run_pattern
     from flink_cep_examples_spark.sources import billing_from_rows
 
     from datetime import datetime, timedelta
@@ -129,7 +130,7 @@ def test_cross_tier_differential_random(spark):
     df = billing_from_rows(spark, rows)
     spec = billing_pattern(emit_timeouts=True)
     nfa_out = sorted(map(tuple, match_pattern(df, spec).collect()))
-    fast_out = sorted(map(tuple, match_pattern_fast_abc(df, spec).collect()))
+    fast_out = sorted(map(tuple, run_pattern(df, spec).collect()))
     assert nfa_out == fast_out
     assert nfa_out, "random corpus should produce at least one match/timeout"
 
