@@ -14,6 +14,7 @@ pin each kernel to the NFA's output.
 from __future__ import annotations
 
 import weakref
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -37,17 +38,30 @@ from flink_cep_examples_spark.plans.pattern import (
     PatternSpec,
 )
 from flink_cep_examples_spark.schemas import MATCH_TAG, TIMEOUT_TAG
+from flink_cep_examples_spark.sources.tables import stat_stamp
 
 
-#: escape hatch for mutable-under-identical-plan sources: set to "true"
-#: to re-run the group-predicate disjointness check on every dispatch
-ABC_MEMO_DISABLE_CONF = (
-    "spark.flinkCepExamplesSpark.abcDataCheckMemo.disabled"
-)
+#: session (weak) → {(plan semantic hash, input file stamps, predicates):
+#: verdict}; entries are dropped when their session is garbage-collected
+_DISJOINT_MEMO: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 
-#: session (weak) → {(plan semantic hash, predicates): verdict};
-#: entries are dropped when their session is garbage-collected
-_ABC_SEMANTICS_MEMO: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
+
+def _input_stamps(df: DataFrame):
+    """``(path, size, mtime_ns)`` of every file ``df`` reads, so a file
+    appended under the same path changes the memo key; None when a file
+    cannot be stat'ed (a remote URI), which skips the memo."""
+    stamps = []
+    for uri in sorted(df.inputFiles()):
+        parsed = urlparse(uri)
+        stamp = (
+            stat_stamp(unquote(parsed.path))
+            if parsed.scheme in ("", "file")
+            else None
+        )
+        if stamp is None:
+            return None
+        stamps.append(stamp)
+    return tuple(stamps)
 
 
 def fast_absence_applicable(spec: PatternSpec) -> bool:
@@ -726,27 +740,25 @@ def fast_group_preds_disjoint(df: DataFrame, spec) -> bool:
     """Data-verified pairwise disjointness of the loop-group
     variables' predicates — the fact that makes predicate-selected
     aggregate rows equal the NFA's classify row sets (and the NFA's
-    own runtime ambiguity reject unreachable). One column-pruned limit-1 job,
-    memoized per live-session object + analyzed-plan hash + predicates
-    (same WeakKeyDictionary, same ``ABC_MEMO_DISABLE_CONF`` escape
-    hatch for mutable-under-identical-plan sources); NULL predicate
-    values count as False."""
+    own runtime ambiguity reject unreachable). One column-pruned limit-1
+    job, memoized per live-session object + analyzed-plan hash + input
+    file stamps + predicates: the plan hash does not see files appended
+    under the same path, the stamps do. NULL predicate values count as
+    False."""
     gs, ge = spec.loop_groups[0]
     preds = tuple(v.predicate for v in spec.variables[gs : ge + 1])
     sess = df.sparkSession
     key = None
-    try:
-        if (
-            str(sess.conf.get(ABC_MEMO_DISABLE_CONF, "false")).lower()
-            != "true"
-        ):
-            plan_hash = df._jdf.queryExecution().analyzed().semanticHash()
-            key = (plan_hash, preds)
+    try:  # classic PySpark only; any failure just skips the memo
+        plan_hash = df._jdf.queryExecution().analyzed().semanticHash()
+        stamps = _input_stamps(df)
+        if stamps is not None:
+            key = (plan_hash, stamps, preds)
     except Exception:  # noqa: BLE001
         pass
     if key is not None:
         try:
-            per_sess = _ABC_SEMANTICS_MEMO.get(sess)
+            per_sess = _DISJOINT_MEMO.get(sess)
         except TypeError:  # session not weakref-able (ADVICE r12 low):
             per_sess = None  # WeakKeyDictionary.get calls ref(key)
         if per_sess is not None and key in per_sess:
@@ -761,14 +773,13 @@ def fast_group_preds_disjoint(df: DataFrame, spec) -> bool:
     ok = df.where(total > 1).isEmpty()
     if key is not None:
         try:
-            per_sess = _ABC_SEMANTICS_MEMO.setdefault(sess, {})
+            per_sess = _DISJOINT_MEMO.setdefault(sess, {})
         except TypeError:  # session not weakref-able: skip the memo
             return ok
         if len(per_sess) >= 256:
             per_sess.clear()
         per_sess[key] = ok
     return ok
-
 
 
 def _strided_chain(body_ok, seg_id, pos_in_seg, L: int):

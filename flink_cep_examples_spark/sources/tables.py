@@ -37,9 +37,10 @@ def ensure_session_confs(spark: SparkSession) -> None:
 _SCHEMA_CACHE: dict = {}
 
 
-def _schema_key(path: str):
-    """Memo key for ``path``, or None when it cannot be stat'ed (a remote
-    URI, or a missing path that Spark should report itself)."""
+def stat_stamp(path: str):
+    """``(path, size, mtime_ns)`` of ``path`` — a memo key that changes
+    when the file is rewritten — or None when it cannot be stat'ed (a
+    remote URI, or a missing path that Spark should report itself)."""
     try:
         st = os.stat(path)
     except OSError:
@@ -70,7 +71,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     stat'ed is never memoized."""
     ensure_session_confs(spark)
     path = f"{sf_dir}/{name}.parquet"
-    key = _schema_key(path)
+    key = stat_stamp(path)
     schema = _SCHEMA_CACHE.get(key)
     if schema is None:
         df = spark.read.parquet(path)

@@ -1049,15 +1049,11 @@ def match_recognize(
     forces the reference. Both produce identical results
     (differential-tested).
 
-    Fast-path dispatch may run (and memoize, per session + analyzed
-    plan + predicates) a one-off data check on ``df``'s source — e.g.
-    the ``A B* C`` closed forms verify ``B ≡ ¬C`` / ``A ∧ C = ∅`` on
-    the actual rows. The memo assumes a semantically identical plan
-    reads the same data for the session's lifetime (snapshot-immutable
-    sources). If your source can gain rows under the same path between
-    queries, set ``spark.flinkCepExamplesSpark.abcDataCheckMemo.
-    disabled = true`` (``operators.fast_path.ABC_MEMO_DISABLE_CONF``)
-    to re-verify on every call.
+    A tier's check may run a one-off data check on ``df`` — the loop
+    chain kernel verifies on the rows that a branch group's predicates
+    are disjoint. The verdict is memoized per session, analyzed plan,
+    input file stamps (path, size, mtime) and predicates, so files
+    appended under the same path re-run the check.
     """
     spec = parse_match_recognize(body)
     updates: dict = {"emit_timeouts": emit_timeouts}

@@ -384,32 +384,52 @@ def test_abc_kernel_gate_non_complement_b(spark):
 def test_abc_semantics_memo_lifecycle(spark):
     """The group-predicate disjointness memo is keyed on the live
     session OBJECT (WeakKeyDictionary — a recycled id() can't resurrect
-    a stale verdict) and honors the escape hatch conf for sources that
-    can gain rows under an identical plan: with the conf set, every
-    call re-runs the check instead of reading the memo."""
+    a stale verdict), and a memo hit returns the stored verdict."""
     from flink_cep_examples_spark.operators import fast_path as fp
 
     df = _group_df(spark)
     spec = parse_match_recognize(_OVERLAPPING_GROUP_BODY)
-    fp._ABC_SEMANTICS_MEMO.pop(spark, None)
+    fp._DISJOINT_MEMO.pop(spark, None)
     assert not fp.fast_group_preds_disjoint(df, spec)  # event_id 1: D and U
-    per_sess = fp._ABC_SEMANTICS_MEMO.get(spark)
+    per_sess = fp._DISJOINT_MEMO.get(spark)
     assert per_sess and list(per_sess.values()) == [False]
     # memo hit: poison the stored verdict and observe it read back
     key = next(iter(per_sess))
     per_sess[key] = True
-    assert fp.fast_group_preds_disjoint(df, spec) is True
-    # escape hatch: the conf bypasses the (poisoned) memo entirely
-    spark.conf.set(fp.ABC_MEMO_DISABLE_CONF, "true")
     try:
-        assert fp.fast_group_preds_disjoint(df, spec) is False
+        assert fp.fast_group_preds_disjoint(df, spec) is True
     finally:
-        spark.conf.unset(fp.ABC_MEMO_DISABLE_CONF)
         per_sess[key] = False
     # entries die with their session: the weak dict holds no strong ref
     import weakref
 
-    assert isinstance(fp._ABC_SEMANTICS_MEMO, weakref.WeakKeyDictionary)
+    assert isinstance(fp._DISJOINT_MEMO, weakref.WeakKeyDictionary)
+
+
+def test_disjoint_memo_sees_appended_files(spark, tmp_path):
+    """A parquet file appended under the same directory leaves the
+    analyzed plan's hash unchanged; the memo key's input file stamps
+    change, so the check re-runs and the verdict flips."""
+    from flink_cep_examples_spark.operators import fast_path as fp
+
+    spec = parse_match_recognize(_OVERLAPPING_GROUP_BODY)
+    base = dt.datetime(2024, 1, 1)
+    schema = "user_id long, ts timestamp, event_id long, value double"
+    # event ids 2 and 3 are U rows only: disjoint on this data
+    spark.createDataFrame(
+        [(1, base, 2, 0.0), (1, base + dt.timedelta(minutes=1), 3, 1.0)],
+        schema,
+    ).write.parquet(str(tmp_path / "events"))
+    assert fp.fast_group_preds_disjoint(
+        spark.read.parquet(str(tmp_path / "events")), spec
+    )
+    # event id 5 is both a D and a U row
+    spark.createDataFrame(
+        [(1, base + dt.timedelta(minutes=2), 5, 2.0)], schema
+    ).write.mode("append").parquet(str(tmp_path / "events"))
+    assert not fp.fast_group_preds_disjoint(
+        spark.read.parquet(str(tmp_path / "events")), spec
+    )
 
 
 #: every D row (event_id % 4 = 1) is also a U row, so the group's
@@ -449,16 +469,8 @@ def test_abc_semantics_memo_non_weakrefable_session(spark):
         parse_match_recognize,
     )
 
-    class _Conf:
-        @staticmethod
-        def get(k, d=None):
-            return "false"
-
     class _Sess:  # __slots__ without __weakref__: not weakref-able
-        __slots__ = ("conf",)
-
-        def __init__(self):
-            self.conf = _Conf()
+        __slots__ = ()
 
     class _Df:
         def __init__(self, df, sess):
@@ -471,6 +483,9 @@ def test_abc_semantics_memo_non_weakrefable_session(spark):
 
         def where(self, c):
             return self._df.where(c)
+
+        def inputFiles(self):
+            return self._df.inputFiles()
 
     sess = _Sess()
     with pytest.raises(TypeError):
