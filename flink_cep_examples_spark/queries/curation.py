@@ -386,8 +386,7 @@ def docs_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     # optimization, guide §1.2): it feeds THREE branches (the scoring
     # join, the vocabulary counts, the corpus total), and each re-ran
     # the full tokenize+explode+reduce without this boundary — the
-    # before plan scans the corpus 3× (plans/r16/
-    # docs_unigram_logprob_before.txt). One tokenize pass + a
+    # before plan scanned the corpus 3×. One tokenize pass + a
     # local-block materialization beats three passes at any scale; the
     # frame is already the post-reduction size (distinct tokens per
     # doc, not raw length). The frame is CORPUS-SIZED, so the boundary

@@ -121,8 +121,7 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     Round-16 optimization (guide §2.4): the old groupBy + join-back
     form re-derived the fingerprint pipeline on BOTH branches (two
     parquet scans + two md5-normalize passes + two exchanges on ``fp``
-    + the join — plans/r16/corpus_clean_pipeline_before.txt nodes
-    35-50); the window form computes the identical (canonical_id,
+    + the join); the window form computes the identical (canonical_id,
     n_dups) per row in ONE scan and ONE exchange. Skew profile is
     unchanged — either form co-locates a duplicate group on one task."""
     from pyspark.sql.window import Window

@@ -124,11 +124,11 @@ def _assign(
     # value-deterministic, but serving paths filter on its output
     # (``cid IN probes``), and Catalyst pushes that filter below the
     # projection by DUPLICATING the evaluation — ivf_topk's before plan
-    # (plans/r16/ivf_topk_before.txt nodes 3-6) runs the O(n·K·DIM)
-    # kernel TWICE over the whole corpus. Marking it non-deterministic
-    # forbids the reorder: one evaluation, filters applied above. The
-    # only pushdown lost is a pre-assignment row filter on the same
-    # branch (negligible: the assignment must see every row anyway).
+    # ran the O(n·K·DIM) kernel TWICE over the whole corpus. Marking it
+    # non-deterministic forbids the reorder: one evaluation, filters
+    # applied above. The only pushdown lost is a pre-assignment row
+    # filter on the same branch (negligible: the assignment must see
+    # every row anyway).
     return emb.withColumn("cid", assign_udf.asNondeterministic()("embedding"))
 
 

@@ -1010,9 +1010,8 @@ def sources_kmv_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cross, ka, kb), and without a materialization boundary Catalyst
     # re-executes the entire upstream corpus pipeline (token explode +
     # shingle window + salted bottom-k) once PER REFERENCE: the before
-    # plan shows 24 parquet scans / 4 copies of the Window chain
-    # (plans/r16/sources_kmv_jaccard_before.txt). One localCheckpoint
-    # turns 4 corpus passes into 1 at any scale.
+    # plan showed 24 parquet scans / 4 copies of the Window chain. One
+    # localCheckpoint turns 4 corpus passes into 1 at any scale.
     w = Window.partitionBy("source").orderBy("h")
     kmv = (
         cand.withColumn("rk", F.row_number().over(w))

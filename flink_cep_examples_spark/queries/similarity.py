@@ -326,8 +326,7 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Corpus side: non-deterministic marking (round-16 optimization,
     # guide §4.4) — the join's inferred isnotnull(bucket) was pushed
     # below the exchange by DUPLICATING the 16-plane UDF over the whole
-    # corpus (see plans/r16/ann_batch_topk_before.txt for the batched
-    # twin). Query side: filter FIRST, then hash — so the vec_id filter
+    # corpus (as in the batched twin's before plan). Query side: filter FIRST, then hash — so the vec_id filter
     # still prunes at the scan and the UDF sees only the query rows.
     corpus = emb.withColumn(
         "bucket", _pd_bucket.asNondeterministic()("embedding")
@@ -413,8 +412,8 @@ def lsh_search(
     # Same §4.4 split as ann_lsh_topk (round-16 optimization): the
     # corpus hash is marked non-deterministic so the join's inferred
     # isnotnull(bucket) cannot duplicate the 16-plane UDF over the
-    # whole corpus (before plan: TWO corpus-sized ArrowEvalPython nodes,
-    # plans/r16/ann_batch_topk_before.txt nodes 3/7); the query side
+    # whole corpus (before plan: TWO corpus-sized ArrowEvalPython
+    # nodes); the query side
     # filters FIRST so is_query still prunes at the scan.
     corpus = emb.withColumn(
         "bucket", bucket.asNondeterministic()("embedding")

@@ -34,8 +34,8 @@ def _count_node(plan: str, name: str) -> int:
 
 def test_ivf_topk_single_assignment_eval(spark):
     """The serving filter (cid IN probes) must not duplicate the
-    assignment UDF (plans/r16/ivf_topk_before.txt had TWO
-    ArrowEvalPython nodes over the full corpus)."""
+    assignment UDF (the plan before had TWO ArrowEvalPython nodes
+    over the full corpus)."""
     from flink_cep_examples_spark.queries.ivf import ivf_topk
 
     plan = _plan(ivf_topk(spark, SF_DIR))
