@@ -356,16 +356,17 @@ def all_rows_output_schema(df: DataFrame, spec: PatternSpec) -> T.StructType:
 def _with_nav_cols(df: DataFrame, spec: PatternSpec) -> DataFrame:
     """Materialize PREV()/NEXT() navigation as lag/lead columns over
     the (key, order, tiebreak) window — the same ordering the NFA
-    sorts by, so ``PREV(x)`` is exactly the previous processed row.
-    The window's hash partitioning on the keys is the SAME exchange
-    the pattern operator needs next, so Catalyst reuses it (one
-    shuffle total, plan-audited)."""
+    scans by, NULLs last, so ``PREV(x)`` is exactly the previous
+    processed row. The window's hash partitioning on the keys is the
+    SAME exchange the pattern operator needs next, so Catalyst reuses
+    it (one shuffle total, plan-audited)."""
     if not spec.nav_cols:
         return df
     from pyspark.sql import Window
 
     w = Window.partitionBy(*spec.key_cols).orderBy(
-        F.col(spec.order_col).cast(T.TimestampType()), spec.tiebreak_col
+        F.col(spec.order_col).cast(T.TimestampType()).asc_nulls_last(),
+        F.col(spec.tiebreak_col).asc_nulls_last(),
     )
     return df.select(
         "*",

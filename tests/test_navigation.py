@@ -53,6 +53,28 @@ def test_prev_offset_two(spark):
     assert got == [2]
 
 
+def test_prev_on_tie_with_null_tiebreak_reads_scan_order(spark):
+    """Three rows share one timestamp and one has a NULL tiebreak. The
+    NFA scans them by (ts, seq) with NULLs last — v 1, 3, 5 — so PREV()
+    must read the row scanned before: both v 3 and v 5 rise."""
+    df = spark.createDataFrame(
+        [("k1", _t(0), 1, 1.0), ("k1", _t(0), None, 5.0), ("k1", _t(0), 2, 3.0)],
+        "id string, event_time timestamp, seq long, v double",
+    )
+    body = """
+      PARTITION BY id ORDER BY event_time, seq
+      MEASURES A.v AS v
+      ONE ROW PER MATCH
+      AFTER MATCH SKIP PAST LAST ROW
+      PATTERN (A)
+      DEFINE A AS A.v > PREV(A.v)
+    """
+    got = sorted(r.v for r in match_recognize(df, body).collect())
+    assert got == [3.0, 5.0]
+    nfa = match_recognize(df, body, use_fast_path=False).collect()
+    assert sorted(r.v for r in nfa) == got
+
+
 def test_next_navigation(spark):
     """NEXT(x) reads the following physical row — a 'peak' pattern
     needs no lookahead variable."""
