@@ -46,6 +46,7 @@ WITH billing AS (
   SELECT CAST(user_id AS VARCHAR) AS id,
          ts, event_id,
          epoch_us(ts) AS tus,
+         ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS pos,
          COALESCE(LAG(value) OVER (PARTITION BY user_id ORDER BY ts, event_id), 50.0) AS bb,
          value AS ba
   FROM events
@@ -66,13 +67,16 @@ seg AS (
 ),
 cts AS (
   SELECT *,
-         MAX(CASE WHEN is_c THEN tus END) OVER (PARTITION BY id, seg_id) AS c_tus
+         MAX(CASE WHEN is_c THEN tus END) OVER (PARTITION BY id, seg_id) AS c_tus,
+         MAX(CASE WHEN is_c THEN pos END) OVER (PARTITION BY id, seg_id) AS c_pos
   FROM seg
 ),
 cand AS (
   SELECT *,
          MIN(CASE WHEN is_a AND c_tus - tus < {WITHIN_US} THEN tus END)
-           OVER (PARTITION BY id, seg_id) AS a_tus
+           OVER (PARTITION BY id, seg_id) AS a_tus,
+         MIN(CASE WHEN is_a AND c_tus - tus < {WITHIN_US} THEN pos END)
+           OVER (PARTITION BY id, seg_id) AS a_pos
   FROM cts
 )
 """
@@ -199,22 +203,24 @@ _MR_ALL_ROWS_BODY = _MR_BODY.replace("ONE ROW PER MATCH", "ALL ROWS PER MATCH")
 
 #: ALL ROWS PER MATCH closed form: a matched segment's rows between its
 #: anchor A and its C, classified positionally; per-key match_seq =
-#: 0-based rank of the match's C among the key's matches.
+#: 0-based rank of the match's C among the key's matches. Rows are
+#: placed by (ts, event_id) position: a B row may share its C's
+#: timestamp, and two matches may close at one timestamp.
 ORACLE_ALL_ROWS = (
     _ORACLE_BASE
     + f"""
 SELECT id,
        strftime(make_timestamp(tus), {_FMT}) AS datetime,
-       CASE WHEN tus = a_tus THEN 'A'
-            WHEN tus = c_tus THEN 'C'
+       CASE WHEN pos = a_pos THEN 'A'
+            WHEN pos = c_pos THEN 'C'
             ELSE 'B' END AS classifier,
-       CAST(DENSE_RANK() OVER (PARTITION BY id ORDER BY c_tus) - 1 AS BIGINT)
+       CAST(DENSE_RANK() OVER (PARTITION BY id ORDER BY c_pos) - 1 AS BIGINT)
          AS match_seq,
        strftime(make_timestamp(a_tus), {_FMT}) AS alarmTriggerDatetime,
        strftime(make_timestamp(c_tus), {_FMT}) AS topupDatetime
 FROM cand
-WHERE a_tus IS NOT NULL AND c_tus IS NOT NULL
-  AND tus BETWEEN a_tus AND c_tus
+WHERE a_pos IS NOT NULL AND c_pos IS NOT NULL
+  AND pos BETWEEN a_pos AND c_pos
 """
 )
 
@@ -243,14 +249,14 @@ ORACLE_ALL_ROWS_EXCL = (
     + f"""
 SELECT id,
        strftime(make_timestamp(tus), {_FMT}) AS datetime,
-       CASE WHEN tus = a_tus THEN 'A' ELSE 'C' END AS classifier,
-       CAST(DENSE_RANK() OVER (PARTITION BY id ORDER BY c_tus) - 1 AS BIGINT)
+       CASE WHEN pos = a_pos THEN 'A' ELSE 'C' END AS classifier,
+       CAST(DENSE_RANK() OVER (PARTITION BY id ORDER BY c_pos) - 1 AS BIGINT)
          AS match_seq,
        strftime(make_timestamp(a_tus), {_FMT}) AS alarmTriggerDatetime,
        strftime(make_timestamp(c_tus), {_FMT}) AS topupDatetime
 FROM cand
-WHERE a_tus IS NOT NULL AND c_tus IS NOT NULL
-  AND (tus = a_tus OR tus = c_tus)
+WHERE a_pos IS NOT NULL AND c_pos IS NOT NULL
+  AND (pos = a_pos OR pos = c_pos)
 """
 )
 
@@ -722,24 +728,24 @@ _MR_AGG_BODY = """
 
 #: Aggregate-measures closed form: each match lives in one (id, seg_id)
 #: segment of the shared oracle base; its B rows are exactly the rows
-#: strictly between a_tus and c_tus (strict contiguity), so SQL
+#: strictly between a_pos and c_pos (strict contiguity), so SQL
 #: aggregates with a positional filter reproduce the MEASURES.
 #: CLASSIFIER() is constantly 'C' (the last row of an A B* C match);
-#: MATCH_NUMBER() is the per-key emission ordinal = rank of c_tus.
+#: MATCH_NUMBER() is the per-key emission ordinal = rank of c_pos.
 ORACLE_MEASURE_AGGS = (
     _ORACLE_BASE
     + f"""
 , agg AS (
-  SELECT id, seg_id, a_tus, c_tus,
-         SUM(CASE WHEN tus > a_tus AND tus < c_tus THEN ba END) AS sum_b,
-         AVG(CASE WHEN tus > a_tus AND tus < c_tus THEN ba END) AS avg_b,
-         MIN(CASE WHEN tus > a_tus AND tus < c_tus THEN ba END) AS min_b,
-         MAX(CASE WHEN tus > a_tus AND tus < c_tus THEN ba END) AS max_b,
-         COUNT(CASE WHEN tus > a_tus AND tus < c_tus THEN ba END) AS n_b
+  SELECT id, seg_id, a_tus, c_pos,
+         SUM(CASE WHEN pos > a_pos AND pos < c_pos THEN ba END) AS sum_b,
+         AVG(CASE WHEN pos > a_pos AND pos < c_pos THEN ba END) AS avg_b,
+         MIN(CASE WHEN pos > a_pos AND pos < c_pos THEN ba END) AS min_b,
+         MAX(CASE WHEN pos > a_pos AND pos < c_pos THEN ba END) AS max_b,
+         COUNT(CASE WHEN pos > a_pos AND pos < c_pos THEN ba END) AS n_b
   FROM cand
-  WHERE a_tus IS NOT NULL AND c_tus IS NOT NULL
-        AND tus BETWEEN a_tus AND c_tus
-  GROUP BY id, seg_id, a_tus, c_tus
+  WHERE a_pos IS NOT NULL AND c_pos IS NOT NULL
+        AND pos BETWEEN a_pos AND c_pos
+  GROUP BY id, seg_id, a_tus, c_pos
 )
 SELECT id,
        strftime(make_timestamp(a_tus), {_FMT}) AS alarmTriggerDatetime,
@@ -749,7 +755,7 @@ SELECT id,
        COALESCE(max_b, 0.0) AS max_b,
        n_b,
        'C' AS cls,
-       ROW_NUMBER() OVER (PARTITION BY id ORDER BY c_tus) AS match_no
+       ROW_NUMBER() OVER (PARTITION BY id ORDER BY c_pos) AS match_no
 FROM agg
 """
 )
@@ -809,11 +815,11 @@ ORACLE_SUBSET = (
     + f"""
 , pairs AS (
   SELECT id, seg_id, a_tus,
-         MAX(CASE WHEN tus = a_tus THEN ba END) AS a_ba,
-         MAX(CASE WHEN tus = c_tus THEN ba END) AS c_ba
+         MAX(CASE WHEN pos = a_pos THEN ba END) AS a_ba,
+         MAX(CASE WHEN pos = c_pos THEN ba END) AS c_ba
   FROM cand
-  WHERE a_tus IS NOT NULL AND c_tus IS NOT NULL
-        AND tus BETWEEN a_tus AND c_tus
+  WHERE a_pos IS NOT NULL AND c_pos IS NOT NULL
+        AND pos BETWEEN a_pos AND c_pos
   GROUP BY id, seg_id, a_tus
 )
 SELECT id,
@@ -921,29 +927,29 @@ ORACLE_RUNNING = (
     + f"""
 , runwin AS (
   SELECT *,
-         SUM(CASE WHEN tus > a_tus AND tus < c_tus THEN 1 ELSE 0 END)
+         SUM(CASE WHEN pos > a_pos AND pos < c_pos THEN 1 ELSE 0 END)
            OVER rw AS b_so_far,
-         SUM(CASE WHEN tus > a_tus AND tus < c_tus THEN ba END)
+         SUM(CASE WHEN pos > a_pos AND pos < c_pos THEN ba END)
            OVER rw AS sum_b_so_far,
-         SUM(CASE WHEN tus > a_tus AND tus < c_tus THEN 1 ELSE 0 END)
+         SUM(CASE WHEN pos > a_pos AND pos < c_pos THEN 1 ELSE 0 END)
            OVER (PARTITION BY id, seg_id) AS n_b
   FROM cand
-  WINDOW rw AS (PARTITION BY id, seg_id ORDER BY tus, event_id
+  WINDOW rw AS (PARTITION BY id, seg_id ORDER BY pos
                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
 )
 SELECT id,
        strftime(make_timestamp(tus), {_FMT}) AS datetime,
-       CASE WHEN tus = a_tus THEN 'A'
-            WHEN tus = c_tus THEN 'C'
+       CASE WHEN pos = a_pos THEN 'A'
+            WHEN pos = c_pos THEN 'C'
             ELSE 'B' END AS classifier,
-       CAST(DENSE_RANK() OVER (PARTITION BY id ORDER BY c_tus) - 1 AS BIGINT)
+       CAST(DENSE_RANK() OVER (PARTITION BY id ORDER BY c_pos) - 1 AS BIGINT)
          AS match_seq,
        CAST(b_so_far AS BIGINT) AS b_so_far,
        COALESCE(sum_b_so_far, 0.0) AS sum_b_so_far,
        CAST(n_b AS BIGINT) AS n_b
 FROM runwin
-WHERE a_tus IS NOT NULL AND c_tus IS NOT NULL
-  AND tus BETWEEN a_tus AND c_tus
+WHERE a_pos IS NOT NULL AND c_pos IS NOT NULL
+  AND pos BETWEEN a_pos AND c_pos
 """
 )
 

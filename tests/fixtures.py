@@ -23,3 +23,31 @@ EXPECTED_MATCHES = [("2", "2020-05-01 11:00:00", "2020-05-01 11:40:00")]
 EXPECTED_TIMEOUTS = [("1", "2020-05-01 11:00:00", "")]
 
 GOLDEN_INPUT_CSV = "\n".join(",".join(map(str, r)) for r in GOLDEN_INPUT_ROWS) + "\n"
+
+
+def write_events(path, events) -> str:
+    """Write ``events`` — (event_id, minute from 10:00, user_id, value)
+    rows — as ``path/events.parquet`` in the driver's events schema and
+    return ``path`` as an sf_dir. events_as_billing reads a user's
+    previous value as balanceBefore (50 for the first)."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t0 = datetime.datetime(2020, 5, 1, 10, 0)
+    table = pa.table(
+        {
+            "event_id": pa.array([e[0] for e in events], pa.int64()),
+            "ts": pa.array(
+                [t0 + datetime.timedelta(minutes=e[1]) for e in events],
+                pa.timestamp("us"),
+            ),
+            "user_id": pa.array([e[2] for e in events], pa.int64()),
+            "event_type": pa.array(["x"] * len(events)),
+            "value": pa.array([e[3] for e in events], pa.float64()),
+            "props": pa.array(["{}"] * len(events)),
+        }
+    )
+    pq.write_table(table, path / "events.parquet")
+    return str(path)

@@ -5,10 +5,6 @@ catalog's specs land on the tiers their docstrings name."""
 
 from __future__ import annotations
 
-import datetime
-
-import pyarrow as pa
-import pyarrow.parquet as pq
 import pytest
 
 from flink_cep_examples_spark.operators.cep_batch import match_pattern
@@ -32,27 +28,9 @@ from flink_cep_examples_spark.sql.match_recognize import (
     sql_with_match_recognize,
 )
 
+from tests.fixtures import write_events
+
 load_all()
-
-
-def _write_events(path, events) -> str:
-    """``events``: (event_id, minute, user_id, value) rows."""
-    t0 = datetime.datetime(2020, 5, 1, 10, 0)
-    table = pa.table(
-        {
-            "event_id": pa.array([e[0] for e in events], pa.int64()),
-            "ts": pa.array(
-                [t0 + datetime.timedelta(minutes=e[1]) for e in events],
-                pa.timestamp("us"),
-            ),
-            "user_id": pa.array([e[2] for e in events], pa.int64()),
-            "event_type": pa.array(["x"] * len(events)),
-            "value": pa.array([e[3] for e in events], pa.float64()),
-            "props": pa.array(["{}"] * len(events)),
-        }
-    )
-    pq.write_table(table, path / "events.parquet")
-    return str(path)
 
 
 def test_null_balance_agrees_on_every_front_end(spark, tmp_path):
@@ -61,7 +39,7 @@ def test_null_balance_agrees_on_every_front_end(spark, tmp_path):
     the NFA emits no match. The catalog, the SQL front-end and the table
     entry point must return the same (nothing) — a closed form that pairs
     the segment's A with its C would emit one."""
-    sf = _write_events(
+    sf = write_events(
         tmp_path,
         [
             (1, 0, 1, 5.0),  # alarm: balanceBefore 50 (first event)
@@ -87,13 +65,12 @@ def test_null_balance_agrees_on_every_front_end(spark, tmp_path):
     ) == want
     assert rows(match_recognize(df, _MR_BODY)) == want
     assert rows(run_pattern(df, spec).drop("tag")) == want
-    # with the timeout channel: the alarm times out on every path
-    timeouts = sorted(
-        map(tuple, match_pattern(df, billing_pattern(emit_timeouts=True)).collect())
-    )
-    assert [r[-1] for r in timeouts] == ["timeout"]
-    assert rows(QUERIES["cep_alerts_with_timeouts"](spark, sf)) == timeouts
-    assert rows(run_pattern(df, billing_pattern(emit_timeouts=True))) == timeouts
+    # with the timeout channel: the NULL row ends the alarm's run, so
+    # there is neither a match nor a timeout
+    with_timeouts = billing_pattern(emit_timeouts=True)
+    assert rows(match_pattern(df, with_timeouts)) == []
+    assert rows(QUERIES["cep_alerts_with_timeouts"](spark, sf)) == []
+    assert rows(run_pattern(df, with_timeouts)) == []
 
 
 @pytest.mark.parametrize(
