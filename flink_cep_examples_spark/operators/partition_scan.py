@@ -16,9 +16,11 @@ Order: the order columns sort ascending with NULLs last — the order
 pandas' mergesort gave when each group was re-sorted in Python — so no
 group is re-sorted here.
 
-Group boundaries follow pandas' ``groupby(dropna=False)`` equality: a
-run of NULL (or NaN) keys is one group, and a multi-column key changes
-when any of its columns does.
+Group boundaries follow Spark's grouping equality: a run of NULL keys
+is one group, a run of NaN keys is another, and a multi-column key
+changes when any of its columns does. pandas reads a NULL float as NaN,
+so each float key column brings an ``isnull`` flag column, computed
+before the exchange, and the bounds read it too.
 
 Arrow batch boundaries: ``mapInPandas`` feeds a partition as a
 SEQUENCE of batches, and a key's rows may straddle two of them — the
@@ -72,6 +74,14 @@ def grouped_partition_scan(
     Equivalent to ``df.groupBy(*key_cols).applyInPandas(...)`` where the
     function mergesorts by ``sort_cols`` itself, with at most one output
     frame per input batch."""
+    null_flags = {
+        f"__isnull_{k}": F.col(k).isNull()
+        for k in key_cols
+        if isinstance(df.schema[k].dataType, (T.FloatType, T.DoubleType))
+    }
+    if null_flags:
+        df = df.withColumns(null_flags)
+    bound_cols = [*key_cols, *null_flags]
     # No explicit partition count: repartition(*cols) sizes the exchange
     # from spark.sql.shuffle.partitions, and AQE is free to coalesce —
     # at 100 TB the shuffle width must come from config/AQE, not from
@@ -91,7 +101,7 @@ def grouped_partition_scan(
             if carry is not None:
                 pdf = pd.concat([carry, pdf], ignore_index=True)
                 carry = None
-            bounds = group_bounds(pdf, key_cols)
+            bounds = group_bounds(pdf, bound_cols)
             if nxt is not None and bounds:
                 # hold back the final key of the batch — it may continue
                 # in the next batch

@@ -157,6 +157,31 @@ def test_one_output_frame_per_arrow_batch(spark):
     assert out["call"].nunique() < n_keys
 
 
+def test_null_and_nan_float_keys_are_two_groups(spark):
+    """Two NULL and two NaN ``double`` keys in one partition: Spark's
+    groupBy counts (NULL 2, NaN 2), and the scan must see two groups of
+    two, although pandas reads both keys as NaN."""
+    rows = [(0, None, None, None, 0, 0), (1, None, math.nan, None, 1, 1),
+            (2, None, None, None, 2, 2), (3, None, math.nan, None, 3, 3)]
+    df = spark.createDataFrame(
+        rows, "rid long, ks string, kf double, k2 long, ts long, tb long"
+    )
+    counts = {
+        "NULL" if r.kf is None else "NaN": r["count"]
+        for r in df.groupBy("kf").count().collect()
+    }
+    assert counts == {"NULL": 2, "NaN": 2}
+    _, scan_batch = _worker_fns()
+    # one shuffle partition puts the NULL run and the NaN run side by side
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "1")
+    try:
+        got = _by_rid(grouped_partition_scan(df, ["kf"], ["ts", "tb"], scan_batch, _OUT))
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+    assert got == {0: (0, 2), 1: (0, 2), 2: (1, 2), 3: (1, 2)}
+
+
 def test_group_bounds_null_equality():
     pdf = pd.DataFrame(
         {
