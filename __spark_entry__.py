@@ -42,7 +42,7 @@ def _catalog():
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query: the reference CEP pattern (A B* C within 1h,
     skip past last row) with absence alerts, over the sf0.001 events
-    table, on the compiled pure-DataFrame fast path.
+    table, through the tier table (which runs the NFA tier for it).
 
     Resolved from the FULL catalog, not the 50-row driver subset —
     gate rotations must never break the flagship smoke check."""

@@ -1,5 +1,6 @@
 """SQL:2016 row-pattern features beyond the reference's subset
-(engine extensions, all on compiled closed forms):
+(engine extensions, through the tier table: compiled kernels where one
+applies, the NFA tier otherwise):
 
 1. ALL ROWS PER MATCH with ``{- B* -}`` exclusion — per-row output,
    loop rows omitted;

@@ -304,10 +304,11 @@ def match_pattern_permute(df: DataFrame, spec: PatternSpec) -> DataFrame:
     - ``within`` bounds the window span: ``ts[r+k-1] − ts[r] <
       within`` (strict, matching the NFA's deadline convention).
 
-    One hash Exchange on the key, zero Python. The NFA tier has no
-    alternation, so this closed form IS the PERMUTE implementation;
-    correctness is pinned by the DuckDB oracle (an independent
-    derivation of the same algebra) and preference-order unit tests."""
+    One hash Exchange on the key, zero Python. This closed form is the
+    batch PERMUTE implementation (the tier table lists it with the
+    reference operators); correctness is pinned by the DuckDB oracle
+    (an independent derivation of the same algebra) and
+    preference-order unit tests."""
     from itertools import permutations
 
     if not spec.permute:

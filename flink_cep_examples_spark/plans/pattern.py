@@ -208,9 +208,10 @@ class PatternSpec:
     #: ANY order (alternation over all orderings, preferred in
     #: lexicographic order of the listed sequence). Supported subset:
     #: once-variables, strict contiguity, ONE ROW PER MATCH, AFTER
-    #: MATCH SKIP TO NEXT ROW — compiled to a window closed form
-    #: (operators/fast_path.py::match_pattern_permute); the NFA tier
-    #: has no alternation, so other modes raise.
+    #: MATCH SKIP TO NEXT ROW; other modes raise. Batch runs the window
+    #: closed form (operators/fast_path.py::match_pattern_permute), the
+    #: stream the alternation coordinator over ``permute_to_alternation``
+    #: (the batch alternation operator could serve it the same way).
     permute: bool = False
     #: SQL:2016 ``SUBSET U = (A, B)``: union variables usable in
     #: MEASURES — U's matched rows are the union of its components'

@@ -24,15 +24,15 @@ from pyspark.sql import functions as F  # noqa: E402
 from flink_cep_examples_spark.queries import QUERIES, load_all  # noqa: E402
 from flink_cep_examples_spark.session import get_spark  # noqa: E402
 
-#: representative operators: CEP fast path, CEP NFA, banded LSH dedup,
+#: representative operators: CEP tiers and kernels, banded LSH dedup,
 #: connected components, text window pipeline, windowed relational agg,
 #: batched ANN (bucket join), sequence packing (stateful Python tier)
 SMOKE = [
     "cep_alerts_with_timeouts",
     "cep_alert_reactions_nfa",
-    "cep_absence_not_followed_by",  # timed-absence fast path (round 3)
-    "cep_match_recognize_all_rows",  # all-rows fast path (round 3)
-    "cep_until_pattern",  # until() on the fast path (round 3)
+    "cep_absence_not_followed_by",  # timed-absence kernel (round 3)
+    "cep_match_recognize_all_rows",  # ALL ROWS PER MATCH (round 3)
+    "cep_until_pattern",  # until() count truncation (round 3)
     "dedup_minhash_lsh",
     "dedup_clusters",
     "docs_bigram_topk",
