@@ -70,28 +70,45 @@ class Tier(NamedTuple):
     build: Callable[[DataFrame, Spec], DataFrame]
 
 
-def _alternation(spec: Spec, rows: str) -> bool:
-    return (
-        isinstance(spec, AlternationSpec)
-        and (spec.alternatives[0].rows_per_match == "all") == (rows == "all")
-    )
+def _shape(spec: Spec) -> str:
+    """The operator family of ``spec``: "alternation",
+    "alternation_all_rows", "permute", "all_rows" or "one_row"."""
+    if isinstance(spec, AlternationSpec):
+        all_rows = spec.alternatives[0].rows_per_match == "all"
+        return "alternation_all_rows" if all_rows else "alternation"
+    if spec.permute:
+        return "permute"
+    return "all_rows" if spec.rows_per_match == "all" else "one_row"
 
 
-def _single(spec: Spec, rows: str) -> bool:
-    return (
-        isinstance(spec, PatternSpec)
-        and not spec.permute
-        and (spec.rows_per_match == "all") == (rows == "all")
-    )
+def _is(shape: str):
+    return lambda s, df: _shape(s) == shape
+
+
+def _alternation(check):
+    return lambda s, df: _shape(s) == "alternation" and check(s)
+
+
+def _all_rows(check):
+    # the ALL ROWS kernels also gate on the source columns' dtypes
+    return lambda s, df: _shape(s) == "all_rows" and check(s, df)
+
+
+def _one_row(check):
+    return lambda s, df: _shape(s) == "one_row" and check(s)
 
 
 def _loop_chain_applies(spec: PatternSpec, df: DataFrame) -> bool:
     # branch-group aggregates select rows by predicate, exact only under
     # data-verified group-predicate disjointness; on a violation the NFA
     # classify path raises its named ambiguity reject
-    return fast_loop_chain_applicable(spec) and (
-        not loop_chain_agg_needs_disjoint(spec)
-        or fast_group_preds_disjoint(df, spec)
+    return (
+        _shape(spec) == "one_row"
+        and fast_loop_chain_applicable(spec)
+        and (
+            not loop_chain_agg_needs_disjoint(spec)
+            or fast_group_preds_disjoint(df, spec)
+        )
     )
 
 
@@ -99,90 +116,42 @@ def _loop_chain_applies(spec: PatternSpec, df: DataFrame) -> bool:
 TIERS: tuple[Tier, ...] = (
     # greedy (X..Y)* with a suffix: ONE chain-kernel pass instead of the
     # lockstep coordinator of two NFAs
-    Tier(
-        "star_chain",
-        lambda s, df: _alternation(s, "one") and fast_star_chain_applicable(s),
-        match_pattern_fast_star_chain,
-    ),
-    Tier(
-        "alternation",
-        lambda s, df: _alternation(s, "one") and fast_alternation_applicable(s),
-        match_pattern_alternation_fast,
-    ),
+    Tier("star_chain", _alternation(fast_star_chain_applicable),
+         match_pattern_fast_star_chain),
+    Tier("alternation", _alternation(fast_alternation_applicable),
+         match_pattern_alternation_fast),
     # ALL ROWS PER MATCH: islands kernel, two-level chain, chain kernel
-    # (df is passed for their source dtype gates)
-    Tier(
-        "branch_all_rows",
-        lambda s, df: _single(s, "all") and fast_branch_all_rows_applicable(s, df),
-        match_pattern_fast_branch_all_rows,
-    ),
-    Tier(
-        "nested_chain_all_rows",
-        lambda s, df: _single(s, "all")
-        and fast_nested_chain_all_rows_applicable(s, df),
-        match_pattern_fast_nested_chain_all_rows,
-    ),
-    Tier(
-        "loop_chain_all_rows",
-        lambda s, df: _single(s, "all")
-        and fast_loop_chain_all_rows_applicable(s, df),
-        match_pattern_fast_loop_chain_all_rows,
-    ),
+    Tier("branch_all_rows", _all_rows(fast_branch_all_rows_applicable),
+         match_pattern_fast_branch_all_rows),
+    Tier("nested_chain_all_rows",
+         _all_rows(fast_nested_chain_all_rows_applicable),
+         match_pattern_fast_nested_chain_all_rows),
+    Tier("loop_chain_all_rows", _all_rows(fast_loop_chain_all_rows_applicable),
+         match_pattern_fast_loop_chain_all_rows),
     # ONE ROW PER MATCH
-    Tier(
-        "absence",
-        lambda s, df: _single(s, "one") and fast_absence_applicable(s),
-        match_pattern_fast_absence,
-    ),
-    Tier(
-        "group_absence",
-        lambda s, df: _single(s, "one") and fast_group_absence_applicable(s),
-        match_pattern_fast_group_absence,
-    ),
-    Tier(
-        "mixed_branch",
-        lambda s, df: _single(s, "one") and fast_mixed_branch_applicable(s),
-        match_pattern_fast_mixed_branch,
-    ),
-    Tier(
-        "nested3_chain",
-        lambda s, df: _single(s, "one") and fast_nested3_chain_applicable(s),
-        match_pattern_fast_nested3_chain,
-    ),
-    Tier(
-        "nested_chain",
-        lambda s, df: _single(s, "one") and fast_nested_chain_applicable(s),
-        match_pattern_fast_nested_chain,
-    ),
-    Tier(
-        "loop_chain",
-        lambda s, df: _single(s, "one") and _loop_chain_applies(s, df),
-        match_pattern_fast_loop_chain,
-    ),
-    Tier(
-        "positional",
-        lambda s, df: _single(s, "one") and fast_positional_applicable(s),
-        match_pattern_fast_positional,
-    ),
+    Tier("absence", _one_row(fast_absence_applicable),
+         match_pattern_fast_absence),
+    Tier("group_absence", _one_row(fast_group_absence_applicable),
+         match_pattern_fast_group_absence),
+    Tier("mixed_branch", _one_row(fast_mixed_branch_applicable),
+         match_pattern_fast_mixed_branch),
+    Tier("nested3_chain", _one_row(fast_nested3_chain_applicable),
+         match_pattern_fast_nested3_chain),
+    Tier("nested_chain", _one_row(fast_nested_chain_applicable),
+         match_pattern_fast_nested_chain),
+    Tier("loop_chain", _loop_chain_applies, match_pattern_fast_loop_chain),
+    Tier("positional", _one_row(fast_positional_applicable),
+         match_pattern_fast_positional),
 )
 
-#: the reference operators; the last row serves every remaining spec
+#: the reference operators, one per operator family
 REFERENCE: tuple[Tier, ...] = (
-    Tier(
-        "nfa_alternation_all_rows",
-        lambda s, df: _alternation(s, "all"),
-        match_pattern_alternation_all_rows,
-    ),
-    Tier(
-        "nfa_alternation",
-        lambda s, df: _alternation(s, "one"),
-        match_pattern_alternation,
-    ),
-    Tier("permute", lambda s, df: s.permute, match_pattern_permute),
-    Tier(
-        "nfa_all_rows", lambda s, df: _single(s, "all"), match_pattern_all_rows
-    ),
-    Tier("nfa", lambda s, df: True, match_pattern),
+    Tier("nfa_alternation_all_rows", _is("alternation_all_rows"),
+         match_pattern_alternation_all_rows),
+    Tier("nfa_alternation", _is("alternation"), match_pattern_alternation),
+    Tier("permute", _is("permute"), match_pattern_permute),
+    Tier("nfa_all_rows", _is("all_rows"), match_pattern_all_rows),
+    Tier("nfa", _is("one_row"), match_pattern),
 )
 
 
@@ -206,19 +175,19 @@ def run_pattern(
     is the chosen operator's: keys, measures and ``tag`` for ONE ROW PER
     MATCH, no ``tag`` for alternations, every input column plus
     ``classifier``, ``match_seq`` and measures for ALL ROWS PER MATCH."""
-    single = isinstance(spec, PatternSpec)
+    shape = _shape(spec)
     if df.isStreaming:
         from flink_cep_examples_spark.streaming.cep_stream import (
             match_pattern_stream,
         )
 
-        if single and spec.permute:
+        if shape == "permute":
             # the stream's alternation coordinator serves PERMUTE: one
             # alternative per ordering, leftmost = lexicographic preference
             if spec.emit_timeouts:
                 raise ValueError("PERMUTE has no timeout channel")
             spec = permute_to_alternation(spec)
         return match_pattern_stream(df, spec, watermark_delay=watermark_delay)
-    if single and spec.rows_per_match == "all" and spec.emit_timeouts:
+    if shape == "all_rows" and spec.emit_timeouts:
         raise ValueError("ALL ROWS PER MATCH has no timeout channel")
     return choose_tier(df, spec, use_fast_path).build(df, spec)
