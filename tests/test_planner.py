@@ -8,12 +8,7 @@ from __future__ import annotations
 import pytest
 
 from flink_cep_examples_spark.operators.cep_batch import match_pattern
-from flink_cep_examples_spark.operators.planner import (
-    REFERENCE,
-    TIERS,
-    choose_tier,
-    run_pattern,
-)
+from flink_cep_examples_spark.operators.planner import choose_tier, run_pattern
 from flink_cep_examples_spark.plans.pattern import billing_pattern
 from flink_cep_examples_spark.queries import QUERIES, load_all
 from flink_cep_examples_spark.queries.cep import (
@@ -87,10 +82,5 @@ def test_null_balance_agrees_on_every_front_end(spark, tmp_path):
 def test_catalog_specs_choose_their_tier(spark, sf_small, spec, tier):
     df = events_as_billing(spark, sf_small)
     assert choose_tier(df, spec).name == tier
-    assert choose_tier(df, spec, use_fast_path=False).name in ("nfa", "nfa_all_rows")
+    assert choose_tier(df, spec, use_fast_path=False).name == "nfa"
 
-
-def test_tier_names_are_unique():
-    names = [t.name for t in TIERS + REFERENCE]
-    assert len(names) == len(set(names))
-    assert REFERENCE[-1].name == "nfa"
