@@ -121,6 +121,8 @@ def keyed_process(
         _TS_COL, (F.unix_micros(F.col(order_col).cast(T.TimestampType())) / 1000).cast("long")
     )
     out_cols = [f.name for f in output_schema.fields]
+    # the input's own columns: the scan may add key-flag columns
+    names = [c for c in df.columns if c != _TS_COL]
 
     def run_batch(pdf: pd.DataFrame, bounds) -> pd.DataFrame:
         ts_all = pdf[_TS_COL].tolist()
@@ -128,7 +130,6 @@ def keyed_process(
         # the row dicts are built once per batch, each key takes a slice;
         # per-column tolist() boxes the same Python values as
         # to_dict("records") in ~60 % of its time
-        names = [c for c in pdf.columns if c != _TS_COL]
         records = [
             dict(zip(names, row))
             for row in zip(*(pdf[c].tolist() for c in names))

@@ -17,6 +17,7 @@ import pytest
 from flink_cep_examples_spark.operators.cep_batch import match_pattern
 from flink_cep_examples_spark.operators.keyed_process import (
     billing_low_level_alerts,
+    keyed_process,
 )
 from flink_cep_examples_spark.operators.partition_scan import (
     group_bounds,
@@ -180,6 +181,25 @@ def test_null_and_nan_float_keys_are_two_groups(spark):
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
     assert got == {0: (0, 2), 1: (0, 2), 2: (1, 2), 3: (1, 2)}
+
+    class _Counter:  # nested: pickled by value, like _worker_fns
+        def __init__(self):
+            self.n = 0
+
+        def process_element(self, rec, ctx, out):
+            self.n += 1
+            out.append({"rid": rec["rid"], "n": self.n, "cols": ",".join(rec)})
+
+    spark.conf.set("spark.sql.shuffle.partitions", "1")
+    try:
+        kp = keyed_process(
+            df, _Counter, "rid long, n long, cols string", key_cols=("kf",),
+            order_col="ts", tiebreak_col="tb",
+        ).collect()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+    assert sorted((r.rid, r.n) for r in kp) == [(0, 1), (1, 1), (2, 2), (3, 2)]
+    assert {r.cols for r in kp} == {"rid,ks,kf,k2,ts,tb"}
 
 
 def test_group_bounds_null_equality():
