@@ -42,7 +42,10 @@ from flink_cep_examples_spark.plans.pattern import (
     PatternSpec,
 )
 from flink_cep_examples_spark.operators import nfa
-from flink_cep_examples_spark.operators.partition_scan import grouped_partition_scan
+from flink_cep_examples_spark.operators.partition_scan import (
+    grouped_partition_scan,
+    null_flag,
+)
 from flink_cep_examples_spark.schemas import MATCH_TAG, TIMEOUT_TAG
 
 _PRED_PREFIX = "__cep_p_"
@@ -430,9 +433,16 @@ def _append_one_row(cols, key_rows, lo, eval_measures, emitted) -> None:
 def _batch_frame(pdf, gathered, rows, cols, measure_list, out_schema):
     """The one output frame of a batch: the ``gathered`` input columns
     taken from ``pdf`` at batch rows ``rows`` (a key group's first row,
-    or each emitted ALL ROWS row), then the computed ``cols``."""
+    or each emitted ALL ROWS row), then the computed ``cols``. A float
+    key goes out masked by its ``isnull`` flag, so a NaN key stays NaN
+    through Arrow instead of turning NULL."""
     idx = np.asarray(rows, dtype=np.intp)
     data = {c: pdf[c].to_numpy()[idx] for c in gathered}
+    for c in gathered:
+        if null_flag(c) in pdf:
+            data[c] = pd.arrays.FloatingArray(
+                data[c], pdf[null_flag(c)].to_numpy(dtype=bool)[idx]
+            )
     data.update(cols)
     out = pd.DataFrame(data, columns=[f.name for f in out_schema.fields])
     _null_safe_agg_cast(out, measure_list, out_schema)

@@ -20,7 +20,9 @@ Group boundaries follow Spark's grouping equality: a run of NULL keys
 is one group, a run of NaN keys is another, and a multi-column key
 changes when any of its columns does. pandas reads a NULL float as NaN,
 so each float key column brings an ``isnull`` flag column, computed
-before the exchange, and the bounds read it too.
+before the exchange, and the bounds read it too. The flag stays in the
+batch frame, so a scan can send a NaN key back as NaN rather than
+NULL (pandas → Arrow turns an unmasked NaN into NULL).
 
 Arrow batch boundaries: ``mapInPandas`` feeds a partition as a
 SEQUENCE of batches, and a key's rows may straddle two of them — the
@@ -46,6 +48,22 @@ from pyspark.sql import types as T
 #: ``scan_batch(pdf, bounds) -> pd.DataFrame``: ``bounds`` lists the
 #: ``(lo, hi)`` half-open row ranges of ``pdf``'s complete key groups.
 BatchScan = Callable[[pd.DataFrame, list[tuple[int, int]]], pd.DataFrame]
+
+
+def null_flag(col: str) -> str:
+    """Name of float key ``col``'s ``isnull`` flag column."""
+    return f"__isnull_{col}"
+
+
+def float_key_flags(df: DataFrame, key_cols: list[str]) -> dict:
+    """``isnull`` flag columns for ``df``'s float key columns: pandas
+    reads a NULL float as NaN, so the flag, computed before the
+    exchange, is what tells a NULL key from a NaN key."""
+    return {
+        null_flag(k): F.col(k).isNull()
+        for k in key_cols
+        if isinstance(df.schema[k].dataType, (T.FloatType, T.DoubleType))
+    }
 
 
 def group_bounds(pdf: pd.DataFrame, key_cols: list[str]) -> list[tuple[int, int]]:
@@ -74,11 +92,7 @@ def grouped_partition_scan(
     Equivalent to ``df.groupBy(*key_cols).applyInPandas(...)`` where the
     function mergesorts by ``sort_cols`` itself, with at most one output
     frame per input batch."""
-    null_flags = {
-        f"__isnull_{k}": F.col(k).isNull()
-        for k in key_cols
-        if isinstance(df.schema[k].dataType, (T.FloatType, T.DoubleType))
-    }
+    null_flags = float_key_flags(df, key_cols)
     if null_flags:
         df = df.withColumns(null_flags)
     bound_cols = [*key_cols, *null_flags]

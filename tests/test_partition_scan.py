@@ -23,7 +23,7 @@ from flink_cep_examples_spark.operators.partition_scan import (
     group_bounds,
     grouped_partition_scan,
 )
-from flink_cep_examples_spark.plans.pattern import billing_pattern
+from flink_cep_examples_spark.plans.pattern import Measure, Pattern, billing_pattern
 from flink_cep_examples_spark.sources.billing import billing_from_rows
 
 _BATCH_CONF = "spark.sql.execution.arrow.maxRecordsPerBatch"
@@ -200,6 +200,18 @@ def test_null_and_nan_float_keys_are_two_groups(spark):
         spark.conf.set("spark.sql.shuffle.partitions", old)
     assert sorted((r.rid, r.n) for r in kp) == [(0, 1), (1, 1), (2, 2), (3, 2)]
     assert {r.cols for r in kp} == {"rid,ks,kf,k2,ts,tb"}
+
+    # match_pattern reports each row's match under its own key: NaN
+    # stays NaN through the scan's pandas → Arrow output
+    spec = Pattern.begin("A").where("rid >= 0").build(
+        key_cols=("kf",), order_col="ts", tiebreak_col="tb",
+        measures=(Measure("r", "A", "rid", "first"),),
+    )
+    got = sorted(
+        ("NULL" if r.kf is None else "NaN" if math.isnan(r.kf) else r.kf, r.r)
+        for r in match_pattern(df, spec).collect()
+    )
+    assert got == [("NULL", 0), ("NULL", 2), ("NaN", 1), ("NaN", 3)]
 
 
 def test_group_bounds_null_equality():
