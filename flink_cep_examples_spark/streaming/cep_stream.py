@@ -9,20 +9,31 @@ the Spark-idiomatic equivalent of Flink's CepOperator on a keyed stream
   reference's bounded-out-of-orderness assigner
   (``currentMaxTimestamp - maxOutOfOrderness``,
   FlinkCEPExample.scala:27-42) — same model, computed per micro-batch.
-- **buffer-and-sort-on-watermark**: Flink's CepOperator buffers events
+  Spark's watermark is the late-drop bound: it drops rows at or below
+  it before they reach the operator (Flink CEP drops late events the
+  same way; documented).
+- **event-time frontier**: each bucket's clock is F = max(watermark,
+  m − delay), where m is the largest event time among the rows the
+  invocation brought, floored to the millisecond. Spark publishes its
+  next watermark at or above F and then drops every row at or below
+  it, so no row still to come sorts at or before F, and the operator
+  acts on F one micro-batch before the watermark gets there. The delay
+  is read from the plan's ``EventTimeWatermark`` node; a plan with any
+  other watermark keeps F = watermark.
+- **buffer-and-sort-on-frontier**: Flink's CepOperator buffers events
   per key and advances the NFA in event-time order as the watermark
   passes them; here that buffer lives in the group state, and each
-  invocation releases buffered rows ≤ watermark, sorted by
-  (event-time, tiebreak), into the NFA (SURVEY §1.5 "load-bearing").
-  Rows older than the watermark at arrival are dropped (Flink CEP
-  drops late events the same way; documented).
-- **within / absence timeouts**: the state's event-time timeout is set
-  to the earliest pending obligation — a partial's deadline or a
-  buffered row's release time — so a key with no new data still emits
-  its absence alert when the watermark passes the deadline
+  invocation releases buffered rows ≤ F, sorted by (event-time,
+  tiebreak), into the NFA (SURVEY §1.5 "load-bearing").
+- **within / absence timeouts**: deadlines up to F fire in the
+  invocation. The state's event-time timeout is set to the earliest
+  pending obligation — a partial's deadline or a buffered row's
+  release time — so a key with no new data still emits its absence
+  alert once the watermark reaches the deadline
   (TimedOutPartialMatchHandler,
   FlinkCEPAbsenceOfEventExample.scala:79,93-103). Spark's no-data
-  micro-batches (on by default) advance the watermark to fire these.
+  micro-batches (on by default) advance the watermark to fire these;
+  a timed-out invocation brings no rows, so its F is the watermark.
 - **side outputs**: match + timeout rows share one schema with a
   ``tag`` column (no OutputTag in Structured Streaming; SURVEY §2.3).
 
@@ -39,10 +50,10 @@ them the reorder hold's key, which an alternation widens to
   the leftmost-derivation held completions (alternation);
 - the per-row step: ``Nfa.step`` (single) or
   ``coordinate_alternation_row`` (alternation);
-- the watermark advance: a single pattern emits matches and timeouts;
+- the frontier advance: a single pattern emits matches and timeouts;
   an alternation resolves its held completions.
 
-State per key = (event buffer beyond the watermark) + (open partial
+State per key = (event buffer beyond the frontier) + (open partial
 matches within the ``within`` horizon) — both bounded by the
 watermark-delay / within horizons, so state size is O(events per key
 per horizon), not O(stream length). Predicates are evaluated
@@ -62,6 +73,7 @@ import pickle
 import re
 from typing import Any, Iterator
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
@@ -79,6 +91,10 @@ from flink_cep_examples_spark.operators.nfa import (
     coordinate_alternation_row,
     resolve_alternation_helds,
 )
+from flink_cep_examples_spark.operators.partition_scan import (
+    float_key_flags,
+    null_flag,
+)
 from flink_cep_examples_spark.plans.pattern import (
     AGG_FNS,
     NILADIC_FNS,
@@ -91,6 +107,9 @@ from flink_cep_examples_spark.schemas import MATCH_TAG, TIMEOUT_TAG
 _PRED_PREFIX = "__cep_p_"
 _TS_COL = "__cep_ts_us"
 _BUCKET_COL = "__cep_bucket"
+#: a NaN float key in the bucket dicts' keys: NaN ≠ NaN, and no float
+#: equals this string (``float("NaN")`` turns it back for the output)
+_NAN_KEY = "NaN"
 
 #: state: one pickled blob per KEY-BUCKET — a tuple holding a prefix of
 #: its kind's _STATE_FIELDS layout
@@ -181,9 +200,9 @@ def _cap_rows(acc):
 # operator — is closed off at the engine level: Spark rejects multiple
 # applyInPandasWithState per query, probed on 4.1, round 11). Instead
 # the stateful operator computes nav columns ITSELF from its own
-# watermark-sorted per-key sequence (PREV(x, n): the last n released
+# frontier-sorted per-key sequence (PREV(x, n): the last n released
 # rows per key are kept as a tiny tail state; NEXT(x, n): the last n
-# watermark-eligible rows per key are HELD BACK until their successors
+# frontier-eligible rows per key are HELD BACK until their successors
 # become eligible — the NFA clock for a held key advances only to the
 # first held row's timestamp, so within-deadlines cannot fire before
 # the row is fed) and evaluates the nav-referencing predicates
@@ -312,7 +331,7 @@ def _nav_transform(
     release: pd.DataFrame,
     buffer: pd.DataFrame | None,
     tails: pd.DataFrame | None,
-    key_cols: list[str],
+    group_cols: list[str],
     tiebreak: str,
     buf_cols: list[str],
     nav_specs: list[tuple[str, str, int, str]],
@@ -320,23 +339,27 @@ def _nav_transform(
     nav_needed: tuple[str, ...],
     max_prev: int,
     max_next: int,
-) -> tuple[pd.DataFrame, pd.DataFrame | None, pd.DataFrame | None, dict, dict]:
+) -> tuple[
+    pd.DataFrame, pd.DataFrame | None, pd.DataFrame | None, pd.DataFrame, dict
+]:
     """One micro-batch of streaming PREV/NEXT navigation over the
-    (key, order, tiebreak)-sorted release frame.
+    (key, order, tiebreak)-sorted release frame. Keys group by
+    ``group_cols`` with NULL as a key of its own.
 
     - PREV(x, n): lag within [tail rows ‖ release] per key — ``tails``
       holds each key's last ``max_prev`` FED rows, so a lag that
       crosses the micro-batch boundary reads exactly the row the batch
-      window would. New arrivals carry ts ≥ current watermark ≥ every
-      tail ts (the late-drop rule), so a stable sort with tails first
-      reproduces feed order even on exact ties.
+      window would. Every tail row was fed at or below a bucket's
+      event-time frontier, which the watermark has reached since, and
+      Spark drops arrivals at or below the watermark, so a stable sort
+      with tails first reproduces feed order.
     - NEXT(x, n): lead within the eligible sequence. The last
       ``max_next`` eligible rows per key are HELD BACK (returned to
       the buffer): their successor may arrive in a later batch, and no
       future arrival can sort before them, so once ``max_next``
       successors are eligible their lead values are final. On an
       unbounded stream a key's final rows stay pending — the streaming
-      "not yet decidable" twin of a row above the watermark (finite
+      "not yet decidable" twin of a row above the frontier (finite
       replays flush with a per-key sentinel, as the agreement tests
       do).
     - Nav predicates evaluate over the fed frame via DuckDB, restricted
@@ -345,11 +368,11 @@ def _nav_transform(
       convention). Row alignment is pinned with an explicit ORDER BY
       on a row-number column.
 
-    Returns ``(fed, buffer, tails, held_min_ts, pred_over)``:
-    rows to feed (with nav columns attached), the buffer grown by the
-    held-back rows, the rolled-forward tail state, per-key first-held
-    timestamps (the NFA clock cap), and predicate-index → bool array
-    overrides aligned to ``fed``.
+    Returns ``(fed, buffer, tails, held, pred_over)``: rows to feed
+    (with nav columns attached), the buffer grown by the held-back
+    rows, the rolled-forward tail state, the held-back rows in
+    (key, order) order (each key's first one caps its NFA clock), and
+    predicate-index → bool array overrides aligned to ``fed``.
     """
     import numpy as np
 
@@ -361,12 +384,12 @@ def _nav_transform(
         r[mark] = False
         work = pd.concat([t, r], ignore_index=True)
         work = work.sort_values(
-            [*key_cols, _TS_COL, tiebreak], kind="mergesort"
+            [*group_cols, _TS_COL, tiebreak], kind="mergesort"
         )
     else:
         work = release.copy()
         work[mark] = False
-    g = work.groupby(key_cols, sort=False)
+    g = work.groupby(group_cols, sort=False, dropna=False)
     aliases = []
     for alias, src, off, kind in nav_specs:
         col = work[src]
@@ -377,7 +400,9 @@ def _nav_transform(
             shifted = (
                 work[src]
                 .astype("Int64")
-                .groupby([work[k] for k in key_cols], sort=False)
+                .groupby(
+                    [work[k] for k in group_cols], sort=False, dropna=False
+                )
                 .shift(off if kind == "prev" else -off)
             )
         else:
@@ -386,16 +411,15 @@ def _nav_transform(
         aliases.append(alias)
     cand = work[~work[mark].to_numpy(dtype=bool)]
 
-    held_min_ts: dict[tuple, int] = {}
+    held = cand.iloc[:0]
     if max_next and len(cand):
-        rev = cand.groupby(key_cols, sort=False).cumcount(ascending=False)
+        rev = cand.groupby(group_cols, sort=False, dropna=False).cumcount(
+            ascending=False
+        )
         hmask = (rev < max_next).to_numpy()
         fed = cand[~hmask]
         held = cand[hmask]
         if len(held):
-            hmin = held.groupby(key_cols, sort=False)[_TS_COL].min()
-            for k, v in hmin.items():
-                held_min_ts[k if isinstance(k, tuple) else (k,)] = int(v)
             add = held[buf_cols]
             buffer = (
                 add.reset_index(drop=True)
@@ -429,10 +453,12 @@ def _nav_transform(
         pool = fed[buf_cols]
         if tails is not None and len(tails):
             pool = pd.concat([tails, pool], ignore_index=True)
-        rev = pool.groupby(key_cols, sort=False).cumcount(ascending=False)
+        rev = pool.groupby(group_cols, sort=False, dropna=False).cumcount(
+            ascending=False
+        )
         tails = pool[(rev < max_prev).to_numpy()].reset_index(drop=True)
 
-    return fed[buf_cols + aliases], buffer, tails, held_min_ts, pred_over
+    return fed[buf_cols + aliases], buffer, tails, held, pred_over
 
 
 def _prepare_stream(
@@ -440,6 +466,7 @@ def _prepare_stream(
     spec: PatternSpec | AlternationSpec,
     extra_cols: tuple[str, ...] = (),
     skip_pred_idx: frozenset[int] = frozenset(),
+    flags: dict | None = None,
 ) -> DataFrame:
     needed = {m.src for m in spec.measures if m.fn != "count" and m.src}
     needed.update(spec.key_cols)
@@ -457,7 +484,39 @@ def _prepare_stream(
             cols.append(F.lit(False).alias(f"{_PRED_PREFIX}{i}"))
         else:
             cols.append(F.expr(e).alias(f"{_PRED_PREFIX}{i}"))
+    cols.extend(e.alias(name) for name, e in (flags or {}).items())
     return df.select(*cols)
+
+
+def _frontier_delay_ms(prepared: DataFrame) -> int | None:
+    """The watermark delay of ``prepared``'s one ``EventTimeWatermark``
+    node, in ms, converted as Spark converts it; None when the plan
+    holds any other watermark, because Spark's watermark is then not
+    this column's maximum minus this delay."""
+    nodes, stack = [], [prepared._jdf.queryExecution().logical()]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "EventTimeWatermark":
+            nodes.append(node)
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    if len(nodes) != 1:
+        return None
+    jvm = prepared.sparkSession._jvm
+    return int(
+        jvm.org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark
+        .getDelayMs(nodes[0].delay())
+    )
+
+
+def _float_key_array(vals: list, dtype) -> pd.api.extensions.ExtensionArray:
+    """A float key column of the output from the bucket dicts' key
+    values: NULL (None) is masked, and NaN stays NaN through Arrow (an
+    unmasked float column would send it as NULL)."""
+    return pd.arrays.FloatingArray(
+        np.array([np.nan if v is None else float(v) for v in vals], dtype),
+        np.array([v is None for v in vals], dtype=bool),
+    )
 
 
 def match_pattern_stream(
@@ -580,6 +639,15 @@ def match_pattern_stream(
             )
         except (TypeError, ValueError):  # e.g. "auto"
             n_buckets = 4 * df.sparkSession.sparkContext.defaultParallelism
+    key_cols = list(spec.key_cols)
+    # a float key's isnull flag, as in the batch scan: pandas reads a
+    # NULL float as NaN
+    flags = float_key_flags(df, key_cols)
+    float_keys = {
+        k: np.float32 if df.schema[k].dataType == T.FloatType() else np.float64
+        for k in key_cols
+        if null_flag(k) in flags
+    }
     prepared = (
         _prepare_stream(
             df,
@@ -589,6 +657,7 @@ def match_pattern_stream(
             skip_pred_idx=frozenset(
                 nav_conf["pred_idx"] if nav_conf is not None else ()
             ),
+            flags=flags,
         )
         .withColumn(
             _BUCKET_COL,
@@ -596,9 +665,11 @@ def match_pattern_stream(
         )
         .withWatermark(spec.order_col, watermark_delay)
     )
+    delay_ms = _frontier_delay_ms(prepared)
 
     data_cols = list(df.columns)
-    key_cols = list(spec.key_cols)
+    # sort and group by these: NULL and NaN float keys are two keys
+    group_cols = [*key_cols, *flags]
     tiebreak = spec.tiebreak_col
     after = spec.after_match
     subset_map = dict(spec.subsets)
@@ -687,7 +758,7 @@ def match_pattern_stream(
     # columns the buffer must retain (stable order, no duplicates)
     buf_cols = list(
         dict.fromkeys(
-            [*key_cols, _TS_COL, tiebreak, *pred_cols, *all_srcs]
+            [*group_cols, _TS_COL, tiebreak, *pred_cols, *all_srcs]
             + (list(nav_conf["needed"]) if nav_conf is not None else [])
         )
     )
@@ -780,11 +851,34 @@ def match_pattern_stream(
         for m in measures
         if m.running and m.fn not in ("classifier", "match_number")
     ]
+    # ALL ROWS output: key columns from the key, the rest from the row
+    row_src = (
+        [(c, payload_idx[c]) for c in data_cols if c not in key_cols]
+        if all_rows
+        else []
+    )
+
+    def key_arrays(frame: pd.DataFrame) -> list:
+        """Per key column, the values the bucket dicts key on. pandas
+        reads NULL as NaN or NaT, which equal nothing, so NULL becomes
+        None and a float key's NaN becomes ``_NAN_KEY``."""
+        arrs = []
+        for k in key_cols:
+            a = frame[k].to_numpy()
+            na = pd.isna(a)
+            if na.any():
+                a = a.astype(object)
+                a[na] = None
+                if k in float_keys:
+                    a[na & ~frame[null_flag(k)].to_numpy(dtype=bool)] = _NAN_KEY
+            arrs.append(a)
+        return arrs
 
     def process(
         bucket: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        wm_us = state.getCurrentWatermarkMs() * 1000
+        wm_ms = state.getCurrentWatermarkMs()
+        wm_us = wm_ms * 1000
         # bucket state (_STATE_FIELDS): the columnar event buffer as a
         # pandas DataFrame — pickles as a handful of numpy blocks, ~6×
         # smaller and ~100× fewer objects than per-row tuples — and the
@@ -801,15 +895,28 @@ def match_pattern_stream(
         nav_tails = stored.get("nav_tails")  # per-key PREV tail rows
         pending_out: dict = stored.get("pending_out", {})  # reorder hold
 
+        # the bucket's event-time frontier F, its clock for release and
+        # timeouts: Spark's next watermark is at least this invocation's
+        # largest live event time, floored to the ms, minus the delay,
+        # and Spark drops every later row at or below that watermark,
+        # so no row still to come sorts at or before F. Rows of earlier
+        # batches are already under the watermark, so F needs no state.
+        frontier_us = wm_us
         frames = [] if buffer is None else [buffer]
         if not state.hasTimedOut:
             for pdf in pdfs:
                 if len(pdf):
                     # late beyond watermark: dropped (as Flink CEP);
                     # vectorized — ingest touches no Python rows
-                    live = pdf[pdf[_TS_COL].to_numpy() >= wm_us]
-                    if len(live):
-                        frames.append(live[buf_cols])
+                    ts = pdf[_TS_COL].to_numpy()
+                    keep = ts >= wm_us
+                    if keep.any():
+                        frames.append(pdf[keep][buf_cols])
+                        if delay_ms is not None:
+                            m_ms = int(ts[keep].max()) // 1000
+                            frontier_us = max(
+                                frontier_us, (m_ms - delay_ms) * 1000
+                            )
         allbuf = (
             frames[0]
             if len(frames) == 1
@@ -821,7 +928,7 @@ def match_pattern_stream(
         # one output accumulator for the whole bucket
         data: dict[str, list] = {c: [] for c in out_names}
 
-        def emit_all_rows(match: dict, mn: int) -> None:
+        def emit_all_rows(key: tuple, match: dict, mn: int) -> None:
             mvals = {m.name: _measure_value(m, match, mn) for m in measures}
             entries = [
                 (p[-1], vname, p)  # (NFA ordinal, classifier, row)
@@ -897,8 +1004,10 @@ def match_pattern_stream(
                 }
                 if vname in excluded_vars:
                     continue  # {- var -}: consumed but not emitted
-                for c in data_cols:
-                    data[c].append(p[payload_idx[c]])
+                for c, j in row_src:
+                    data[c].append(p[j])
+                for c, kv in zip(key_cols, key):
+                    data[c].append(kv)
                 data["classifier"].append(vname)
                 data["match_seq"].append(mn - 1)  # 0-based, as batch
                 for m in measures:
@@ -917,7 +1026,7 @@ def match_pattern_stream(
             if all_rows:
                 if tag != MATCH_TAG:  # no timeout channel under ALL ROWS
                     raise AssertionError("timeout emission under ALL ROWS")
-                emit_all_rows(match, mn)
+                emit_all_rows(key, match, mn)
                 return
             for k, kv in zip(key_cols, key):
                 data[k].append(kv)
@@ -946,7 +1055,7 @@ def match_pattern_stream(
         buffered_keys: set = set()
         held_min_ts: dict[tuple, int] = {}
         if allbuf is not None and len(allbuf):
-            rel_mask = allbuf[_TS_COL].to_numpy() <= wm_us
+            rel_mask = allbuf[_TS_COL].to_numpy() <= frontier_us
             release = allbuf[rel_mask]
             buffer = allbuf[~rel_mask]
             if len(buffer) == 0:
@@ -958,7 +1067,7 @@ def match_pattern_stream(
                 # whole bucket with key-change detection — the same
                 # amortization as the batch partition scan
                 release = release.sort_values(
-                    [*key_cols, _TS_COL, tiebreak], kind="mergesort"
+                    [*group_cols, _TS_COL, tiebreak], kind="mergesort"
                 )
                 pred_over: dict[int, Any] = {}
                 if nav_conf is not None:
@@ -966,13 +1075,13 @@ def match_pattern_stream(
                         release,
                         buffer,
                         nav_tails,
-                        held_min_ts,
+                        held,
                         pred_over,
                     ) = _nav_transform(
                         release,
                         buffer,
                         nav_tails,
-                        key_cols,
+                        group_cols,
                         tiebreak,
                         buf_cols,
                         nav_specs,
@@ -981,7 +1090,11 @@ def match_pattern_stream(
                         nav_conf["max_prev"],
                         nav_conf["max_next"],
                     )
-                key_arrs = [release[k].to_numpy() for k in key_cols]
+                    for kt, t in zip(
+                        zip(*key_arrays(held)), held[_TS_COL].to_numpy()
+                    ):
+                        held_min_ts.setdefault(kt, int(t))
+                key_arrs = key_arrays(release)
                 ts_arr = release[_TS_COL].to_numpy()
                 pred_arr = release[pred_cols].to_numpy(dtype=bool)
                 for pi, pv in pred_over.items():
@@ -1065,21 +1178,18 @@ def match_pattern_stream(
         if buffer is not None and len(buffer):
             # computed AFTER the nav transform — held-back rows joined
             # the buffer and must keep their key's NFA state alive
-            if len(key_cols) == 1:
-                buffered_keys = {(k,) for k in buffer[key_cols[0]]}
-            else:
-                buffered_keys = set(zip(*(buffer[k] for k in key_cols)))
+            buffered_keys = set(zip(*key_arrays(buffer)))
 
-        # the watermark itself may expire partials (absence alerts) or
+        # the frontier itself may expire partials (absence alerts) or
         # confirm pending timed-absence completions (matches). A key
         # with held-back rows (streaming NEXT holdback) advances only
-        # to the first held row's timestamp: those rows are ≤ watermark
+        # to the first held row's timestamp: those rows are ≤ frontier
         # and must be fed before any within-deadline beyond them fires
         # (feeding a row at t advances the clock to t first, so the cap
         # is exactly feed-equivalent).
         pending: list[int] = []
         for kt in list(nfa_states):
-            adv = min(wm_us, held_min_ts.get(kt, wm_us))
+            adv = min(frontier_us, held_min_ts.get(kt, frontier_us))
             if alt:
                 pairs = list(zip(nfas, nfa_states[kt]))
                 for nf, st in pairs:
@@ -1089,7 +1199,7 @@ def match_pattern_stream(
                             "at watermark — validator must reject trailing "
                             "absence variables in alternatives"
                         )
-                # watermark-expired runs may unblock held leftmost
+                # frontier-expired runs may unblock held leftmost
                 # completions (the earlier-listed branch died of its
                 # within deadline)
                 if alt_helds.get(kt):
@@ -1184,13 +1294,15 @@ def match_pattern_stream(
             if buffer is not None:
                 pending.append(int(buffer[_TS_COL].min()))
             if pending:
+                # Spark fires timeout T once the watermark passes T ms,
+                # so this fires once the watermark reaches the earliest
+                # pending instant
                 state.setTimeoutTimestamp(
-                    max(
-                        min(pending) // 1000,
-                        state.getCurrentWatermarkMs() + 1,
-                    )
+                    max((min(pending) - 1) // 1000, wm_ms, 1)
                 )
         if data[out_names[0]]:
+            for k, dtype in float_keys.items():
+                data[k] = _float_key_array(data[k], dtype)
             yield pd.DataFrame(data, columns=out_names)
 
     return prepared.groupBy(_BUCKET_COL).applyInPandasWithState(

@@ -2042,3 +2042,125 @@ def test_streaming_longest_one_row_match_number_matches_batch(
             spark, tmp_path, df, body, f"or{seed}"
         )
         assert batch and got == batch, seed
+
+
+
+def _billing_replay(spark, tmp_path, frames, name, prepare=lambda s: s):
+    """Stream ``frames``, one parquet file and one micro-batch each,
+    through the billing pattern with timeouts (``prepare`` edits the
+    source first); returns the stream's rows and the batch operator's,
+    each as sorted tuples with a NULL key as "NULL" and a NaN key as
+    "NaN"."""
+    from flink_cep_examples_spark.operators import match_pattern
+
+    spec = billing_pattern(emit_timeouts=True)
+
+    def norm(rows):
+        return sorted(
+            ("NULL" if r.id is None else "NaN" if r.id != r.id else r.id,
+             r.alarmTriggerDatetime, r.topupDatetime, r.tag)
+            for r in rows
+        )
+
+    src = tmp_path / name
+    for df in frames:
+        df.coalesce(1).write.mode("append").parquet(str(src))
+    batch = norm(match_pattern(spark.read.parquet(str(src)), spec).collect())
+    stream = prepare(
+        spark.readStream.schema(frames[0].schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(src))
+    )
+    q = (
+        match_pattern_stream(stream, spec, "6 minutes")
+        .writeStream.format("memory")
+        .queryName(name)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    return norm(spark.table(name).collect()), batch
+
+
+def _billing_frame(spark, rows, key_type="string", seq0=0):
+    """``(id, datetime, balanceBefore, balanceAfter)`` rows; arrival
+    order from ``seq0`` is the tiebreak."""
+    from pyspark.sql import functions as F
+
+    return spark.createDataFrame(
+        [(k, d, seq0 + i, float(b), float(a)) for i, (k, d, b, a) in enumerate(rows)],
+        f"id {key_type}, datetime string, seq long, balanceBefore double, "
+        "balanceAfter double",
+    ).withColumn("event_time", F.to_timestamp("datetime"))
+
+
+#: a far-future row that moves the watermark past every deadline
+_FAR = "2021-01-01 00:00:00"
+
+
+def test_streaming_null_and_nan_float_keys_match_batch(spark, tmp_path):
+    """A ``double`` key with one alarm → top-up pair under NULL and one
+    under NaN: pandas reads both keys as NaN, and NaN ≠ NaN, yet the
+    stream finds the two matches batch finds, under the same keys."""
+    nan = float("nan")
+    df = _billing_frame(spark, [
+        (None, "2020-05-01 11:00:00", 13, 9),
+        (nan, "2020-05-01 11:05:00", 13, 9),
+        (None, "2020-05-01 11:10:00", 9, 20),
+        (nan, "2020-05-01 11:15:00", 9, 20),
+        (99.0, _FAR, 5, 5),
+    ], "double")
+    got, batch = _billing_replay(spark, tmp_path, [df], "null_nan_keys")
+    assert batch == [
+        ("NULL", "2020-05-01 11:00:00", "2020-05-01 11:10:00", MATCH_TAG),
+        ("NaN", "2020-05-01 11:05:00", "2020-05-01 11:15:00", MATCH_TAG),
+    ]
+    assert got == batch
+
+
+def test_streaming_other_watermark_falls_back_and_matches_batch(
+    spark, tmp_path, monkeypatch
+):
+    """A user watermark of 1 hour on another column makes Spark's
+    watermark the minimum of the two, so a row up to an hour late still
+    arrives: here an alarm that sorts before a top-up of the batch
+    before. The operator must then keep the watermark as its frontier
+    (no delay read from the plan) to match batch. Spark 4 allows a
+    second watermark in one chain only with multiple stateful operators
+    turned off."""
+    from pyspark.sql import functions as F
+
+    from flink_cep_examples_spark.streaming import cep_stream
+
+    delays = []
+    read = cep_stream._frontier_delay_ms
+    monkeypatch.setattr(
+        cep_stream, "_frontier_delay_ms",
+        lambda prepared: delays.append(read(prepared)) or delays[-1],
+    )
+    frames = [
+        _billing_frame(spark, rows, seq0=10 * i).withColumn(
+            "ingest_time", F.col("event_time")
+        )
+        for i, rows in enumerate([
+            [("1", "2020-05-01 11:00:00", 9, 20),
+             ("1", "2020-05-01 11:30:00", 20, 20)],
+            [("1", "2020-05-01 10:50:00", 13, 9)],
+            [("99", _FAR, 5, 5)],
+        ])
+    ]
+    conf = "spark.sql.streaming.statefulOperator.allowMultiple"
+    spark.conf.set(conf, "false")
+    try:
+        got, batch = _billing_replay(
+            spark, tmp_path, frames, "other_watermark",
+            lambda s: s.withWatermark("ingest_time", "1 hour"),
+        )
+    finally:
+        spark.conf.unset(conf)
+    assert delays == [None]
+    assert batch == [
+        ("1", "2020-05-01 10:50:00", "2020-05-01 11:00:00", MATCH_TAG)
+    ]
+    assert got == batch
