@@ -1,5 +1,11 @@
-"""Batch CEP operator: ``match_pattern(df, spec)``.
+"""Batch CEP operator: ``match_pattern(df, spec)``, the one batch NFA
+operator.
 
+It serves a single pattern (``PatternSpec``) or a top-level alternation
+(``AlternationSpec``), with ONE ROW or ALL ROWS PER MATCH. The spec's
+type picks the per-key-group scan (``nfa.scan_key_group`` or
+``nfa.scan_key_group_alternation``) and ``rows_per_match`` the per-match
+emission; staging, the output frame and the partition scan are shared.
 The Spark-side plumbing around the NFA core (operators/nfa.py), staged
 for scale:
 
@@ -11,7 +17,9 @@ for scale:
    ts, tiebreak) + mapInPandas`` (operators/partition_scan.py): each
    Arrow batch holds whole, already-ordered key groups; its predicate
    and timestamp columns become numpy once, the NFA scans each key over
-   array slices, and the batch yields ONE output frame.
+   array slices, and the batch yields ONE output frame
+   (:func:`batch_scan`, which the compiled kernels also run when their
+   preconditions fail on a partition).
 3. **Measures projection** — matched-row values are read from the
    key's slice of the batch arrays; output rows carry the key, the
    measures, and the ``tag`` column ('match' / 'timeout' — side-output
@@ -43,8 +51,10 @@ from flink_cep_examples_spark.plans.pattern import (
 )
 from flink_cep_examples_spark.operators import nfa
 from flink_cep_examples_spark.operators.partition_scan import (
+    BatchScan,
     grouped_partition_scan,
     null_flag,
+    scan_order,
 )
 from flink_cep_examples_spark.schemas import MATCH_TAG, TIMEOUT_TAG
 
@@ -52,6 +62,8 @@ _PRED_PREFIX = "__cep_p_"
 _TS_COL = "__cep_ts_ms"
 
 _INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
+
+Spec = PatternSpec | AlternationSpec
 
 
 def _measure_field(df: DataFrame, m: Measure) -> T.StructField:
@@ -368,8 +380,9 @@ def _with_nav_cols(df: DataFrame, spec: PatternSpec) -> DataFrame:
     from pyspark.sql import Window
 
     w = Window.partitionBy(*spec.key_cols).orderBy(
-        F.col(spec.order_col).cast(T.TimestampType()).asc_nulls_last(),
-        F.col(spec.tiebreak_col).asc_nulls_last(),
+        *scan_order(
+            F.col(spec.order_col).cast(T.TimestampType()), spec.tiebreak_col
+        )
     )
     return df.select(
         "*",
@@ -382,14 +395,18 @@ def _with_nav_cols(df: DataFrame, spec: PatternSpec) -> DataFrame:
     )
 
 
-def _prepare(df: DataFrame, spec: PatternSpec) -> DataFrame:
-    """Add vectorized predicate booleans + epoch-ms timestamp. Catalyst
-    prunes every column the measures/keys don't need."""
+def _prepare(df: DataFrame, spec: Spec, all_rows: bool = False) -> DataFrame:
+    """Add vectorized predicate booleans + epoch-µs timestamp. ALL ROWS
+    PER MATCH keeps every input column; otherwise Catalyst prunes every
+    column the measures/keys don't need."""
+    if all_rows:
+        cols = [F.col(c) for c in df.columns]
+    else:
+        needed = {m.src for m in spec.measures if _needs_src(m)}
+        needed.update(spec.key_cols)
+        needed.add(spec.tiebreak_col)
+        cols = [F.col(c) for c in sorted(needed)]
     df = _with_nav_cols(df, spec)
-    needed = {m.src for m in spec.measures if _needs_src(m)}
-    needed.update(spec.key_cols)
-    needed.add(spec.tiebreak_col)
-    cols = [F.col(c) for c in sorted(needed)]
     cols.append(
         F.unix_micros(F.col(spec.order_col).cast(T.TimestampType())).alias(_TS_COL)
     )
@@ -501,365 +518,235 @@ def _alternation_order(am):
     )
 
 
-def match_pattern(df: DataFrame, spec: PatternSpec) -> DataFrame:
-    """Batch row-pattern recognition. Returns one row per match (ONE ROW
-    PER MATCH, FlinkSqlMatchRecognizeExample.scala:60) with the declared
-    measures, plus (if ``spec.emit_timeouts``) one row per timed-out
-    partial with ``tag='timeout'``."""
-    spec.validate()
-    prepared = _prepare(df, spec)
-    out_schema = output_schema(df, spec)
-    n_vars = len(spec.pred_exprs)
-    # pre-compiled once; scan_key_group accepts the compiled Nfa so the
-    # per-key-group path (possibly 10k+ groups) skips recompilation
-    spec_bc = nfa.Nfa(spec)
-    key_cols = list(spec.key_cols)
-    measure_list = list(spec.measures)
-    subsets = spec.subsets
-    stride_map = _loop_strides(spec)
-    # aggregate measures over multi-branch / nested group vars (round
-    # 10): their row sets reconstruct per row from the predicates
-    need_classify = bool(_classified_var_idx(spec)) and any(
-        m.fn in AGG_FNS for m in measure_list
-    )
+def rows_per_match(spec: Spec) -> str:
+    """``"one"`` or ``"all"``; an alternation takes its first
+    alternative's choice."""
+    if isinstance(spec, AlternationSpec):
+        return spec.alternatives[0].rows_per_match
+    return spec.rows_per_match
 
-    def scan(pdf: pd.DataFrame, bounds) -> pd.DataFrame:
-        ts_all, preds_all = _batch_arrays(pdf, n_vars)
-        src_all = _src_arrays(pdf, measure_list)
-        key_rows: list[int] = []
-        cols: dict[str, list] = {m.name: [] for m in measure_list}
-        cols["tag"] = []
-        for lo, hi in bounds:
-            preds = preds_all[:, lo:hi]
-            matches, timeouts = nfa.scan_key_group(spec_bc, preds, ts_all[lo:hi])
-            if not matches and not timeouts:
-                continue
-            if spec_bc.longest and len(matches) > 1:
-                # held resolution can emit a blocked earlier start AFTER
-                # a later unblocked one (SKIP TO NEXT ROW) — renumber by
-                # (start, end) ordinal so MATCH_NUMBER is SQL:2016 start
-                # order, as the alternation tiers already do
-                matches.sort(
-                    key=lambda m: (
-                        min(sp[3] for sp in m.values()),
-                        max(sp[4] for sp in m.values()),
-                    )
-                )
-            eval_measures = _make_measure_eval(
-                measure_list, subsets, _slice_arrays(src_all, lo, hi),
-                loop_stride=stride_map,
-                classify=_classify_preds(spec, preds) if need_classify else None,
-            )
-            emitted = [(m, MATCH_TAG, i + 1) for i, m in enumerate(matches)]
-            emitted += [(to, TIMEOUT_TAG, None) for to in timeouts]
-            _append_one_row(cols, key_rows, lo, eval_measures, emitted)
-        return _batch_frame(pdf, key_cols, key_rows, cols, measure_list, out_schema)
 
-    return grouped_partition_scan(
-        prepared, key_cols, [_TS_COL, spec.tiebreak_col], scan, out_schema
+def _start_end_order(match: dict):
+    return (
+        min(sp[3] for sp in match.values()),
+        max(sp[4] for sp in match.values()),
     )
 
 
-def match_pattern_alternation(df: DataFrame, aspec: AlternationSpec) -> DataFrame:
-    """Batch row-pattern recognition for a top-level PATTERN
-    alternation ``(P1 | P2 | ...)``: one NFA per alternative advanced
-    in lockstep per key group, the shared after-match strategy acting
-    on the union of their partial matches
-    (operators/nfa.py::scan_key_group_alternation).
-
-    Same Spark staging as :func:`match_pattern` — every alternative's
-    DEFINE predicates are evaluated vectorized in ONE pre-shuffle
-    ``select`` (the predicate column list is simply the concatenation
-    of the alternatives'), one hash Exchange on the keys, measures
-    projected per matched alternative (a measure over a variable the
-    matched alternative lacks yields NULL)."""
-    aspec.validate()
-    key_cols = list(aspec.key_cols)
-    measure_list = list(aspec.measures)
-    alts = aspec.alternatives
-
-    offsets: list[tuple[int, int]] = []  # (start, n_preds) per alternative
-    pos = 0
-    for alt in alts:
-        offsets.append((pos, len(alt.pred_exprs)))
-        pos += len(alt.pred_exprs)
-
-    # AlternationSpec exposes the derived pred_exprs / nav_cols /
-    # subsets views, so the staging is EXACTLY PatternSpec's (one
-    # shared _prepare — no drift between the operators)
-    prepared = _prepare(df, aspec)
-
-    # same output schema as the single-spec operator, minus the tag
-    # column (alternation has no timeout channel)
-    out_schema = T.StructType(output_schema(df, aspec).fields[:-1])
-
-    nfas = [nfa.Nfa(alt) for alt in alts]
-    after = aspec.after_match
-    derivation = aspec.derivation
-    n_total = pos
-
-    def scan(pdf: pd.DataFrame, bounds) -> pd.DataFrame:
-        ts_all, preds_all = _batch_arrays(pdf, n_total)
-        src_all = _src_arrays(pdf, measure_list)
-        key_rows: list[int] = []
-        cols: dict[str, list] = {m.name: [] for m in measure_list}
-        for lo, hi in bounds:
-            preds_list = [preds_all[s : s + k, lo:hi] for s, k in offsets]
-            matched = nfa.scan_key_group_alternation(
-                nfas, preds_list, ts_all[lo:hi], after, derivation
-            )
-            if not matched:
-                continue
-            matched.sort(key=_alternation_order)
-            eval_measures = _make_measure_eval(
-                measure_list, aspec.subsets, _slice_arrays(src_all, lo, hi)
-            )
-            _append_one_row(
-                cols, key_rows, lo, eval_measures,
-                [(m, None, i + 1) for i, (_, m) in enumerate(matched)],
-            )
-        return _batch_frame(pdf, key_cols, key_rows, cols, measure_list, out_schema)
-
-    return grouped_partition_scan(
-        prepared, key_cols, [_TS_COL, aspec.tiebreak_col], scan, out_schema
-    )
+def _first_row(match: dict) -> int:
+    return min(sp[0] for sp in match.values())
 
 
-def match_pattern_alternation_all_rows(
-    df: DataFrame, aspec: AlternationSpec
-) -> DataFrame:
-    """ALL ROWS PER MATCH for a top-level alternation (round 5): one
-    output row per matched INPUT row with every input column,
-    ``classifier`` (the matched alternative's variable that consumed
-    the row), per-key ``match_seq`` (matches ordered by start then end
-    position — deterministic across derivations), and FINAL measures
-    repeated per row. Requires fixed-width strict alternatives
-    (validated): each variable's rows are then a contiguous index
-    span, so the row set reconstructs from (first, last) spans.
-    Excluded ``{- var -}`` copies shape the match but emit no rows,
-    exactly as in the single-pattern tier."""
-    aspec.validate()
-    if any(alt.rows_per_match != "all" for alt in aspec.alternatives):
-        raise ValueError("aspec is not an ALL ROWS PER MATCH spec")
-    key_cols = list(aspec.key_cols)
-    measure_list = list(aspec.measures)
-    alts = aspec.alternatives
-    data_cols = list(df.columns)
-
-    offsets: list[tuple[int, int]] = []
-    pos = 0
-    for alt in alts:
-        offsets.append((pos, len(alt.pred_exprs)))
-        pos += len(alt.pred_exprs)
-    n_total = pos
-
-    prepared = _with_nav_cols(df, aspec).select(
-        *data_cols,
-        F.unix_micros(
-            F.col(aspec.order_col).cast(T.TimestampType())
-        ).alias(_TS_COL),
-        *[
-            F.expr(e).alias(f"{_PRED_PREFIX}{i}")
-            for i, e in enumerate(aspec.pred_exprs)
-        ],
-    )
-    out_schema = all_rows_output_schema(df, aspec)
-    nfas = [nfa.Nfa(alt) for alt in alts]
-    after = aspec.after_match
-    derivation = aspec.derivation
-    emit_names = [
-        [v.name for v in alt.variables if not v.excluded] for alt in alts
+def _classified_rows(spec, idx, match, preds) -> list[tuple[int, str]]:
+    """ALL ROWS ``(row, var)`` pairs of a match's multi-branch or NESTED
+    group (variable indices ``idx``): iterations have no fixed stride,
+    but strict contiguity means every row between the group vars' first
+    and last was consumed by exactly one of them, and under disjoint
+    predicates THAT var is the unique one whose predicate holds at the
+    row. Ambiguity is a loud reject (the NFA does not record per-row
+    assignments); excluded ``{- var -}`` rows are dropped."""
+    present = [
+        match[v.name]
+        for v in (spec.variables[i] for i in idx)
+        if v.name in match
     ]
-    subset_map = dict(aspec.subsets)
-    running = [m for m in measure_list if m.running]
-
-    def scan(pdf: pd.DataFrame, bounds) -> pd.DataFrame:
-        ts_all, preds_all = _batch_arrays(pdf, n_total)
-        src_all = _src_arrays(pdf, measure_list)
-        out_rows: list[int] = []
-        cols: dict[str, list] = {"classifier": [], "match_seq": []}
-        cols.update({m.name: [] for m in measure_list})
-        for lo, hi in bounds:
-            preds_list = [preds_all[s : s + k, lo:hi] for s, k in offsets]
-            matched = nfa.scan_key_group_alternation(
-                nfas, preds_list, ts_all[lo:hi], after, derivation
+    if not present:
+        return []
+    out = []
+    lo = min(sp[0] for sp in present)
+    for r in range(lo, max(sp[1] for sp in present) + 1):
+        hits = [vi for vi in idx if preds[vi][r]]
+        if len(hits) != 1:
+            raise NotImplementedError(
+                "ALL ROWS PER MATCH with a multi-branch or nested "
+                "unbounded group reconstructs per-row CLASSIFIER from "
+                "the variable predicates and needs them pairwise-"
+                "disjoint on the matched rows (a row satisfied "
+                f"{len(hits)} group-variable predicates)"
             )
-            if not matched:
-                continue
-            # deterministic numbering across derivations: matches
-            # ordered by (start, end) position, not emission order
-            matched.sort(key=_alternation_order)
-            src_arrays = _slice_arrays(src_all, lo, hi)
-            eval_measures = _make_measure_eval(
-                measure_list, aspec.subsets, src_arrays
-            )
-            for seq, (a, match) in enumerate(matched):
-                run_series = _running_measures(
-                    running, match,
-                    lambda v: _resolve_spans(v, match, subset_map),
-                    src_arrays,
-                )
-                emit_rows = [
-                    (r, vname)
-                    for vname in emit_names[a]
-                    if (span := match.get(vname)) is not None
-                    for r in range(span[0], span[1] + 1)
-                ]
-                _append_all_rows(
-                    cols, out_rows, lo, emit_rows, seq, measure_list,
-                    eval_measures(match, seq + 1), run_series,
-                )
-        return _batch_frame(pdf, data_cols, out_rows, cols, measure_list, out_schema)
-
-    return grouped_partition_scan(
-        prepared, key_cols, [_TS_COL, aspec.tiebreak_col], scan, out_schema
-    )
+        v = spec.variables[hits[0]]
+        if not v.excluded:
+            out.append((r, v.name))
+    return out
 
 
-def match_pattern_all_rows(df: DataFrame, spec: PatternSpec) -> DataFrame:
-    """ALL ROWS PER MATCH (SQL:2016): one output row per matched INPUT
-    row, carrying every input column plus ``classifier`` (the pattern
-    variable that consumed the row), a per-key ``match_seq``, and the
-    measures with FINAL semantics (whole-match values repeated on each
-    row).
-
-    Requires strict contiguity (MATCH_RECOGNIZE's own model): each
-    variable's consumed rows are then exactly the contiguous index span
-    the NFA recorded, so the row set reconstructs from (first, last)
-    spans without storing per-row payloads. Timeout side outputs do not
-    exist in this mode (SQL has no timeout channel)."""
-    spec.validate()
-    if any(v.contiguity != STRICT for v in spec.variables[1:]):
-        raise NotImplementedError(
-            "ALL ROWS PER MATCH requires strict contiguity"
-        )
-    data_cols = list(df.columns)
-    prepared = _with_nav_cols(df, spec).select(
-        *data_cols,
-        F.unix_micros(F.col(spec.order_col).cast(T.TimestampType())).alias(_TS_COL),
-        *[
-            F.expr(e).alias(f"{_PRED_PREFIX}{i}")
-            for i, e in enumerate(spec.pred_exprs)
-        ],
-    )
-    out_schema = all_rows_output_schema(df, spec)
-    n_vars = len(spec.pred_exprs)
-    compiled = nfa.Nfa(spec)
+def batch_scan(
+    spec: Spec, out_schema: T.StructType, owns_start=None
+) -> BatchScan:
+    """The per-batch NFA scan of :func:`match_pattern`, for
+    ``grouped_partition_scan``: ``scan(pdf, bounds)`` runs each key
+    group ``pdf[lo:hi]`` of a staged batch (:func:`_prepare`) through
+    the NFA and returns the batch's one ``out_schema`` frame.
+    ``owns_start(pdf)``, if given, marks the batch rows from which a
+    match or timeout may start; the rest are dropped
+    (:func:`match_pattern_time_sliced`'s home slice)."""
+    alternation = isinstance(spec, AlternationSpec)
+    all_rows = rows_per_match(spec) == "all"
     measure_list = list(spec.measures)
     subsets = spec.subsets
-    key_cols = list(spec.key_cols)
-    # SQL:2016 {- var -}: excluded variables still shape the match
-    # (measures/skip/deadline unchanged) but emit no output rows
-    emit_names = [v.name for v in spec.variables if not v.excluded]
-    # loop-group vars (round 7): a var's rows across iterations are the
-    # stride-L progression from its merged span (exactly-once + strict
-    # body, validated), NOT the contiguous range — L = group width.
-    # MULTI-BRANCH and NESTED groups (round 10) have no fixed stride:
-    # their vars skip the stride expansion entirely and emit via
-    # per-row predicate classification below (aggregate/RUNNING
-    # measures over them are rejected in validate, so loop_stride
-    # never feeds _actual_spans).
-    classified_idx = _classified_var_idx(spec)
-    classified_names = [spec.variables[i].name for i in classified_idx]
-    classified_set = set(classified_names)
-    var_excluded = {
-        spec.variables[i].name: spec.variables[i].excluded
-        for i in classified_idx
-    }
-    loop_stride = _loop_strides(spec)
     subset_map = dict(subsets)
     running = [m for m in measure_list if m.running]
+    n_preds = len(spec.pred_exprs)
+    if alternation:
+        alts = spec.alternatives
+        # one NFA per alternative; its predicate rows in the staged order
+        nfas = [nfa.Nfa(a) for a in alts]
+        pred_rows, pos = [], 0
+        for a in alts:
+            pred_rows.append((pos, pos + len(a.pred_exprs)))
+            pos += len(a.pred_exprs)
+        after, derivation = spec.after_match, spec.derivation
+        strides, classified = {}, []
+    else:
+        alts = (spec,)
+        # compiled once: the scan reuses it for every key group
+        compiled = nfa.Nfa(spec)
+        # loop-group vars (round 7): a var's rows across iterations are
+        # the stride-L progression from its merged span; multi-branch
+        # and nested groups (round 10) have no fixed stride and
+        # reconstruct per row from the variable predicates
+        strides = _loop_strides(spec)
+        classified = _classified_var_idx(spec)
+    need_classify = bool(classified) and (
+        all_rows or any(m.fn in AGG_FNS for m in measure_list)
+    )
+    # SQL:2016 {- var -}: excluded variables still shape the match
+    # (measures/skip/deadline unchanged) but emit no output rows
+    class_names = {alts[0].variables[i].name for i in classified}
+    emit_names = [
+        [v.name for v in a.variables
+         if not v.excluded and v.name not in class_names]
+        for a in alts
+    ]
+    # the tag column only for a single pattern's ONE ROW output
+    tagged = not (alternation or all_rows)
+    match_tag = MATCH_TAG if tagged else None
+    computed = {m.name for m in measure_list}
+    computed |= {"classifier", "match_seq"} if all_rows else {"tag"}
+    gathered = [f.name for f in out_schema.fields if f.name not in computed]
 
     def scan(pdf: pd.DataFrame, bounds) -> pd.DataFrame:
-        ts_all, preds_all = _batch_arrays(pdf, n_vars)
+        ts_all, preds_all = _batch_arrays(pdf, n_preds)
         src_all = _src_arrays(pdf, measure_list)
-        out_rows: list[int] = []
-        cols: dict[str, list] = {"classifier": [], "match_seq": []}
-        cols.update({m.name: [] for m in measure_list})
+        owned = None if owns_start is None else owns_start(pdf)
+        rows: list[int] = []
+        cols: dict[str, list] = {m.name: [] for m in measure_list}
+        if all_rows:
+            cols.update(classifier=[], match_seq=[])
+        elif tagged:
+            cols["tag"] = []
         for lo, hi in bounds:
-            preds = preds_all[:, lo:hi]
-            matches, _ = nfa.scan_key_group(compiled, preds, ts_all[lo:hi])
-            if not matches:
-                continue
-            if compiled.longest and len(matches) > 1:
-                # same renumbering as match_pattern: held resolution can
-                # emit starts out of order — match_seq is SQL:2016
-                # (start, end) order
-                matches.sort(
-                    key=lambda mm: (
-                        min(sp[3] for sp in mm.values()),
-                        max(sp[4] for sp in mm.values()),
-                    )
+            preds, ts = preds_all[:, lo:hi], ts_all[lo:hi]
+            alt_of = None
+            if alternation:
+                matched = nfa.scan_key_group_alternation(
+                    nfas, [preds[a:b] for a, b in pred_rows], ts,
+                    after, derivation,
                 )
-            src_arrays = _slice_arrays(src_all, lo, hi)
-            classify_t = (
-                _classify_preds(spec, preds) if classified_idx else None
-            )
+                matched.sort(key=_alternation_order)
+                alt_of = [a for a, _ in matched]
+                matches, timeouts = [m for _, m in matched], []
+            else:
+                matches, timeouts = nfa.scan_key_group(compiled, preds, ts)
+                if compiled.longest and len(matches) > 1:
+                    # held resolution can emit a blocked earlier start
+                    # AFTER a later unblocked one (SKIP TO NEXT ROW) —
+                    # renumber by (start, end) ordinal so MATCH_NUMBER
+                    # is SQL:2016 start order
+                    matches.sort(key=_start_end_order)
+            if owned is not None:
+                matches = [m for m in matches if owned[lo + _first_row(m)]]
+                timeouts = [t for t in timeouts if owned[lo + _first_row(t)]]
+            if not matches and not timeouts:
+                continue
+            src = _slice_arrays(src_all, lo, hi)
+            classify = _classify_preds(spec, preds) if need_classify else None
             eval_measures = _make_measure_eval(
-                measure_list, subsets, src_arrays, loop_stride=loop_stride,
-                classify=classify_t,
+                measure_list, subsets, src, loop_stride=strides,
+                classify=classify,
             )
+            if not all_rows:
+                emitted = [
+                    (m, match_tag, i + 1) for i, m in enumerate(matches)
+                ]
+                emitted += [(to, TIMEOUT_TAG, None) for to in timeouts]
+                _append_one_row(cols, rows, lo, eval_measures, emitted)
+                continue
             for seq, match in enumerate(matches):
+                emit_rows = [
+                    (r, v)
+                    for v in emit_names[alt_of[seq] if alt_of else 0]
+                    if (sp := match.get(v)) is not None
+                    for r in range(sp[0], sp[1] + 1, strides.get(v, 1))
+                ]
+                if classified:
+                    emit_rows += _classified_rows(
+                        spec, classified, match, preds
+                    )
+                emit_rows.sort(key=lambda t: t[0])
                 run_series = _running_measures(
                     running, match,
                     lambda v: _actual_spans(
-                        v, match, subset_map, loop_stride, classify_t
+                        v, match, subset_map, strides, classify
                     ),
-                    src_arrays,
+                    src,
                 )
-                emit_rows: list[tuple[int, str]] = []
-                for vname in emit_names:
-                    if vname in classified_set:
-                        continue  # no fixed stride: classify per row below
-                    span = match.get(vname)
-                    if span is None:
-                        continue
-                    stride = loop_stride.get(vname, 1)
-                    emit_rows.extend(
-                        (r, vname)
-                        for r in range(span[0], span[1] + 1, stride)
-                    )
-                if classified_idx:
-                    # multi-branch / NESTED group (round 10): iterations
-                    # have no fixed stride, but strict contiguity means
-                    # every row between the group vars' first and last
-                    # was consumed by exactly one of them — and under
-                    # disjoint predicates THAT var is the unique one
-                    # whose predicate holds at the row. Ambiguity is a
-                    # loud reject (the NFA does not record per-row
-                    # assignments).
-                    present = [
-                        match[v] for v in classified_names if v in match
-                    ]
-                    if present:
-                        blo = min(sp[0] for sp in present)
-                        bhi = max(sp[1] for sp in present)
-                        for r in range(blo, bhi + 1):
-                            hits = [
-                                vi for vi in classified_idx if preds[vi][r]
-                            ]
-                            if len(hits) != 1:
-                                raise NotImplementedError(
-                                    "ALL ROWS PER MATCH with a multi-branch"
-                                    " or nested unbounded group "
-                                    "reconstructs per-row CLASSIFIER from "
-                                    "the variable predicates and needs "
-                                    "them pairwise-disjoint on the matched "
-                                    f"rows (a row satisfied {len(hits)} "
-                                    "group-variable predicates)"
-                                )
-                            vn = spec.variables[hits[0]].name
-                            if not var_excluded.get(vn, False):
-                                emit_rows.append((r, vn))
-                emit_rows.sort(key=lambda t: t[0])
                 _append_all_rows(
-                    cols, out_rows, lo, emit_rows, seq, measure_list,
+                    cols, rows, lo, emit_rows, seq, measure_list,
                     eval_measures(match, seq + 1), run_series,
                 )
-        return _batch_frame(pdf, data_cols, out_rows, cols, measure_list, out_schema)
+        return _batch_frame(pdf, gathered, rows, cols, measure_list, out_schema)
 
+    return scan
+
+
+def match_pattern(df: DataFrame, spec: Spec) -> DataFrame:
+    """Batch row-pattern recognition, the NFA reference for every batch
+    tier. ``spec`` is a single pattern or a top-level alternation
+    ``(P1 | P2 | ...)`` (one NFA per alternative advanced in lockstep
+    per key group, the shared after-match strategy acting on the union
+    of their partial matches — operators/nfa.py::
+    scan_key_group_alternation).
+
+    ONE ROW PER MATCH (FlinkSqlMatchRecognizeExample.scala:60): one row
+    per match with the keys and the declared measures; a single pattern
+    adds ``tag`` and, if ``spec.emit_timeouts``, one row per timed-out
+    partial with ``tag='timeout'``. An alternation has no timeout
+    channel and no ``tag``; a measure over a variable the matched
+    alternative lacks yields NULL.
+
+    ALL ROWS PER MATCH (SQL:2016): one row per matched INPUT row with
+    every input column, ``classifier`` (the variable that consumed the
+    row), a per-key ``match_seq`` (matches in start order) and the
+    FINAL measures repeated on each row, RUNNING measures folded per
+    row. It requires strict contiguity, so each variable's rows
+    reconstruct from its (first, last) span; no timeouts are emitted
+    (SQL has no timeout channel)."""
+    spec.validate()
+    all_rows = rows_per_match(spec) == "all"
+    if isinstance(spec, AlternationSpec):
+        if all_rows and any(
+            a.rows_per_match != "all" for a in spec.alternatives
+        ):
+            raise ValueError("aspec is not an ALL ROWS PER MATCH spec")
+    elif all_rows and any(
+        v.contiguity != STRICT for v in spec.variables[1:]
+    ):
+        raise NotImplementedError(
+            "ALL ROWS PER MATCH requires strict contiguity"
+        )
+    if all_rows:
+        out_schema = all_rows_output_schema(df, spec)
+    else:
+        out_schema = output_schema(df, spec)
+        if isinstance(spec, AlternationSpec):
+            out_schema = T.StructType(out_schema.fields[:-1])
     return grouped_partition_scan(
-        prepared, key_cols, [_TS_COL, spec.tiebreak_col], scan, out_schema
+        _prepare(df, spec, all_rows),
+        list(spec.key_cols),
+        [_TS_COL, spec.tiebreak_col],
+        batch_scan(spec, out_schema),
+        out_schema,
     )
 
 
@@ -952,49 +839,17 @@ def match_pattern_time_sliced(
     )
 
     out_schema = output_schema(df, spec)
-    n_vars = len(spec.pred_exprs)
-    compiled = nfa.Nfa(spec)
-    key_cols = list(spec.key_cols)
-    measure_list = list(spec.measures)
-    subsets = spec.subsets
-    stride_map = _loop_strides(spec)
-    need_classify = bool(_classified_var_idx(spec)) and any(
-        m.fn in AGG_FNS for m in measure_list
-    )
 
-    def scan(pdf: pd.DataFrame, bounds) -> pd.DataFrame:
-        ts_all, preds_all = _batch_arrays(pdf, n_vars)
-        src_all = _src_arrays(pdf, measure_list)
-        slice_ids = pdf["__slice"].to_numpy()
-        key_rows: list[int] = []
-        cols: dict[str, list] = {m.name: [] for m in measure_list}
-        cols["tag"] = []
-        for lo, hi in bounds:
-            preds, ts = preds_all[:, lo:hi], ts_all[lo:hi]
-            matches, timeouts = nfa.scan_key_group(compiled, preds, ts)
-            s_lo = int(slice_ids[lo]) * slice_us
-            s_hi = s_lo + slice_us
-
-            def home(match: dict) -> bool:
-                # home-slice ownership: the match's first row decides
-                return s_lo <= ts[min(s[0] for s in match.values())] < s_hi
-
-            emitted = [(m, MATCH_TAG, None) for m in matches if home(m)]
-            emitted += [(to, TIMEOUT_TAG, None) for to in timeouts if home(to)]
-            if not emitted:
-                continue
-            eval_measures = _make_measure_eval(
-                measure_list, subsets, _slice_arrays(src_all, lo, hi),
-                loop_stride=stride_map,
-                classify=_classify_preds(spec, preds) if need_classify else None,
-            )
-            _append_one_row(cols, key_rows, lo, eval_measures, emitted)
-        return _batch_frame(pdf, key_cols, key_rows, cols, measure_list, out_schema)
+    def owns_start(pdf: pd.DataFrame) -> np.ndarray:
+        # home-slice ownership: a match belongs to the slice holding its
+        # first row (numpy floor division, as the slice id above)
+        ts = pdf[_TS_COL].to_numpy(dtype=np.int64)
+        return ts // slice_us == pdf["__slice"].to_numpy()
 
     return grouped_partition_scan(
         sliced,
-        [*key_cols, "__slice"],
+        [*spec.key_cols, "__slice"],
         [_TS_COL, spec.tiebreak_col],
-        scan,
+        batch_scan(spec, out_schema, owns_start),
         out_schema,
     )

@@ -20,7 +20,15 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from flink_cep_examples_spark.operators.cep_batch import output_schema
+from flink_cep_examples_spark.operators.cep_batch import (
+    batch_scan,
+    output_schema,
+)
+from flink_cep_examples_spark.operators.partition_scan import (
+    group_bounds,
+    key_starts,
+    scan_order,
+)
 from flink_cep_examples_spark.plans.pattern import (
     AGG_FNS,
     NILADIC_FNS,
@@ -117,7 +125,7 @@ def match_pattern_fast_absence(df: DataFrame, spec: PatternSpec) -> DataFrame:
         F.expr(n_v.predicate).alias("__is_n"),
         *srcs,
     )
-    w_ord = Window.partitionBy(*keys).orderBy("__ts", "__tb")
+    w_ord = Window.partitionBy(*keys).orderBy(*scan_order("__ts", "__tb"))
     next_n = F.min(F.when(F.col("__is_n"), F.col("__ts"))).over(
         w_ord.rowsBetween(1, Window.unboundedFollowing)
     )
@@ -249,7 +257,7 @@ def match_pattern_fast_positional(df: DataFrame, spec: PatternSpec) -> DataFrame
         F.col(spec.tiebreak_col).alias("__tb"),
         *srcs,
     )
-    w_ord = Window.partitionBy(*keys).orderBy("__ts", "__tb")
+    w_ord = Window.partitionBy(*keys).orderBy(*scan_order("__ts", "__tb"))
 
     def measure(m: Measure):
         if m.fn == "count":
@@ -260,9 +268,9 @@ def match_pattern_fast_positional(df: DataFrame, spec: PatternSpec) -> DataFrame
         return F.col(m.src) if off == 0 else F.lead(m.src, off).over(w_ord)
 
     r0 = F.row_number().over(w_ord) - 1
-    # the match fits iff the last row exists: lead of the (non-null)
-    # tiebreak at offset L-1 — avoids a second count() window frame
-    fits = F.lead("__tb", total - 1).over(w_ord).isNotNull()
+    # the match fits iff the last row exists: lead of a non-null
+    # literal at offset L-1 — avoids a second count() window frame
+    fits = F.lead(F.lit(True), total - 1).over(w_ord).isNotNull()
     out = (
         base.withColumn("__r0", r0)
         .withColumn("__fits", fits)
@@ -284,6 +292,25 @@ def match_pattern_fast_positional(df: DataFrame, spec: PatternSpec) -> DataFrame
 # PERMUTE closed form: SQL:2016 PATTERN (PERMUTE (A, B, C)) under
 # AFTER MATCH SKIP TO NEXT ROW (round 4)
 # ---------------------------------------------------------------------------
+
+
+def check_permute(spec: PatternSpec) -> None:
+    """Raise unless batch PERMUTE serves ``spec``: no PREV/NEXT, SKIP
+    TO NEXT ROW (or NO_SKIP), ONE ROW PER MATCH without timeouts."""
+    if not spec.permute:
+        raise ValueError("spec is not a PERMUTE pattern")
+    if spec.nav_cols:
+        raise NotImplementedError("PREV/NEXT navigation with PERMUTE")
+    if spec.after_match not in (SKIP_TO_NEXT, NO_SKIP):
+        raise NotImplementedError(
+            "PERMUTE supports AFTER MATCH SKIP TO NEXT ROW only (other "
+            "resumption strategies need sequential selection over "
+            "non-dense candidates — NFA alternation, not implemented)"
+        )
+    if spec.emit_timeouts or spec.rows_per_match != "one":
+        raise NotImplementedError(
+            "PERMUTE supports ONE ROW PER MATCH without timeouts"
+        )
 
 
 def match_pattern_permute(df: DataFrame, spec: PatternSpec) -> DataFrame:
@@ -311,20 +338,7 @@ def match_pattern_permute(df: DataFrame, spec: PatternSpec) -> DataFrame:
     preference-order unit tests."""
     from itertools import permutations
 
-    if not spec.permute:
-        raise ValueError("spec is not a PERMUTE pattern")
-    if spec.nav_cols:
-        raise NotImplementedError("PREV/NEXT navigation with PERMUTE")
-    if spec.after_match not in (SKIP_TO_NEXT, NO_SKIP):
-        raise NotImplementedError(
-            "PERMUTE supports AFTER MATCH SKIP TO NEXT ROW only (other "
-            "resumption strategies need sequential selection over "
-            "non-dense candidates — NFA alternation, not implemented)"
-        )
-    if spec.emit_timeouts or spec.rows_per_match != "one":
-        raise NotImplementedError(
-            "PERMUTE supports ONE ROW PER MATCH without timeouts"
-        )
+    check_permute(spec)
     spec.validate()
     k = len(spec.variables)
     keys = list(spec.key_cols)
@@ -346,7 +360,7 @@ def match_pattern_permute(df: DataFrame, spec: PatternSpec) -> DataFrame:
         ],
         *srcs,
     )
-    w_ord = Window.partitionBy(*keys).orderBy("__ts", "__tb")
+    w_ord = Window.partitionBy(*keys).orderBy(*scan_order("__ts", "__tb"))
 
     def at(col: str, off: int):
         return F.col(col) if off == 0 else F.lead(col, off).over(w_ord)
@@ -363,7 +377,8 @@ def match_pattern_permute(df: DataFrame, spec: PatternSpec) -> DataFrame:
             cond = cond & F.coalesce(grid[(j, i)], F.lit(False))
         return cond
 
-    fits = at("__tb", k - 1).isNotNull()
+    # the window fits iff its last row exists (a non-null literal's lead)
+    fits = F.lead(F.lit(True), k - 1).over(w_ord).isNotNull()
     span_ok = (
         F.lit(True)
         if within_us is None
@@ -505,7 +520,7 @@ def match_pattern_alternation_fast(
         *srcs,
         *[F.expr(e).alias(n) for e, n in pred_col.items()],
     )
-    w = Window.partitionBy(*keys).orderBy("__ts", "__tb")
+    w = Window.partitionBy(*keys).orderBy(*scan_order("__ts", "__tb"))
 
     def at(col: str, off: int):
         return F.col(col) if off == 0 else F.lead(col, off).over(w)
@@ -601,26 +616,15 @@ def match_pattern_alternation_fast(
         .withColumns(mcols)
         .filter(F.col("__b").isNotNull())
     )
-    if any(m.fn == "match_number" for m in aspec.measures):
-        # emission order is COMPLETION order (eager NFA), not start
-        # order: completion ordinal = start + L_winner - 1, start
-        # ordinal breaking same-row ties (the coordinator's merge key)
-        comp = F.lit(None).cast("long")
-        for b in reversed(pref):
-            comp = F.when(
-                F.col("__b") == b, F.col("__r0") + F.lit(lengths[b] - 1)
-            ).otherwise(comp)
-        out = out.withColumn("__comp", comp)
-        for m in aspec.measures:
-            if m.fn == "match_number":
-                out = out.withColumn(
-                    f"__m_{m.name}",
-                    F.row_number()
-                    .over(
-                        Window.partitionBy(*keys).orderBy("__comp", "__r0")
-                    )
-                    .cast("long"),
-                )
+    for m in aspec.measures:
+        if m.fn == "match_number":
+            # numbered by start row, as the NFA and the stream number
+            out = out.withColumn(
+                f"__m_{m.name}",
+                F.row_number()
+                .over(Window.partitionBy(*keys).orderBy("__r0"))
+                .cast("long"),
+            )
     out = out.select(
         *keys,
         *[F.col(f"__m_{m.name}").alias(m.name) for m in aspec.measures],
@@ -629,8 +633,8 @@ def match_pattern_alternation_fast(
         _measure_field,
     )
 
-    # schema-identical to match_pattern_alternation (no tag column —
-    # alternation has no timeout channel)
+    # schema-identical to the NFA operator's alternation output (no
+    # tag column — alternation has no timeout channel)
     fields = [
         T.StructField(k, df.schema[k].dataType, True) for k in keys
     ] + [_measure_field(df, m) for m in aspec.measures]
@@ -941,12 +945,7 @@ def _chain_scan_starts(
 
     n = len(pdf)
     # --- key segments (contiguous after the JVM sort) ---
-    newkey = np.zeros(n, dtype=bool)
-    newkey[0] = True
-    for kc in key_cols:
-        col = pdf[kc]
-        same = col.eq(col.shift()) | (col.isna() & col.shift().isna())
-        newkey[1:] |= ~same.to_numpy()[1:]
+    newkey = key_starts(pdf, key_cols)
     seg_id = np.cumsum(newkey, dtype=np.int64) - 1
     seg_start_rows = np.flatnonzero(newkey)
     pos_in_seg = np.arange(n, dtype=np.int64) - seg_start_rows[seg_id]
@@ -1137,7 +1136,7 @@ def match_pattern_fast_loop_chain(
 
     # sort JVM-side; the kernel never sorts in Python
     sorted_p = prepared.repartition(*key_cols).sortWithinPartitions(
-        *key_cols, _TS_COL, tiebreak
+        *key_cols, *scan_order(_TS_COL, tiebreak)
     )
 
     def scan_partition(batches):
@@ -1462,9 +1461,8 @@ def match_pattern_fast_loop_chain_all_rows(
     from flink_cep_examples_spark.operators.cep_batch import (
         _needs_src,
         _null_safe_agg_cast,
-        _PRED_PREFIX,
+        _prepare,
         _TS_COL,
-        _with_nav_cols,
         all_rows_output_schema,
     )
 
@@ -1485,16 +1483,7 @@ def match_pattern_fast_loop_chain_all_rows(
         else None
     )
     data_cols = list(df.columns)
-    prepared = _with_nav_cols(df, spec).select(
-        *data_cols,
-        F.unix_micros(
-            F.col(spec.order_col).cast(T.TimestampType())
-        ).alias(_TS_COL),
-        *[
-            F.expr(e).alias(f"{_PRED_PREFIX}{i}")
-            for i, e in enumerate(spec.pred_exprs)
-        ],
-    )
+    prepared = _prepare(df, spec, all_rows=True)
     out_schema = all_rows_output_schema(df, spec)
     key_cols = list(spec.key_cols)
     tiebreak = spec.tiebreak_col
@@ -1508,7 +1497,7 @@ def match_pattern_fast_loop_chain_all_rows(
     out_names = [fld.name for fld in out_schema.fields]
 
     sorted_p = prepared.repartition(*key_cols).sortWithinPartitions(
-        *key_cols, _TS_COL, tiebreak
+        *key_cols, *scan_order(_TS_COL, tiebreak)
     )
 
     def scan_partition(batches):
@@ -1570,9 +1559,6 @@ def match_pattern_fast_loop_chain_all_rows(
                 continue
             if m.fn == "classifier":
                 mvals[m.name] = np.repeat(last_var_name, nm)
-                continue
-            if m.fn in AGG_FNS:
-                out_cols[m.name] = _agg_values(m)
                 continue
             comps = subset_map.get(m.var, (m.var,))
             firsts, lasts, counts = zip(*(var_rows(c) for c in comps))
@@ -1989,7 +1975,7 @@ def match_pattern_fast_group_absence(
     out_names = [f.name for f in out_schema.fields]
 
     sorted_p = prepared.repartition(*key_cols).sortWithinPartitions(
-        *key_cols, _TS_COL, tiebreak
+        *key_cols, *scan_order(_TS_COL, tiebreak)
     )
 
     def scan_partition(batches):
@@ -2002,12 +1988,7 @@ def match_pattern_fast_group_absence(
             else chunks[0]
         )
         n = len(pdf)
-        newkey = np.zeros(n, dtype=bool)
-        newkey[0] = True
-        for kc in key_cols:
-            col = pdf[kc]
-            same = col.eq(col.shift()) | (col.isna() & col.shift().isna())
-            newkey[1:] |= ~same.to_numpy()[1:]
+        newkey = key_starts(pdf, key_cols)
         seg_id = np.cumsum(newkey, dtype=np.int64) - 1
         seg_start_rows = np.flatnonzero(newkey)
         pos_in_seg = np.arange(n, dtype=np.int64) - seg_start_rows[seg_id]
@@ -2262,82 +2243,6 @@ def _chain_vars_measures_ok(
     return True
 
 
-def _nested_nfa_fallback_frame(
-    pdf, key_cols, n_vars, compiled, measure_list, out_names,
-    out_schema, key_arrays,
-):
-    """Per-key-segment NFA fallback shared by the nested chain kernels
-    — the runtime predicate-overlap escape hatch (identical output,
-    differential-tested). Returns the emission frame or None."""
-    import numpy as np
-    import pandas as pd
-
-    from flink_cep_examples_spark.operators import nfa as _nfa
-    from flink_cep_examples_spark.operators.cep_batch import (
-        _classify_preds,
-        _loop_strides,
-        _make_measure_eval,
-        _needs_src,
-        _null_safe_agg_cast,
-        _PRED_PREFIX,
-        _TS_COL,
-    )
-
-    n = len(pdf)
-    newkey = np.zeros(n, dtype=bool)
-    newkey[0] = True
-    for kc in key_cols:
-        col = pdf[kc]
-        same = col.eq(col.shift()) | (col.isna() & col.shift().isna())
-        newkey[1:] |= ~same.to_numpy()[1:]
-    bounds = np.append(np.flatnonzero(newkey), n)
-    ts_us = pdf[_TS_COL].to_numpy(dtype=np.int64)
-    preds_all = np.stack(
-        [
-            pdf[f"{_PRED_PREFIX}{i}"].to_numpy(dtype=bool)
-            for i in range(n_vars)
-        ]
-    )
-    src_arrays = {
-        m.src: pdf[m.src].to_numpy()
-        for m in measure_list
-        if _needs_src(m)
-    }
-    eval_measures = _make_measure_eval(
-        measure_list, compiled.spec.subsets, src_arrays,
-        loop_stride=_loop_strides(compiled.spec),
-        classify=_classify_preds(compiled.spec, preds_all),
-    )
-    cols: dict[str, list] = {c: [] for c in out_names}
-    for b in range(len(bounds) - 1):
-        lo, hi = int(bounds[b]), int(bounds[b + 1])
-        matches, _ = _nfa.scan_key_group(
-            compiled, preds_all[:, lo:hi], ts_us[lo:hi]
-        )
-        matches.sort(
-            key=lambda mm: (
-                min(sp[3] for sp in mm.values()),
-                max(sp[4] for sp in mm.values()),
-            )
-        )
-        for mi, match in enumerate(matches):
-            shifted = {
-                v: (sp[0] + lo, sp[1] + lo, sp[2],
-                    sp[3] + lo, sp[4] + lo)
-                for v, sp in match.items()
-            }
-            for kc in key_cols:
-                cols[kc].append(key_arrays[kc][lo])
-            for name, val in eval_measures(shifted, mi + 1).items():
-                cols[name].append(val)
-            cols["tag"].append(MATCH_TAG)
-    if not cols[out_names[0]]:
-        return None
-    out = pd.DataFrame(cols, columns=out_names)
-    _null_safe_agg_cast(out, measure_list, out_schema)
-    return out
-
-
 def fast_nested_chain_applicable(spec) -> bool:
     """True for the vectorizable NESTED-group shape (round 8):
     ``PATTERN ((P1..Ps (X1..XL)+ S1..Sf)+)`` — an OUTER unbounded
@@ -2458,15 +2363,12 @@ def match_pattern_fast_nested_chain(
     import numpy as np
     import pandas as pd
 
-    from flink_cep_examples_spark.operators import nfa as _nfa
     from flink_cep_examples_spark.operators.cep_batch import (
-        _make_measure_eval,
         _needs_src,
         _null_safe_agg_cast,
         _prepare,
         _PRED_PREFIX,
         _TS_COL,
-        _with_nav_cols,
         all_rows_output_schema,
         output_schema,
     )
@@ -2489,21 +2391,11 @@ def match_pattern_fast_nested_chain(
     L = ge - gs + 1
     f = n_vars - ge - 1
     data_cols = list(df.columns)
-    if all_rows:
-        prepared = _with_nav_cols(df, spec).select(
-            *data_cols,
-            F.unix_micros(
-                F.col(spec.order_col).cast(T.TimestampType())
-            ).alias(_TS_COL),
-            *[
-                F.expr(e).alias(f"{_PRED_PREFIX}{i}")
-                for i, e in enumerate(spec.pred_exprs)
-            ],
-        )
-        out_schema = all_rows_output_schema(df, spec)
-    else:
-        prepared = _prepare(df, spec)
-        out_schema = output_schema(df, spec)
+    prepared = _prepare(df, spec, all_rows)
+    out_schema = (
+        all_rows_output_schema(df, spec) if all_rows
+        else output_schema(df, spec)
+    )
     key_cols = list(spec.key_cols)
     tiebreak = spec.tiebreak_col
     measure_list = list(spec.measures)
@@ -2512,10 +2404,10 @@ def match_pattern_fast_nested_chain(
     var_names = [v.name for v in spec.variables]
     excluded = [v.excluded for v in spec.variables]
     out_names = [fld.name for fld in out_schema.fields]
-    compiled = _nfa.Nfa(spec)
+    nfa_scan = batch_scan(spec, out_schema)
 
     sorted_p = prepared.repartition(*key_cols).sortWithinPartitions(
-        *key_cols, _TS_COL, tiebreak
+        *key_cols, *scan_order(_TS_COL, tiebreak)
     )
 
     def scan_partition(batches):
@@ -2550,19 +2442,8 @@ def match_pattern_fast_nested_chain(
         if overlap:
             # NFA fallback, per key segment (rare: classifier-style
             # patterns have disjoint predicates by construction)
-            out = (
-                _all_rows_nfa_fallback_frame(
-                    pdf, key_cols, compiled, measure_list, out_names,
-                    out_schema, data_cols, list(range(n_vars)),
-                    var_names, excluded, p, src_arrays,
-                )
-                if all_rows
-                else _nested_nfa_fallback_frame(
-                    pdf, key_cols, n_vars, compiled, measure_list,
-                    out_names, out_schema, key_arrays,
-                )
-            )
-            if out is not None:
+            out = nfa_scan(pdf, group_bounds(pdf, key_cols))
+            if len(out):
                 yield out
             return
 
@@ -2612,7 +2493,11 @@ def match_pattern_fast_nested_chain(
         # pair-suffix start, which may lie INSIDE the dead unit) —
         # cutoff therefore advances only on EMISSION, never past rows
         # a dead unit failed to consume.
-        within_us = compiled.within_us
+        within_us = (
+            int(spec.within.total_seconds() * 1_000_000)
+            if spec.within is not None
+            else None
+        )
         ts_k = (
             pdf[_TS_COL].to_numpy(dtype=np.int64)
             if within_us is not None
@@ -2957,7 +2842,6 @@ def match_pattern_fast_nested3_chain(
     import numpy as np
     import pandas as pd
 
-    from flink_cep_examples_spark.operators import nfa as _nfa
     from flink_cep_examples_spark.operators.cep_batch import (
         _needs_src,
         _null_safe_agg_cast,
@@ -2991,10 +2875,10 @@ def match_pattern_fast_nested3_chain(
     subset_map = dict(spec.subsets)
     var_pos = {v.name: i for i, v in enumerate(spec.variables)}
     out_names = [fld.name for fld in out_schema.fields]
-    compiled = _nfa.Nfa(spec)
+    nfa_scan = batch_scan(spec, out_schema)
 
     sorted_p = prepared.repartition(*key_cols).sortWithinPartitions(
-        *key_cols, _TS_COL, tiebreak
+        *key_cols, *scan_order(_TS_COL, tiebreak)
     )
 
     def scan_partition(batches):
@@ -3027,11 +2911,8 @@ def match_pattern_fast_nested3_chain(
             if overlap:
                 break
         if overlap:
-            out = _nested_nfa_fallback_frame(
-                pdf, key_cols, n_vars, compiled, measure_list,
-                out_names, out_schema, key_arrays,
-            )
-            if out is not None:
+            out = nfa_scan(pdf, group_bounds(pdf, key_cols))
+            if len(out):
                 yield out
             return
 
@@ -3110,7 +2991,11 @@ def match_pattern_fast_nested3_chain(
         # at the next candidate start (pair-suffix and unit-suffix
         # starts are all candidates), and cutoff advances only on
         # emission.
-        within_us = compiled.within_us
+        within_us = (
+            int(spec.within.total_seconds() * 1_000_000)
+            if spec.within is not None
+            else None
+        )
         ts_k = (
             pdf[_TS_COL].to_numpy(dtype=np.int64)
             if within_us is not None
@@ -3243,12 +3128,7 @@ def _branch_islands(pdf, key_cols, geom, branches, p, var_names):
     import numpy as np
 
     n = len(pdf)
-    newkey = np.zeros(n, dtype=bool)
-    newkey[0] = True
-    for kc in key_cols:
-        col = pdf[kc]
-        same = col.eq(col.shift()) | (col.isna() & col.shift().isna())
-        newkey[1:] |= ~same.to_numpy()[1:]
+    newkey = key_starts(pdf, key_cols)
     seg_id = np.cumsum(newkey, dtype=np.int64) - 1
     same_seg = seg_id[1:] == seg_id[:-1]
 
@@ -3375,7 +3255,6 @@ def match_pattern_fast_mixed_branch(
     import numpy as np
     import pandas as pd
 
-    from flink_cep_examples_spark.operators import nfa as _nfa
     from flink_cep_examples_spark.operators.cep_batch import (
         _needs_src,
         _null_safe_agg_cast,
@@ -3406,10 +3285,10 @@ def match_pattern_fast_mixed_branch(
     subset_map = dict(spec.subsets)
     var_names = [v.name for v in spec.variables]
     out_names = [fld.name for fld in out_schema.fields]
-    compiled = _nfa.Nfa(spec)
+    nfa_scan = batch_scan(spec, out_schema)
 
     sorted_p = prepared.repartition(*key_cols).sortWithinPartitions(
-        *key_cols, _TS_COL, tiebreak
+        *key_cols, *scan_order(_TS_COL, tiebreak)
     )
 
     def scan_partition(batches):
@@ -3442,11 +3321,8 @@ def match_pattern_fast_mixed_branch(
             if overlap:
                 break
         if overlap:
-            out = _nested_nfa_fallback_frame(
-                pdf, key_cols, n_vars, compiled, measure_list,
-                out_names, out_schema, key_arrays,
-            )
-            if out is not None:
+            out = nfa_scan(pdf, group_bounds(pdf, key_cols))
+            if len(out):
                 yield out
             return
 
@@ -3521,155 +3397,6 @@ def match_pattern_fast_mixed_branch(
     return sorted_p.mapInPandas(scan_partition, out_schema)
 
 
-def _all_rows_nfa_fallback_frame(
-    pdf, key_cols, compiled, measure_list, out_names, out_schema,
-    data_cols, class_idx, var_names, excluded, p, src_arrays,
-):
-    """Per-segment NFA fallback for the ALL ROWS kernels (the runtime
-    predicate-overlap escape hatch): the NFA tier's predicate-
-    classified emission — raises on ambiguous MATCHED rows exactly
-    like match_pattern_all_rows. Returns the frame or None."""
-    import numpy as np
-    import pandas as pd
-
-    from flink_cep_examples_spark.operators import nfa as _nfa
-    from flink_cep_examples_spark.operators.cep_batch import (
-        _make_measure_eval,
-        _null_safe_agg_cast,
-        _TS_COL,
-    )
-
-    from flink_cep_examples_spark.operators.cep_batch import (
-        _classify_preds,
-        _loop_strides,
-    )
-
-    n = len(pdf)
-    data_arrays = {c: pdf[c].to_numpy() for c in data_cols}
-    newkey = np.zeros(n, dtype=bool)
-    newkey[0] = True
-    for kc in key_cols:
-        col = pdf[kc]
-        same = col.eq(col.shift()) | (col.isna() & col.shift().isna())
-        newkey[1:] |= ~same.to_numpy()[1:]
-    bounds = np.append(np.flatnonzero(newkey), n)
-    ts_us = pdf[_TS_COL].to_numpy(dtype=np.int64)
-    preds_all = np.stack(p)
-    eval_measures = _make_measure_eval(
-        measure_list, compiled.spec.subsets, src_arrays,
-        loop_stride=_loop_strides(compiled.spec),
-        classify=_classify_preds(compiled.spec, preds_all),
-    )
-    # RUNNING measures (round 12): the fallback walks each match's
-    # rows in order anyway, so running values fold incrementally —
-    # repeating mvals (FINAL) here would be the exact silent-wrong
-    # class the round-11 streaming ADVICE flagged
-    subset_map_fb = dict(compiled.spec.subsets)
-    running_ms = [
-        m for m in measure_list if m.running and m.fn != "match_number"
-    ]
-    comp_map = {
-        m.name: set(subset_map_fb.get(m.var, (m.var,)))
-        for m in running_ms
-        if m.fn != "classifier"
-    }
-    rows: dict[str, list] = {c: [] for c in out_names}
-    for b in range(len(bounds) - 1):
-        lo, hi = int(bounds[b]), int(bounds[b + 1])
-        matches, _ = _nfa.scan_key_group(
-            compiled, preds_all[:, lo:hi], ts_us[lo:hi]
-        )
-        matches.sort(
-            key=lambda mm: (
-                min(sp[3] for sp in mm.values()),
-                max(sp[4] for sp in mm.values()),
-            )
-        )
-        for seq, match in enumerate(matches):
-            shifted = {
-                v: (sp[0] + lo, sp[1] + lo, sp[2],
-                    sp[3] + lo, sp[4] + lo)
-                for v, sp in match.items()
-            }
-            mvals = eval_measures(shifted, seq + 1)
-            blo = min(sp[0] for sp in shifted.values())
-            bhi = max(sp[1] for sp in shifted.values())
-            # [count, n_vals, total, mn_, mx_, first, last]
-            run_st = {
-                m.name: [0, 0, 0.0, None, None, None, None]
-                for m in running_ms
-                if m.fn != "classifier"
-            }
-
-            def _run_val(m):
-                cnt, nv, tot, mn_, mx_, first, last = run_st[m.name]
-                if m.fn == "count":
-                    return cnt
-                if m.fn == "count_col":
-                    return nv
-                if m.fn == "first":
-                    return first if cnt else None
-                if m.fn == "last":
-                    return last if cnt else None
-                if nv == 0:
-                    return None
-                if m.fn == "sum":
-                    return tot
-                if m.fn == "avg":
-                    return tot / nv
-                return mn_ if m.fn == "min" else mx_
-
-            for r in range(blo, bhi + 1):
-                hits = [vi for vi in class_idx if p[vi][r]]
-                if len(hits) != 1:
-                    raise NotImplementedError(
-                        "ALL ROWS PER MATCH with a multi-branch or "
-                        "nested unbounded group reconstructs per-row "
-                        "CLASSIFIER from the variable predicates and "
-                        "needs them pairwise-disjoint on the matched "
-                        f"rows (a row satisfied {len(hits)} "
-                        "group-variable predicates)"
-                    )
-                vn = var_names[hits[0]]
-                for m in running_ms:
-                    if m.fn == "classifier" or vn not in comp_map[m.name]:
-                        continue
-                    st = run_st[m.name]
-                    v = (
-                        src_arrays[m.src][r]
-                        if m.fn != "count"  # COUNT(V.*) has no source
-                        else None
-                    )
-                    st[0] += 1
-                    if st[0] == 1:
-                        st[5] = v  # first ROW's value, null or not
-                    st[6] = v
-                    if v is not None and v == v:
-                        st[1] += 1
-                        if m.fn in ("sum", "avg"):
-                            st[2] += v
-                        st[3] = v if st[3] is None or v < st[3] else st[3]
-                        st[4] = v if st[4] is None or v > st[4] else st[4]
-                if excluded[hits[0]]:
-                    continue  # {- var -}: state advanced, row dropped
-                for c in data_cols:
-                    rows[c].append(data_arrays[c][r])
-                rows["classifier"].append(vn)
-                rows["match_seq"].append(seq)
-                for m in measure_list:
-                    if m.running and m.fn == "classifier":
-                        rows[m.name].append(vn)
-                    elif m.name in run_st:
-                        rows[m.name].append(_run_val(m))
-                    else:
-                        rows[m.name].append(mvals[m.name])
-    if not rows[out_names[0]]:
-        return None
-    out = pd.DataFrame(rows, columns=out_names)
-    _null_safe_agg_cast(out, measure_list, out_schema)
-    return out
-
-
 def fast_branch_all_rows_applicable(spec, df=None) -> bool:
     """ALL ROWS PER MATCH on the islands kernel — ANY branch widths
     (round 10): the round-7 all-rows chain kernel rejects
@@ -3727,14 +3454,12 @@ def match_pattern_fast_branch_all_rows(
     import numpy as np
     import pandas as pd
 
-    from flink_cep_examples_spark.operators import nfa as _nfa
     from flink_cep_examples_spark.operators.cep_batch import (
-        _make_measure_eval,
         _needs_src,
         _null_safe_agg_cast,
+        _prepare,
         _PRED_PREFIX,
         _TS_COL,
-        _with_nav_cols,
         all_rows_output_schema,
     )
 
@@ -3753,16 +3478,7 @@ def match_pattern_fast_branch_all_rows(
                 (i, i - 1 if i > b_s else -1, i + 1 if i < b_e else -1)
             )
     data_cols = list(df.columns)
-    prepared = _with_nav_cols(df, spec).select(
-        *data_cols,
-        F.unix_micros(
-            F.col(spec.order_col).cast(T.TimestampType())
-        ).alias(_TS_COL),
-        *[
-            F.expr(e).alias(f"{_PRED_PREFIX}{i}")
-            for i, e in enumerate(spec.pred_exprs)
-        ],
-    )
+    prepared = _prepare(df, spec, all_rows=True)
     out_schema = all_rows_output_schema(df, spec)
     key_cols = list(spec.key_cols)
     tiebreak = spec.tiebreak_col
@@ -3771,10 +3487,10 @@ def match_pattern_fast_branch_all_rows(
     var_names = [v.name for v in spec.variables]
     excluded = [v.excluded for v in spec.variables]
     out_names = [fld.name for fld in out_schema.fields]
-    compiled = _nfa.Nfa(spec)
+    nfa_scan = batch_scan(spec, out_schema)
 
     sorted_p = prepared.repartition(*key_cols).sortWithinPartitions(
-        *key_cols, _TS_COL, tiebreak
+        *key_cols, *scan_order(_TS_COL, tiebreak)
     )
 
     def scan_partition(batches):
@@ -3807,13 +3523,8 @@ def match_pattern_fast_branch_all_rows(
             if overlap:
                 break
         if overlap:
-            out = _all_rows_nfa_fallback_frame(
-                pdf, key_cols, compiled, measure_list, out_names,
-                out_schema, data_cols,
-                [i for i, _pv, _nx in geom], var_names, excluded,
-                p, src_arrays,
-            )
-            if out is not None:
+            out = nfa_scan(pdf, group_bounds(pdf, key_cols))
+            if len(out):
                 yield out
             return
 

@@ -14,7 +14,10 @@ slices and returns ONE output frame for the whole batch.
 
 Order: the order columns sort ascending with NULLs last — the order
 pandas' mergesort gave when each group was re-sorted in Python — so no
-group is re-sorted here.
+group is re-sorted here. :func:`scan_order` is that order as Spark sort
+expressions; the NFA, PREV/NEXT navigation and every compiled kernel
+use it, so a timestamp tie with a NULL tiebreak resolves alike on every
+tier.
 
 Group boundaries follow Spark's grouping equality: a run of NULL keys
 is one group, a run of NaN keys is another, and a multi-column key
@@ -41,7 +44,7 @@ from typing import Callable, Iterator
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -66,18 +69,32 @@ def float_key_flags(df: DataFrame, key_cols: list[str]) -> dict:
     }
 
 
-def group_bounds(pdf: pd.DataFrame, key_cols: list[str]) -> list[tuple[int, int]]:
-    """``(lo, hi)`` bounds of the runs of equal keys in ``pdf`` (NULL
-    equals NULL, NaN equals NaN, as in pandas' ``groupby(dropna=False)``)."""
+def scan_order(*cols) -> list[Column]:
+    """Sort expressions for the order a key's rows are scanned in:
+    ascending by each of ``cols`` (names or columns), NULLs last."""
+    return [
+        (F.col(c) if isinstance(c, str) else c).asc_nulls_last() for c in cols
+    ]
+
+
+def key_starts(pdf: pd.DataFrame, key_cols: list[str]) -> np.ndarray:
+    """``bool[len(pdf)]``: True at the first row of each run of equal
+    keys (NULL equals NULL, NaN equals NaN, as in pandas'
+    ``groupby(dropna=False)``)."""
     n = len(pdf)
-    if n == 0:
-        return []
-    change = np.zeros(n - 1, dtype=bool)
+    new = np.zeros(n, dtype=bool)
+    new[:1] = True
     for k in key_cols:
         codes, _ = pd.factorize(pdf[k], use_na_sentinel=False)
-        change |= codes[1:] != codes[:-1]
-    starts = [0, *(np.flatnonzero(change) + 1).tolist()]
-    return list(zip(starts, [*starts[1:], n]))
+        new[1:] |= codes[1:] != codes[:-1]
+    return new
+
+
+def group_bounds(pdf: pd.DataFrame, key_cols: list[str]) -> list[tuple[int, int]]:
+    """``(lo, hi)`` bounds of the runs of equal keys in ``pdf``
+    (:func:`key_starts`)."""
+    starts = np.flatnonzero(key_starts(pdf, key_cols)).tolist()
+    return list(zip(starts, [*starts[1:], len(pdf)]))
 
 
 def grouped_partition_scan(
@@ -101,7 +118,7 @@ def grouped_partition_scan(
     # at 100 TB the shuffle width must come from config/AQE, not from
     # the driver's core count.
     prepared = df.repartition(*key_cols).sortWithinPartitions(
-        *key_cols, *[F.col(c).asc_nulls_last() for c in sort_cols]
+        *key_cols, *scan_order(*sort_cols)
     )
 
     def scan_partition(batches: Iterator[pd.DataFrame]):

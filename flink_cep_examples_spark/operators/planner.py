@@ -8,9 +8,9 @@ operators/fast_path.py in preference order; each row is
 structural check AND any data check the kernel needs before it is exact
 on this input, so no kernel runs without its checks. When no row
 applies, or the caller asks for the reference (``use_fast_path=False``),
-a ``REFERENCE`` row serves the spec: the NFA operators of
-operators/cep_batch.py, plus the PERMUTE closed form, which is the only
-batch PERMUTE implementation. A streaming ``df`` runs the one streaming
+the one ``REFERENCE`` row serves the spec: the batch NFA operator
+(operators/cep_batch.py::match_pattern), which runs PERMUTE as the
+alternation of its orderings. A streaming ``df`` runs the one streaming
 operator (streaming/cep_stream.py).
 """
 
@@ -19,14 +19,14 @@ from __future__ import annotations
 from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from flink_cep_examples_spark.operators.cep_batch import (
     match_pattern,
-    match_pattern_all_rows,
-    match_pattern_alternation,
-    match_pattern_alternation_all_rows,
+    rows_per_match,
 )
 from flink_cep_examples_spark.operators.fast_path import (
+    check_permute,
     fast_absence_applicable,
     fast_alternation_applicable,
     fast_branch_all_rows_applicable,
@@ -60,6 +60,7 @@ from flink_cep_examples_spark.plans.pattern import (
     PatternSpec,
     permute_to_alternation,
 )
+from flink_cep_examples_spark.schemas import MATCH_TAG
 
 Spec = PatternSpec | AlternationSpec
 
@@ -73,16 +74,25 @@ class Tier(NamedTuple):
 def _shape(spec: Spec) -> str:
     """The operator family of ``spec``: "alternation",
     "alternation_all_rows", "permute", "all_rows" or "one_row"."""
+    all_rows = rows_per_match(spec) == "all"
     if isinstance(spec, AlternationSpec):
-        all_rows = spec.alternatives[0].rows_per_match == "all"
         return "alternation_all_rows" if all_rows else "alternation"
     if spec.permute:
         return "permute"
-    return "all_rows" if spec.rows_per_match == "all" else "one_row"
+    return "all_rows" if all_rows else "one_row"
 
 
-def _is(shape: str):
-    return lambda s, df: _shape(s) == shape
+def _nfa(df: DataFrame, spec: Spec) -> DataFrame:
+    """The NFA reference. PERMUTE runs as the alternation of its
+    orderings in lexicographic order (the alternation's leftmost
+    preference), as on the stream, plus the ``tag`` column of the
+    single-pattern output schema."""
+    if _shape(spec) != "permute":
+        return match_pattern(df, spec)
+    check_permute(spec)
+    return match_pattern(df, permute_to_alternation(spec)).withColumn(
+        "tag", F.lit(MATCH_TAG)
+    )
 
 
 def _alternation(check):
@@ -142,17 +152,12 @@ TIERS: tuple[Tier, ...] = (
     Tier("loop_chain", _loop_chain_applies, match_pattern_fast_loop_chain),
     Tier("positional", _one_row(fast_positional_applicable),
          match_pattern_fast_positional),
+    Tier("permute", lambda s, df: _shape(s) == "permute",
+         match_pattern_permute),
 )
 
-#: the reference operators, one per operator family
-REFERENCE: tuple[Tier, ...] = (
-    Tier("nfa_alternation_all_rows", _is("alternation_all_rows"),
-         match_pattern_alternation_all_rows),
-    Tier("nfa_alternation", _is("alternation"), match_pattern_alternation),
-    Tier("permute", _is("permute"), match_pattern_permute),
-    Tier("nfa_all_rows", _is("all_rows"), match_pattern_all_rows),
-    Tier("nfa", _is("one_row"), match_pattern),
-)
+#: the reference operator: every spec the kernels decline
+REFERENCE: tuple[Tier, ...] = (Tier("nfa", lambda s, df: True, _nfa),)
 
 
 def choose_tier(df: DataFrame, spec: Spec, use_fast_path: bool = True) -> Tier:

@@ -209,9 +209,10 @@ class PatternSpec:
     #: lexicographic order of the listed sequence). Supported subset:
     #: once-variables, strict contiguity, ONE ROW PER MATCH, AFTER
     #: MATCH SKIP TO NEXT ROW; other modes raise. Batch runs the window
-    #: closed form (operators/fast_path.py::match_pattern_permute), the
-    #: stream the alternation coordinator over ``permute_to_alternation``
-    #: (the batch alternation operator could serve it the same way).
+    #: closed form (operators/fast_path.py::match_pattern_permute), or
+    #: as the NFA reference the batch operator over
+    #: ``permute_to_alternation``; the stream runs the alternation
+    #: coordinator over ``permute_to_alternation``.
     permute: bool = False
     #: SQL:2016 ``SUBSET U = (A, B)``: union variables usable in
     #: MEASURES — U's matched rows are the union of its components'
@@ -491,7 +492,7 @@ class PatternSpec:
                 # so per-row CLASSIFIER is reconstructed from the
                 # variable predicates (runtime-disjointness-checked),
                 # exactly like the multi-branch emitter —
-                # operators/cep_batch.py::match_pattern_all_rows
+                # operators/cep_batch.py::_classified_rows
                 if self.emit_timeouts:
                     raise NotImplementedError(
                         "timeout emission with nested unbounded groups"
@@ -573,7 +574,7 @@ class PatternSpec:
                 # have no fixed stride, but each consumed row satisfies
                 # exactly ONE branch variable's predicate under the
                 # disjointness the emitter checks at runtime —
-                # operators/cep_batch.py::match_pattern_all_rows)
+                # operators/cep_batch.py::_classified_rows)
             # aggregate measures over SINGLE-BODY loop-group vars
             # compose since round 8: the evaluator slices the var's
             # stride-L actual rows (operators/cep_batch.py::
@@ -1122,9 +1123,10 @@ def permute_to_alternation(spec: PatternSpec) -> AlternationSpec:
     exactly the alternation coordinator's leftmost-alternative
     preference, so same-row completions bind lexicographically, like
     the batch closed form (operators/fast_path.py::
-    match_pattern_permute). Used by the streaming tier: the lockstep
+    match_pattern_permute). Used by the streaming tier (the lockstep
     coordinator already runs per key in the bucketed state store, so
-    PERMUTE on a stream needs no new machinery."""
+    PERMUTE on a stream needs no new machinery) and by the batch NFA
+    reference (operators/planner.py)."""
     from itertools import permutations
 
     if not spec.permute:

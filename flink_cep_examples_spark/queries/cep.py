@@ -1537,8 +1537,8 @@ register(
 
 def cep_group_all_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ALL ROWS PER MATCH over a GREEDY ranged group — round 5: the
-    alternation all-rows tier (operators/cep_batch.py::
-    match_pattern_alternation_all_rows) emits one row per matched
+    NFA operator on an ALL ROWS alternation (operators/cep_batch.py::
+    match_pattern) emits one row per matched
     input row with per-row CLASSIFIER (the suffixed group copy that
     consumed it) and a per-key match_seq ordered by (start, end)
     position. Greedy (D U){1,2} under SKIP TO NEXT ROW: every start
@@ -2224,7 +2224,7 @@ def cep_group_alt_all_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     positionally — the emitter instead classifies each consumed row by
     the unique branch predicate it satisfies (disjointness checked at
     runtime, loud reject on ambiguity; operators/cep_batch.py::
-    match_pattern_all_rows). Reference composition: the reference's
+    match_pattern). Reference composition: the reference's
     ALL-ROWS-equivalent per-event projection
     (FlinkCEPExample.scala:78-92) over the round-8 branch-group shape.
 
@@ -2447,7 +2447,7 @@ def cep_group_nested_all_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     have no fixed row stride (a unit's pair count varies), so per-row
     CLASSIFIER is reconstructed from the variable predicates exactly
     like the multi-branch form (disjointness checked at runtime —
-    operators/cep_batch.py::match_pattern_all_rows). Classes:
+    operators/cep_batch.py::match_pattern). Classes:
     event_id % 4 → 1=A, 2=B, 3=C. Served by the nested-chain ALL ROWS
     kernel (operators/fast_path.py::
     fast_nested_chain_all_rows_applicable), NFA tier as the fallback;
@@ -3536,7 +3536,7 @@ def cep_group_loop_all_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     emission for ``((X Y)+)`` under LONGEST derivation. Loop-group
     variables are exactly-once + strict, so each variable's rows are
     the stride-L progression from its merged span — the NFA tier
-    (operators/cep_batch.py::match_pattern_all_rows) reconstructs
+    (operators/cep_batch.py::match_pattern) reconstructs
     per-row CLASSIFIER positionally; match_seq is per-key (start, end)
     order.
 

@@ -25,9 +25,7 @@ from flink_cep_examples_spark.plans.pattern import (
     SKIP_TO_FIRST,
     TIMES,
 )
-from flink_cep_examples_spark.operators.cep_batch import (
-    match_pattern_alternation,
-)
+from flink_cep_examples_spark.operators.cep_batch import match_pattern
 from flink_cep_examples_spark.sql.match_recognize import (
     match_recognize,
     parse_match_recognize,
@@ -99,7 +97,7 @@ def test_alternation_past_last_matches_brute_force(spark):
     df = spark.createDataFrame(rows, _SCHEMA)
     got = [
         (r.id, r.start_seq, r.cls)
-        for r in match_pattern_alternation(df, _alt_spec()).collect()
+        for r in match_pattern(df, _alt_spec()).collect()
     ]
     assert sorted(got) == sorted(expected)
 
@@ -120,7 +118,7 @@ def test_alternation_leftmost_preference_on_same_row_tie(spark):
     df = spark.createDataFrame(rows, _SCHEMA)
     got = [
         (r.start_seq, r.cls)
-        for r in match_pattern_alternation(df, _alt_spec()).collect()
+        for r in match_pattern(df, _alt_spec()).collect()
     ]
     assert got == [(0, "D")]
 
@@ -171,7 +169,7 @@ def test_alternation_unmatched_branch_measures_null(spark):
             Measure("d_seq", "D", "seq", "first"),
         ),
     )
-    [r] = match_pattern_alternation(df, spec).collect()
+    [r] = match_pattern(df, spec).collect()
     assert r.c_seq == 1 and r.d_seq is None
 
 
@@ -272,7 +270,7 @@ def test_alternation_fast_path_matches_coordinator(spark):
             )
     df = spark.createDataFrame(rows, _SCHEMA)
     slow = sorted(
-        map(tuple, match_pattern_alternation(df, spec).collect())
+        map(tuple, match_pattern(df, spec).collect())
     )
     fast = sorted(
         map(tuple, match_pattern_alternation_fast(df, spec).collect())
@@ -317,7 +315,7 @@ def test_dsl_alternation_helper(spark):
         ("k", dt.datetime(2020, 5, 1, 11, 2), 2, False, False, True),
     ]
     df = spark.createDataFrame(rows, _SCHEMA)
-    got = [(r.start_seq, r.cls) for r in match_pattern_alternation(df, spec).collect()]
+    got = [(r.start_seq, r.cls) for r in match_pattern(df, spec).collect()]
     assert got == [(0, "D")]
 
 
@@ -478,7 +476,7 @@ def test_alternation_mixed_within_falls_back_to_coordinator(spark):
     df = spark.createDataFrame(rows, _SCHEMA)
     got = [
         (r.start_seq, r.n_d)
-        for r in match_pattern_alternation(df, spec).collect()
+        for r in match_pattern(df, spec).collect()
     ]
     assert got == [(0, 2)]
 
@@ -519,7 +517,7 @@ def test_group_alternation_distributes_choices(spark):
     df = spark.createDataFrame(rows, _SCHEMA)
     got = {
         (r.a_first, r.n_a, r.n_d)
-        for r in match_pattern_alternation(df, spec).collect()
+        for r in match_pattern(df, spec).collect()
     }
     # (A C)(D) from 0: one A copy, one D copy; (D)(D) from 2: no A.
     assert got == {(None, 0, 2), (0, 1, 1)}
@@ -554,7 +552,7 @@ def test_unquantified_group_is_grouping_parens(spark):
     df = spark.createDataFrame(rows, _SCHEMA)
     got = sorted(
         (r.c_seq, r.cls)
-        for r in match_pattern_alternation(df, spec).collect()
+        for r in match_pattern(df, spec).collect()
     )
     assert got == [(1, "C"), (3, "C")]
 
@@ -959,9 +957,7 @@ def test_streaming_alternation_eager_no_skip_numbering(spark, tmp_path):
     import datetime as dtm
     import random as _r
 
-    from flink_cep_examples_spark.operators.cep_batch import (
-        match_pattern_alternation,
-    )
+    from flink_cep_examples_spark.operators.cep_batch import match_pattern
     from flink_cep_examples_spark.plans.pattern import (
         Measure,
         NO_SKIP,
@@ -1002,7 +998,7 @@ def test_streaming_alternation_eager_no_skip_numbering(spark, tmp_path):
     def run_case(rows, name):
         df = spark.createDataFrame(rows, schema)
         batch = sorted(
-            map(tuple, match_pattern_alternation(df, spec).collect())
+            map(tuple, match_pattern(df, spec).collect())
         )
         src = tmp_path / name
         df.coalesce(1).write.parquet(str(src))
@@ -1088,7 +1084,7 @@ def test_streaming_alternation_subset_last_over_loop_branches(
         "id string, event_time timestamp, seq long, fa boolean, "
         "fb boolean, fc boolean, fd boolean, fe boolean",
     )
-    batch = sorted(map(tuple, match_pattern_alternation(df, spec).collect()))
+    batch = sorted(map(tuple, match_pattern(df, spec).collect()))
     assert batch == [("k", 2, "C")]
     src = tmp_path / "src"
     df.coalesce(1).write.parquet(str(src))
@@ -1116,9 +1112,7 @@ def test_streaming_alternation_reorder_hold_survives_restart(
     both matches in batch's (start, end, alternative) order."""
     import datetime as dtm
 
-    from flink_cep_examples_spark.operators.cep_batch import (
-        match_pattern_alternation,
-    )
+    from flink_cep_examples_spark.operators.cep_batch import match_pattern
     from flink_cep_examples_spark.plans.pattern import (
         Measure,
         NO_SKIP,
@@ -1167,7 +1161,7 @@ def test_streaming_alternation_reorder_hold_survives_restart(
         "fa boolean, fc boolean, fd boolean"
     )
     df = spark.createDataFrame(rows, schema)
-    batch = sorted(map(tuple, match_pattern_alternation(df, spec).collect()))
+    batch = sorted(map(tuple, match_pattern(df, spec).collect()))
     assert [b[3] for b in batch] == [1, 2]  # two matches, s0 numbered 1
 
     from pyspark.sql import functions as F
@@ -1288,7 +1282,7 @@ def test_streaming_alternation_overlap_combo_differential(
         )
     df = spark.createDataFrame(rows, _SCHEMA)
     batch = sorted(
-        map(tuple, match_pattern_alternation(df, spec).collect())
+        map(tuple, match_pattern(df, spec).collect())
     )
     assert batch
     name = f"combo_{after_name}_{derivation}"

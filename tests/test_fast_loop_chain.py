@@ -117,6 +117,15 @@ DEFINE X AS event_id % 4 = 1, Y AS event_id % 4 = 2,
 """
 
 
+#: NULL tiebreaks on timestamp ties: every tier scans NULLs last, so
+#: user 99's NULL row sits between the tied X and the next Y and breaks
+#: the chain; user 98's NULL row, listed first, sorts after the X too
+_NULL_TIEBREAK_ROWS = [
+    (99, 0, 1), (99, 0, None), (99, 1, 2), (99, 2, 1), (99, 3, 2),
+    (98, 0, None), (98, 0, 1), (98, 1, 2), (98, 2, 0), (98, 2, None),
+]
+
+
 @pytest.mark.parametrize(
     "body",
     [
@@ -129,9 +138,14 @@ DEFINE X AS event_id % 4 = 1, Y AS event_id % 4 = 2,
     ],
     ids=["plain", "overlap", "prefix", "n_or_more", "skip_to_next", "triple"],
 )
-@pytest.mark.parametrize("seed", [7, 21])
+@pytest.mark.parametrize("seed", [7, 21, "null_tiebreak"])
 def test_fast_matches_nfa(spark, body, seed):
-    df = _events_df(spark, _random_rows(seed))
+    rows = (
+        _random_rows(7) + _NULL_TIEBREAK_ROWS
+        if seed == "null_tiebreak"
+        else _random_rows(seed)
+    )
+    df = _events_df(spark, rows)
     spec = parse_match_recognize(body)
     assert fast_loop_chain_applicable(spec), "shape must compile"
     f, n = _both(spark, df, body)

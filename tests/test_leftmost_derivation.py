@@ -150,9 +150,7 @@ def test_leftmost_differential_fast_vs_coordinator(spark):
     """Seeded random streams: the leftmost closed form and the
     hold-and-wait coordinator must agree exactly on the subset-free
     DSL spec."""
-    from flink_cep_examples_spark.operators.cep_batch import (
-        match_pattern_alternation,
-    )
+    from flink_cep_examples_spark.operators.cep_batch import match_pattern
     from flink_cep_examples_spark.operators.fast_path import (
         match_pattern_alternation_fast,
     )
@@ -170,7 +168,7 @@ def test_leftmost_differential_fast_vs_coordinator(spark):
         )
         slow = sorted(
             (r.s, r.n2)
-            for r in match_pattern_alternation(df, spec).collect()
+            for r in match_pattern(df, spec).collect()
         )
         assert fast == slow, (trial, flags, fast, slow)
 
@@ -180,9 +178,7 @@ def test_leftmost_streaming_matches_batch(spark, tmp_path):
     per key across micro-batches, resolved as watermark-expired runs
     die): replaying the stream must reproduce the batch leftmost match
     set exactly."""
-    from flink_cep_examples_spark.operators.cep_batch import (
-        match_pattern_alternation,
-    )
+    from flink_cep_examples_spark.operators.cep_batch import match_pattern
 
     rng = random.Random(7)
     flags = [(rng.random() < 0.5, rng.random() < 0.5) for _ in range(60)]
@@ -193,7 +189,7 @@ def test_leftmost_streaming_matches_batch(spark, tmp_path):
     spec = _dsl_leftmost_spec()
     batch = sorted(
         (r.s, r.n2)
-        for r in match_pattern_alternation(df, spec).collect()
+        for r in match_pattern(df, spec).collect()
     )
 
     from flink_cep_examples_spark.streaming.cep_stream import (
@@ -456,13 +452,11 @@ from flink_cep_examples_spark.plans.pattern import (  # noqa: E402
 )
 def test_leftmost_coordinator_matches_textbook_scan(spark, flags, after):
     spec = _mk_leftmost_spec(after)
-    from flink_cep_examples_spark.operators.cep_batch import (
-        match_pattern_alternation,
-    )
+    from flink_cep_examples_spark.operators.cep_batch import match_pattern
 
     df = _df(spark, flags)
     got = []
-    for r in match_pattern_alternation(df, spec).collect():
+    for r in match_pattern(df, spec).collect():
         for b, col in enumerate(("s0", "s1", "s2")):
             v = getattr(r, col)
             if v is not None:
@@ -476,9 +470,7 @@ def test_streaming_alternation_match_number_agrees_with_batch(spark, tmp_path):
     monotone counter in the bucket state reproduces the batch
     numbering exactly (eager emission order = completion order in
     both tiers)."""
-    from flink_cep_examples_spark.operators.cep_batch import (
-        match_pattern_alternation,
-    )
+    from flink_cep_examples_spark.operators.cep_batch import match_pattern
     from flink_cep_examples_spark.plans.pattern import (
         Measure,
         Pattern,
@@ -503,7 +495,7 @@ def test_streaming_alternation_match_number_agrees_with_batch(spark, tmp_path):
     flags += [(False, False)] * 3
     df = _df(spark, flags)
     batch = sorted(
-        (r.s, r.mn) for r in match_pattern_alternation(df, spec).collect()
+        (r.s, r.mn) for r in match_pattern(df, spec).collect()
     )
     src = tmp_path / "src"
     df.coalesce(1).write.parquet(str(src))
@@ -658,9 +650,7 @@ def test_leftmost_helds_survive_checkpoint_restart(spark, tmp_path):
     dict rides the pickled state blob alongside the NfaStates."""
     from pyspark.sql import functions as F
 
-    from flink_cep_examples_spark.operators.cep_batch import (
-        match_pattern_alternation,
-    )
+    from flink_cep_examples_spark.operators.cep_batch import match_pattern
     from flink_cep_examples_spark.streaming.cep_stream import (
         match_pattern_stream,
     )
@@ -669,7 +659,7 @@ def test_leftmost_helds_survive_checkpoint_restart(spark, tmp_path):
     flags = [D, U, D, U, D, X, D, U] + [X] * 3  # sentinels push watermark
     df = _df(spark, flags)
     expected = sorted(
-        (r.s, r.n2) for r in match_pattern_alternation(df, spec).collect()
+        (r.s, r.n2) for r in match_pattern(df, spec).collect()
     )
     # start 0 must resolve to the GREEDY branch (n2 = COUNT(D2) = 1)
     # ACROSS the restart boundary

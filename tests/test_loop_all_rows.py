@@ -1,6 +1,6 @@
 """ALL ROWS PER MATCH for unbounded loop groups (round 7 — VERDICT r6
 items 3 and 5): per-row emission with positional classification
-(operators/cep_batch.py::match_pattern_all_rows stride-L
+(operators/cep_batch.py::match_pattern stride-L
 reconstruction) and {- var -} exclusion inside the group.
 """
 

@@ -193,9 +193,7 @@ def test_exclusion_parses_and_fast_matches_nfa(spark, sf_small):
     """{- B* -}: parser sets excluded on the loop variable only; the
     compiled all-rows path and the NFA tier emit identical row sets
     (matches unchanged, B rows omitted from output)."""
-    from flink_cep_examples_spark.operators.cep_batch import (
-        match_pattern_all_rows,
-    )
+    from flink_cep_examples_spark.operators.cep_batch import match_pattern
     from flink_cep_examples_spark.queries.cep import (
         _MR_EXCL_BODY,
         cep_match_recognize_excl,
@@ -213,7 +211,7 @@ def test_exclusion_parses_and_fast_matches_nfa(spark, sf_small):
     spec = dataclasses.replace(spec, tiebreak_col="seq")
     df = events_as_billing(spark, sf_small)
     fast = sorted(map(tuple, cep_match_recognize_excl(spark, sf_small).collect()))
-    nfa_out = match_pattern_all_rows(df, spec).select(
+    nfa_out = match_pattern(df, spec).select(
         "id", "datetime", "classifier", "match_seq",
         "alarmTriggerDatetime", "topupDatetime",
     )
@@ -387,9 +385,7 @@ def test_permute_alternation_compilation_matches_closed_form(spark):
 
     import datetime as dt
 
-    from flink_cep_examples_spark.operators.cep_batch import (
-        match_pattern_alternation,
-    )
+    from flink_cep_examples_spark.operators.cep_batch import match_pattern
     from flink_cep_examples_spark.operators.fast_path import (
         match_pattern_permute,
     )
@@ -442,7 +438,7 @@ def test_permute_alternation_compilation_matches_closed_form(spark):
     )
     alt = sorted(
         (r.id, r.s, r.c_seq)
-        for r in match_pattern_alternation(
+        for r in match_pattern(
             df, permute_to_alternation(spec)
         ).collect()
     )

@@ -123,9 +123,7 @@ def test_fast_all_rows_matches_nfa_differential(spark, sf_small):
     match_seq + final measures) on the events-derived billing stream."""
     import dataclasses
 
-    from flink_cep_examples_spark.operators.cep_batch import (
-        match_pattern_all_rows,
-    )
+    from flink_cep_examples_spark.operators.cep_batch import match_pattern
     from flink_cep_examples_spark.operators.planner import run_pattern
     from flink_cep_examples_spark.plans.pattern import billing_pattern
     from flink_cep_examples_spark.sources.billing import events_as_billing
@@ -133,7 +131,7 @@ def test_fast_all_rows_matches_nfa_differential(spark, sf_small):
     df = events_as_billing(spark, sf_small)
     spec = dataclasses.replace(billing_pattern(), rows_per_match="all")
     fast = run_pattern(df, spec)
-    nfa = match_pattern_all_rows(df, spec)
+    nfa = match_pattern(df, spec)
     assert fast.columns == nfa.columns
     f_rows = sorted(map(tuple, fast.collect()))
     n_rows = sorted(map(tuple, nfa.collect()))
@@ -161,9 +159,7 @@ def test_fast_all_rows_no_phantom_match_without_within(spark):
     once dropped the closing-C invariant when within was None)."""
     import dataclasses
 
-    from flink_cep_examples_spark.operators.cep_batch import (
-        match_pattern_all_rows,
-    )
+    from flink_cep_examples_spark.operators.cep_batch import match_pattern
     from flink_cep_examples_spark.operators.planner import run_pattern
     from flink_cep_examples_spark.plans.pattern import Measure, Pattern
     from flink_cep_examples_spark.sources.billing import billing_from_rows
@@ -199,7 +195,14 @@ def test_fast_all_rows_no_phantom_match_without_within(spark):
             ).collect(),
         )
     )
-    nfa = sorted(map(tuple, match_pattern_all_rows(df, spec).collect()))
+    nfa = sorted(
+        map(
+            tuple,
+            match_pattern(
+                df, dataclasses.replace(spec, rows_per_match="all")
+            ).collect(),
+        )
+    )
     assert fast == nfa
     # exactly the first match's two rows; nothing from the trailing segment
     assert len(fast) == 2
