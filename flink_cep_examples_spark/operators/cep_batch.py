@@ -9,17 +9,21 @@ emission; staging, the output frame and the partition scan are shared.
 The Spark-side plumbing around the NFA core (operators/nfa.py), staged
 for scale:
 
-1. **Vectorized predicate precompute** — every DEFINE predicate is
-   evaluated as a boolean column in a single ``select`` *before* the
-   shuffle (Catalyst codegen, columnar). Python never evaluates a
-   predicate (SURVEY §4: the single biggest perf lever).
-2. **One shuffle** — ``repartition(key) + sortWithinPartitions(key,
-   ts, tiebreak) + mapInPandas`` (operators/partition_scan.py): each
-   Arrow batch holds whole, already-ordered key groups; its predicate
-   and timestamp columns become numpy once, the NFA scans each key over
-   array slices, and the batch yields ONE output frame
-   (:func:`batch_scan`, which the compiled kernels also run when their
-   preconditions fail on a partition).
+1. **One shuffle, one sort** — ``repartition(key) +
+   sortWithinPartitions(key, order, tiebreak)`` on the order column
+   itself (operators/partition_scan.py::sort_by_key), so a window over
+   the same key and order below (the billing source's balance ``lag``)
+   shares its Exchange and its Sort with the scan.
+2. **Vectorized predicate precompute** — one SQL projection after the
+   sort (:func:`_stage_exprs`) evaluates every DEFINE predicate as a
+   boolean column (Catalyst codegen, columnar) beside the epoch-µs
+   timestamp and the ``isnull`` flags of float columns. Python never
+   evaluates a predicate (SURVEY §4: the single biggest perf lever).
+   ``mapInPandas`` then hands each Arrow batch of whole, already-ordered
+   key groups to :func:`batch_scan`; its predicate and timestamp columns
+   become numpy once, the NFA scans each key over array slices, and the
+   batch yields ONE output frame (the compiled kernels also run
+   :func:`batch_scan` when their preconditions fail on a partition).
 3. **Measures projection** — matched-row values are read from the
    key's slice of the batch arrays; output rows carry the key, the
    measures, and the ``tag`` column ('match' / 'timeout' — side-output
@@ -33,6 +37,8 @@ tier table (operators/planner.py::run_pattern).
 """
 
 from __future__ import annotations
+
+from dataclasses import replace
 
 import numpy as np
 import pandas as pd
@@ -54,7 +60,13 @@ from flink_cep_examples_spark.operators.partition_scan import (
     BatchScan,
     grouped_partition_scan,
     null_flag,
-    scan_order,
+    null_flags_sql,
+    quote,
+    scan_order_sql,
+    scan_sorted,
+    sort_by_key,
+    time_key,
+    timestamp_sql,
 )
 from flink_cep_examples_spark.schemas import MATCH_TAG, TIMEOUT_TAG
 
@@ -368,51 +380,57 @@ def all_rows_output_schema(df: DataFrame, spec: PatternSpec) -> T.StructType:
     )
 
 
-def _with_nav_cols(df: DataFrame, spec: PatternSpec) -> DataFrame:
+def _with_nav_cols(df: DataFrame, spec: Spec) -> DataFrame:
     """Materialize PREV()/NEXT() navigation as lag/lead columns over
     the (key, order, tiebreak) window — the same ordering the NFA
     scans by, NULLs last, so ``PREV(x)`` is exactly the previous
-    processed row. The window's hash partitioning on the keys is the
-    SAME exchange the pattern operator needs next, so Catalyst reuses
-    it (one shuffle total, plan-audited)."""
+    processed row. The window's hash partitioning and sort are the SAME
+    exchange and sort the pattern operator needs next, so Catalyst
+    reuses them (one shuffle total, plan-audited)."""
     if not spec.nav_cols:
         return df
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(*spec.key_cols).orderBy(
-        *scan_order(
-            F.col(spec.order_col).cast(T.TimestampType()), spec.tiebreak_col
-        )
+    order = scan_order_sql(
+        timestamp_sql(spec.order_col), quote(spec.tiebreak_col)
     )
-    return df.select(
+    over = (
+        f"OVER (PARTITION BY {', '.join(map(quote, spec.key_cols))} "
+        f"ORDER BY {order})"
+    )
+    return df.selectExpr(
         "*",
         *[
-            (F.lag if kind == "prev" else F.lead)(src, off)
-            .over(w)
-            .alias(alias)
+            f"{'LAG' if kind == 'prev' else 'LEAD'}({quote(src)}, {off}) "
+            f"{over} AS {quote(alias)}"
             for alias, src, off, kind in spec.nav_cols
         ],
     )
 
 
-def _prepare(df: DataFrame, spec: Spec, all_rows: bool = False) -> DataFrame:
-    """Add vectorized predicate booleans + epoch-µs timestamp. ALL ROWS
-    PER MATCH keeps every input column; otherwise Catalyst prunes every
-    column the measures/keys don't need."""
+def _stage_exprs(df: DataFrame, spec: Spec, all_rows: bool) -> list[str]:
+    """The scan's input columns over ``df`` (plus its navigation
+    columns) as SQL: the columns the keys and measures read (every
+    column for ALL ROWS PER MATCH), the epoch-µs timestamp, one boolean
+    per DEFINE predicate, and an ``isnull`` flag per float column passed
+    through — pandas reads a NULL float as NaN, so the flag is what lets
+    the output frame send a NaN back as NaN."""
     if all_rows:
-        cols = [F.col(c) for c in df.columns]
+        cols = list(df.columns)
     else:
         needed = {m.src for m in spec.measures if _needs_src(m)}
         needed.update(spec.key_cols)
         needed.add(spec.tiebreak_col)
-        cols = [F.col(c) for c in sorted(needed)]
-    df = _with_nav_cols(df, spec)
-    cols.append(
-        F.unix_micros(F.col(spec.order_col).cast(T.TimestampType())).alias(_TS_COL)
-    )
-    for i, e in enumerate(spec.pred_exprs):
-        cols.append(F.expr(e).alias(f"{_PRED_PREFIX}{i}"))
-    return df.select(*cols)
+        cols = sorted(needed)
+    exprs = [quote(c) for c in cols]
+    exprs.append(f"unix_micros({timestamp_sql(spec.order_col)}) AS {_TS_COL}")
+    exprs += [f"({e}) AS {_PRED_PREFIX}{i}" for i, e in enumerate(spec.pred_exprs)]
+    return exprs + null_flags_sql(df, cols)
+
+
+def _prepare(df: DataFrame, spec: Spec, all_rows: bool = False) -> DataFrame:
+    """Stage ``df`` for a scan in one projection (:func:`_stage_exprs`);
+    the rows keep ``df``'s order. Catalyst prunes every input column the
+    projection does not read."""
+    return _with_nav_cols(df, spec).selectExpr(*_stage_exprs(df, spec, all_rows))
 
 
 def _batch_arrays(pdf: pd.DataFrame, n_preds: int):
@@ -451,8 +469,10 @@ def _batch_frame(pdf, gathered, rows, cols, measure_list, out_schema):
     """The one output frame of a batch: the ``gathered`` input columns
     taken from ``pdf`` at batch rows ``rows`` (a key group's first row,
     or each emitted ALL ROWS row), then the computed ``cols``. A float
-    key goes out masked by its ``isnull`` flag, so a NaN key stays NaN
-    through Arrow instead of turning NULL."""
+    column goes out masked by its ``isnull`` flag — a gathered column by
+    the batch's flag column, a measure by the flag values computed
+    beside it — so a NaN stays NaN through Arrow instead of turning
+    NULL."""
     idx = np.asarray(rows, dtype=np.intp)
     data = {c: pdf[c].to_numpy()[idx] for c in gathered}
     for c in gathered:
@@ -461,6 +481,14 @@ def _batch_frame(pdf, gathered, rows, cols, measure_list, out_schema):
                 data[c], pdf[null_flag(c)].to_numpy(dtype=bool)[idx]
             )
     data.update(cols)
+    for m in measure_list:
+        flags = cols.get(null_flag(m.name))
+        if flags is not None:
+            data[m.name] = pd.arrays.FloatingArray(
+                np.array([np.nan if v is None else v for v in cols[m.name]],
+                         dtype=np.float64),
+                np.array([f is None or bool(f) for f in flags], dtype=bool),
+            )
     out = pd.DataFrame(data, columns=[f.name for f in out_schema.fields])
     _null_safe_agg_cast(out, measure_list, out_schema)
     return out
@@ -585,8 +613,16 @@ def batch_scan(
     measure_list = list(spec.measures)
     subsets = spec.subsets
     subset_map = dict(subsets)
-    running = [m for m in measure_list if m.running]
     n_preds = len(spec.pred_exprs)
+    # pandas reads a NULL float as NaN: a FIRST/LAST over a float source
+    # is also evaluated over the source's isnull flag (the staged batch
+    # carries one per float column), and _batch_frame masks the value by
+    # it, so a NaN goes out as NaN and a NULL as NULL
+    float_nav = [
+        m for m in measure_list
+        if m.fn in ("first", "last")
+        and isinstance(out_schema[m.name].dataType, (T.FloatType, T.DoubleType))
+    ]
     if alternation:
         alts = spec.alternatives
         # one NFA per alternative; its predicate rows in the staged order
@@ -626,11 +662,18 @@ def batch_scan(
     gathered = [f.name for f in out_schema.fields if f.name not in computed]
 
     def scan(pdf: pd.DataFrame, bounds) -> pd.DataFrame:
+        measures = measure_list + [
+            replace(m, name=null_flag(m.name), src=null_flag(m.src),
+                    default=m.default is None)
+            for m in float_nav
+            if null_flag(m.src) in pdf
+        ]
+        running = [m for m in measures if m.running]
         ts_all, preds_all = _batch_arrays(pdf, n_preds)
-        src_all = _src_arrays(pdf, measure_list)
+        src_all = _src_arrays(pdf, measures)
         owned = None if owns_start is None else owns_start(pdf)
         rows: list[int] = []
-        cols: dict[str, list] = {m.name: [] for m in measure_list}
+        cols: dict[str, list] = {m.name: [] for m in measures}
         if all_rows:
             cols.update(classifier=[], match_seq=[])
         elif tagged:
@@ -662,7 +705,7 @@ def batch_scan(
             src = _slice_arrays(src_all, lo, hi)
             classify = _classify_preds(spec, preds) if need_classify else None
             eval_measures = _make_measure_eval(
-                measure_list, subsets, src, loop_stride=strides,
+                measures, subsets, src, loop_stride=strides,
                 classify=classify,
             )
             if not all_rows:
@@ -692,7 +735,7 @@ def batch_scan(
                     src,
                 )
                 _append_all_rows(
-                    cols, rows, lo, emit_rows, seq, measure_list,
+                    cols, rows, lo, emit_rows, seq, measures,
                     eval_measures(match, seq + 1), run_series,
                 )
         return _batch_frame(pdf, gathered, rows, cols, measure_list, out_schema)
@@ -741,10 +784,19 @@ def match_pattern(df: DataFrame, spec: Spec) -> DataFrame:
         out_schema = output_schema(df, spec)
         if isinstance(spec, AlternationSpec):
             out_schema = T.StructType(out_schema.fields[:-1])
-    return grouped_partition_scan(
-        _prepare(df, spec, all_rows),
-        list(spec.key_cols),
-        [_TS_COL, spec.tiebreak_col],
+    # sort on the order column itself, then derive the scan's columns:
+    # a window over the same key and order below (the billing source's
+    # balance lag) already sorts the rows so, and Catalyst keeps its one
+    # Exchange and one Sort for both
+    keys = list(spec.key_cols)
+    ordered = sort_by_key(
+        _with_nav_cols(df, spec),
+        keys,
+        [time_key(df, spec.order_col), spec.tiebreak_col],
+    )
+    return scan_sorted(
+        ordered.selectExpr(*_stage_exprs(df, spec, all_rows)),
+        keys,
         batch_scan(spec, out_schema),
         out_schema,
     )

@@ -28,6 +28,7 @@ from flink_cep_examples_spark.operators.partition_scan import (
     group_bounds,
     key_starts,
     scan_order,
+    sort_by_key,
 )
 from flink_cep_examples_spark.plans.pattern import (
     AGG_FNS,
@@ -1135,9 +1136,7 @@ def match_pattern_fast_loop_chain(
     out_names = [f.name for f in out_schema.fields]
 
     # sort JVM-side; the kernel never sorts in Python
-    sorted_p = prepared.repartition(*key_cols).sortWithinPartitions(
-        *key_cols, *scan_order(_TS_COL, tiebreak)
-    )
+    sorted_p = sort_by_key(prepared, key_cols, [_TS_COL, tiebreak])
 
     def scan_partition(batches):
         chunks = [c for c in batches if len(c)]
@@ -1496,9 +1495,7 @@ def match_pattern_fast_loop_chain_all_rows(
     past_last = spec.after_match == SKIP_PAST_LAST_EVENT
     out_names = [fld.name for fld in out_schema.fields]
 
-    sorted_p = prepared.repartition(*key_cols).sortWithinPartitions(
-        *key_cols, *scan_order(_TS_COL, tiebreak)
-    )
+    sorted_p = sort_by_key(prepared, key_cols, [_TS_COL, tiebreak])
 
     def scan_partition(batches):
         chunks = [c for c in batches if len(c)]
@@ -1974,9 +1971,7 @@ def match_pattern_fast_group_absence(
     var_pos = {v.name: i for i, v in enumerate(spec.variables)}
     out_names = [f.name for f in out_schema.fields]
 
-    sorted_p = prepared.repartition(*key_cols).sortWithinPartitions(
-        *key_cols, *scan_order(_TS_COL, tiebreak)
-    )
+    sorted_p = sort_by_key(prepared, key_cols, [_TS_COL, tiebreak])
 
     def scan_partition(batches):
         chunks = [c for c in batches if len(c)]
@@ -2406,9 +2401,7 @@ def match_pattern_fast_nested_chain(
     out_names = [fld.name for fld in out_schema.fields]
     nfa_scan = batch_scan(spec, out_schema)
 
-    sorted_p = prepared.repartition(*key_cols).sortWithinPartitions(
-        *key_cols, *scan_order(_TS_COL, tiebreak)
-    )
+    sorted_p = sort_by_key(prepared, key_cols, [_TS_COL, tiebreak])
 
     def scan_partition(batches):
         chunks = [c for c in batches if len(c)]
@@ -2877,9 +2870,7 @@ def match_pattern_fast_nested3_chain(
     out_names = [fld.name for fld in out_schema.fields]
     nfa_scan = batch_scan(spec, out_schema)
 
-    sorted_p = prepared.repartition(*key_cols).sortWithinPartitions(
-        *key_cols, *scan_order(_TS_COL, tiebreak)
-    )
+    sorted_p = sort_by_key(prepared, key_cols, [_TS_COL, tiebreak])
 
     def scan_partition(batches):
         chunks = [c for c in batches if len(c)]
@@ -3287,9 +3278,7 @@ def match_pattern_fast_mixed_branch(
     out_names = [fld.name for fld in out_schema.fields]
     nfa_scan = batch_scan(spec, out_schema)
 
-    sorted_p = prepared.repartition(*key_cols).sortWithinPartitions(
-        *key_cols, *scan_order(_TS_COL, tiebreak)
-    )
+    sorted_p = sort_by_key(prepared, key_cols, [_TS_COL, tiebreak])
 
     def scan_partition(batches):
         chunks = [c for c in batches if len(c)]
@@ -3489,9 +3478,7 @@ def match_pattern_fast_branch_all_rows(
     out_names = [fld.name for fld in out_schema.fields]
     nfa_scan = batch_scan(spec, out_schema)
 
-    sorted_p = prepared.repartition(*key_cols).sortWithinPartitions(
-        *key_cols, *scan_order(_TS_COL, tiebreak)
-    )
+    sorted_p = sort_by_key(prepared, key_cols, [_TS_COL, tiebreak])
 
     def scan_partition(batches):
         chunks = [c for c in batches if len(c)]

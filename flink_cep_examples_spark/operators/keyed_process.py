@@ -12,10 +12,14 @@ exposes via Flink's ``KeyedProcessFunction``
 - event-time timers (``ctx.timerService.registerEventTimeTimer``, :71);
 - an output collector (``Collector.collect``, :81).
 
-Batch semantics: rows are processed per key in event-time order (the
-total order makes the watermark implicitly complete), timers with
-``ts < current row ts`` fire before the row is processed, and all
-remaining timers fire at end-of-input (watermark → ∞). The streaming
+Batch semantics: rows are processed per key in event-time order —
+ascending by the order column's full (µs) timestamp, then by the
+tiebreak, NULLs last (partition_scan.scan_order) — so two rows inside
+one millisecond keep their event-time order. The total order makes the
+watermark implicitly complete. ``ctx.timestamp`` and timers stay in
+epoch ms (the reference's unit); timers with ``ts < current row ts``
+fire before the row is processed, and all remaining timers fire at
+end-of-input (watermark → ∞). The streaming
 tier (streaming/keyed_process_stream.py) runs the same processor class
 under ``applyInPandasWithState``.
 
@@ -31,10 +35,15 @@ from typing import Any, Callable, Protocol
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from flink_cep_examples_spark.operators.partition_scan import grouped_partition_scan
+from flink_cep_examples_spark.operators.partition_scan import (
+    null_flags_sql,
+    scan_sorted,
+    sort_by_key,
+    time_key,
+    timestamp_sql,
+)
 
 _TS_COL = "__kp_ts_ms"
 
@@ -116,13 +125,20 @@ def keyed_process(
     if isinstance(output_schema, str):
         output_schema = T.StructType.fromDDL(output_schema)
     key_list = list(key_cols)
-
-    prepared = df.withColumn(
-        _TS_COL, (F.unix_micros(F.col(order_col).cast(T.TimestampType())) / 1000).cast("long")
+    ts = timestamp_sql(order_col)
+    # the input's own columns: the scan adds its timestamp and key flags
+    names = list(df.columns)
+    # sort on the order column itself, then add the ms timestamp: a
+    # window over the same key and order below (the billing source's
+    # balance lag) already sorts the rows so, and Catalyst keeps its one
+    # Exchange and one Sort for both
+    ordered = sort_by_key(df, key_list, [time_key(df, order_col), tiebreak_col])
+    staged = ordered.selectExpr(
+        "*",
+        f"CAST(unix_micros({ts}) / 1000 AS BIGINT) AS {_TS_COL}",
+        *null_flags_sql(df, key_list),
     )
     out_cols = [f.name for f in output_schema.fields]
-    # the input's own columns: the scan may add key-flag columns
-    names = [c for c in df.columns if c != _TS_COL]
 
     def run_batch(pdf: pd.DataFrame, bounds) -> pd.DataFrame:
         ts_all = pdf[_TS_COL].tolist()
@@ -160,9 +176,7 @@ def keyed_process(
             {c: [row.get(c) for row in out] for c in out_cols}, columns=out_cols
         )
 
-    return grouped_partition_scan(
-        prepared, key_list, [_TS_COL, tiebreak_col], run_batch, output_schema
-    )
+    return scan_sorted(staged, key_list, run_batch, output_schema)
 
 
 # ---------------------------------------------------------------------------

@@ -15,9 +15,10 @@ Covers the reference's source surface (SURVEY §2.1):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from flink_cep_examples_spark.operators.partition_scan import scan_order_sql
 from flink_cep_examples_spark.schemas import BILLING_DATETIME_FORMAT, BILLING_SCHEMA
 
 #: Name of the derived event-time column added by :func:`with_event_time`.
@@ -109,31 +110,43 @@ def events_as_billing(spark: SparkSession, sf_dir: str) -> DataFrame:
     - ``balanceBefore`` = previous event's ``value`` for the user
       (50.0 for the first event)
 
-    Values are kept as doubles; the CEP predicates only compare, so
-    long-vs-double does not change semantics. ``event_id`` is the
-    tiebreak (unique, driver-generated).
-    """
-    from flink_cep_examples_spark.sources.tables import load_table
+    "Previous" is the scan order of every CEP tier
+    (operators/partition_scan.py::scan_order): ascending ``event_time``,
+    then ``seq``, NULLs last, so a row with a NULL ``ts`` comes after the
+    user's timed rows and never feeds the first of them. Values are kept
+    as doubles; the CEP predicates only compare, so long-vs-double does
+    not change semantics. ``event_id`` is the tiebreak (unique,
+    driver-generated).
 
-    ev = load_table(spark, sf_dir, "events")
+    The ``datetime`` string (a measure source only) is formatted after
+    the balance window, so it runs in the post-shuffle tasks and is not
+    shuffled.
+    """
+    from flink_cep_examples_spark.sources.tables import events_ts_sql, read_table
+
+    ev, schema = read_table(spark, sf_dir, "events")
     # Project the string key FIRST, then window over the projected
-    # attribute: downstream pattern matching partitions by ``id``, and
-    # referencing the same attribute here lets Catalyst satisfy both
-    # stages with ONE hash Exchange (cast is bijective on integers, so
-    # keying by the string changes nothing; verified by
+    # attribute: downstream pattern matching partitions by ``id`` and
+    # sorts by the window's own order, and referencing the same
+    # attributes here lets Catalyst satisfy both stages with ONE hash
+    # Exchange and ONE Sort (cast is bijective on integers, so keying by
+    # the string changes nothing; verified by
     # tests/test_plans.py::test_cep_match_single_exchange).
-    base = ev.select(
-        F.col("user_id").cast("string").alias("id"),
-        F.col("ts").alias(EVENT_TIME_COL),
-        F.col("event_id").alias(SEQ_COL),
-        F.col("value"),
+    base = ev.selectExpr(
+        "CAST(user_id AS STRING) AS id",
+        f"{events_ts_sql(schema)} AS {EVENT_TIME_COL}",
+        f"event_id AS {SEQ_COL}",
+        "value",
     )
-    w = Window.partitionBy("id").orderBy(EVENT_TIME_COL, SEQ_COL)
-    return base.select(
+    order = scan_order_sql(EVENT_TIME_COL, SEQ_COL)
+    billing = base.selectExpr(
         "id",
         EVENT_TIME_COL,
         SEQ_COL,
-        F.coalesce(F.lag("value").over(w), F.lit(50.0)).alias("balanceBefore"),
-        F.col("value").alias("balanceAfter"),
-        F.date_format(EVENT_TIME_COL, "yyyy-MM-dd HH:mm:ss").alias("datetime"),
+        f"COALESCE(LAG(value) OVER (PARTITION BY id ORDER BY {order}), 50.0D)"
+        " AS balanceBefore",
+        "value AS balanceAfter",
+    )
+    return billing.selectExpr(
+        "*", f"date_format({EVENT_TIME_COL}, 'yyyy-MM-dd HH:mm:ss') AS datetime"
     )

@@ -48,18 +48,10 @@ def stat_stamp(path: str):
     return (path, st.st_size, st.st_mtime_ns)
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one synthetic table. Parquet → full predicate pushdown and
-    column pruning from Catalyst; no schema inference needed (parquet is
-    self-describing).
-
-    ``events.ts`` is normalized to a session-UTC ``TimestampType``
-    regardless of how the driver generated the parquet that round:
-    TIMESTAMP(NANOS) (with ``nanosAsLong`` it arrives as int64 nanos,
-    truncated here to µs exactly as DuckDB truncates) or timestamp[us]
-    without tz (arrives TIMESTAMP_NTZ; a cast under the UTC session tz
-    is value-preserving), keeping every downstream query
-    oracle-comparable.
+def read_table(spark: SparkSession, sf_dir: str, name: str):
+    """``(df, schema)``: one synthetic table as stored, and its parquet
+    schema. Parquet → full predicate pushdown and column pruning from
+    Catalyst; no schema inference needed (parquet is self-describing).
 
     The parquet schema is memoized per (sf_dir, name) (round-17,
     guide §1.2): without an explicit schema every ``read.parquet``
@@ -75,23 +67,48 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     schema = _SCHEMA_CACHE.get(key)
     if schema is None:
         df = spark.read.parquet(path)
+        schema = df.schema
         if key is not None:
-            _SCHEMA_CACHE[key] = df.schema
+            _SCHEMA_CACHE[key] = schema
     else:
         df = spark.read.schema(schema).parquet(path)
+    return df, schema
+
+
+def events_ts_sql(schema: T.StructType) -> str:
+    """SQL for ``events.ts`` as a session-UTC ``TimestampType``, given
+    the table's stored schema (:func:`read_table`).
+
+    The driver generates the parquet as TIMESTAMP(NANOS) (with
+    ``nanosAsLong`` it arrives as int64 nanos, truncated here to µs
+    exactly as DuckDB truncates) or as timestamp[us] without tz (it
+    arrives TIMESTAMP_NTZ; a cast under the UTC session tz is
+    value-preserving), keeping every downstream query
+    oracle-comparable."""
+    dt = schema["ts"].dataType
+    if isinstance(dt, T.LongType):
+        # `ts div 1000` is integer division on the int64 nanos. A float
+        # division (`/ 1000` then cast) would promote ~1.7e18 values past
+        # double's 2^53 exact range and can land 1 µs off DuckDB's exact
+        # integer truncation — enough to flip boundary `within` checks.
+        return "timestamp_micros(ts div 1000)"
+    if isinstance(dt, T.TimestampNTZType):
+        # Cast to the concrete LTZ type, not the "timestamp" alias: the
+        # alias resolves via spark.sql.timestampType, so a caller setting
+        # that conf to TIMESTAMP_NTZ would make the cast a silent no-op.
+        return "CAST(ts AS TIMESTAMP_LTZ)"
+    return "ts"
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Load one synthetic table (:func:`read_table`); ``events.ts`` is
+    normalized to a session-UTC ``TimestampType`` regardless of how the
+    driver generated the parquet that round (:func:`events_ts_sql`)."""
+    df, schema = read_table(spark, sf_dir, name)
     if name == "events":
-        dt = df.schema["ts"].dataType
-        if isinstance(dt, T.LongType):
-            # `ts div 1000` is integer division on the int64 nanos. A float
-            # division (`/ 1000` then cast) would promote ~1.7e18 values past
-            # double's 2^53 exact range and can land 1 µs off DuckDB's exact
-            # integer truncation — enough to flip boundary `within` checks.
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif isinstance(dt, T.TimestampNTZType):
-            # Cast to the concrete LTZ type, not the "timestamp" alias: the
-            # alias resolves via spark.sql.timestampType, so a caller setting
-            # that conf to TIMESTAMP_NTZ would make the cast a silent no-op.
-            df = df.withColumn("ts", F.col("ts").cast(T.TimestampType()))
+        ts = events_ts_sql(schema)
+        if ts != "ts":
+            df = df.withColumn("ts", F.expr(ts))
     return df
 
 

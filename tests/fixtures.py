@@ -28,21 +28,27 @@ GOLDEN_INPUT_CSV = "\n".join(",".join(map(str, r)) for r in GOLDEN_INPUT_ROWS) +
 def write_events(path, events) -> str:
     """Write ``events`` — (event_id, minute from 10:00, user_id, value)
     rows — as ``path/events.parquet`` in the driver's events schema and
-    return ``path`` as an sf_dir. events_as_billing reads a user's
-    previous value as balanceBefore (50 for the first)."""
+    return ``path`` as an sf_dir. The minute may also be a timedelta
+    from 10:00, or None for a NULL ``ts``. events_as_billing reads a
+    user's previous value as balanceBefore (50 for the first)."""
     import datetime
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     t0 = datetime.datetime(2020, 5, 1, 10, 0)
+
+    def ts(m):
+        if m is None:
+            return None
+        if not isinstance(m, datetime.timedelta):
+            m = datetime.timedelta(minutes=m)
+        return t0 + m
+
     table = pa.table(
         {
             "event_id": pa.array([e[0] for e in events], pa.int64()),
-            "ts": pa.array(
-                [t0 + datetime.timedelta(minutes=e[1]) for e in events],
-                pa.timestamp("us"),
-            ),
+            "ts": pa.array([ts(e[1]) for e in events], pa.timestamp("us")),
             "user_id": pa.array([e[2] for e in events], pa.int64()),
             "event_type": pa.array(["x"] * len(events)),
             "value": pa.array([e[3] for e in events], pa.float64()),

@@ -107,11 +107,31 @@ def test_cosine_dup_pair_join_ships_keys_not_vectors(plans):
             assert "embedding" not in line
 
 
-def test_cep_match_single_exchange(plans):
+def test_cep_match_single_exchange(plans, spark, sf_small):
     """One scan, one hash Exchange on the key — the balance window and
     the pattern match ride a single shuffle (sources/billing.py keys the
-    window by the match key)."""
+    window by the match key) — and one Sort, because the window and the
+    scan order by the same expressions. The ``datetime`` measure source
+    is formatted above the Exchange, in the post-shuffle tasks."""
     assert plans["cep_alert_reactions"].count("Exchange") == 1
+    billing_plans = {
+        n: _plan(QUERIES[n](spark, sf_small))
+        for n in [
+            "cep_match_recognize",
+            "cep_alerts_with_timeouts",
+            "cep_alerts_with_timeouts_nfa",
+            "cep_keyed_process",
+        ]
+    }
+    billing_plans["cep_alert_reactions"] = plans["cep_alert_reactions"]
+    for name, p in billing_plans.items():
+        lines = p.splitlines()
+        exchanges = [i for i, l in enumerate(lines) if "Exchange" in l]
+        assert len(exchanges) == 1, (name, p)
+        assert sum(l.lstrip("+- :").startswith("Sort [") for l in lines) == 1, (name, p)
+        formats = [i for i, l in enumerate(lines) if "date_format(" in l]
+        # the tree prints parents first: above the Exchange = earlier lines
+        assert formats and max(formats) < exchanges[0], (name, p)
 
 
 def test_absence_fast_path_single_exchange_no_python(spark, sf_small):
