@@ -146,7 +146,7 @@ def sort_by_key(df: DataFrame, key_cols: list[str], sort_cols: list) -> DataFram
     # No explicit partition count: repartition(*cols) sizes the exchange
     # from spark.sql.shuffle.partitions, and AQE is free to coalesce — at
     # 100 TB the shuffle width must come from config/AQE, not from the
-    # driver's core count. Catalyst drops this exchange, and the sort,
+    # Spark driver's core count. Catalyst drops this exchange, and the sort,
     # when the input is already partitioned and sorted that way (a
     # window over the same key and order).
     return df.repartition(*key_cols).sortWithinPartitions(

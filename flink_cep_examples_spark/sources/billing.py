@@ -115,8 +115,8 @@ def events_as_billing(spark: SparkSession, sf_dir: str) -> DataFrame:
     then ``seq``, NULLs last, so a row with a NULL ``ts`` comes after the
     user's timed rows and never feeds the first of them. Values are kept
     as doubles; the CEP predicates only compare, so long-vs-double does
-    not change semantics. ``event_id`` is the tiebreak (unique,
-    driver-generated).
+    not change semantics. ``event_id`` is the tiebreak (unique per
+    event).
 
     The ``datetime`` string (a measure source only) is formatted after
     the balance window, so it runs in the post-shuffle tasks and is not

@@ -79,7 +79,7 @@ def events_ts_sql(schema: T.StructType) -> str:
     """SQL for ``events.ts`` as a session-UTC ``TimestampType``, given
     the table's stored schema (:func:`read_table`).
 
-    The driver generates the parquet as TIMESTAMP(NANOS) (with
+    The generator writes the parquet as TIMESTAMP(NANOS) (with
     ``nanosAsLong`` it arrives as int64 nanos, truncated here to µs
     exactly as DuckDB truncates) or as timestamp[us] without tz (it
     arrives TIMESTAMP_NTZ; a cast under the UTC session tz is
@@ -103,7 +103,7 @@ def events_ts_sql(schema: T.StructType) -> str:
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one synthetic table (:func:`read_table`); ``events.ts`` is
     normalized to a session-UTC ``TimestampType`` regardless of how the
-    driver generated the parquet that round (:func:`events_ts_sql`)."""
+    parquet was written (:func:`events_ts_sql`)."""
     df, schema = read_table(spark, sf_dir, name)
     if name == "events":
         ts = events_ts_sql(schema)
