@@ -4,11 +4,11 @@ result (no arguments needed):
 
 1. NESTED unbounded groups ``(((A B)+ C)+)`` — units of (A B)-pairs
    closed by C, repeated; one maximal outer match per chain
-   (two-level chain kernel; Python-``re`` parity
-   ``(?:(?:ab)+c)+``);
+   (the regex tier matches ``(?:(?:ab)+c)+`` over the row
+   symbols);
 2. alternation INSIDE an unbounded group ``((A B | C D)+)`` — one
-   branch per iteration, any-branch loop-back (equal-width branches
-   compile to the chain kernel);
+   branch per iteration, any-branch loop-back (the regex tier's
+   ``(?:ab|cd)+``);
 3. the TIMEOUT side channel composed with a loop group —
    ``((X Y)+ Z) WITHIN`` + ``emit_timeouts``: a chain that never
    meets its Z inside the deadline emits a ``tag='timeout'`` row
@@ -19,7 +19,7 @@ result (no arguments needed):
    per-row prefix counts/sums walking the variable's stride-L
    actual rows;
 5. (round 10) MIXED-WIDTH branches ``((A | C D)+)`` — iteration
-   length depends on the branch chosen (break-mask islands kernel);
+   length depends on the branch chosen (the regex tier's ``(?:a|cd)+``);
 6. (round 10) ALL ROWS over a mixed-width branch group — per-row
    CLASSIFIER reconstructed from the branch predicates;
 7. (round 10) aggregates over nested-group variables —

@@ -39,6 +39,7 @@ tier table (operators/planner.py::run_pattern).
 from __future__ import annotations
 
 from dataclasses import replace
+from typing import Callable
 
 import numpy as np
 import pandas as pd
@@ -133,7 +134,7 @@ def _classified_var_idx(spec) -> list[int]:
 
 
 def _classify_preds(spec, preds):
-    """``({var: bool_row}, multi_mask)`` for per-row row-set
+    """``({var: bool_row}, multi_mask, any_multi)`` for per-row row-set
     reconstruction (see :func:`_classified_var_idx`), or None when the
     spec has no classified vars. ``preds`` is indexed by variable
     position (a stacked matrix or list of row arrays); ``multi_mask``
@@ -149,7 +150,8 @@ def _classify_preds(spec, preds):
     counts = np.zeros(len(next(iter(mats.values()))), dtype=np.int8)
     for arr in mats.values():
         counts += arr
-    return (mats, counts > 1)
+    multi = counts > 1
+    return (mats, multi, bool(multi.any()))
 
 
 def _loop_strides(spec) -> dict[str, int]:
@@ -170,6 +172,67 @@ def _loop_strides(spec) -> dict[str, int]:
     }
 
 
+_AMBIGUOUS_ROWS = (
+    "aggregate/RUNNING measure over a multi-branch or nested group "
+    "variable reconstructs its row set from the variable predicates and "
+    "needs them pairwise-disjoint on the matched rows"
+)
+
+
+def _actual_rows(comps, match, loop_stride, classify) -> np.ndarray:
+    """The rows :func:`_actual_spans` covers for the components
+    ``comps`` of a variable, as one sorted index array."""
+    parts = []
+    for c in comps:
+        s = match.get(c)
+        if s is None:
+            continue
+        if classify is not None and c in classify[0]:
+            pr, multi = classify[0][c], classify[1]
+            if classify[2] and multi[s[0] : s[1] + 1].any():
+                raise NotImplementedError(_AMBIGUOUS_ROWS)
+            parts.append(np.flatnonzero(pr[s[0] : s[1] + 1]) + s[0])
+        else:
+            parts.append(np.arange(s[0], s[1] + 1, loop_stride.get(c, 1)))
+    return parts[0] if len(parts) == 1 else np.sort(np.concatenate(parts))
+
+
+def _int_aggregate(fn, arr, comps, loop_stride, classify, empty):
+    """FINAL aggregate ``fn`` over an integer source for variables with
+    strided or classified rows, one Python pass per match: an integer
+    column carries no NULL (pandas reads one with NULLs as float) and
+    adds exactly in any order, so this equals :func:`_aggregate` over
+    :func:`_actual_rows` without numpy's per-call cost on a match's few
+    rows."""
+    values = arr.tolist()
+    preds = {
+        c: classify[0][c].tolist() for c in comps
+        if classify is not None and c in classify[0]
+    }
+    reduce = {
+        "sum": sum, "min": min, "max": max, "count_col": len,
+        "avg": lambda v: sum(v) / len(v),
+    }[fn]
+
+    def aggregate(match, match_no):
+        picked = []
+        for c in comps:
+            s = match.get(c)
+            if s is None:
+                continue
+            lo, hi = s[0], s[1] + 1
+            pr = preds.get(c)
+            if pr is None:
+                picked.extend(values[lo:hi:loop_stride.get(c, 1)])
+                continue
+            if classify[2] and classify[1][lo:hi].any():
+                raise NotImplementedError(_AMBIGUOUS_ROWS)
+            picked.extend(values[r] for r in range(lo, hi) if pr[r])
+        return reduce(picked) if picked else empty
+
+    return aggregate
+
+
 def _actual_spans(var, match, subset_map, loop_stride, classify=None) -> list:
     """Like :func:`_resolve_spans`, but loop-group variables expand to
     their ACTUAL row set — stride-L singleton spans (round 8), or for
@@ -185,12 +248,7 @@ def _actual_spans(var, match, subset_map, loop_stride, classify=None) -> list:
         if classify is not None and c in classify[0]:
             pr, multi = classify[0][c], classify[1]
             if bool(multi[s[0] : s[1] + 1].any()):
-                raise NotImplementedError(
-                    "aggregate/RUNNING measure over a multi-branch or "
-                    "nested group variable reconstructs its row set "
-                    "from the variable predicates and needs them "
-                    "pairwise-disjoint on the matched rows"
-                )
+                raise NotImplementedError(_AMBIGUOUS_ROWS)
             out.extend(
                 (int(r), int(r))
                 for r in np.flatnonzero(pr[s[0] : s[1] + 1]) + s[0]
@@ -216,96 +274,174 @@ def _null_safe_agg_cast(pdf, measure_list, out_schema) -> None:
                 pdf[m.name] = pdf[m.name].astype(want)
 
 
+def _null_mask(pdf: pd.DataFrame, col: str, vals: np.ndarray) -> np.ndarray:
+    """``bool[n]``: the rows where source ``col`` is NULL. A float column
+    reads its staged ``isnull`` flag, so a NaN stays a value; an integer
+    column with NULLs arrives as float NaN without a flag, where NaN can
+    only mean NULL."""
+    flag = null_flag(col)
+    if flag in pdf:
+        return pdf[flag].to_numpy(dtype=bool)
+    if vals.dtype.kind == "f":
+        return np.isnan(vals)
+    if vals.dtype.kind in "mM":
+        return np.isnat(vals)
+    if vals.dtype == object:
+        return pd.isna(vals)
+    return np.zeros(len(vals), dtype=bool)
+
+
+def _nan_lt(a, b) -> bool:
+    """``a < b`` where NaN sorts above every number (Spark's order)."""
+    return (b != b and a == a) or a < b
+
+
+def _aggregate(fn: str, vals: np.ndarray, nulls: np.ndarray):
+    """One FINAL aggregate with Spark SQL semantics over a variable's
+    row values: NULL rows are skipped, NaN is a value — SUM, AVG and MAX
+    give NaN, COUNT counts it, and MIN ignores it unless it is alone
+    (NaN sorts above every number). Returns NULL (None) over zero
+    non-NULL rows, COUNT(col) returns 0."""
+    n = len(vals) - int(np.count_nonzero(nulls))
+    if fn == "count_col":
+        return n
+    if n == 0:
+        return None
+    if vals.dtype == object:
+        # decimals, strings: pandas' exact object reductions
+        ser = pd.Series(vals[~nulls])
+        if fn == "sum":
+            return ser.sum()
+        if fn == "avg":
+            return float(ser.mean())
+        return ser.min() if fn == "min" else ser.max()
+    if fn in ("sum", "avg"):
+        # zero the NULL rows and sum in place, as pandas' skipna sum does,
+        # so a float sum rounds exactly as before
+        filled = np.where(nulls, 0, vals) if n < len(vals) else vals
+        if fn == "sum":
+            return filled.sum()
+        return float(filled.sum(dtype=np.float64)) / n
+    keep = vals[~nulls] if n < len(vals) else vals
+    if keep.dtype.kind == "f":
+        nan = np.isnan(keep)
+        if nan.any():
+            if fn == "max" or nan.all():
+                return np.nan
+            keep = keep[~nan]
+    return keep.min() if fn == "min" else keep.max()
+
+
 def _make_measure_eval(
-    measure_list, subsets, src_arrays, loop_stride=None, classify=None
+    measure_list, subsets, src_arrays, null_arrays, loop_stride=None,
+    classify=None,
 ):
     """Shared measure evaluator (one-row + all-rows tiers): returns
-    ``eval_measures(match, match_no) -> dict[name, value]``.
+    ``[(name, value(match, match_no))]``, one function per measure.
 
     ``match`` maps var name → (first_idx, last_idx, count, first_ord,
     last_ord); SUBSET names resolve to the union of their components'
     spans. Aggregates slice the contiguous [first_idx, last_idx] row
     range per component — sound because the spec validated strict
-    contiguity. ``match_no`` is the 1-based per-key match ordinal
-    (``None`` on timeout rows). RUNNING measures (ALL ROWS PER MATCH)
-    are NOT handled here — see :func:`_running_series`."""
-    import pandas as _pd
-
+    contiguity — and reduce the numpy slices with SQL semantics
+    (:func:`_aggregate`; ``null_arrays`` holds each source's NULL
+    rows). ``match_no`` is the 1-based per-key match ordinal (``None``
+    on timeout rows). RUNNING measures (ALL ROWS PER MATCH) are NOT
+    handled here — see :func:`_running_series`. Each measure compiles
+    once per key group, so a match costs one call per measure."""
     subset_map = dict(subsets)
 
-    def spans_of(var: str, match: dict) -> list:
-        return _resolve_spans(var, match, subset_map)
-
-    def eval_measures(match: dict, match_no) -> dict:
-        out = {}
-        classifier = None
-        if any(m.fn == "classifier" for m in measure_list) and match:
-            classifier = max(match.items(), key=lambda kv: kv[1][4])[0]
-        for m in measure_list:
-            if m.fn == "match_number":
-                out[m.name] = match_no
-                continue
-            if m.fn == "classifier":
-                out[m.name] = classifier
-                continue
-            spans = spans_of(m.var, match)
-            if not spans:
-                out[m.name] = 0 if m.fn in ("count", "count_col") else m.default
-                continue
-            if m.fn == "count":
-                out[m.name] = sum(s[2] for s in spans)
-            elif m.fn == "first":
-                out[m.name] = src_arrays[m.src][spans[0][0]]
-            elif m.fn == "last":
-                # max by LAST ordinal, not the last-sorted-by-first
-                # span's last — multi-branch group iterations
-                # interleave the components (round 8), so the span
-                # with the latest first row need not hold the latest
-                # last row
-                out[m.name] = src_arrays[m.src][
-                    max(spans, key=lambda sp: sp[4])[1]
-                ]
-            else:  # aggregate over every consumed row (strict spans;
-                # loop-group vars slice stride-L — round 8, the merged
-                # span interleaves sibling iteration rows)
-                arr = src_arrays[m.src]
-                aspans = (
-                    _actual_spans(
-                        m.var, match, subset_map, loop_stride, classify
-                    )
-                    if loop_stride or classify is not None
-                    else spans
+    def compile_measure(m):
+        if m.fn == "match_number":
+            return lambda match, match_no: match_no
+        if m.fn == "classifier":
+            return lambda match, match_no: (
+                max(match.items(), key=lambda kv: kv[1][4])[0] if match else None
+            )
+        comps = subset_map.get(m.var, (m.var,))
+        empty = 0 if m.fn in ("count", "count_col") else m.default
+        arr = src_arrays.get(m.src)
+        if m.fn == "count":
+            if len(comps) == 1:
+                var = comps[0]
+                return lambda match, match_no: (
+                    match[var][2] if var in match else 0
                 )
-                vals = _pd.Series(
-                    np.concatenate(
-                        [arr[s[0] : s[1] + 1] for s in aspans]
-                    )
-                    if len(aspans) > 1
-                    else arr[aspans[0][0] : aspans[0][1] + 1]
-                )
-                n = int(vals.count())
-                if m.fn == "count_col":
-                    out[m.name] = n
-                elif n == 0:
-                    out[m.name] = None  # SQL: aggregate over all-NULL
-                elif m.fn == "sum":
-                    out[m.name] = vals.sum()
-                elif m.fn == "avg":
-                    out[m.name] = float(vals.mean())
-                elif m.fn == "min":
-                    out[m.name] = vals.min()
-                else:
-                    out[m.name] = vals.max()
-        return out
+            return lambda match, match_no: sum(
+                match[c][2] for c in comps if c in match
+            )
+        if m.fn in ("first", "last") and len(comps) == 1:
+            pos = 0 if m.fn == "first" else 1
+            var = comps[0]
+            return lambda match, match_no: (
+                arr[match[var][pos]] if var in match else empty
+            )
+        if m.fn in ("first", "last"):
+            # FIRST: the span with the least FIRST ordinal; LAST: the
+            # greatest LAST ordinal, not the last-sorted-by-first span's
+            # last — multi-branch group iterations interleave the
+            # components (round 8)
+            if m.fn == "first":
 
-    return eval_measures
+                def nav(match, match_no):
+                    best = None
+                    for c in comps:
+                        sp = match.get(c)
+                        if sp is not None and (best is None or sp[3] < best[3]):
+                            best = sp
+                    return empty if best is None else arr[best[0]]
+
+                return nav
+
+            def nav_last(match, match_no):
+                best = None
+                for c in comps:
+                    sp = match.get(c)
+                    if sp is not None and (best is None or sp[4] > best[4]):
+                        best = sp
+                return empty if best is None else arr[best[1]]
+
+            return nav_last
+        nulls = null_arrays[m.src]
+        if arr.dtype.kind in "iu" and (loop_stride or classify is not None):
+            return _int_aggregate(
+                m.fn, arr, comps, loop_stride or {}, classify, empty
+            )
+
+        def aggregate(match, match_no):
+            # every consumed row (strict spans; loop-group vars slice
+            # stride-L — round 8, the merged span interleaves sibling
+            # iteration rows)
+            if not any(c in match for c in comps):
+                return empty
+            if loop_stride or classify is not None:
+                rows = _actual_rows(comps, match, loop_stride, classify)
+                return _aggregate(m.fn, arr[rows], nulls[rows])
+            spans = _resolve_spans(m.var, match, subset_map)
+            if len(spans) == 1:
+                lo, hi = spans[0][0], spans[0][1] + 1
+                return _aggregate(m.fn, arr[lo:hi], nulls[lo:hi])
+            return _aggregate(
+                m.fn,
+                np.concatenate([arr[s[0] : s[1] + 1] for s in spans]),
+                np.concatenate([nulls[s[0] : s[1] + 1] for s in spans]),
+            )
+
+        return aggregate
+
+    return [(m.name, compile_measure(m)) for m in measure_list]
 
 
-def _running_series(m: Measure, spans: list, arr, lo: int, hi: int) -> list:
+def _running_series(
+    m: Measure, spans: list, arr, nulls, lo: int, hi: int
+) -> list:
     """RUNNING value of one measure for every row index in [lo, hi]:
     one incremental pass over the match (linear, not per-row
     re-aggregation). ``spans`` are the variable's ordered contiguous
-    spans; ``arr`` the source column (None for count/count★)."""
+    spans; ``arr`` the source column and ``nulls`` its NULL rows (None
+    for count/count★). NULLs are skipped and NaN is a value, as in
+    :func:`_aggregate`, so the value on a match's last row is the FINAL
+    one."""
     out = [None] * (hi - lo + 1)
     si = 0
     count = n_vals = 0
@@ -327,12 +463,12 @@ def _running_series(m: Measure, spans: list, arr, lo: int, hi: int) -> list:
                 if count == 1:
                     first = v  # first ROW's value, null or not
                 last = v
-                if not pd.isna(v):
+                if not nulls[r]:
                     n_vals += 1
                     if m.fn in ("sum", "avg"):
                         total = v if total is None else total + v
-                    mn = v if mn is None or v < mn else mn
-                    mx = v if mx is None or v > mx else mx
+                    mn = v if mn is None or _nan_lt(v, mn) else mn
+                    mx = v if mx is None or _nan_lt(mx, v) else mx
         i = r - lo
         if m.fn == "count":
             out[i] = count
@@ -348,8 +484,7 @@ def _running_series(m: Measure, spans: list, arr, lo: int, hi: int) -> list:
             out[i] = total
         elif m.fn == "avg":
             # the avg field is DOUBLE (_measure_field): one divide on
-            # the exact running sum, converted once — mirrors the
-            # FINAL path's float(vals.mean())
+            # the exact running sum, converted once
             a = total / n_vals
             out[i] = a if isinstance(a, float) else float(a)
         elif m.fn == "min":
@@ -446,23 +581,27 @@ def _batch_arrays(pdf: pd.DataFrame, n_preds: int):
     return ts, preds
 
 
-def _src_arrays(pdf: pd.DataFrame, measure_list) -> dict:
-    return {m.src: pdf[m.src].to_numpy() for m in measure_list if _needs_src(m)}
+def _src_arrays(pdf: pd.DataFrame, measure_list) -> tuple[dict, dict]:
+    """The measure sources of a batch as numpy arrays, and each one's
+    NULL rows (:func:`_null_mask`), converted once per batch."""
+    vals = {m.src: pdf[m.src].to_numpy() for m in measure_list if _needs_src(m)}
+    return vals, {c: _null_mask(pdf, c, a) for c, a in vals.items()}
 
 
 def _slice_arrays(arrays: dict, lo: int, hi: int) -> dict:
     return {c: a[lo:hi] for c, a in arrays.items()}
 
 
-def _append_one_row(cols, key_rows, lo, eval_measures, emitted) -> None:
-    """Append one output row per ``(match, tag, match_no)`` of the key
-    group starting at batch row ``lo`` (``tag`` None: no tag column)."""
-    for match, tag, match_no in emitted:
-        for name, val in eval_measures(match, match_no).items():
-            cols[name].append(val)
-        if tag is not None:
-            cols["tag"].append(tag)
-        key_rows.append(lo)
+def _append_one_row(cols, key_rows, lo, measures, found, tag, numbers) -> None:
+    """Append one output row per match in ``found`` of the key group
+    starting at batch row ``lo``, a column at a time: ``measures`` from
+    :func:`_make_measure_eval`, ``numbers`` the MATCH_NUMBER of each,
+    ``tag`` the tag column's value (None: no tag column)."""
+    for name, value in measures:
+        cols[name].extend(map(value, found, numbers))
+    if tag is not None:
+        cols["tag"].extend([tag] * len(found))
+    key_rows.extend([lo] * len(found))
 
 
 def _batch_frame(pdf, gathered, rows, cols, measure_list, out_schema):
@@ -470,9 +609,9 @@ def _batch_frame(pdf, gathered, rows, cols, measure_list, out_schema):
     taken from ``pdf`` at batch rows ``rows`` (a key group's first row,
     or each emitted ALL ROWS row), then the computed ``cols``. A float
     column goes out masked by its ``isnull`` flag — a gathered column by
-    the batch's flag column, a measure by the flag values computed
-    beside it — so a NaN stays NaN through Arrow instead of turning
-    NULL."""
+    the batch's flag column, a FIRST/LAST measure by the flag values
+    computed beside it, an aggregate where its value is None — so a NaN
+    stays NaN through Arrow instead of turning NULL."""
     idx = np.asarray(rows, dtype=np.intp)
     data = {c: pdf[c].to_numpy()[idx] for c in gathered}
     for c in gathered:
@@ -483,6 +622,11 @@ def _batch_frame(pdf, gathered, rows, cols, measure_list, out_schema):
     data.update(cols)
     for m in measure_list:
         flags = cols.get(null_flag(m.name))
+        if flags is None and m.fn in AGG_FNS and isinstance(
+            out_schema[m.name].dataType, (T.FloatType, T.DoubleType)
+        ):
+            # a float aggregate is NULL where it is None; NaN is a value
+            flags = [v is None for v in cols[m.name]]
         if flags is not None:
             data[m.name] = pd.arrays.FloatingArray(
                 np.array([np.nan if v is None else v for v in cols[m.name]],
@@ -494,7 +638,7 @@ def _batch_frame(pdf, gathered, rows, cols, measure_list, out_schema):
     return out
 
 
-def _running_measures(running, match, spans_of, src_arrays) -> dict:
+def _running_measures(running, match, spans_of, src_arrays, null_arrays) -> dict:
     """RUNNING measures of one match (ALL ROWS PER MATCH): name →
     ``(first row, series)``, one incremental series over the match's
     row range. ``spans_of(var)`` gives a variable's row spans."""
@@ -505,7 +649,10 @@ def _running_measures(running, match, spans_of, src_arrays) -> dict:
     return {
         m.name: (
             lo,
-            _running_series(m, spans_of(m.var), src_arrays.get(m.src), lo, hi),
+            _running_series(
+                m, spans_of(m.var), src_arrays.get(m.src),
+                null_arrays.get(m.src), lo, hi,
+            ),
         )
         # MATCH_NUMBER is constant, RUNNING CLASSIFIER the row's own var
         for m in running
@@ -598,22 +745,79 @@ def _classified_rows(spec, idx, match, preds) -> list[tuple[int, str]]:
     return out
 
 
+#: ``match_batch(preds, ts, bounds)``: the matches of each key group
+#: ``[lo, hi)`` of a staged batch, one ``(matches, timeouts, alt_of)``
+#: per bound, in MATCH_NUMBER order; a match maps var name →
+#: ``(first, last, count, first_ord, last_ord)`` group rows, ``alt_of``
+#: lists each match's alternative (None for a single pattern)
+MatchBatch = Callable[[np.ndarray, np.ndarray, list], list]
+
+
+def nfa_matcher(spec: Spec):
+    """The NFA over one key group: ``match(preds, ts) -> (matches,
+    timeouts, alt_of)`` on the group's predicate rows and timestamps."""
+    if isinstance(spec, AlternationSpec):
+        # one NFA per alternative; its predicate rows in the staged order
+        nfas = [nfa.Nfa(a) for a in spec.alternatives]
+        pred_rows, pos = [], 0
+        for a in spec.alternatives:
+            pred_rows.append((pos, pos + len(a.pred_exprs)))
+            pos += len(a.pred_exprs)
+        after, derivation = spec.after_match, spec.derivation
+
+        def match_alternation(preds, ts):
+            matched = nfa.scan_key_group_alternation(
+                nfas, [preds[a:b] for a, b in pred_rows], ts, after,
+                derivation,
+            )
+            matched.sort(key=_alternation_order)
+            return [m for _, m in matched], [], [a for a, _ in matched]
+
+        return match_alternation
+    # compiled once: the scan reuses it for every key group
+    compiled = nfa.Nfa(spec)
+
+    def match(preds, ts):
+        matches, timeouts = nfa.scan_key_group(compiled, preds, ts)
+        if compiled.longest and len(matches) > 1:
+            # held resolution can emit a blocked earlier start AFTER a
+            # later unblocked one (SKIP TO NEXT ROW) — renumber by
+            # (start, end) ordinal so MATCH_NUMBER is SQL:2016 start
+            # order
+            matches.sort(key=_start_end_order)
+        return matches, timeouts, None
+
+    return match
+
+
+def _nfa_batch(spec: Spec) -> MatchBatch:
+    match = nfa_matcher(spec)
+    return lambda preds, ts, bounds: [
+        match(preds[:, lo:hi], ts[lo:hi]) for lo, hi in bounds
+    ]
+
+
 def batch_scan(
-    spec: Spec, out_schema: T.StructType, owns_start=None
+    spec: Spec, out_schema: T.StructType, owns_start=None, match_batch=None
 ) -> BatchScan:
-    """The per-batch NFA scan of :func:`match_pattern`, for
-    ``grouped_partition_scan``: ``scan(pdf, bounds)`` runs each key
-    group ``pdf[lo:hi]`` of a staged batch (:func:`_prepare`) through
-    the NFA and returns the batch's one ``out_schema`` frame.
-    ``owns_start(pdf)``, if given, marks the batch rows from which a
-    match or timeout may start; the rest are dropped
-    (:func:`match_pattern_time_sliced`'s home slice)."""
+    """The per-batch scan of :func:`match_pattern`, for
+    ``grouped_partition_scan``: ``scan(pdf, bounds)`` matches each key
+    group ``pdf[lo:hi]`` of a staged batch (:func:`_prepare`) and returns
+    the batch's one ``out_schema`` frame. ``match_batch`` finds the
+    matches (:data:`MatchBatch`; the NFA, :func:`nfa_matcher`, by
+    default); the emission of measures, ALL ROWS rows, MATCH_NUMBER and
+    ``tag`` is the same for every matcher. ``owns_start(pdf)``, if
+    given, marks the batch rows from which a match or timeout may start;
+    the rest are dropped (:func:`match_pattern_time_sliced`'s home
+    slice)."""
     alternation = isinstance(spec, AlternationSpec)
     all_rows = rows_per_match(spec) == "all"
     measure_list = list(spec.measures)
     subsets = spec.subsets
     subset_map = dict(subsets)
     n_preds = len(spec.pred_exprs)
+    if match_batch is None:
+        match_batch = _nfa_batch(spec)
     # pandas reads a NULL float as NaN: a FIRST/LAST over a float source
     # is also evaluated over the source's isnull flag (the staged batch
     # carries one per float column), and _batch_frame masks the value by
@@ -625,18 +829,9 @@ def batch_scan(
     ]
     if alternation:
         alts = spec.alternatives
-        # one NFA per alternative; its predicate rows in the staged order
-        nfas = [nfa.Nfa(a) for a in alts]
-        pred_rows, pos = [], 0
-        for a in alts:
-            pred_rows.append((pos, pos + len(a.pred_exprs)))
-            pos += len(a.pred_exprs)
-        after, derivation = spec.after_match, spec.derivation
         strides, classified = {}, []
     else:
         alts = (spec,)
-        # compiled once: the scan reuses it for every key group
-        compiled = nfa.Nfa(spec)
         # loop-group vars (round 7): a var's rows across iterations are
         # the stride-L progression from its merged span; multi-branch
         # and nested groups (round 10) have no fixed stride and
@@ -670,7 +865,7 @@ def batch_scan(
         ]
         running = [m for m in measures if m.running]
         ts_all, preds_all = _batch_arrays(pdf, n_preds)
-        src_all = _src_arrays(pdf, measures)
+        src_all, nulls_all = _src_arrays(pdf, measures)
         owned = None if owns_start is None else owns_start(pdf)
         rows: list[int] = []
         cols: dict[str, list] = {m.name: [] for m in measures}
@@ -678,42 +873,31 @@ def batch_scan(
             cols.update(classifier=[], match_seq=[])
         elif tagged:
             cols["tag"] = []
-        for lo, hi in bounds:
-            preds, ts = preds_all[:, lo:hi], ts_all[lo:hi]
-            alt_of = None
-            if alternation:
-                matched = nfa.scan_key_group_alternation(
-                    nfas, [preds[a:b] for a, b in pred_rows], ts,
-                    after, derivation,
-                )
-                matched.sort(key=_alternation_order)
-                alt_of = [a for a, _ in matched]
-                matches, timeouts = [m for _, m in matched], []
-            else:
-                matches, timeouts = nfa.scan_key_group(compiled, preds, ts)
-                if compiled.longest and len(matches) > 1:
-                    # held resolution can emit a blocked earlier start
-                    # AFTER a later unblocked one (SKIP TO NEXT ROW) —
-                    # renumber by (start, end) ordinal so MATCH_NUMBER
-                    # is SQL:2016 start order
-                    matches.sort(key=_start_end_order)
+        found = match_batch(preds_all, ts_all, bounds)
+        for (lo, hi), (matches, timeouts, alt_of) in zip(bounds, found):
             if owned is not None:
                 matches = [m for m in matches if owned[lo + _first_row(m)]]
                 timeouts = [t for t in timeouts if owned[lo + _first_row(t)]]
             if not matches and not timeouts:
                 continue
             src = _slice_arrays(src_all, lo, hi)
+            nulls = _slice_arrays(nulls_all, lo, hi)
+            preds = preds_all[:, lo:hi]
             classify = _classify_preds(spec, preds) if need_classify else None
-            eval_measures = _make_measure_eval(
-                measures, subsets, src, loop_stride=strides,
+            values = _make_measure_eval(
+                measures, subsets, src, nulls, loop_stride=strides,
                 classify=classify,
             )
             if not all_rows:
-                emitted = [
-                    (m, match_tag, i + 1) for i, m in enumerate(matches)
-                ]
-                emitted += [(to, TIMEOUT_TAG, None) for to in timeouts]
-                _append_one_row(cols, rows, lo, eval_measures, emitted)
+                _append_one_row(
+                    cols, rows, lo, values, matches, match_tag,
+                    range(1, len(matches) + 1),
+                )
+                if timeouts:
+                    _append_one_row(
+                        cols, rows, lo, values, timeouts, TIMEOUT_TAG,
+                        [None] * len(timeouts),
+                    )
                 continue
             for seq, match in enumerate(matches):
                 emit_rows = [
@@ -732,11 +916,12 @@ def batch_scan(
                     lambda v: _actual_spans(
                         v, match, subset_map, strides, classify
                     ),
-                    src,
+                    src, nulls,
                 )
                 _append_all_rows(
                     cols, rows, lo, emit_rows, seq, measures,
-                    eval_measures(match, seq + 1), run_series,
+                    {name: value(match, seq + 1) for name, value in values},
+                    run_series,
                 )
         return _batch_frame(pdf, gathered, rows, cols, measure_list, out_schema)
 
@@ -765,6 +950,13 @@ def match_pattern(df: DataFrame, spec: Spec) -> DataFrame:
     row. It requires strict contiguity, so each variable's rows
     reconstruct from its (first, last) span; no timeouts are emitted
     (SQL has no timeout channel)."""
+    return scan_pattern(df, spec)
+
+
+def scan_pattern(df: DataFrame, spec: Spec, match_batch=None) -> DataFrame:
+    """:func:`match_pattern`'s staging, partition scan and emission with
+    the per-batch matcher ``match_batch`` (:data:`MatchBatch`; the NFA
+    when None) — the one batch operator every matcher shares."""
     spec.validate()
     all_rows = rows_per_match(spec) == "all"
     if isinstance(spec, AlternationSpec):
@@ -797,7 +989,7 @@ def match_pattern(df: DataFrame, spec: Spec) -> DataFrame:
     return scan_sorted(
         ordered.selectExpr(*_stage_exprs(df, spec, all_rows)),
         keys,
-        batch_scan(spec, out_schema),
+        batch_scan(spec, out_schema, match_batch=match_batch),
         out_schema,
     )
 

@@ -1,20 +1,19 @@
-"""Compiled kernels for the pattern shapes where they beat the NFA tier.
+"""Compiled kernels for the shapes the regex tier does not serve.
 
 Each kernel is exact, by a derivation from the NFA semantics
 (operators/nfa.py), on the shapes its ``*_applicable`` check admits:
-window closed forms with one hash Exchange on the key and no Python
-(timed absence, positional skips, PERMUTE, SKIP TO NEXT ROW
-alternation) and vectorized numpy scans over key groups (the loop,
-nested and branch group chains). The tier table (operators/planner.py)
-is their only dispatcher: it runs a kernel after its structural and
-data checks pass, and the NFA reference otherwise. Differential tests
-pin each kernel to the NFA's output.
+the timed-absence window closed form (one hash Exchange on the key, no
+Python), the group-absence scan, whose timeouts are partial matches a
+regex does not report, and the two ALL ROWS PER MATCH chain kernels
+(loop chain, branch islands), whose RUNNING measures are segmented numpy
+series rather than the NFA operator's per-row walk. The tier table
+(operators/planner.py) is their only dispatcher: it runs a kernel after
+its structural and data checks pass, the regex tier
+(operators/regex_scan.py) or the NFA reference otherwise. Differential
+tests pin each kernel to the NFA's output.
 """
 
 from __future__ import annotations
-
-import weakref
-from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -37,40 +36,17 @@ from flink_cep_examples_spark.plans.pattern import (
     ONCE,
     RELAXED,
     SKIP_PAST_LAST_EVENT,
-    SKIP_TO_FIRST,
-    SKIP_TO_LAST,
     SKIP_TO_NEXT,
     STRICT,
-    TIMES,
-    AlternationSpec,
-    Measure,
     PatternSpec,
 )
 from flink_cep_examples_spark.schemas import MATCH_TAG, TIMEOUT_TAG
-from flink_cep_examples_spark.sources.tables import stat_stamp
 
-
-#: session (weak) → {(plan semantic hash, input file stamps, predicates):
-#: verdict}; entries are dropped when their session is garbage-collected
-_DISJOINT_MEMO: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
-
-
-def _input_stamps(df: DataFrame):
-    """``(path, size, mtime_ns)`` of every file ``df`` reads, so a file
-    appended under the same path changes the memo key; None when a file
-    cannot be stat'ed (a remote URI), which skips the memo."""
-    stamps = []
-    for uri in sorted(df.inputFiles()):
-        parsed = urlparse(uri)
-        stamp = (
-            stat_stamp(unquote(parsed.path))
-            if parsed.scheme in ("", "file")
-            else None
-        )
-        if stamp is None:
-            return None
-        stamps.append(stamp)
-    return tuple(stamps)
+#: source types the ALL ROWS kernels' RUNNING SUM/AVG/MIN/MAX accept:
+#: their float64 series skip NaN, where Spark SQL treats NaN as a value,
+#: so float sources run on the regex tier or the NFA instead; decimals
+#: and other objects keep the NFA operator's exact reductions
+_INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
 
 
 def fast_absence_applicable(spec: PatternSpec) -> bool:
@@ -149,513 +125,18 @@ def match_pattern_fast_absence(df: DataFrame, spec: PatternSpec) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Positional fast path: dense fixed-length patterns under any
-# positional AFTER MATCH SKIP strategy (round-4: VERDICT r3 item 2)
-# ---------------------------------------------------------------------------
-
-
-def _fixed_counts(spec: PatternSpec) -> list[int] | None:
-    """Per-variable exact row counts when every variable is fixed-width
-    (ONCE, or times(n, n) with n >= 1); None otherwise."""
-    if spec.loop_groups:
-        return None  # unbounded iterations are never fixed-width
-    counts: list[int] = []
-    for v in spec.variables:
-        if v.negated or v.until is not None or v.combinations:
-            return None
-        if v.quantifier == ONCE:
-            counts.append(1)
-        elif v.quantifier == TIMES and v.times[1] == v.times[0] >= 1:
-            counts.append(v.times[0])
-        else:
-            return None
-    return counts
-
-
-def _is_const_true(pred: str) -> bool:
-    p = pred.strip().lower()
-    while p.startswith("(") and p.endswith(")"):
-        p = p[1:-1].strip()
-    return p == "true"
-
-
-def _positional_delta(spec: PatternSpec, counts: list[int]) -> int | None:
-    """Row stride between consecutive match starts for the spec's skip
-    strategy, or None when the strategy isn't positional / the stride
-    would be 0 (SKIP TO FIRST of the begin variable — Flink raises on
-    that loop; we leave it to the NFA tier)."""
-    total = sum(counts)
-    if spec.after_match == SKIP_PAST_LAST_EVENT:
-        return total
-    if spec.after_match in (SKIP_TO_NEXT, NO_SKIP):
-        # deterministic fixed-width all-true patterns yield exactly one
-        # match per start row, so NO_SKIP coincides with SKIP TO NEXT
-        return 1
-    if spec.after_match in (SKIP_TO_FIRST, SKIP_TO_LAST):
-        i = spec.var_index(spec.skip_var)
-        start = sum(counts[:i])
-        delta = start if spec.after_match == SKIP_TO_FIRST else start + counts[i] - 1
-        return delta if delta >= 1 else None
-    return None
-
-
-def fast_positional_applicable(spec: PatternSpec) -> bool:
-    """Dense fixed-length shape: every variable fixed-width with a
-    constant-true predicate (so every row plays every role and matching
-    is pure row arithmetic), no deadline, no timeouts, one row per
-    match, and a positional skip stride >= 1. With all-true predicates
-    relaxed contiguity degenerates to strict (there is never a
-    non-matching row to skip), so both contiguities qualify."""
-    counts = _fixed_counts(spec)
-    return (
-        counts is not None
-        and not spec.loop_groups  # iterations are not fixed-length rows
-        and all(_is_const_true(v.predicate) for v in spec.variables)
-        and spec.within is None
-        and not spec.emit_timeouts
-        and spec.rows_per_match == "one"
-        and _positional_delta(spec, counts) is not None
-        and not spec.nav_cols
-        and not spec.subsets  # SUBSET vars resolve only in the NFA tier
-        and all(m.fn in ("first", "last", "count") for m in spec.measures)
-    )
-
-
-def match_pattern_fast_positional(df: DataFrame, spec: PatternSpec) -> DataFrame:
-    """Closed form for the dense fixed-length shape, provable from the
-    NFA semantics (operators/nfa.py): with all-true predicates every
-    per-key position r (0-based, (order, tiebreak) rank) starts a
-    candidate match spanning rows ``[r, r + L)`` where ``L = sum of
-    the fixed variable widths``; the one-match-per-run resumption makes
-    the accepted starts exactly ``r ≡ 0 (mod delta)`` with ``delta``
-    the skip stride (SKIP PAST LAST → L, SKIP TO NEXT → 1, SKIP TO
-    FIRST/LAST v → v's first/last row offset — e.g. ``A B{2} C SKIP TO
-    LAST B`` resumes at the penultimate row, starts 0, 2, 4, ...).
-    Variable v's rows sit at constant offsets ``[start_v, start_v +
-    count_v)``, so first/last measures are ``lead(src, offset)`` and
-    count measures are literals. One window over one hash Exchange on
-    the key, zero Python — the same row-ordinal algebra as the DuckDB
-    oracle (queries/cep.py ORACLE_SKIP_TO_LAST); the NFA tier is the
-    differential-tested fallback for everything non-dense."""
-    if not fast_positional_applicable(spec):
-        raise ValueError("pattern not eligible for the positional fast path")
-    spec.validate()
-    counts = _fixed_counts(spec)
-    delta = _positional_delta(spec, counts)
-    total = sum(counts)
-    starts = {
-        v.name: sum(counts[:i]) for i, v in enumerate(spec.variables)
-    }
-    widths = {v.name: counts[i] for i, v in enumerate(spec.variables)}
-    keys = list(spec.key_cols)
-
-    srcs = sorted(
-        {m.src for m in spec.measures if m.fn != "count"} - set(keys)
-    )
-    base = df.select(
-        *keys,
-        F.unix_micros(F.col(spec.order_col).cast(T.TimestampType())).alias("__ts"),
-        F.col(spec.tiebreak_col).alias("__tb"),
-        *srcs,
-    )
-    w_ord = Window.partitionBy(*keys).orderBy(*scan_order("__ts", "__tb"))
-
-    def measure(m: Measure):
-        if m.fn == "count":
-            return F.lit(widths[m.var]).cast("long")
-        off = starts[m.var]
-        if m.fn == "last":
-            off += widths[m.var] - 1
-        return F.col(m.src) if off == 0 else F.lead(m.src, off).over(w_ord)
-
-    r0 = F.row_number().over(w_ord) - 1
-    # the match fits iff the last row exists: lead of a non-null
-    # literal at offset L-1 — avoids a second count() window frame
-    fits = F.lead(F.lit(True), total - 1).over(w_ord).isNotNull()
-    out = (
-        base.withColumn("__r0", r0)
-        .withColumn("__fits", fits)
-        .withColumns({f"__m_{m.name}": measure(m) for m in spec.measures})
-        .filter((F.col("__r0") % F.lit(delta) == 0) & F.col("__fits"))
-        .select(
-            *keys,
-            *[F.col(f"__m_{m.name}").alias(m.name) for m in spec.measures],
-            F.lit(MATCH_TAG).alias("tag"),
-        )
-    )
-    target = output_schema(df, spec)
-    return out.select(
-        *[F.col(f.name).cast(f.dataType).alias(f.name) for f in target.fields]
-    )
-
-
-# ---------------------------------------------------------------------------
-# PERMUTE closed form: SQL:2016 PATTERN (PERMUTE (A, B, C)) under
-# AFTER MATCH SKIP TO NEXT ROW (round 4)
-# ---------------------------------------------------------------------------
-
-
-def check_permute(spec: PatternSpec) -> None:
-    """Raise unless batch PERMUTE serves ``spec``: no PREV/NEXT, SKIP
-    TO NEXT ROW (or NO_SKIP), ONE ROW PER MATCH without timeouts."""
-    if not spec.permute:
-        raise ValueError("spec is not a PERMUTE pattern")
-    if spec.nav_cols:
-        raise NotImplementedError("PREV/NEXT navigation with PERMUTE")
-    if spec.after_match not in (SKIP_TO_NEXT, NO_SKIP):
-        raise NotImplementedError(
-            "PERMUTE supports AFTER MATCH SKIP TO NEXT ROW only (other "
-            "resumption strategies need sequential selection over "
-            "non-dense candidates — NFA alternation, not implemented)"
-        )
-    if spec.emit_timeouts or spec.rows_per_match != "one":
-        raise NotImplementedError(
-            "PERMUTE supports ONE ROW PER MATCH without timeouts"
-        )
-
-
-def match_pattern_permute(df: DataFrame, spec: PatternSpec) -> DataFrame:
-    """``PERMUTE (V1, ..., Vk)`` = alternation over every ordering of
-    the k once-variables, preferred in lexicographic order of the
-    listed sequence (SQL:2016 expansion). Under ``SKIP TO NEXT ROW``
-    (or NO_SKIP — identical here: at most one match binding per start
-    row, the preferred one) every start row is tried independently, so
-    the operator is a pure window closed form:
-
-    - candidate at per-key position r ⇔ some ordering σ has
-      ``pred_{σ(i)}(row r+i)`` for all i < k — k² boolean ``lead``
-      columns, one per (variable, offset), OR-of-ANDs over the k!
-      orderings (k ≤ 4, enforced by validate());
-    - the BINDING is the lexicographically-first matching ordering
-      (a CASE chain in the same preference order), which fixes each
-      variable's row offset for the measures (``lead(src, offset)``);
-    - ``within`` bounds the window span: ``ts[r+k-1] − ts[r] <
-      within`` (strict, matching the NFA's deadline convention).
-
-    One hash Exchange on the key, zero Python. This closed form is the
-    batch PERMUTE implementation (the tier table lists it with the
-    reference operators); correctness is pinned by the DuckDB oracle
-    (an independent derivation of the same algebra) and
-    preference-order unit tests."""
-    from itertools import permutations
-
-    check_permute(spec)
-    spec.validate()
-    k = len(spec.variables)
-    keys = list(spec.key_cols)
-    within_us = (
-        int(spec.within.total_seconds() * 1_000_000)
-        if spec.within is not None
-        else None
-    )
-    srcs = sorted(
-        {m.src for m in spec.measures if m.fn != "count"} - set(keys)
-    )
-    base = df.select(
-        *keys,
-        F.unix_micros(F.col(spec.order_col).cast(T.TimestampType())).alias("__ts"),
-        F.col(spec.tiebreak_col).alias("__tb"),
-        *[
-            F.expr(v.predicate).alias(f"__p{j}")
-            for j, v in enumerate(spec.variables)
-        ],
-        *srcs,
-    )
-    w_ord = Window.partitionBy(*keys).orderBy(*scan_order("__ts", "__tb"))
-
-    def at(col: str, off: int):
-        return F.col(col) if off == 0 else F.lead(col, off).over(w_ord)
-
-    # k × k grid: variable j's predicate evaluated at row offset i
-    grid = {
-        (j, i): at(f"__p{j}", i) for j in range(k) for i in range(k)
-    }
-    orderings = list(permutations(range(k)))  # lexicographic by construction
-
-    def seq_cond(seq):
-        cond = F.lit(True)
-        for i, j in enumerate(seq):
-            cond = cond & F.coalesce(grid[(j, i)], F.lit(False))
-        return cond
-
-    # the window fits iff its last row exists (a non-null literal's lead)
-    fits = F.lead(F.lit(True), k - 1).over(w_ord).isNotNull()
-    span_ok = (
-        F.lit(True)
-        if within_us is None
-        else (at("__ts", k - 1) - F.col("__ts")) < F.lit(within_us)
-    )
-    conds = [seq_cond(seq) for seq in orderings]
-    any_match = conds[0]
-    for c in conds[1:]:
-        any_match = any_match | c
-
-    def measure(m: Measure):
-        if m.fn == "count":
-            return F.lit(1).cast("long")
-        j = spec.var_index(m.var)
-        expr = F.lit(None)
-        # first matching ordering in preference order binds the vars
-        for seq, cond in zip(reversed(orderings), reversed(conds)):
-            expr = F.when(cond, at(m.src, seq.index(j))).otherwise(expr)
-        return expr
-
-    out = (
-        base.withColumn("__keep", fits & span_ok & any_match)
-        .withColumns({f"__m_{m.name}": measure(m) for m in spec.measures})
-        .filter(F.col("__keep"))
-        .select(
-            *keys,
-            *[F.col(f"__m_{m.name}").alias(m.name) for m in spec.measures],
-            F.lit(MATCH_TAG).alias("tag"),
-        )
-    )
-    target = output_schema(df, spec)
-    return out.select(
-        *[F.col(f.name).cast(f.dataType).alias(f.name) for f in target.fields]
-    )
-
-
-# ---------------------------------------------------------------------------
-# Alternation closed form: top-level PATTERN (P1 | P2 | ...) with
-# fixed-width branches under AFTER MATCH SKIP TO NEXT ROW (round 4)
-# ---------------------------------------------------------------------------
-
-
-def fast_alternation_applicable(aspec: AlternationSpec) -> bool:
-    """Closed-form-eligible alternation: every alternative is a
-    fixed-width strict sequence (ONCE / times(n, n) variables, no
-    negatives, no until) under SKIP TO NEXT ROW — then start rows
-    never interact (emission discards only same-start runs) and each
-    start row's preferred completion is pure lead() arithmetic. Other
-    strategies stay on the lockstep-NFA coordinator (PAST LAST ROW
-    makes starts sequentially dependent)."""
-    if aspec.after_match != SKIP_TO_NEXT:
-        return False
-    # SUBSET unions (incl. the parser's auto-generated group-copy
-    # unions) resolve at COMPILE time for fixed-width branches: the
-    # union's present components have constant offsets per branch, so
-    # FIRST = min start, LAST = max end, COUNT = summed widths — see
-    # the measure() builder below (round 5; previously coordinator-only)
-    for alt in aspec.alternatives:
-        if _fixed_counts(alt) is None:
-            return False
-        if any(
-            v.negated or v.until is not None for v in alt.variables
-        ):
-            return False
-        if any(v.contiguity != STRICT for v in alt.variables[1:]):
-            return False
-        if alt.nav_cols:
-            return False
-    # the closed form evaluates ONE within bound (alternatives[0].within)
-    # against every branch's span; a DSL-built alternation whose branches
-    # carry different (or partly missing) deadlines would silently get
-    # branch 0's deadline here while the lockstep coordinator honors each
-    # branch's own — route those to the coordinator instead
-    if len({alt.within for alt in aspec.alternatives}) != 1:
-        return False
-    if aspec.derivation == "leftmost" and any(
-        m.fn == "match_number" for m in aspec.measures
-    ):
-        # leftmost emission ORDER is held-resolution order (a start
-        # resolves when every earlier-listed branch dies) — not a
-        # simple window expression; MATCH_NUMBER stays on the
-        # coordinator there
-        return False
-    return all(
-        m.fn in ("first", "last", "count", "classifier", "match_number")
-        for m in aspec.measures
-    )
-
-
-def match_pattern_alternation_fast(
-    df: DataFrame, aspec: AlternationSpec
-) -> DataFrame:
-    """Closed form for fixed-width alternation under SKIP TO NEXT ROW,
-    provable from the coordinator semantics
-    (operators/nfa.py::scan_key_group_alternation):
-
-    - branch b (total width L_b) starting at per-key position r
-      completes at row r + L_b - 1 iff every variable's predicate
-      holds at its fixed offsets — AND of lead() booleans;
-    - emission is eager, so the branch with the SMALLEST completion
-      row wins the start; ties prefer the leftmost alternative —
-      i.e. the winner is min by (L_b, b) among satisfied branches
-      (a CASE chain in that order);
-    - under SKIP TO NEXT ROW an emission discards only runs sharing
-      its start row, so every start row decides independently — no
-      sequential dependency, pure window algebra;
-    - ``within`` bounds each branch's span: ts[r+L_b-1] − ts[r] <
-      within (strict, the NFA's deadline convention);
-    - MATCH_NUMBER() is a second row_number over the emitted rows.
-
-    One hash Exchange on the key, zero Python; differential-tested
-    against the lockstep-NFA coordinator on seeded random streams."""
-    if not fast_alternation_applicable(aspec):
-        raise ValueError("alternation not eligible for the fast path")
-    aspec.validate()
-    alts = aspec.alternatives
-    keys = list(aspec.key_cols)
-    within_us = (
-        int(alts[0].within.total_seconds() * 1_000_000)
-        if alts[0].within is not None
-        else None
-    )
-
-    # evaluate each distinct predicate once, vectorized pre-window
-    pred_col: dict[str, str] = {}
-    for alt in alts:
-        for v in alt.variables:
-            pred_col.setdefault(v.predicate, f"__ap{len(pred_col)}")
-    srcs = sorted(
-        {m.src for m in aspec.measures if m.fn in ("first", "last")}
-        - set(keys)
-    )
-    base = df.select(
-        *keys,
-        F.unix_micros(
-            F.col(aspec.order_col).cast(T.TimestampType())
-        ).alias("__ts"),
-        F.col(aspec.tiebreak_col).alias("__tb"),
-        *srcs,
-        *[F.expr(e).alias(n) for e, n in pred_col.items()],
-    )
-    w = Window.partitionBy(*keys).orderBy(*scan_order("__ts", "__tb"))
-
-    def at(col: str, off: int):
-        return F.col(col) if off == 0 else F.lead(col, off).over(w)
-
-    # per-branch geometry + candidate boolean
-    lengths: list[int] = []
-    offsets: list[dict[str, tuple[int, int]]] = []  # var -> (start, width)
-    cands = []
-    for alt in alts:
-        counts = _fixed_counts(alt)
-        L = sum(counts)
-        lengths.append(L)
-        offs = {}
-        cand = F.lit(True)
-        pos = 0
-        for v, c in zip(alt.variables, counts):
-            offs[v.name] = (pos, c)
-            for o in range(pos, pos + c):
-                cand = cand & at(pred_col[v.predicate], o)
-            pos += c
-        if within_us is not None and L > 1:
-            cand = cand & (
-                at("__ts", L - 1) - F.col("__ts") < F.lit(within_us)
-            )
-        offsets.append(offs)
-        cands.append(F.coalesce(cand, F.lit(False)))
-
-    # preference among satisfied branches at one start row:
-    # eager — smallest completion row, then leftmost alternative;
-    # leftmost (SQL:2016 derivation order) — list order alone: the
-    # earliest-listed branch that completes wins the start regardless
-    # of completion row (under SKIP TO NEXT ROW starts are
-    # independent, so "held until earlier branches die" reduces to
-    # exactly this per-start winner)
-    if aspec.derivation == "leftmost":
-        pref = list(range(len(alts)))
-    else:
-        pref = sorted(range(len(alts)), key=lambda b: (lengths[b], b))
-    winner = F.lit(None).cast("int")
-    for b in reversed(pref):
-        winner = F.when(cands[b], F.lit(b)).otherwise(winner)
-
-    subset_map = dict(aspec.subsets)
-
-    def _span(offs: dict, var: str) -> tuple[int, int, int] | None:
-        """(first_off, last_off, n_rows) of a variable OR subset union
-        in one fixed-width branch; None when absent from the branch."""
-        comps = subset_map.get(var, (var,))
-        present = [offs[c] for c in comps if c in offs]
-        if not present:
-            return None
-        first = min(s for s, _ in present)
-        last = max(s + w - 1 for s, w in present)
-        return first, last, sum(w for _, w in present)
-
-    def measure(m: Measure):
-        if m.fn == "match_number":
-            return None  # second window after the filter (below)
-        val = F.lit(None)
-        for b in reversed(pref):
-            offs = offsets[b]
-            if m.fn == "classifier":
-                last_var = max(
-                    offs.items(), key=lambda kv: kv[1][0] + kv[1][1]
-                )[0]
-                bval = F.lit(last_var)
-            else:
-                span = _span(offs, m.var)
-                if span is None:
-                    bval = (
-                        F.lit(0).cast("long")
-                        if m.fn == "count"
-                        else F.lit(None)
-                    )
-                elif m.fn == "count":
-                    bval = F.lit(span[2]).cast("long")
-                else:
-                    off = span[0] if m.fn == "first" else span[1]
-                    bval = at(m.src, off)
-            val = F.when(F.col("__b") == b, bval).otherwise(val)
-        return val
-
-    mcols = {
-        f"__m_{m.name}": measure(m)
-        for m in aspec.measures
-        if m.fn != "match_number"
-    }
-    # measure leads MUST be evaluated before the filter — a lead over
-    # the filtered rows would read the next MATCH, not the next row
-    out = (
-        base.withColumn("__r0", F.row_number().over(w) - 1)
-        .withColumn("__b", winner)
-        .withColumns(mcols)
-        .filter(F.col("__b").isNotNull())
-    )
-    for m in aspec.measures:
-        if m.fn == "match_number":
-            # numbered by start row, as the NFA and the stream number
-            out = out.withColumn(
-                f"__m_{m.name}",
-                F.row_number()
-                .over(Window.partitionBy(*keys).orderBy("__r0"))
-                .cast("long"),
-            )
-    out = out.select(
-        *keys,
-        *[F.col(f"__m_{m.name}").alias(m.name) for m in aspec.measures],
-    )
-    from flink_cep_examples_spark.operators.cep_batch import (
-        _measure_field,
-    )
-
-    # schema-identical to the NFA operator's alternation output (no
-    # tag column — alternation has no timeout channel)
-    fields = [
-        T.StructField(k, df.schema[k].dataType, True) for k in keys
-    ] + [_measure_field(df, m) for m in aspec.measures]
-    return out.select(
-        *[F.col(f.name).cast(f.dataType).alias(f.name) for f in fields]
-    )
-
-
-# ---------------------------------------------------------------------------
 # Trailing-loop-group LONGEST derivation — (P1 .. Ps (X1 .. XL)+)
 # ---------------------------------------------------------------------------
 
 
 def fast_loop_chain_applicable(spec) -> bool:
-    """True when the pattern is an unbounded loop group under SQL:2016
-    LONGEST derivation that the vectorized chain kernel can compile:
-    ``PATTERN (P1 .. Ps (X1 .. XL)+ S1 .. Sf)`` — a (possibly empty)
-    prefix and a (possibly empty, round 7.2) SUFFIX of exactly-once
-    strict variables around one loop group (``{n,}`` parses to this
-    shape: n-1 unrolled prefix copies + a ``+`` group —
+    """The pattern shape of the loop-chain ALL ROWS kernel
+    (:func:`fast_loop_chain_all_rows_applicable` calls it on the spec's
+    ONE ROW form): an unbounded loop group under SQL:2016 LONGEST
+    derivation, ``PATTERN (P1 .. Ps (X1 .. XL)+ S1 .. Sf)`` — a
+    (possibly empty) prefix and suffix of exactly-once strict variables
+    around one loop group (``{n,}`` parses to this shape: n-1 unrolled
+    prefix copies + a ``+`` group —
     sql/match_recognize.py::_expand_group_quantifiers).
 
     With every variable exactly-once and strict contiguity, a k-
@@ -665,15 +146,8 @@ def fast_loop_chain_applicable(spec) -> bool:
     (operators/nfa.py::_resolve_helds) reduces to row arithmetic:
     maximal stride-L run of valid body chunks (f = 0), or
     backtracking-greedy against the suffix anchor (f ≥ 1,
-    :func:`_strided_chain_suffix`). See
-    :func:`match_pattern_fast_loop_chain`.
-
-    ``WITHIN`` deadlines compile too (round 8): the deadline is one
-    more vectorized per-start iteration cap
-    (:func:`_segment_deadline_limit`), so the realistic production
-    shape — grouped pattern + ``WITHIN INTERVAL`` clause, the
-    reference's defining modifier (FlinkSqlMatchRecognizeExample
-    .scala:62) — no longer falls back to the per-key NFA tier.
+    :func:`_strided_chain_suffix`), with a ``WITHIN`` deadline as one
+    more per-start iteration cap (:func:`_segment_deadline_limit`).
     """
     if not isinstance(spec, PatternSpec) or spec.derivation != "longest":
         return False
@@ -684,10 +158,7 @@ def fast_loop_chain_applicable(spec) -> bool:
     lb = getattr(spec, "loop_branches", ())
     if lb:
         # multi-branch group (A B | C D)+ (round 8): EQUAL-width
-        # branches keep a fixed row stride — the kernel ORs the
-        # per-branch chunk validity and assigns each chunk its
-        # leftmost valid branch (= the NFA's held preference). Mixed
-        # widths have no fixed stride — NFA tier.
+        # branches keep a fixed row stride; mixed widths have none
         if len({e - b_s + 1 for b_s, e in lb}) != 1:
             return False
     if spec.after_match not in (SKIP_PAST_LAST_EVENT, SKIP_TO_NEXT, NO_SKIP):
@@ -708,84 +179,12 @@ def fast_loop_chain_applicable(spec) -> bool:
             continue
         if m.fn not in ("first", "last", "count") + AGG_FNS:
             return False
-        # aggregates (round 11): prefix/suffix vars are single-row
-        # gathers, single-body loop vars slice their stride-L rows, and
-        # BRANCH-group vars select by their own predicate — exact only
-        # under pairwise-disjoint group predicates, which the
-        # DISPATCHER verifies on the data (fast_group_preds_disjoint)
-        # before routing here; a direct caller takes that
-        # responsibility
+        # aggregates: prefix/suffix vars are single rows, single-body
+        # loop vars their stride-L rows
         comps = subset_map.get(m.var, (m.var,))
         if not all(c in names for c in comps):
             return False
     return True
-
-
-def loop_chain_agg_needs_disjoint(spec) -> bool:
-    """True when the chain kernel's aggregate path selects rows by
-    PREDICATE (a multi-branch group var is aggregated), so the
-    dispatcher must verify group-predicate disjointness on the data
-    first. Single-body loop groups slice positionally — no check."""
-    lb = getattr(spec, "loop_branches", ())
-    if not lb:
-        return False
-    gs, ge = spec.loop_groups[0]
-    var_pos = {v.name: i for i, v in enumerate(spec.variables)}
-    subset_map = dict(spec.subsets)
-    return any(
-        m.fn in AGG_FNS
-        and any(
-            gs <= var_pos.get(c, -1) <= ge
-            for c in subset_map.get(m.var, (m.var,))
-        )
-        for m in spec.measures
-    )
-
-
-def fast_group_preds_disjoint(df: DataFrame, spec) -> bool:
-    """Data-verified pairwise disjointness of the loop-group
-    variables' predicates — the fact that makes predicate-selected
-    aggregate rows equal the NFA's classify row sets (and the NFA's
-    own runtime ambiguity reject unreachable). One column-pruned limit-1
-    job, memoized per live-session object + analyzed-plan hash + input
-    file stamps + predicates: the plan hash does not see files appended
-    under the same path, the stamps do. NULL predicate values count as
-    False."""
-    gs, ge = spec.loop_groups[0]
-    preds = tuple(v.predicate for v in spec.variables[gs : ge + 1])
-    sess = df.sparkSession
-    key = None
-    try:  # classic PySpark only; any failure just skips the memo
-        plan_hash = df._jdf.queryExecution().analyzed().semanticHash()
-        stamps = _input_stamps(df)
-        if stamps is not None:
-            key = (plan_hash, stamps, preds)
-    except Exception:  # noqa: BLE001
-        pass
-    if key is not None:
-        try:
-            per_sess = _DISJOINT_MEMO.get(sess)
-        except TypeError:  # session not weakref-able (ADVICE r12 low):
-            per_sess = None  # WeakKeyDictionary.get calls ref(key)
-        if per_sess is not None and key in per_sess:
-            return per_sess[key]
-    flags = [
-        F.coalesce(F.expr(p).cast("boolean"), F.lit(False)).cast("int")
-        for p in preds
-    ]
-    total = flags[0]
-    for fl in flags[1:]:
-        total = total + fl
-    ok = df.where(total > 1).isEmpty()
-    if key is not None:
-        try:
-            per_sess = _DISJOINT_MEMO.setdefault(sess, {})
-        except TypeError:  # session not weakref-able: skip the memo
-            return ok
-        if len(per_sess) >= 256:
-            per_sess.clear()
-        per_sess[key] = ok
-    return ok
 
 
 def _strided_chain(body_ok, seg_id, pos_in_seg, L: int):
@@ -1052,315 +451,6 @@ def _chain_scan_starts(
     return starts, k_at[starts], seg_id, chunk_grp, branch_at
 
 
-def match_pattern_fast_loop_chain(
-    df: DataFrame, spec: PatternSpec, *, min_iter: int = 1
-) -> DataFrame:
-    """Vectorized chain kernel for trailing-loop-group LONGEST
-    derivation (the ``cep_group_longest_chain`` shape, round 7 —
-    closes round 6's one perf-weak item: the NFA tier holds per-start
-    completions in a per-row Python loop; this kernel is one numpy
-    pass per PARTITION, with no per-key-group Python at all).
-
-    Derivation (from the NFA semantics, operators/nfa.py):
-
-    - body chunk validity ``ok(t) = ∧_j pred[s+j](t+j)`` — one shifted
-      AND per body variable, masked where the chunk would cross a key
-      segment boundary;
-    - maximal stride-L chains per (segment, t mod L) residue class —
-      :func:`_strided_chain`, one lexsort + one accumulate;
-    - a match at start r = prefix rows ok at r..r+s-1, then
-      k = chain(r+s) ≥ 1 iterations, span r .. r+s+kL-1 (longest: the
-      held resolution keeps the most-iterations completion);
-    - AFTER MATCH SKIP PAST LAST ROW selects starts greedily in start
-      order, one ``searchsorted`` per MATCH — a match's span never
-      crosses its segment, so one pass serves every key in the
-      partition; SKIP TO NEXT ROW / NO SKIP emit every valid start.
-
-    Why partition-level: at sf0.1 the events table has ~67 rows/key —
-    per-key-group pandas dispatch (sort, slice, frame build) dominates
-    runtime at that group size (the round-6 NFA tier measured 3.95×
-    at 10× for exactly this reason). Here the sort happens JVM-side
-    (``sortWithinPartitions``), Python sees each partition once, and
-    key boundaries are just another vectorized mask. Spark staging
-    is otherwise the NFA tier's: predicates vectorized pre-shuffle
-    (cep_batch._prepare), ONE hash Exchange on the keys. Differential-
-    tested against the NFA tier (tests/test_fast_loop_chain.py).
-    """
-    import numpy as np
-    import pandas as pd
-
-    from flink_cep_examples_spark.operators.cep_batch import (
-        _needs_src,
-        _null_safe_agg_cast,
-        _prepare,
-        _PRED_PREFIX,
-        _TS_COL,
-    )
-
-    spec.validate()
-    if not fast_loop_chain_applicable(spec):
-        raise ValueError("pattern shape not compilable by the chain kernel")
-
-    gs, ge = spec.loop_groups[0]
-    s = gs  # prefix length
-    branches = getattr(spec, "loop_branches", ())
-    if branches:
-        # equal-width multi-branch group (A B | C D)+ (round 8): the
-        # ROW stride is one branch's width, not the group's spec width
-        L = branches[0][1] - branches[0][0] + 1
-        branch_starts = [bs for bs, _ in branches]
-    else:
-        L = ge - gs + 1  # body length
-        branch_starts = None
-    f = len(spec.variables) - ge - 1  # suffix length (round 7.2)
-    n_vars = len(spec.variables)
-    within_us = (
-        int(spec.within.total_seconds() * 1_000_000)
-        if spec.within is not None
-        else None
-    )
-    if min_iter not in (0, 1):
-        raise ValueError("min_iter must be 0 (star) or 1 (plus)")
-    if min_iter == 0 and f == 0:
-        # an empty-loop match with no suffix would be an empty match
-        raise ValueError("min_iter=0 requires a suffix after the group")
-    prepared = _prepare(df, spec)
-    out_schema = output_schema(df, spec)
-    key_cols = list(spec.key_cols)
-    tiebreak = spec.tiebreak_col
-    measure_list = list(spec.measures)
-    subset_map = dict(spec.subsets)
-    var_pos = {v.name: i for i, v in enumerate(spec.variables)}
-    last_var_name = spec.variables[-1].name
-    past_last = spec.after_match == SKIP_PAST_LAST_EVENT
-    out_names = [f.name for f in out_schema.fields]
-
-    # sort JVM-side; the kernel never sorts in Python
-    sorted_p = sort_by_key(prepared, key_cols, [_TS_COL, tiebreak])
-
-    def scan_partition(batches):
-        chunks = [c for c in batches if len(c)]
-        if not chunks:
-            return
-        pdf = (
-            pd.concat(chunks, ignore_index=True)
-            if len(chunks) > 1
-            else chunks[0]
-        )
-        scanned = _chain_scan_starts(
-            pdf, key_cols, n_vars, s, L, f, ge, min_iter, past_last,
-            within_us=within_us, branch_starts=branch_starts,
-        )
-        if scanned is None:
-            return
-        starts, k, seg_id, chunk_grp, branch_at = scanned
-        n = len(pdf)  # NULL sentinel for the masked measure gathers
-        if branch_starts is not None:
-            # per-branch sorted (grp, row) keys of valid chunk
-            # positions: a match's chunks all share ONE grp class
-            # (same segment, same residue), so its branch-b chunk
-            # count / first / last resolve with two batched
-            # searchsorted calls per branch
-            enc_by_branch = []
-            for b in range(len(branch_starts)):
-                rows_b = np.flatnonzero(branch_at == b)
-                enc_by_branch.append(
-                    np.sort(chunk_grp[rows_b] * np.int64(n) + rows_b)
-                )
-            first_chunk = starts + s
-            gkey = chunk_grp[first_chunk] * np.int64(n)
-            lo_key = gkey + first_chunk
-            hi_key = gkey + first_chunk + (k - 1) * L
-        out_cols: dict[str, object] = {}
-        for kc in key_cols:
-            out_cols[kc] = pdf[kc].to_numpy()[starts]
-        src_arrays = {
-            m.src: pdf[m.src].to_numpy()
-            for m in measure_list
-            if _needs_src(m)
-        }
-
-        def var_rows(v: str):
-            """(first_idx, last_idx, count) arrays for one variable.
-            Loop vars with k = 0 (star) report count 0; their index
-            arrays are then meaningless and masked by the caller
-            (same for multi-branch vars whose branch matched no
-            iteration of a given match)."""
-            i = var_pos[v]
-            if i < s:
-                r = starts + i
-                return r, r, np.ones(len(starts), dtype=np.int64)
-            if i > ge:  # suffix var: one row after the k iterations
-                r = starts + s + k * L + (i - ge - 1)
-                return r, r, np.ones(len(starts), dtype=np.int64)
-            if branch_starts is not None:
-                # branch var: count / first / last of its branch's
-                # chunks inside the match's (grp, row-range) window —
-                # two batched searchsorted calls
-                b, j = divmod(i - gs, L)
-                enc = enc_by_branch[b]
-                if not len(enc):
-                    return (
-                        np.full(len(starts), n, dtype=np.int64),
-                        np.full(len(starts), -1, dtype=np.int64),
-                        np.zeros(len(starts), dtype=np.int64),
-                    )
-                iL = np.searchsorted(enc, lo_key, "left")
-                iR = np.searchsorted(enc, hi_key, "right")
-                cnt = iR - iL
-                first = enc[np.minimum(iL, len(enc) - 1)] - gkey + j
-                last = enc[np.maximum(iR - 1, 0)] - gkey + j
-                return first, last, cnt
-            first = starts + i
-            last = starts + s + (k - 1) * L + (i - s)
-            return first, last, k
-
-        agg_ms = [m for m in measure_list if m.fn in AGG_FNS]
-        if agg_ms:
-            # FINAL aggregates (round 11, closing the 4x-at-10x NFA
-            # bound this shape measured): per-match reductions with
-            # the SAME pandas ops the NFA evaluator uses, so the tiers
-            # agree to the bit. Row sets: prefix/suffix vars are the
-            # single positional row; single-body loop vars slice their
-            # stride-L progression; BRANCH-group vars select the body
-            # rows satisfying their own predicate — exact because the
-            # dispatcher verified group-predicate disjointness on the
-            # data (fast_group_preds_disjoint), which also makes the
-            # NFA's runtime ambiguity reject unreachable here.
-            need_branch_preds = branch_starts is not None and any(
-                gs <= var_pos.get(c, -1) <= ge
-                for m in agg_ms
-                for c in subset_map.get(m.var, (m.var,))
-            )
-            if need_branch_preds:
-                gpreds = {
-                    i: pdf[f"{_PRED_PREFIX}{i}"].to_numpy(dtype=bool)
-                    for i in range(gs, ge + 1)
-                }
-
-            def _agg_values(m) -> list:
-                src = src_arrays[m.src]
-                comps = subset_map.get(m.var, (m.var,))
-                vals: list = []
-                for t in range(len(starts)):
-                    lo = int(starts[t])
-                    kt = int(k[t])
-                    body_lo = lo + s
-                    body_hi = body_lo + kt * L  # exclusive
-                    rows_list = []
-                    for c in comps:
-                        i = var_pos[c]
-                        if i < s:
-                            rows_list.append(
-                                np.array([lo + i], dtype=np.int64)
-                            )
-                        elif i > ge:
-                            rows_list.append(
-                                np.array(
-                                    [body_hi + (i - ge - 1)],
-                                    dtype=np.int64,
-                                )
-                            )
-                        elif kt == 0:
-                            continue  # empty star loop: no rows
-                        elif branch_starts is not None:
-                            span = np.arange(body_lo, body_hi)
-                            rows_list.append(span[gpreds[i][span]])
-                        else:
-                            rows_list.append(
-                                np.arange(
-                                    body_lo + (i - gs), body_hi, L
-                                )
-                            )
-                    rows = (
-                        np.concatenate(rows_list)
-                        if rows_list
-                        else np.empty(0, dtype=np.int64)
-                    )
-                    vals.append(_final_agg_reduce(m.fn, src[rows]))
-                return vals
-
-        # per-key 1-based MATCH_NUMBER (starts are in row order, so
-        # per-segment order is start order)
-        if any(m.fn == "match_number" for m in measure_list):
-            segs = seg_id[starts]
-            new_s = np.empty(len(starts), dtype=bool)
-            new_s[0] = True
-            new_s[1:] = segs[1:] != segs[:-1]
-            first_idx = np.maximum.accumulate(
-                np.where(new_s, np.arange(len(starts)), 0)
-            )
-            mn = np.arange(len(starts)) - first_idx + 1
-        for m in measure_list:
-            if m.fn == "match_number":
-                out_cols[m.name] = mn
-                continue
-            if m.fn == "classifier":
-                if branch_starts is not None and f == 0:
-                    # the match's last row belongs to the FINAL
-                    # iteration's branch
-                    b_last = branch_at[starts + s + (k - 1) * L]
-                    end_names = np.array(
-                        [
-                            spec.variables[bs + L - 1].name
-                            for bs in branch_starts
-                        ],
-                        dtype=object,
-                    )
-                    out_cols[m.name] = end_names[b_last]
-                else:
-                    out_cols[m.name] = np.repeat(
-                        last_var_name, len(starts)
-                    )
-                continue
-            if m.fn in AGG_FNS:
-                out_cols[m.name] = _agg_values(m)
-                continue
-            comps = subset_map.get(m.var, (m.var,))
-            firsts, lasts, counts = zip(*(var_rows(c) for c in comps))
-            if m.fn == "count":
-                total = counts[0].copy()
-                for cc in counts[1:]:
-                    total = total + cc
-                out_cols[m.name] = total
-            elif m.fn == "first":
-                # components with count 0 (k=0 loop vars) hold no rows:
-                # mask them out of the min; all-empty → NULL (a pandas
-                # Series masked with None keeps the dtype's null — NaT
-                # for datetime64 — across the Arrow boundary)
-                fi = np.where(counts[0] > 0, firsts[0], n)
-                for f2, c2 in zip(firsts[1:], counts[1:]):
-                    fi = np.minimum(fi, np.where(c2 > 0, f2, n))
-                has = fi < n
-                if has.all():
-                    out_cols[m.name] = src_arrays[m.src][fi]
-                else:
-                    ser = pd.Series(
-                        src_arrays[m.src][np.where(has, fi, 0)]
-                    )
-                    ser[~has] = None
-                    out_cols[m.name] = ser.to_numpy()
-            else:  # last
-                la = np.where(counts[0] > 0, lasts[0], -1)
-                for l2, c2 in zip(lasts[1:], counts[1:]):
-                    la = np.maximum(la, np.where(c2 > 0, l2, -1))
-                has = la >= 0
-                if has.all():
-                    out_cols[m.name] = src_arrays[m.src][la]
-                else:
-                    ser = pd.Series(
-                        src_arrays[m.src][np.where(has, la, 0)]
-                    )
-                    ser[~has] = None
-                    out_cols[m.name] = ser.to_numpy()
-        out_cols["tag"] = np.repeat(MATCH_TAG, len(starts))
-        out = pd.DataFrame(out_cols, columns=out_names)
-        _null_safe_agg_cast(out, measure_list, out_schema)
-        yield out
-
-    return sorted_p.mapInPandas(scan_partition, out_schema)
-
-
 def fast_loop_chain_all_rows_applicable(spec, df=None) -> bool:
     """ALL ROWS PER MATCH variant of :func:`fast_loop_chain_applicable`
     (round 7.2): same pattern shapes, per-row emission. ``{- var -}``
@@ -1368,10 +458,9 @@ def fast_loop_chain_all_rows_applicable(spec, df=None) -> bool:
     (round 8) compile too for single-variable targets — per-row counts
     are offset arithmetic, sums are one segmented cumsum over the
     expanded rows. Round 12: RUNNING MIN/MAX compile as segmented
-    extrema (per-match cummax/cummin) when the source column is a
-    plain numeric type (the float64 path — pass ``df`` so the dtype
-    is checkable; decimals/objects keep the NFA tier's exact pandas
-    reductions). RUNNING over SUBSET unions stays on the NFA tier."""
+    extrema (per-match cummax/cummin) when the source column is
+    integral (:data:`_INTEGRAL`; pass ``df`` so the dtype is
+    checkable). RUNNING over SUBSET unions stays on the NFA tier."""
     import dataclasses
 
     if not isinstance(spec, PatternSpec):
@@ -1379,16 +468,12 @@ def fast_loop_chain_all_rows_applicable(spec, df=None) -> bool:
     if spec.rows_per_match != "all":
         return False
     subset_names = {name for name, _ in spec.subsets}
-    numeric = (
-        T.ByteType, T.ShortType, T.IntegerType, T.LongType,
-        T.FloatType, T.DoubleType,
-    )
 
     def _numeric_src(m) -> bool:
         if df is None:
             return False  # dtype unknowable: NFA tier
         try:
-            return isinstance(df.schema[m.src].dataType, numeric)
+            return isinstance(df.schema[m.src].dataType, _INTEGRAL)
         except KeyError:
             return False
 
@@ -1409,10 +494,10 @@ def fast_loop_chain_all_rows_applicable(spec, df=None) -> bool:
             continue  # non-null counts: dtype-free segmented cumsum
         if m.fn in ("sum", "avg", "min", "max"):
             # the float64 segmented-cumsum/extrema path (round 12
-            # extends it to SUBSET unions): require a plain numeric
+            # extends it to SUBSET unions): require an integral
             # source — decimal/object aggregation keeps the NFA
-            # tier's exact pandas reductions (previously a decimal
-            # RUNNING SUM would have been silently folded in float64)
+            # tier's exact reductions (previously a decimal RUNNING
+            # SUM would have been silently folded in float64)
             if not _numeric_src(m):
                 return False
             continue
@@ -1792,86 +877,6 @@ def match_pattern_fast_loop_chain_all_rows(
     return sorted_p.mapInPandas(scan_partition, out_schema)
 
 
-def fast_star_chain_applicable(aspec) -> bool:
-    """True when an AlternationSpec is a compiled GREEDY STAR —
-    ``PATTERN (P1..Ps (X1..XL)* S1..Sf)`` parses to [loop branch,
-    absent branch] under leftmost coordination (sql/match_recognize.py
-    ::_parse_var_seq) — and the loop branch is chain-kernel compilable
-    with the suffix extension. Leftmost preference of the loop branch
-    plus held-longest within it (operators/nfa.py greedy_loops) equals
-    "max feasible iterations, k = 0 only when no k ≥ 1 completes" —
-    exactly the kernel's backtracking-greedy count
-    (:func:`_strided_chain_suffix`), so the whole alternation compiles
-    to ONE kernel pass with min_iter=0. Requires a non-empty suffix
-    (an empty-loop completion must consume the suffix rows; a bare
-    trailing star would admit empty matches, which the engine — like
-    the standard — never emits)."""
-    import dataclasses
-
-    if not isinstance(aspec, AlternationSpec):
-        return False
-    if aspec.derivation != "leftmost" or len(aspec.alternatives) != 2:
-        return False
-    a0, a1 = aspec.alternatives
-    if len(a0.loop_groups) != 1 or a1.loop_groups:
-        return False
-    if getattr(a0, "loop_branches", ()) or getattr(a1, "loop_branches", ()):
-        return False
-    gs, ge = a0.loop_groups[0]
-    if len(a0.variables) - ge - 1 < 1:
-        return False
-    if not all(a0.variables[i].greedy for i in range(gs, ge + 1)):
-        return False
-    rest0 = [
-        (v.name, e)
-        for i, (v, e) in enumerate(zip(a0.variables, a0.pred_exprs))
-        if not gs <= i <= ge
-    ]
-    rest1 = [
-        (v.name, e) for v, e in zip(a1.variables, a1.pred_exprs)
-    ]
-    if rest0 != rest1:
-        return False
-    if a0.after_match != a1.after_match:
-        return False
-    synth = dataclasses.replace(
-        a0,
-        measures=aspec.measures,
-        subsets=aspec.subsets,
-        derivation="longest",
-    )
-    try:
-        synth.validate()
-    except (ValueError, NotImplementedError):
-        return False
-    if any(m.fn in AGG_FNS for m in aspec.measures):
-        # the star-chain emitter predates the chain kernel's round-11
-        # aggregate path — keep its routing unchanged (NFA coordinator)
-        return False
-    return fast_loop_chain_applicable(synth)
-
-
-def match_pattern_fast_star_chain(
-    df: DataFrame, aspec: AlternationSpec
-) -> DataFrame:
-    """Compile a greedy-star alternation onto the chain kernel
-    (min_iter=0 admits the absent branch as k = 0). Output contract is
-    the alternation coordinator's: same columns, no tag (alternation
-    has no timeout channel). Differential-tested against the
-    coordinator (tests/test_fast_loop_chain.py)."""
-    import dataclasses
-
-    if not fast_star_chain_applicable(aspec):
-        raise ValueError("alternation is not a chain-kernel star shape")
-    synth = dataclasses.replace(
-        aspec.alternatives[0],
-        measures=aspec.measures,
-        subsets=aspec.subsets,
-        derivation="longest",
-    )
-    return match_pattern_fast_loop_chain(df, synth, min_iter=0).drop("tag")
-
-
 def fast_group_absence_applicable(spec) -> bool:
     """True for the vectorizable timeout-channel loop-group shape
     (round 8): ``PATTERN ((X1 .. XL)+ S) WITHIN ...`` with
@@ -2150,44 +1155,6 @@ def match_pattern_fast_group_absence(
     return sorted_p.mapInPandas(scan_partition, out_schema)
 
 
-def _final_agg_reduce(fn: str, values):
-    """One FINAL aggregate over a numpy slice of a variable's rows —
-    numpy for numeric dtypes (NaN-skipping, matching the NFA
-    evaluator's pandas reductions bit-for-bit: pandas delegates to the
-    same numpy kernels), pandas for object dtypes (timestamps /
-    decimals with None holes). Returns the SQL value: COUNT(col) the
-    non-null count, any other aggregate over zero non-null rows NULL."""
-    import numpy as np
-    import pandas as pd
-
-    if values.dtype.kind == "f":
-        values = values[~np.isnan(values)]
-        nn = len(values)
-    elif values.dtype == object:
-        ser = pd.Series(values)
-        nn = int(ser.count())
-        if fn == "count_col":
-            return nn
-        if nn == 0:
-            return None
-        if fn == "sum":
-            return ser.sum()
-        if fn == "avg":
-            return float(ser.mean())
-        return ser.min() if fn == "min" else ser.max()
-    else:
-        nn = len(values)
-    if fn == "count_col":
-        return nn
-    if nn == 0:
-        return None
-    if fn == "sum":
-        return values.sum()
-    if fn == "avg":
-        return float(values.mean())
-    return values.min() if fn == "min" else values.max()
-
-
 def _chain_vars_measures_ok(
     spec, allow_agg: bool = False, allow_running: bool = False
 ) -> bool:
@@ -2236,868 +1203,6 @@ def _chain_vars_measures_ok(
         if not all(c in names for c in comps):
             return False
     return True
-
-
-def fast_nested_chain_applicable(spec) -> bool:
-    """True for the vectorizable NESTED-group shape (round 8):
-    ``PATTERN ((P1..Ps (X1..XL)+ S1..Sf)+)`` — an OUTER unbounded
-    group spanning the whole pattern whose body is exactly the
-    single-level chain-kernel shape (prefix + one inner unbounded
-    group + suffix, f ≥ 1 so iterations are delimited), under LONGEST
-    derivation, no timeouts, ONE ROW, AFTER MATCH SKIP PAST LAST ROW
-    (disjoint-predicate outer matches never overlap, so every maximal
-    unit chain emits; TO-NEXT/NO-SKIP would need per-start re-chains).
-    ``WITHIN`` composes (round 9): under disjoint predicates units are
-    rigid, so the deadline only truncates the outer unit COUNT —
-    handled in the head walk, see match_pattern_fast_nested_chain.
-
-    The kernel requires RUNTIME predicate disjointness (a row
-    satisfying two pattern variables lets the regex backtrack across
-    unit boundaries): each partition checks the pairwise pred
-    overlap and falls back to the per-segment NFA when any row
-    overlaps — same answers either way (differential-tested)."""
-    if not isinstance(spec, PatternSpec) or spec.derivation != "longest":
-        return False
-    if spec.permute or spec.emit_timeouts or spec.rows_per_match != "one":
-        return False
-    if getattr(spec, "loop_branches", ()):
-        return False
-    if spec.after_match != SKIP_PAST_LAST_EVENT:
-        return False
-    if len(spec.loop_groups) != 2:
-        return False
-    spans = sorted(spec.loop_groups)
-    n = len(spec.variables)
-    outer = (0, n - 1)
-    if outer not in spec.loop_groups:
-        return False
-    inner = spans[0] if spans[1] == outer else spans[1]
-    if inner == outer or inner[1] >= n - 1:
-        return False  # need >= 1 suffix var to delimit outer iterations
-    return _chain_vars_measures_ok(spec, allow_agg=True)
-
-
-def fast_nested_chain_all_rows_applicable(spec, df=None) -> bool:
-    """ALL ROWS PER MATCH on the two-level nested chain kernel (round
-    10): same shape constraints as the one-row form; per-row
-    CLASSIFIER comes from the variable predicates (the match span
-    tiles fully under disjointness). Round 12: RUNNING measures
-    compile as segmented per-match series over the expanded rows
-    (the islands-kernel motifs keyed by emission id; the NFA classify
-    path measured 4.8× at 10×) — SUM/AVG/MIN/MAX need a plain-numeric
-    source, so pass ``df`` for the dtype check."""
-    import dataclasses
-
-    if not isinstance(spec, PatternSpec) or spec.rows_per_match != "all":
-        return False
-    names = {v.name for v in spec.variables}
-    subset_map = dict(spec.subsets)
-    numeric = (
-        T.ByteType, T.ShortType, T.IntegerType, T.LongType,
-        T.FloatType, T.DoubleType,
-    )
-    for m in spec.measures:
-        if not m.running:
-            continue
-        if m.fn in NILADIC_FNS:
-            continue  # RUNNING CLASSIFIER = the row's own var
-        if m.fn not in (
-            "count", "count_col", "sum", "avg", "min", "max",
-            "first", "last",
-        ):
-            return False
-        if not all(
-            c in names for c in subset_map.get(m.var, (m.var,))
-        ):
-            return False
-        if m.fn in ("sum", "avg", "min", "max"):
-            if df is None:
-                return False  # dtype unknowable: NFA tier
-            try:
-                dt = df.schema[m.src].dataType
-            except KeyError:
-                return False
-            if not isinstance(dt, numeric):
-                return False
-    one = dataclasses.replace(
-        spec,
-        rows_per_match="one",
-        measures=tuple(m for m in spec.measures if not m.running),
-    )
-    return fast_nested_chain_applicable(one)
-
-
-def match_pattern_fast_nested_chain(
-    df: DataFrame, spec: PatternSpec, *, all_rows: bool = False
-) -> DataFrame:
-    """TWO-LEVEL chain kernel for nested unbounded groups (see
-    :func:`fast_nested_chain_applicable`). Derivation (from the NFA
-    semantics; with DISJOINT predicates each inner unit is the
-    greedy-maximal chunk chain plus its suffix, and an outer match is
-    the maximal run of ADJACENT units — exactly the independently
-    derived ORACLE_GROUP_NESTED decomposition):
-
-    - level 1: the single-level scan core finds every UNIT start
-      (prefix ok, k >= 1 chunks, suffix ok) with its greedy k —
-      SKIP TO NEXT semantics (past_last=False) so every candidate
-      start is kept;
-    - level 2: units chain when the next unit starts right after this
-      unit's last row; chain heads are units no unit ends before, and
-      one pointer chase per unit (the proven skip-past pattern)
-      aggregates per-match totals.
-
-    ``all_rows`` (round 10): ALL ROWS PER MATCH emission — a match's
-    span [start, end) is fully consumed, so the rows expand with one
-    repeat/arange pass and classify by their own predicate; FINAL
-    measures broadcast by emission id.
-
-    Rows whose predicates OVERLAP (any pair of variables true on one
-    row) break the greedy-unit argument — the partition then runs the
-    per-segment NFA instead (identical output, differential-tested).
-    """
-    import numpy as np
-    import pandas as pd
-
-    from flink_cep_examples_spark.operators.cep_batch import (
-        _needs_src,
-        _null_safe_agg_cast,
-        _prepare,
-        _PRED_PREFIX,
-        _TS_COL,
-        all_rows_output_schema,
-        output_schema,
-    )
-
-    spec.validate()
-    if all_rows:
-        if not fast_nested_chain_all_rows_applicable(spec, df):
-            raise ValueError(
-                "pattern shape not compilable (nested chain all-rows)"
-            )
-    elif not fast_nested_chain_applicable(spec):
-        raise ValueError("pattern shape not compilable (nested chain)")
-
-    spans = sorted(spec.loop_groups)
-    n_vars = len(spec.variables)
-    outer = (0, n_vars - 1)
-    inner = spans[0] if spans[1] == outer else spans[1]
-    gs, ge = inner
-    s = gs
-    L = ge - gs + 1
-    f = n_vars - ge - 1
-    data_cols = list(df.columns)
-    prepared = _prepare(df, spec, all_rows)
-    out_schema = (
-        all_rows_output_schema(df, spec) if all_rows
-        else output_schema(df, spec)
-    )
-    key_cols = list(spec.key_cols)
-    tiebreak = spec.tiebreak_col
-    measure_list = list(spec.measures)
-    subset_map = dict(spec.subsets)
-    var_pos = {v.name: i for i, v in enumerate(spec.variables)}
-    var_names = [v.name for v in spec.variables]
-    excluded = [v.excluded for v in spec.variables]
-    out_names = [fld.name for fld in out_schema.fields]
-    nfa_scan = batch_scan(spec, out_schema)
-
-    sorted_p = sort_by_key(prepared, key_cols, [_TS_COL, tiebreak])
-
-    def scan_partition(batches):
-        chunks = [c for c in batches if len(c)]
-        if not chunks:
-            return
-        pdf = (
-            pd.concat(chunks, ignore_index=True)
-            if len(chunks) > 1
-            else chunks[0]
-        )
-        n = len(pdf)
-        p = [
-            pdf[f"{_PRED_PREFIX}{i}"].to_numpy(dtype=bool)
-            for i in range(n_vars)
-        ]
-        src_arrays = {
-            m.src: pdf[m.src].to_numpy()
-            for m in measure_list
-            if _needs_src(m)
-        }
-        key_arrays = {kc: pdf[kc].to_numpy() for kc in key_cols}
-
-        overlap = False
-        for i in range(n_vars):
-            for j in range(i + 1, n_vars):
-                if (p[i] & p[j]).any():
-                    overlap = True
-                    break
-            if overlap:
-                break
-        if overlap:
-            # NFA fallback, per key segment (rare: classifier-style
-            # patterns have disjoint predicates by construction)
-            out = nfa_scan(pdf, group_bounds(pdf, key_cols))
-            if len(out):
-                yield out
-            return
-
-        scanned = _chain_scan_starts(
-            pdf, key_cols, n_vars, s, L, f, ge, 1, False,
-            within_us=None,
-        )
-        if scanned is None:
-            return
-        ustarts, uk, seg_id, _g, _b = scanned
-        # unit lengths and next-start pointers; (segment, position)
-        # encoding so adjacency never leaks across key segments
-        ulen = s + uk * L + f
-        unxt = ustarts + ulen
-        useg = seg_id[ustarts]
-        enc_start = useg * np.int64(n) + ustarts
-        enc_end = np.sort(useg * np.int64(n) + unxt)
-        idx = np.searchsorted(enc_end, enc_start)
-        has_pred = (idx < len(enc_end)) & (
-            enc_end[np.minimum(idx, len(enc_end) - 1)] == enc_start
-        )
-        start_of = {int(e): i for i, e in enumerate(enc_start)}
-        heads = np.flatnonzero(~has_pred)
-        if not len(heads):
-            return
-        cols = {} if all_rows else {kc: [] for kc in key_cols}
-        for m in measure_list:
-            cols[m.name] = []
-        if not all_rows:
-            cols["tag"] = []
-        em_r0: list[int] = []  # all-rows: per-emission span + ordinal
-        em_end: list[int] = []
-        em_mn: list[int] = []
-        # walk each head's unit chain. WITHIN (round 9, dead-unit
-        # retry fixed round 10): the deadline caps the whole OUTER
-        # match span — a unit joins the current match iff its last row
-        # is < start + within; the unit that crosses the deadline ends
-        # the match (the NFA prunes the run there and its held longest
-        # completion emits) and itself starts the NEXT match, exactly
-        # SKIP PAST LAST resumption. Under disjoint predicates units
-        # are rigid (a chunk row can never be a suffix row), so the
-        # deadline's only freedom is the unit COUNT — no inner-k/
-        # outer-count interdependence. A unit that exceeds the
-        # deadline from its OWN start consumes nothing: the NFA
-        # retries at the next ROW, and the next viable attempt is the
-        # next candidate start in ustarts (past_last=False keeps every
-        # pair-suffix start, which may lie INSIDE the dead unit) —
-        # cutoff therefore advances only on EMISSION, never past rows
-        # a dead unit failed to consume.
-        within_us = (
-            int(spec.within.total_seconds() * 1_000_000)
-            if spec.within is not None
-            else None
-        )
-        ts_k = (
-            pdf[_TS_COL].to_numpy(dtype=np.int64)
-            if within_us is not None
-            else None
-        )
-        emissions: list[tuple[int, int, int, int, int]] = []
-        cutoff = -1  # SKIP PAST LAST: a head inside an emitted span
-        cutoff_seg = -1  # is a consumed partial — heads are ascending
-        n_cand = len(ustarts)
-        for h in heads:
-            i: int | None = int(h)
-            seg = int(useg[i])
-            if seg == cutoff_seg and int(ustarts[i]) < cutoff:
-                continue
-            while i is not None:
-                first_u = i
-                t0 = int(ts_k[int(ustarts[i])]) if ts_k is not None else 0
-                total_pairs = 0
-                n_units = 0
-                last_u = i
-                cur: int | None = i
-                while cur is not None:
-                    if ts_k is not None and (
-                        int(ts_k[int(unxt[cur]) - 1]) - t0 >= within_us
-                    ):
-                        break  # unit crosses the deadline: match ends
-                    total_pairs += int(uk[cur])
-                    n_units += 1
-                    last_u = cur
-                    cur = start_of.get(int(useg[cur]) * n + int(unxt[cur]))
-                if n_units:
-                    emissions.append(
-                        (seg, first_u, last_u, total_pairs, n_units)
-                    )
-                    cutoff = int(unxt[last_u])
-                    cutoff_seg = seg
-                    i = cur  # deadline-cut unit starts the next match
-                else:
-                    # the unit alone exceeds the deadline from its own
-                    # start row — nothing completes and nothing is
-                    # consumed; retry at the next candidate start in
-                    # this segment (ustarts ascends, so i+1 is the
-                    # NFA's next viable row — possibly a pair-suffix
-                    # of this very unit)
-                    j = i + 1
-                    i = j if j < n_cand and int(useg[j]) == seg else None
-        if not emissions:
-            return
-        mn_per_seg: dict[int, int] = {}
-        for seg, first_u, last_u, total_pairs, n_units in emissions:
-            r0 = int(ustarts[first_u])
-            rl = int(ustarts[last_u])
-            kl = int(uk[last_u])
-            mn_per_seg[seg] = mn_per_seg.get(seg, 0) + 1
-
-            def var_span(v: str):
-                """(first_idx, last_idx, count) for one variable."""
-                vi = var_pos[v]
-                if vi < s:  # unit prefix var
-                    return r0 + vi, rl + vi, n_units
-                if vi > ge:  # unit suffix var
-                    off = vi - ge - 1
-                    return (
-                        r0 + s + int(uk[first_u]) * L + off,
-                        rl + s + kl * L + off,
-                        n_units,
-                    )
-                j = vi - s  # inner body var
-                return (
-                    r0 + s + j,
-                    rl + s + (kl - 1) * L + j,
-                    total_pairs,
-                )
-
-            if all_rows:
-                em_r0.append(r0)
-                em_end.append(rl + s + kl * L + f)
-                em_mn.append(mn_per_seg[seg])
-            else:
-                for kc in key_cols:
-                    cols[kc].append(key_arrays[kc][r0])
-            for m in measure_list:
-                if all_rows and m.running and m.fn != "match_number":
-                    # round 12: per-row series computed at emission —
-                    # placeholder keeps the per-match arrays aligned
-                    cols[m.name].append(None)
-                    continue
-                if m.fn == "match_number":
-                    cols[m.name].append(mn_per_seg[seg])
-                    continue
-                if m.fn == "classifier":
-                    cols[m.name].append(spec.variables[-1].name)
-                    continue
-                comps = subset_map.get(m.var, (m.var,))
-                if m.fn in AGG_FNS:
-                    # FINAL aggregate over classified rows (round 10):
-                    # the var's rows are the span rows where its own
-                    # predicate holds; the reductions are the SAME
-                    # pandas ops the NFA tier's evaluator uses, so the
-                    # tiers agree to the bit even on floats
-                    end = rl + s + kl * L + f
-                    parts = [
-                        src_arrays[m.src][r0:end][
-                            p[var_pos[c]][r0:end]
-                        ]
-                        for c in comps
-                    ]
-                    ser = pd.Series(
-                        np.concatenate(parts)
-                        if len(parts) > 1
-                        else parts[0]
-                    )
-                    nn = int(ser.count())
-                    if m.fn == "count_col":
-                        cols[m.name].append(nn)
-                    elif nn == 0:
-                        cols[m.name].append(None)
-                    elif m.fn == "sum":
-                        cols[m.name].append(ser.sum())
-                    elif m.fn == "avg":
-                        cols[m.name].append(float(ser.mean()))
-                    elif m.fn == "min":
-                        cols[m.name].append(ser.min())
-                    else:
-                        cols[m.name].append(ser.max())
-                    continue
-                triples = [var_span(c) for c in comps]
-                if m.fn == "count":
-                    cols[m.name].append(sum(t[2] for t in triples))
-                elif m.fn == "first":
-                    cols[m.name].append(
-                        src_arrays[m.src][min(t[0] for t in triples)]
-                    )
-                else:
-                    cols[m.name].append(
-                        src_arrays[m.src][max(t[1] for t in triples)]
-                    )
-            if not all_rows:
-                cols["tag"].append(MATCH_TAG)
-        if not all_rows:
-            out = pd.DataFrame(cols, columns=out_names)
-            _null_safe_agg_cast(out, measure_list, out_schema)
-            yield out
-            return
-        # ALL ROWS (round 10): a match consumes exactly [r0, end), so
-        # rows expand with one repeat/arange pass; classifier = the
-        # row's own variable (disjoint predicates), exclusions drop
-        starts_a = np.asarray(em_r0, dtype=np.int64)
-        ends_a = np.asarray(em_end, dtype=np.int64)
-        lens = ends_a - starts_a
-        n_em = len(starts_a)
-        eidx = np.repeat(np.arange(n_em), lens)
-        row_idx = (
-            np.arange(int(lens.sum()), dtype=np.int64)
-            - np.repeat(np.cumsum(lens) - lens, lens)
-            + np.repeat(starts_a, lens)
-        )
-        rv = np.empty(len(row_idx), dtype=object)
-        keep = np.ones(len(row_idx), dtype=bool)
-        for i in range(n_vars):
-            mask = p[i][row_idx]
-            rv[mask] = var_names[i]
-            if excluded[i]:
-                keep &= ~mask
-        # RUNNING series (round 12): segmented per-match series over
-        # the expanded rows, PRE-keep so {- -} rows advance state —
-        # the islands-kernel motifs keyed by the emission id
-        run_cols: dict[str, tuple] = {}
-        for m in measure_list:
-            if not m.running or m.fn == "match_number":
-                continue
-            if m.fn == "classifier":
-                run_cols[m.name] = (rv, None)
-                continue
-            comps = set(subset_map.get(m.var, (m.var,)))
-            ismem = np.zeros(len(row_idx), dtype=bool)
-            for i in range(n_vars):
-                if var_names[i] in comps:
-                    ismem |= p[i][row_idx]
-            if m.fn == "count":
-                run = (
-                    pd.Series(ismem.astype(np.int64))
-                    .groupby(eidx)
-                    .cumsum()
-                    .to_numpy()
-                )
-                run_cols[m.name] = (run, None)
-                continue
-            vraw = src_arrays[m.src][row_idx]
-            if m.fn in ("first", "last"):
-                ar = np.arange(len(ismem), dtype=np.float64)
-                ser = pd.Series(np.where(ismem, ar, np.nan))
-                g = ser.groupby(eidx)
-                idxp = (
-                    (g.cummax() if m.fn == "last" else g.cummin())
-                    .groupby(eidx)
-                    .ffill()
-                    .to_numpy()
-                )
-                has = ~np.isnan(idxp)
-                gat = vraw[np.where(has, idxp, 0).astype(np.int64)]
-                run_cols[m.name] = (gat, ~has)
-                continue
-            notna = ~pd.isna(vraw)
-            hit = ismem & notna
-            nvr = (
-                pd.Series(hit.astype(np.int64))
-                .groupby(eidx)
-                .cumsum()
-                .to_numpy()
-            )
-            if m.fn == "count_col":
-                run_cols[m.name] = (nvr, None)
-            elif m.fn in ("min", "max"):
-                ser = pd.Series(
-                    np.where(hit, vraw, np.nan), dtype="float64"
-                )
-                g = ser.groupby(eidx)
-                run = (
-                    (g.cummax() if m.fn == "max" else g.cummin())
-                    .groupby(eidx)
-                    .ffill()
-                    .to_numpy()
-                )
-                run_cols[m.name] = (run, nvr == 0)
-            else:  # sum / avg
-                contrib = np.where(hit, vraw, 0).astype(np.float64)
-                rsum = (
-                    pd.Series(contrib).groupby(eidx).cumsum().to_numpy()
-                )
-                if m.fn == "sum":
-                    run_cols[m.name] = (rsum, nvr == 0)
-                else:
-                    run_cols[m.name] = (
-                        rsum / np.maximum(nvr, 1),
-                        nvr == 0,
-                    )
-        emit_idx = row_idx[keep]
-        emit_eid = eidx[keep]
-        if not len(emit_idx):
-            return
-        data_arrays = {c: pdf[c].to_numpy() for c in data_cols}
-        out_cols: dict[str, object] = {}
-        for c in data_cols:
-            out_cols[c] = data_arrays[c][emit_idx]
-        out_cols["classifier"] = rv[keep]
-        out_cols["match_seq"] = (
-            np.asarray(em_mn, dtype=np.int64)[emit_eid] - 1
-        )
-        for m in measure_list:
-            if m.name in run_cols:
-                vals, nmask = run_cols[m.name]
-                v = np.asarray(vals)[keep]
-                if nmask is None:
-                    out_cols[m.name] = v
-                else:
-                    ser = pd.Series(v)
-                    ser[np.asarray(nmask)[keep]] = None
-                    out_cols[m.name] = ser.to_numpy()
-            else:
-                out_cols[m.name] = np.asarray(
-                    cols[m.name], dtype=object
-                )[emit_eid]
-        out = pd.DataFrame(out_cols, columns=out_names)
-        _null_safe_agg_cast(out, measure_list, out_schema)
-        yield out
-
-    return sorted_p.mapInPandas(scan_partition, out_schema)
-
-
-def match_pattern_fast_nested_chain_all_rows(
-    df: DataFrame, spec: PatternSpec
-) -> DataFrame:
-    """ALL ROWS PER MATCH on the two-level nested chain kernel — see
-    :func:`match_pattern_fast_nested_chain` (``all_rows=True``)."""
-    return match_pattern_fast_nested_chain(df, spec, all_rows=True)
-
-
-def fast_nested3_chain_applicable(spec) -> bool:
-    """True for the vectorizable THREE-level nested shape (round 10,
-    closing VERDICT r9's one perf-weak item): ``PATTERN (((P1..Ps
-    (X1..XL)+ S1..Sf)+ T1..Tg)+)`` — an OUTER unbounded group spanning
-    the whole pattern whose body is a MID unbounded group starting at
-    position 0 (the two-level unit shape: prefix + inner group +
-    suffix, f >= 1) followed by g >= 1 suffix variables delimiting
-    outer iterations. Same derivation constraints as the two-level
-    kernel (LONGEST, ONE ROW, SKIP PAST LAST, no timeouts/branches/
-    permute), same first/last/count measure surface, same RUNTIME
-    predicate-disjointness requirement with per-segment NFA fallback.
-    ``WITHIN`` composes exactly as at depth 2 (superunits are rigid;
-    the deadline truncates the superunit count, a dead superunit
-    retries at the next candidate start — round-10 semantics)."""
-    if not isinstance(spec, PatternSpec) or spec.derivation != "longest":
-        return False
-    if spec.permute or spec.emit_timeouts or spec.rows_per_match != "one":
-        return False
-    if getattr(spec, "loop_branches", ()):
-        return False
-    if spec.after_match != SKIP_PAST_LAST_EVENT:
-        return False
-    if len(spec.loop_groups) != 3:
-        return False
-    n = len(spec.variables)
-    outer = (0, n - 1)
-    if outer not in spec.loop_groups:
-        return False
-    inner, mid = sorted(
-        (g for g in spec.loop_groups if g != outer),
-        key=lambda gp: gp[1] - gp[0],
-    )
-    if mid[0] != 0 or mid[1] >= n - 1:
-        return False  # need >= 1 suffix var to delimit superunits
-    if inner[0] < mid[0] or inner[1] >= mid[1]:
-        return False  # need >= 1 suffix var to delimit units
-    return _chain_vars_measures_ok(spec)
-
-
-def match_pattern_fast_nested3_chain(
-    df: DataFrame, spec: PatternSpec
-) -> DataFrame:
-    """THREE-LEVEL chain kernel for nested unbounded groups (round 10;
-    see :func:`fast_nested3_chain_applicable`) — the two-level kernel's
-    motif one level up, exactly as the depth-2 derivation predicted
-    (ORACLE_GROUP_NESTED3 is the independently derived closed form):
-
-    - level 1: the shared scan core finds every UNIT start (prefix ok,
-      k >= 1 inner chunks, unit suffix ok) with its greedy k —
-      past_last=False keeps every pair-suffix candidate;
-    - level 2: units chain when adjacent (same pointer structure as
-      the depth-2 kernel); under disjoint predicates the MID group is
-      rigid — a unit row can never be a T row — so each candidate
-      start determines a unique maximal unit chain, and a SUPERUNIT is
-      a chain whose terminal is followed immediately by the g T rows;
-    - level 3: superunits chain when the next candidate superunit
-      starts right after this one's last T row; chain heads emit one
-      match per maximal run (SKIP PAST LAST), with ``WITHIN``
-      truncating the superunit count and dead superunits retrying at
-      the next candidate start (the round-10 per-row NFA semantics).
-
-    Rows whose predicates OVERLAP anywhere fall back to the
-    per-segment NFA (identical output, differential-tested)."""
-    import numpy as np
-    import pandas as pd
-
-    from flink_cep_examples_spark.operators.cep_batch import (
-        _needs_src,
-        _null_safe_agg_cast,
-        _prepare,
-        _PRED_PREFIX,
-        _TS_COL,
-        output_schema,
-    )
-
-    spec.validate()
-    if not fast_nested3_chain_applicable(spec):
-        raise ValueError("pattern shape not compilable (nested3 chain)")
-
-    n_vars = len(spec.variables)
-    outer = (0, n_vars - 1)
-    inner, mid = sorted(
-        (gp for gp in spec.loop_groups if gp != outer),
-        key=lambda gp: gp[1] - gp[0],
-    )
-    gs, ge = inner
-    s = gs
-    L = ge - gs + 1
-    m_end = mid[1]
-    f = m_end - ge  # unit-suffix width (inside the mid body)
-    g2 = n_vars - 1 - m_end  # superunit-suffix (T) width
-    prepared = _prepare(df, spec)
-    out_schema = output_schema(df, spec)
-    key_cols = list(spec.key_cols)
-    tiebreak = spec.tiebreak_col
-    measure_list = list(spec.measures)
-    subset_map = dict(spec.subsets)
-    var_pos = {v.name: i for i, v in enumerate(spec.variables)}
-    out_names = [fld.name for fld in out_schema.fields]
-    nfa_scan = batch_scan(spec, out_schema)
-
-    sorted_p = sort_by_key(prepared, key_cols, [_TS_COL, tiebreak])
-
-    def scan_partition(batches):
-        chunks = [c for c in batches if len(c)]
-        if not chunks:
-            return
-        pdf = (
-            pd.concat(chunks, ignore_index=True)
-            if len(chunks) > 1
-            else chunks[0]
-        )
-        n = len(pdf)
-        p = [
-            pdf[f"{_PRED_PREFIX}{i}"].to_numpy(dtype=bool)
-            for i in range(n_vars)
-        ]
-        src_arrays = {
-            m.src: pdf[m.src].to_numpy()
-            for m in measure_list
-            if _needs_src(m)
-        }
-        key_arrays = {kc: pdf[kc].to_numpy() for kc in key_cols}
-
-        overlap = False
-        for i in range(n_vars):
-            for j in range(i + 1, n_vars):
-                if (p[i] & p[j]).any():
-                    overlap = True
-                    break
-            if overlap:
-                break
-        if overlap:
-            out = nfa_scan(pdf, group_bounds(pdf, key_cols))
-            if len(out):
-                yield out
-            return
-
-        scanned = _chain_scan_starts(
-            pdf, key_cols, n_vars, s, L, f, ge, 1, False,
-            within_us=None,
-        )
-        if scanned is None:
-            return
-        ustarts, uk, seg_id, _g, _b = scanned
-        nu = len(ustarts)
-        ulen = s + uk * L + f
-        unxt = ustarts + ulen
-        useg = seg_id[ustarts]
-        start_of = {
-            int(sg) * n + int(st): i
-            for i, (sg, st) in enumerate(zip(useg, ustarts))
-        }
-        # unit chains: terminal + suffix sums per candidate start
-        # (reverse pass — a unit's successor has a larger start, so
-        # its terminal is already known)
-        term = np.empty(nu, dtype=np.int64)
-        cpairs = np.empty(nu, dtype=np.int64)
-        cunits = np.empty(nu, dtype=np.int64)
-        for i in range(nu - 1, -1, -1):
-            nx = start_of.get(int(useg[i]) * n + int(unxt[i]))
-            if nx is None:
-                term[i] = i
-                cpairs[i] = uk[i]
-                cunits[i] = 1
-            else:
-                term[i] = term[nx]
-                cpairs[i] = uk[i] + cpairs[nx]
-                cunits[i] = 1 + cunits[nx]
-        # T (superunit suffix) validity at its first row, segment-safe
-        seg_rows = np.flatnonzero(
-            np.r_[True, seg_id[1:] != seg_id[:-1]]
-        )
-        seg_len = np.diff(np.append(seg_rows, n))
-        rows_left = seg_len[seg_id] - (
-            np.arange(n, dtype=np.int64) - seg_rows[seg_id]
-        )
-        t2_ok = p[m_end + 1].copy()
-        for j in range(1, g2):
-            t2_ok[: n - j] &= p[m_end + 1 + j][j:]
-            t2_ok[n - j :] = False
-        t2_ok &= rows_left >= g2
-        tt = unxt[term]  # T start row per candidate
-        tt_c = np.minimum(tt, n - 1)
-        su_ok = (tt < n) & t2_ok[tt_c] & (seg_id[tt_c] == useg)
-        su_end = tt + g2  # one past the last T row
-        cand = np.flatnonzero(su_ok)
-        if not len(cand):
-            return
-        enc_start_c = useg[cand] * np.int64(n) + ustarts[cand]
-        enc_end_c = np.sort(useg[cand] * np.int64(n) + su_end[cand])
-        idx = np.searchsorted(enc_end_c, enc_start_c)
-        has_pred = (idx < len(enc_end_c)) & (
-            enc_end_c[np.minimum(idx, len(enc_end_c) - 1)]
-            == enc_start_c
-        )
-        su_of = {int(e): int(u) for e, u in zip(enc_start_c, cand)}
-        pos_of = {int(u): pi for pi, u in enumerate(cand)}
-        heads = cand[~has_pred]
-        if not len(heads):
-            return
-        cols = {kc: [] for kc in key_cols}
-        for m in measure_list:
-            cols[m.name] = []
-        cols["tag"] = []
-        # head walk — identical structure to the depth-2 kernel with
-        # superunits as the chain elements: WITHIN caps the outer span
-        # (a superunit joins iff its last T row is < start + within),
-        # the deadline-cut superunit starts the next match, a DEAD
-        # superunit (own span >= within) consumes nothing and retries
-        # at the next candidate start (pair-suffix and unit-suffix
-        # starts are all candidates), and cutoff advances only on
-        # emission.
-        within_us = (
-            int(spec.within.total_seconds() * 1_000_000)
-            if spec.within is not None
-            else None
-        )
-        ts_k = (
-            pdf[_TS_COL].to_numpy(dtype=np.int64)
-            if within_us is not None
-            else None
-        )
-        emissions: list[tuple[int, int, int, int, int, int]] = []
-        cutoff = -1
-        cutoff_seg = -1
-        n_cand = len(cand)
-        for h in heads:
-            i: int | None = int(h)
-            seg = int(useg[i])
-            if seg == cutoff_seg and int(ustarts[i]) < cutoff:
-                continue
-            while i is not None:
-                first_su = i
-                t0 = int(ts_k[int(ustarts[i])]) if ts_k is not None else 0
-                tot_pairs = 0
-                tot_units = 0
-                n_su = 0
-                last_su = i
-                cur: int | None = i
-                while cur is not None:
-                    if ts_k is not None and (
-                        int(ts_k[int(su_end[cur]) - 1]) - t0 >= within_us
-                    ):
-                        break
-                    tot_pairs += int(cpairs[cur])
-                    tot_units += int(cunits[cur])
-                    n_su += 1
-                    last_su = cur
-                    cur = su_of.get(
-                        int(useg[cur]) * n + int(su_end[cur])
-                    )
-                if n_su:
-                    emissions.append(
-                        (seg, first_su, last_su,
-                         tot_pairs, tot_units, n_su)
-                    )
-                    cutoff = int(su_end[last_su])
-                    cutoff_seg = seg
-                    i = cur
-                else:
-                    pi = pos_of[i] + 1
-                    i = (
-                        int(cand[pi])
-                        if pi < n_cand and int(useg[cand[pi]]) == seg
-                        else None
-                    )
-        if not emissions:
-            return
-        mn_per_seg: dict[int, int] = {}
-        for seg, fsu, lsu, tot_pairs, tot_units, n_su in emissions:
-            r0 = int(ustarts[fsu])  # match start row
-            lu = int(term[lsu])  # last unit = last superunit's terminal
-            rl = int(ustarts[lu])
-            kf = int(uk[fsu])
-            kl = int(uk[lu])
-            ft = int(unxt[int(term[fsu])])  # first superunit's T start
-            lt = int(unxt[lu])  # last superunit's T start
-            mn_per_seg[seg] = mn_per_seg.get(seg, 0) + 1
-
-            def var_span(v: str):
-                """(first_idx, last_idx, count) for one variable."""
-                vi = var_pos[v]
-                if vi > m_end:  # superunit suffix (T) var
-                    off = vi - m_end - 1
-                    return ft + off, lt + off, n_su
-                if vi < s:  # unit prefix var
-                    return r0 + vi, rl + vi, tot_units
-                if vi > ge:  # unit suffix var (inside the mid body)
-                    off = vi - ge - 1
-                    return (
-                        r0 + s + kf * L + off,
-                        rl + s + kl * L + off,
-                        tot_units,
-                    )
-                j = vi - s  # inner body var
-                return (
-                    r0 + s + j,
-                    rl + s + (kl - 1) * L + j,
-                    tot_pairs,
-                )
-
-            for kc in key_cols:
-                cols[kc].append(key_arrays[kc][r0])
-            for m in measure_list:
-                if m.fn == "match_number":
-                    cols[m.name].append(mn_per_seg[seg])
-                    continue
-                if m.fn == "classifier":
-                    cols[m.name].append(spec.variables[-1].name)
-                    continue
-                comps = subset_map.get(m.var, (m.var,))
-                triples = [var_span(c) for c in comps]
-                if m.fn == "count":
-                    cols[m.name].append(sum(t[2] for t in triples))
-                elif m.fn == "first":
-                    cols[m.name].append(
-                        src_arrays[m.src][min(t[0] for t in triples)]
-                    )
-                else:
-                    cols[m.name].append(
-                        src_arrays[m.src][max(t[1] for t in triples)]
-                    )
-            cols["tag"].append(MATCH_TAG)
-        out = pd.DataFrame(cols, columns=out_names)
-        _null_safe_agg_cast(out, measure_list, out_schema)
-        yield out
-
-    return sorted_p.mapInPandas(scan_partition, out_schema)
 
 
 def _branch_islands(pdf, key_cols, geom, branches, p, var_names):
@@ -3183,209 +1288,6 @@ def _branch_islands(pdf, key_cols, geom, branches, p, var_names):
             var_first, var_last, var_count, mn)
 
 
-def fast_mixed_branch_applicable(spec) -> bool:
-    """True for the MIXED-WIDTH multi-branch group shape (round 10):
-    ``PATTERN ((B1 | B2 | ...)+)`` spanning the whole pattern with
-    branch widths that differ — the one branch-group shape the
-    stride-L chain kernel can never compile (no fixed iteration
-    length). Compiles to the BREAK-MASK ISLANDS kernel
-    (:func:`match_pattern_fast_mixed_branch`): under disjoint
-    predicates every row knows its unique (branch, offset), offset
-    adjacency forces the chunk tiling, and each maximal unbroken
-    island of branch rows is exactly one greedy SKIP-PAST-LAST match.
-    Equal-width branch groups keep the round-8 chain kernel (which
-    also handles prefix/suffix vars and WITHIN); shapes with prefix/
-    suffix vars, a deadline, or timeout emission stay on the NFA."""
-    if not isinstance(spec, PatternSpec) or spec.derivation != "longest":
-        return False
-    if spec.permute or spec.emit_timeouts or spec.rows_per_match != "one":
-        return False
-    if spec.within is not None:
-        return False
-    if spec.after_match != SKIP_PAST_LAST_EVENT:
-        return False
-    branches = getattr(spec, "loop_branches", ())
-    if len(branches) < 2 or len(spec.loop_groups) != 1:
-        return False
-    n = len(spec.variables)
-    if spec.loop_groups[0] != (0, n - 1):
-        return False  # group must span the whole pattern
-    widths = {e - s + 1 for s, e in branches}
-    if len(widths) < 2:
-        return False  # equal width: the chain kernel's shape
-    # allow_agg (round 11): FINAL aggregates compute per island over
-    # the variable's predicate-selected rows — exact because this
-    # kernel verifies predicate disjointness at runtime and falls back
-    # to the NFA per partition on overlap
-    return _chain_vars_measures_ok(spec, allow_agg=True)
-
-
-def match_pattern_fast_mixed_branch(
-    df: DataFrame, spec: PatternSpec
-) -> DataFrame:
-    """BREAK-MASK ISLANDS kernel for mixed-width multi-branch groups
-    (round 10; see :func:`fast_mixed_branch_applicable`). Derivation
-    (independent of the NFA, matching the ORACLE_GROUP_ALT_MIXED
-    closed form):
-
-    - under DISJOINT predicates a row belongs to at most one
-      (branch, offset); a branch row BREAKS the tiling when its
-      offset-(j-1) predecessor or offset-(j+1) successor is missing
-      (or crosses a key segment);
-    - within a maximal unbroken run of branch rows the chunk tiling is
-      forced (each island's first row must be an offset-0 row, every
-      interior adjacency is satisfied), so the island parses as one
-      greedy ``(B1|B2|...)+`` match and SKIP PAST LAST consumes it
-      whole — islands ARE the match set;
-    - everything is one vectorized numpy pass per partition: break
-      masks, island segmentation, per-var first/last/count via
-      ``np.minimum/maximum/add.at`` — zero per-match Python.
-
-    Rows whose predicates OVERLAP fall back to the per-segment NFA
-    (identical output, differential-tested)."""
-    import numpy as np
-    import pandas as pd
-
-    from flink_cep_examples_spark.operators.cep_batch import (
-        _needs_src,
-        _null_safe_agg_cast,
-        _prepare,
-        _PRED_PREFIX,
-        _TS_COL,
-        output_schema,
-    )
-
-    spec.validate()
-    if not fast_mixed_branch_applicable(spec):
-        raise ValueError("pattern shape not compilable (mixed branch)")
-
-    n_vars = len(spec.variables)
-    branches = sorted(spec.loop_branches)
-    #: (var_idx, prev_var_idx or -1, next_var_idx or -1) per group var
-    geom = []
-    for b_s, b_e in branches:
-        for i in range(b_s, b_e + 1):
-            geom.append(
-                (i, i - 1 if i > b_s else -1, i + 1 if i < b_e else -1)
-            )
-    prepared = _prepare(df, spec)
-    out_schema = output_schema(df, spec)
-    key_cols = list(spec.key_cols)
-    tiebreak = spec.tiebreak_col
-    measure_list = list(spec.measures)
-    subset_map = dict(spec.subsets)
-    var_names = [v.name for v in spec.variables]
-    out_names = [fld.name for fld in out_schema.fields]
-    nfa_scan = batch_scan(spec, out_schema)
-
-    sorted_p = sort_by_key(prepared, key_cols, [_TS_COL, tiebreak])
-
-    def scan_partition(batches):
-        chunks = [c for c in batches if len(c)]
-        if not chunks:
-            return
-        pdf = (
-            pd.concat(chunks, ignore_index=True)
-            if len(chunks) > 1
-            else chunks[0]
-        )
-        n = len(pdf)
-        p = [
-            pdf[f"{_PRED_PREFIX}{i}"].to_numpy(dtype=bool)
-            for i in range(n_vars)
-        ]
-        src_arrays = {
-            m.src: pdf[m.src].to_numpy()
-            for m in measure_list
-            if _needs_src(m)
-        }
-        key_arrays = {kc: pdf[kc].to_numpy() for kc in key_cols}
-
-        overlap = False
-        for i in range(n_vars):
-            for j in range(i + 1, n_vars):
-                if (p[i] & p[j]).any():
-                    overlap = True
-                    break
-            if overlap:
-                break
-        if overlap:
-            out = nfa_scan(pdf, group_bounds(pdf, key_cols))
-            if len(out):
-                yield out
-            return
-
-        isl = _branch_islands(pdf, key_cols, geom, branches, p, var_names)
-        if isl is None:
-            return
-        (vidx, iid, n_isl, first_row, last_row,
-         var_first, var_last, var_count, mn) = isl
-        big = np.iinfo(np.int64).max
-
-        cols: dict[str, object] = {}
-        for kc in key_cols:
-            cols[kc] = key_arrays[kc][first_row]
-        for m in measure_list:
-            if m.fn == "match_number":
-                cols[m.name] = mn
-                continue
-            if m.fn == "classifier":
-                # ONE ROW classifier = the var of the match's LAST row
-                cls = np.empty(n_isl, dtype=object)
-                for i, _pv, _nx in geom:
-                    hit = p[i][last_row]
-                    cls[hit] = var_names[i]
-                cols[m.name] = cls
-                continue
-            comps = subset_map.get(m.var, (m.var,))
-            if m.fn == "count":
-                tot = np.zeros(n_isl, dtype=np.int64)
-                for c in comps:
-                    tot += var_count[c]
-                cols[m.name] = tot
-                continue
-            if m.fn in AGG_FNS:
-                # FINAL aggregate over the island's predicate-selected
-                # rows (round 11): exact under the kernel's verified
-                # disjointness; the reductions are the SAME pandas ops
-                # the NFA evaluator uses (bit-equal tiers)
-                comp_idx = [var_names.index(c) for c in comps]
-                src = src_arrays[m.src]
-                vals = np.empty(n_isl, dtype=object)
-                for t in range(n_isl):
-                    lo = int(first_row[t])
-                    hi = int(last_row[t]) + 1
-                    sel = p[comp_idx[0]][lo:hi]
-                    for ci in comp_idx[1:]:
-                        sel = sel | p[ci][lo:hi]
-                    vals[t] = _final_agg_reduce(m.fn, src[lo:hi][sel])
-                cols[m.name] = vals
-                continue
-            if m.fn == "first":
-                idxs = np.full(n_isl, big, dtype=np.int64)
-                for c in comps:
-                    idxs = np.minimum(idxs, var_first[c])
-                has = idxs != big
-            else:  # last
-                idxs = np.full(n_isl, -1, dtype=np.int64)
-                for c in comps:
-                    idxs = np.maximum(idxs, var_last[c])
-                has = idxs >= 0
-            src = src_arrays[m.src]
-            vals = np.empty(n_isl, dtype=object)
-            safe = np.where(has, idxs, 0)
-            picked = src[safe]
-            for k in range(n_isl):
-                vals[k] = picked[k] if has[k] else m.default
-            cols[m.name] = vals
-        cols["tag"] = np.repeat(MATCH_TAG, n_isl)
-        out = pd.DataFrame(cols, columns=out_names)
-        _null_safe_agg_cast(out, measure_list, out_schema)
-        yield out
-
-    return sorted_p.mapInPandas(scan_partition, out_schema)
-
-
 def fast_branch_all_rows_applicable(spec, df=None) -> bool:
     """ALL ROWS PER MATCH on the islands kernel — ANY branch widths
     (round 10): the round-7 all-rows chain kernel rejects
@@ -3395,8 +1297,8 @@ def fast_branch_all_rows_applicable(spec, df=None) -> bool:
     islands kernel except widths may be equal. Round 12: RUNNING
     measures compile too (segmented series per island over
     predicate-classified rows; the NFA classify path measured 6.4x
-    at 10x) — SUM/AVG/MIN/MAX need a plain-numeric source, so pass
-    ``df`` for the dtype check (decimal/object keep the NFA tier)."""
+    at 10x) — SUM/AVG/MIN/MAX need an integral source
+    (:data:`_INTEGRAL`), so pass ``df`` for the dtype check."""
     if not isinstance(spec, PatternSpec) or spec.derivation != "longest":
         return False
     if spec.rows_per_match != "all":
@@ -3411,10 +1313,6 @@ def fast_branch_all_rows_applicable(spec, df=None) -> bool:
     n = len(spec.variables)
     if spec.loop_groups[0] != (0, n - 1):
         return False  # group must span the whole pattern
-    numeric = (
-        T.ByteType, T.ShortType, T.IntegerType, T.LongType,
-        T.FloatType, T.DoubleType,
-    )
     for m in spec.measures:
         if m.running and m.fn in ("sum", "avg", "min", "max"):
             if df is None:
@@ -3423,7 +1321,7 @@ def fast_branch_all_rows_applicable(spec, df=None) -> bool:
                 dt = df.schema[m.src].dataType
             except KeyError:
                 return False
-            if not isinstance(dt, numeric):
+            if not isinstance(dt, _INTEGRAL):
                 return False
     return _chain_vars_measures_ok(spec, allow_running=True)
 

@@ -2,16 +2,19 @@
 
 Every front-end picks its operator here: the SQL ``MATCH_RECOGNIZE``
 front-end, Pattern DSL users (``run_pattern(df, spec)``) and the query
-catalog. ``TIERS`` lists the compiled batch kernels of
-operators/fast_path.py in preference order; each row is
-``(name, applies(spec, df), build(df, spec))``. ``applies`` holds the
-structural check AND any data check the kernel needs before it is exact
-on this input, so no kernel runs without its checks. When no row
-applies, or the caller asks for the reference (``use_fast_path=False``),
-the one ``REFERENCE`` row serves the spec: the batch NFA operator
-(operators/cep_batch.py::match_pattern), which runs PERMUTE as the
-alternation of its orderings. A streaming ``df`` runs the one streaming
-operator (streaming/cep_stream.py).
+catalog. ``TIERS`` lists the specialised batch operators in preference
+order; each row is ``(name, applies(spec, df), build(df, spec))``.
+``applies`` holds the structural check AND any data check the operator
+needs before it is exact on this input, so none runs without its checks.
+Four rows are the compiled kernels of operators/fast_path.py (two ALL
+ROWS chain kernels, timed absence, group absence); the last, ``regex``,
+is the batch NFA operator with a C-speed ``re`` matcher
+(operators/regex_scan.py), for every shape where regex preferment is
+provably the NFA's. When no row applies, or the caller asks for the
+reference (``use_fast_path=False``), the one ``REFERENCE`` row serves
+the spec: the batch NFA operator (operators/cep_batch.py::match_pattern),
+which runs PERMUTE as the alternation of its orderings. A streaming
+``df`` runs the one streaming operator (streaming/cep_stream.py).
 """
 
 from __future__ import annotations
@@ -26,36 +29,22 @@ from flink_cep_examples_spark.operators.cep_batch import (
     rows_per_match,
 )
 from flink_cep_examples_spark.operators.fast_path import (
-    check_permute,
     fast_absence_applicable,
-    fast_alternation_applicable,
     fast_branch_all_rows_applicable,
     fast_group_absence_applicable,
-    fast_group_preds_disjoint,
     fast_loop_chain_all_rows_applicable,
-    fast_loop_chain_applicable,
-    fast_mixed_branch_applicable,
-    fast_nested3_chain_applicable,
-    fast_nested_chain_all_rows_applicable,
-    fast_nested_chain_applicable,
-    fast_positional_applicable,
-    fast_star_chain_applicable,
-    loop_chain_agg_needs_disjoint,
-    match_pattern_alternation_fast,
     match_pattern_fast_absence,
     match_pattern_fast_branch_all_rows,
     match_pattern_fast_group_absence,
-    match_pattern_fast_loop_chain,
     match_pattern_fast_loop_chain_all_rows,
-    match_pattern_fast_mixed_branch,
-    match_pattern_fast_nested3_chain,
-    match_pattern_fast_nested_chain,
-    match_pattern_fast_nested_chain_all_rows,
-    match_pattern_fast_positional,
-    match_pattern_fast_star_chain,
-    match_pattern_permute,
+)
+from flink_cep_examples_spark.operators.regex_scan import (
+    match_pattern_regex,
+    regex_plan,
 )
 from flink_cep_examples_spark.plans.pattern import (
+    NO_SKIP,
+    SKIP_TO_NEXT,
     AlternationSpec,
     PatternSpec,
     permute_to_alternation,
@@ -82,6 +71,23 @@ def _shape(spec: Spec) -> str:
     return "all_rows" if all_rows else "one_row"
 
 
+def _check_permute(spec: PatternSpec) -> None:
+    """Raise unless batch PERMUTE serves ``spec``: no PREV/NEXT, SKIP
+    TO NEXT ROW (or NO_SKIP), ONE ROW PER MATCH without timeouts."""
+    if spec.nav_cols:
+        raise NotImplementedError("PREV/NEXT navigation with PERMUTE")
+    if spec.after_match not in (SKIP_TO_NEXT, NO_SKIP):
+        raise NotImplementedError(
+            "PERMUTE supports AFTER MATCH SKIP TO NEXT ROW only (other "
+            "resumption strategies need sequential selection over "
+            "non-dense candidates — NFA alternation, not implemented)"
+        )
+    if spec.emit_timeouts or spec.rows_per_match != "one":
+        raise NotImplementedError(
+            "PERMUTE supports ONE ROW PER MATCH without timeouts"
+        )
+
+
 def _nfa(df: DataFrame, spec: Spec) -> DataFrame:
     """The NFA reference. PERMUTE runs as the alternation of its
     orderings in lexicographic order (the alternation's leftmost
@@ -89,14 +95,10 @@ def _nfa(df: DataFrame, spec: Spec) -> DataFrame:
     single-pattern output schema."""
     if _shape(spec) != "permute":
         return match_pattern(df, spec)
-    check_permute(spec)
+    _check_permute(spec)
     return match_pattern(df, permute_to_alternation(spec)).withColumn(
         "tag", F.lit(MATCH_TAG)
     )
-
-
-def _alternation(check):
-    return lambda s, df: _shape(s) == "alternation" and check(s)
 
 
 def _all_rows(check):
@@ -108,52 +110,19 @@ def _one_row(check):
     return lambda s, df: _shape(s) == "one_row" and check(s)
 
 
-def _loop_chain_applies(spec: PatternSpec, df: DataFrame) -> bool:
-    # branch-group aggregates select rows by predicate, exact only under
-    # data-verified group-predicate disjointness; on a violation the NFA
-    # classify path raises its named ambiguity reject
-    return (
-        _shape(spec) == "one_row"
-        and fast_loop_chain_applicable(spec)
-        and (
-            not loop_chain_agg_needs_disjoint(spec)
-            or fast_group_preds_disjoint(df, spec)
-        )
-    )
-
-
-#: compiled kernels, first applicable row wins
+#: specialised operators, first applicable row wins
 TIERS: tuple[Tier, ...] = (
-    # greedy (X..Y)* with a suffix: ONE chain-kernel pass instead of the
-    # lockstep coordinator of two NFAs
-    Tier("star_chain", _alternation(fast_star_chain_applicable),
-         match_pattern_fast_star_chain),
-    Tier("alternation", _alternation(fast_alternation_applicable),
-         match_pattern_alternation_fast),
-    # ALL ROWS PER MATCH: islands kernel, two-level chain, chain kernel
+    # ALL ROWS PER MATCH with RUNNING series: islands and chain kernels
     Tier("branch_all_rows", _all_rows(fast_branch_all_rows_applicable),
          match_pattern_fast_branch_all_rows),
-    Tier("nested_chain_all_rows",
-         _all_rows(fast_nested_chain_all_rows_applicable),
-         match_pattern_fast_nested_chain_all_rows),
     Tier("loop_chain_all_rows", _all_rows(fast_loop_chain_all_rows_applicable),
          match_pattern_fast_loop_chain_all_rows),
-    # ONE ROW PER MATCH
+    # timeouts and absence: partial matches a regex does not report
     Tier("absence", _one_row(fast_absence_applicable),
          match_pattern_fast_absence),
     Tier("group_absence", _one_row(fast_group_absence_applicable),
          match_pattern_fast_group_absence),
-    Tier("mixed_branch", _one_row(fast_mixed_branch_applicable),
-         match_pattern_fast_mixed_branch),
-    Tier("nested3_chain", _one_row(fast_nested3_chain_applicable),
-         match_pattern_fast_nested3_chain),
-    Tier("nested_chain", _one_row(fast_nested_chain_applicable),
-         match_pattern_fast_nested_chain),
-    Tier("loop_chain", _loop_chain_applies, match_pattern_fast_loop_chain),
-    Tier("positional", _one_row(fast_positional_applicable),
-         match_pattern_fast_positional),
-    Tier("permute", lambda s, df: _shape(s) == "permute",
-         match_pattern_permute),
+    Tier("regex", lambda s, df: regex_plan(s) is not None, match_pattern_regex),
 )
 
 #: the reference operator: every spec the kernels decline

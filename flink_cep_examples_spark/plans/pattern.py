@@ -208,11 +208,10 @@ class PatternSpec:
     #: ANY order (alternation over all orderings, preferred in
     #: lexicographic order of the listed sequence). Supported subset:
     #: once-variables, strict contiguity, ONE ROW PER MATCH, AFTER
-    #: MATCH SKIP TO NEXT ROW; other modes raise. Batch runs the window
-    #: closed form (operators/fast_path.py::match_pattern_permute), or
-    #: as the NFA reference the batch operator over
-    #: ``permute_to_alternation``; the stream runs the alternation
-    #: coordinator over ``permute_to_alternation``.
+    #: MATCH SKIP TO NEXT ROW; other modes raise. Batch runs the
+    #: alternation ``permute_to_alternation`` on the regex tier
+    #: (operators/regex_scan.py) or, as the NFA reference, on the batch
+    #: operator; the stream runs the alternation coordinator over it.
     permute: bool = False
     #: SQL:2016 ``SUBSET U = (A, B)``: union variables usable in
     #: MEASURES — U's matched rows are the union of its components'
@@ -622,7 +621,7 @@ class AlternationSpec:
     strict alternatives), strategies SKIP PAST LAST ROW / SKIP TO NEXT
     ROW / NO_SKIP, no timeout channel, no trailing absence variables,
     no SUBSET/PERMUTE inside an alternative. Batch runs the lockstep
-    coordinator (or the compiled TO-NEXT closed form); streaming runs
+    coordinator (or the regex tier, operators/regex_scan.py); streaming runs
     the same coordination core per key in the bucketed state store
     (streaming/cep_stream.py::match_pattern_stream, the one stream
     operator for both spec kinds; the same measures as a single
@@ -1121,12 +1120,11 @@ def permute_to_alternation(spec: PatternSpec) -> AlternationSpec:
     alternation: one alternative per ordering of the listed variables,
     generated in lexicographic order of the listed sequence — which is
     exactly the alternation coordinator's leftmost-alternative
-    preference, so same-row completions bind lexicographically, like
-    the batch closed form (operators/fast_path.py::
-    match_pattern_permute). Used by the streaming tier (the lockstep
-    coordinator already runs per key in the bucketed state store, so
-    PERMUTE on a stream needs no new machinery) and by the batch NFA
-    reference (operators/planner.py)."""
+    preference, so same-row completions bind lexicographically. Used
+    by the batch regex tier (operators/regex_scan.py), the streaming
+    tier (the lockstep coordinator already runs per key in the bucketed
+    state store, so PERMUTE on a stream needs no new machinery) and by
+    the batch NFA reference (operators/planner.py)."""
     from itertools import permutations
 
     if not spec.permute:

@@ -345,9 +345,10 @@ WHERE t2 IS NOT NULL
 
 def cep_permute_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL:2016 ``PATTERN (PERMUTE (A, B, C))`` under SKIP TO NEXT ROW
-    (round 4): any-order alternation compiled to a k²-lead window
-    closed form with lexicographic binding preference
-    (operators/fast_path.py::match_pattern_permute)."""
+    (round 4): any-order alternation over the orderings in
+    lexicographic preference, run on the regex tier
+    (operators/regex_scan.py: fixed-width alternatives, leftmost-first
+    per start)."""
     df = events_as_billing(spark, sf_dir)
     query = f"SELECT * FROM billing MATCH_RECOGNIZE ({_MR_PERMUTE_BODY}) t"
     return sql_with_match_recognize(spark, query, {"billing": df})
@@ -674,10 +675,10 @@ def skip_to_last_spec():
 
 
 def cep_skip_to_last(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The tier table picks the compiled positional tier: the dense
-    all-true fixed-width shape is pure row-ordinal arithmetic — the same
-    algebra as the DuckDB oracle below. NFA twin kept as the
-    differential."""
+    """The tier table picks the regex tier: the dense all-true
+    fixed-width shape places every row by its position, the same
+    row-ordinal algebra as the DuckDB oracle below. NFA twin kept as
+    the differential."""
     return _matches_only(
         run_pattern(events_as_billing(spark, sf_dir), skip_to_last_spec())
     )
@@ -893,9 +894,9 @@ def cep_alternation_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL:2016 top-level PATTERN alternation ``(A C | A B{2})``: after
     an alarm, either an immediate top-up (leftmost branch) or two
     consecutive non-increasing rows. Fixed-width branches under SKIP
-    TO NEXT ROW compile to the lead-window closed form
-    (operators/fast_path.py::match_pattern_alternation_fast — one
-    Exchange, zero Python); the lockstep multi-NFA coordinator
+    TO NEXT ROW run on the regex tier (operators/regex_scan.py: the
+    branches tried shortest first, so the first that matches ends
+    first); the lockstep multi-NFA coordinator
     (operators/nfa.py::scan_key_group_alternation) is the
     differential-tested general tier."""
     df = events_as_billing(spark, sf_dir)
@@ -1850,11 +1851,10 @@ def cep_group_chain_within(spark: SparkSession, sf_dir: str) -> DataFrame:
     MATCH SKIP PAST LAST ROW resumes after it, so one long chain can
     now yield SEVERAL deadline-truncated matches.
 
-    Runs on the vectorized chain kernel (round 8 —
-    operators/fast_path.py::_segment_deadline_limit adds the deadline
-    as one more per-start iteration cap: a 2n-lexsort merge count, no
-    per-key Python), closing round 7's one design-level perf gap:
-    this shape used to silently fall back to the per-key NFA tier."""
+    Runs on the regex tier (operators/regex_scan.py): the greedy
+    ``(?:xy)+`` matched from each start up to the start's deadline row,
+    so a chain that overruns the deadline backtracks to the most
+    iterations that fit."""
     from pyspark.sql import functions as F
 
     from flink_cep_examples_spark.sources.tables import load_table, spread
@@ -1964,7 +1964,7 @@ register(
     "cep_group_chain_within",
     cep_group_chain_within,
     ORACLE_GROUP_CHAIN_WITHIN,
-    # round 8: WITHIN on the chain kernel (judge item 2) — into the
+    # round 8: WITHIN on a grouped pattern (judge item 2) — into the
     # driver gate
 )
 
@@ -1993,7 +1993,7 @@ def cep_group_absence(spark: SparkSession, sf_dir: str) -> DataFrame:
     AFTER MATCH SKIP TO NEXT ROW makes starts independent, which the
     per-start closed-form oracle below exploits. Classes: event_id %
     4 → 1=X, 2=Y, 3=Z, 0=inert. Runs on the per-key NFA tier (the
-    timeout channel is inherently stateful; the chain kernels decline
+    timeout channel is inherently stateful; the regex tier declines
     emit_timeouts by design)."""
     from pyspark.sql import functions as F
 
@@ -2120,9 +2120,9 @@ def cep_group_alt_unbounded(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Classes: event_id % 5 → 1=A, 2=B, 3=C, 4=D. The measures project
     through an explicit SUBSET union (U = all four body vars) because
-    a match's first row may belong to either branch. NFA tier (branch
-    choice per iteration has no fixed stride — the chain kernels
-    decline loop_branches by design)."""
+    a match's first row may belong to either branch. Runs on the regex
+    tier (operators/regex_scan.py), each row's symbol naming its
+    branch variable."""
     from pyspark.sql import functions as F
 
     from flink_cep_examples_spark.sources.tables import load_table, spread
@@ -2448,11 +2448,10 @@ def cep_group_nested_all_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     CLASSIFIER is reconstructed from the variable predicates exactly
     like the multi-branch form (disjointness checked at runtime —
     operators/cep_batch.py::match_pattern). Classes:
-    event_id % 4 → 1=A, 2=B, 3=C. Served by the nested-chain ALL ROWS
-    kernel (operators/fast_path.py::
-    fast_nested_chain_all_rows_applicable), NFA tier as the fallback;
-    re-differential-tested (tests/test_nested_groups.py round-10
-    section)."""
+    event_id % 4 → 1=A, 2=B, 3=C. Served by the regex tier
+    (operators/regex_scan.py), a key group with a row of two predicates
+    on the NFA; re-differential-tested (tests/test_nested_groups.py
+    round-10 section)."""
     from pyspark.sql import functions as F
 
     from flink_cep_examples_spark.sources.tables import load_table, spread
@@ -2566,9 +2565,8 @@ def cep_group_nested_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     rebuilds each var's row set PER ROW from its predicate (unique
     under the runtime-checked disjointness — cep_batch._actual_spans
     classify path). Classes: event_id % 4 → 1=A, 2=B, 3=C. Served by
-    the depth-2 nested-chain kernel (fast_nested_chain_applicable
-    passes allow_agg=True since round 10), NFA tier as the overlap
-    fallback."""
+    the regex tier (operators/regex_scan.py), the NFA per key group as
+    the overlap fallback."""
     from pyspark.sql import functions as F
 
     from flink_cep_examples_spark.sources.tables import load_table, spread
@@ -2680,15 +2678,10 @@ register(
 def cep_group_alt_mixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MIXED-WIDTH alternation inside an unbounded group — ``PATTERN
     ((A | C D)+)`` (round 10): iteration length depends on the branch
-    chosen, the one branch-group shape the stride-L chain kernel can
-    never compile. Runs on the round-10 BREAK-MASK ISLANDS kernel
-    (operators/fast_path.py::match_pattern_fast_mixed_branch) when
-    predicates are runtime-disjoint: a row at branch offset j > 0
-    whose predecessor is not offset j-1 of the same branch (or whose
-    required successor is missing) BREAKS the tiling, and each maximal
-    unbroken island of branch rows is exactly one greedy match —
-    per-segment NFA fallback otherwise. Classes: event_id % 5 →
-    1=A (width 1), 3=C, 4=D (width 2)."""
+    chosen. Runs on the regex tier (operators/regex_scan.py) when
+    predicates are disjoint on a key group — one greedy ``(?:a|cd)+``
+    over the row symbols — and on the NFA per key group otherwise.
+    Classes: event_id % 5 → 1=A (width 1), 3=C, 4=D (width 2)."""
     from pyspark.sql import functions as F
 
     from flink_cep_examples_spark.sources.tables import load_table, spread
@@ -2894,9 +2887,9 @@ register(
 def cep_group_alt_mixed_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Aggregate measures over MIXED-WIDTH branch-group variables —
     ``SUM/AVG/MIN/COUNT`` over ``((A | C D)+)`` vars (round 11): the
-    break-mask islands kernel computes FINAL aggregates per island
-    over each variable's predicate-selected rows (exact under its
-    runtime disjointness check; overlap falls back to the NFA
+    regex tier matches, and the shared emission reduces each
+    variable's predicate-selected rows with numpy (exact under the
+    per-key-group disjointness check; overlap falls back to the NFA
     classify path). Reference composition: the reference's aggregate
     MEASURES clause (FlinkSqlMatchRecognizeExample.scala:57-59)
     generalized to the round-10 mixed-width branch shape.
@@ -3004,9 +2997,9 @@ def cep_group_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_nested_groups.py (per-shape Hypothesis suites incl.
     shared-end ``(A (B C)+)+`` and mid-nested ``(A (B C)+ D)+``).
 
-    Classes: event_id % 4 → 1=A, 2=B, 3=C. NFA tier (nested
-    iterations have no fixed row stride; the closed form below is a
-    TWO-LEVEL chain — a kernelization candidate). Greedy structure:
+    Classes: event_id % 4 → 1=A, 2=B, 3=C. Runs on the regex tier
+    (operators/regex_scan.py); the closed form below is a TWO-LEVEL
+    chain. Greedy structure:
     disjoint classes make each inner unit the MAXIMAL pair run plus
     its C, and the outer match the maximal run of adjacent units."""
     from pyspark.sql import functions as F
@@ -3122,9 +3115,9 @@ def cep_group_nested_within(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITHIN INTERVAL '72' HOUR`` (round 9): the deadline caps the whole
     outer match span with the engine's strict-< rule (reference
     deadline clause: FlinkSqlMatchRecognizeExample.scala:62 composed
-    with the nested-group shape). Runs on the TWO-LEVEL chain kernel
-    (operators/fast_path.py::match_pattern_fast_nested_chain) — under
-    disjoint predicates units are rigid, so the deadline only
+    with the nested-group shape). Runs on the regex tier
+    (operators/regex_scan.py) — under disjoint predicates units are
+    rigid, so the deadline only
     truncates the outer unit COUNT: the deadline-cut unit starts the
     next match (SKIP PAST LAST resumption), and a unit exceeding the
     deadline from its own start retries at its pair-suffix starts
@@ -3285,7 +3278,7 @@ register(
     "cep_group_nested_within",
     cep_group_nested_within,
     ORACLE_GROUP_NESTED_WITHIN,
-    # round 9: deadline composed with nested groups on the kernel
+    # round 9: deadline composed with nested groups
 )
 
 
@@ -3298,10 +3291,8 @@ def cep_group_nested3(spark: SparkSession, sf_dir: str) -> DataFrame:
     all-shared-end, and mid-shared-end depth-3 shapes,
     tests/test_nested_groups.py). Depth 4+ stays a named reject.
 
-    Classes: event_id % 4 → 1=A, 2=B, 3=C, 0=D. NFA tier (the
-    two-level chain kernel requires exactly two groups — a
-    three-level kernel would be the same motif one level up, left
-    until a profile demands it). Oracle: the two-level closed form
+    Classes: event_id % 4 → 1=A, 2=B, 3=C, 0=D. Runs on the regex
+    tier (operators/regex_scan.py). Oracle: the two-level closed form
     extended by one more chain level (units → mid-chains+D =
     superunits → superunit chains)."""
     from pyspark.sql import functions as F

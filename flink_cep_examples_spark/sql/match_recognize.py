@@ -1043,17 +1043,11 @@ def match_recognize(
     A streaming ``df`` dispatches to the Structured-Streaming pattern
     operator (the reference's SQL path is itself a streaming program,
     FlinkSqlMatchRecognizeExample.scala:48-70) with ``watermark_delay``
-    bounding out-of-orderness. A batch ``df`` runs the first compiled
-    tier of the tier table (operators/planner.py) whose checks pass on
-    the spec and the data, else the NFA reference; ``use_fast_path=False``
+    bounding out-of-orderness. A batch ``df`` runs the first tier of
+    the tier table (operators/planner.py) whose checks pass on the spec
+    and the data, else the NFA reference; ``use_fast_path=False``
     forces the reference. Both produce identical results
     (differential-tested).
-
-    A tier's check may run a one-off data check on ``df`` — the loop
-    chain kernel verifies on the rows that a branch group's predicates
-    are disjoint. The verdict is memoized per session, analyzed plan,
-    input file stamps (path, size, mtime) and predicates, so files
-    appended under the same path re-run the check.
     """
     spec = parse_match_recognize(body)
     updates: dict = {"emit_timeouts": emit_timeouts}

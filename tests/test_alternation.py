@@ -26,6 +26,7 @@ from flink_cep_examples_spark.plans.pattern import (
     TIMES,
 )
 from flink_cep_examples_spark.operators.cep_batch import match_pattern
+from flink_cep_examples_spark.operators.planner import choose_tier, run_pattern
 from flink_cep_examples_spark.sql.match_recognize import (
     match_recognize,
     parse_match_recognize,
@@ -225,18 +226,14 @@ def test_streaming_alternation_matches_batch(spark, sf_small, tmp_path):
 
 
 def test_alternation_fast_path_matches_coordinator(spark):
-    """The SKIP TO NEXT ROW closed form (fast_path.py::
-    match_pattern_alternation_fast) must reproduce the lockstep-NFA
-    coordinator exactly on seeded random streams — including the
-    eager-completion preference (shorter branch wins the start) and
-    classifier / match_number measures."""
+    """The tier table's SKIP TO NEXT ROW alternation (the regex tier,
+    fixed-width branches tried shortest first) must reproduce the
+    lockstep-NFA coordinator exactly on seeded random streams —
+    including the eager-completion preference (shorter branch wins the
+    start) and classifier / match_number measures."""
     import dataclasses
     import random
 
-    from flink_cep_examples_spark.operators.fast_path import (
-        fast_alternation_applicable,
-        match_pattern_alternation_fast,
-    )
     from flink_cep_examples_spark.plans.pattern import SKIP_TO_NEXT
 
     spec = AlternationSpec(
@@ -252,7 +249,6 @@ def test_alternation_fast_path_matches_coordinator(spark):
             Measure("mno", "", "", "match_number"),
         ),
     )
-    assert fast_alternation_applicable(spec)
     rng = random.Random(7)
     rows = []
     for key in range(15):
@@ -269,23 +265,21 @@ def test_alternation_fast_path_matches_coordinator(spark):
                 )
             )
     df = spark.createDataFrame(rows, _SCHEMA)
+    assert choose_tier(df, spec).name == "regex"
     slow = sorted(
         map(tuple, match_pattern(df, spec).collect())
     )
     fast = sorted(
-        map(tuple, match_pattern_alternation_fast(df, spec).collect())
+        map(tuple, run_pattern(df, spec).collect())
     )
     assert slow and slow == fast
 
 
-def test_alternation_fast_path_ineligible_shapes():
-    """PAST LAST ROW (sequential starts) and loop variables fall back
-    to the coordinator."""
-    from flink_cep_examples_spark.operators.fast_path import (
-        fast_alternation_applicable,
-    )
-
-    assert not fast_alternation_applicable(_alt_spec())  # PAST_LAST
+def test_alternation_fast_path_ineligible_shapes(spark):
+    """PAST LAST ROW over branches of different widths (a later, shorter
+    start can complete first) falls back to the coordinator."""
+    df = spark.createDataFrame([], _SCHEMA)
+    assert choose_tier(df, _alt_spec()).name == "nfa"  # PAST_LAST
 
 
 def test_dsl_alternation_helper(spark):
@@ -434,9 +428,6 @@ def test_alternation_mixed_within_falls_back_to_coordinator(spark):
     each branch's deadline actually bites."""
     import dataclasses
 
-    from flink_cep_examples_spark.operators.fast_path import (
-        fast_alternation_applicable,
-    )
     from flink_cep_examples_spark.plans.pattern import SKIP_TO_NEXT
 
     base = _alt_spec(after_match=SKIP_TO_NEXT)
@@ -452,7 +443,8 @@ def test_alternation_mixed_within_falls_back_to_coordinator(spark):
             Measure("n_d", "D", "", "count"),
         ),
     )
-    assert not fast_alternation_applicable(spec)
+    empty = spark.createDataFrame([], _SCHEMA)
+    assert choose_tier(empty, spec).name == "nfa"
     # uniform deadlines stay eligible
     uniform = AlternationSpec(
         alternatives=tuple(
@@ -461,7 +453,7 @@ def test_alternation_mixed_within_falls_back_to_coordinator(spark):
         ),
         measures=spec.measures,
     )
-    assert fast_alternation_applicable(uniform)
+    assert choose_tier(empty, uniform).name == "regex"
     # coordinator semantics: branch 1 (A C) completes first at +10 min
     # but its OWN 5-minute deadline kills it; branch 2 (A D D)
     # completes at +11 min inside ITS 1-hour deadline and must win.

@@ -1,11 +1,13 @@
-"""Differential tests for the trailing-loop-group chain kernel
-(operators/fast_path.py::match_pattern_fast_loop_chain, round 7).
+"""Differential tests for loop-group shapes on the tier table.
 
-The kernel compiles ``PATTERN (P1 .. Ps (X1 .. XL)+)`` under LONGEST
-derivation to vectorized row arithmetic; the general NFA tier
-(operators/cep_batch.py::match_pattern via the held-completion
-machinery) is the semantics reference. Both must agree bit-for-bit on
-every shape the kernel accepts — including predicate OVERLAP (a row
+ONE ROW ``PATTERN (P1 .. Ps (X1 .. XL)+ S1 .. Sf)`` under LONGEST
+derivation runs on the regex tier (operators/regex_scan.py: one greedy
+``re`` over per-row predicate symbols, rows placed by position), ALL
+ROWS on the chain kernel (operators/fast_path.py::
+match_pattern_fast_loop_chain_all_rows), group absence on its own
+kernel; the general NFA tier (operators/cep_batch.py::match_pattern via
+the held-completion machinery) is the semantics reference. Both must
+agree bit-for-bit on every shape — including predicate OVERLAP (a row
 satisfying both X and Y), where the island intuition breaks but the
 positionally-forced assignment argument still holds.
 """
@@ -20,6 +22,7 @@ import pytest
 from flink_cep_examples_spark.operators.fast_path import (
     fast_loop_chain_applicable,
 )
+from flink_cep_examples_spark.operators.planner import choose_tier
 from flink_cep_examples_spark.sql.match_recognize import (
     match_recognize,
     parse_match_recognize,
@@ -147,7 +150,7 @@ def test_fast_matches_nfa(spark, body, seed):
     )
     df = _events_df(spark, rows)
     spec = parse_match_recognize(body)
-    assert fast_loop_chain_applicable(spec), "shape must compile"
+    assert choose_tier(df, spec).name == "regex"
     f, n = _both(spark, df, body)
     assert f == n
     assert len(f) > 0, "fixture must exercise matches"
@@ -418,17 +421,13 @@ BODY_STAR = """
 
 
 def test_star_chain_fast_path_routes_and_agrees(spark):
-    """Greedy ``(X Y)*`` with a suffix compiles to the chain kernel
-    with min_iter=0 (round 7.2) instead of the 2-NFA lockstep
-    coordinator; both must agree — including k = 0 matches whose
-    loop-var measures are NULL/0."""
-    from flink_cep_examples_spark.operators.fast_path import (
-        fast_star_chain_applicable,
-    )
-
-    assert fast_star_chain_applicable(parse_match_recognize(BODY_STAR))
+    """Greedy ``(X Y)*`` with a suffix runs on the regex tier (the
+    leftmost alternation of the greedy loop branch and the empty one)
+    instead of the 2-NFA lockstep coordinator; both must agree —
+    including k = 0 matches whose loop-var measures are NULL/0."""
     for seed in (21, 22):
         df = _events_df(spark, _random_rows(seed))
+        assert choose_tier(df, parse_match_recognize(BODY_STAR)).name == "regex"
         fa, nf = _both(spark, df, BODY_STAR)
         assert fa == nf
         assert fa, f"seed {seed}: no matches — test is vacuous"
@@ -549,7 +548,7 @@ DEFINE A AS event_id IN (1, 5), B AS event_id IN (2, 6),
 def test_branches_kernel_selected(spark):
     spec = parse_match_recognize(BODY_BRANCHES)
     assert spec.loop_branches == ((0, 1), (2, 3))
-    assert fast_loop_chain_applicable(spec)
+    assert choose_tier(_events_df(spark, [(0, 0, 1)]), spec).name == "regex"
 
 
 @pytest.mark.parametrize("seed", [0, 1, 2])
@@ -1011,20 +1010,12 @@ def test_chain_kernel_aggregates_match_nfa(spark, seed):
 
 @pytest.mark.parametrize("seed", [5, 23])
 def test_chain_kernel_branch_aggregates_match_nfa(spark, seed):
-    """Aggregates over EQUAL-WIDTH branch-group vars: the kernel
-    selects body rows by the var's own predicate — exact because the
-    dispatcher verified group-predicate disjointness on the data
-    (fast_group_preds_disjoint); the NFA's classify path is the
-    differential oracle. This was the 4x-at-10x NFA-only shape
-    (cep_group_alt_agg) — now 2.2x on the kernel."""
-    from flink_cep_examples_spark.operators.fast_path import (
-        fast_group_preds_disjoint,
-        loop_chain_agg_needs_disjoint,
-    )
-
+    """Aggregates over EQUAL-WIDTH branch-group vars: the shared
+    emission selects body rows by the var's own predicate — exact
+    because the regex tier runs a key group with a row of two group
+    predicates on the NFA; the NFA's classify path is the differential
+    oracle (cep_group_alt_agg)."""
     spec = parse_match_recognize(BODY_BRANCH_AGG)
-    assert fast_loop_chain_applicable(spec)
-    assert loop_chain_agg_needs_disjoint(spec)
     rng = random.Random(seed)
     rows = [
         (u, i, rng.choice([1, 2, 3, 4, 1, 2, 3, 4, 0]))
@@ -1032,7 +1023,7 @@ def test_chain_kernel_branch_aggregates_match_nfa(spark, seed):
         for i in range(rng.randrange(50, 90))
     ]
     df = _events_df(spark, rows)
-    assert fast_group_preds_disjoint(df, spec)
+    assert choose_tier(df, spec).name == "regex"
 
     def norm(rows_):
         # NULL branch aggregates sort against ints otherwise
@@ -1051,21 +1042,16 @@ def test_chain_kernel_branch_aggregates_match_nfa(spark, seed):
 
 
 def test_chain_kernel_branch_agg_overlap_routes_to_nfa(spark):
-    """Overlapping group predicates fail the data-verified disjointness
-    gate: the dispatcher routes to the NFA tier, whose classify path
-    raises its named ambiguity reject — behavior identical to
-    pre-kernel rounds."""
-    from flink_cep_examples_spark.operators.fast_path import (
-        fast_group_preds_disjoint,
-    )
-
+    """Overlapping group predicates: the regex tier runs the key group
+    with the overlapping row on the NFA, whose classify path raises its
+    named ambiguity reject — behavior identical to pre-kernel rounds."""
     body = BODY_BRANCH_AGG.replace(
         "A AS event_id % 5 = 1", "A AS event_id % 5 IN (1, 2)"
     )
     spec = parse_match_recognize(body)
     rows = [(1, i, e) for i, e in enumerate([1, 2, 3, 4, 1, 2])]
     df = _events_df(spark, rows)
-    assert not fast_group_preds_disjoint(df, spec)
+    assert choose_tier(df, spec).name == "regex"
     out = match_recognize(df, body, tiebreak_col="event_id")
     with pytest.raises(Exception, match="pairwise-disjoint"):
         out.collect()

@@ -14,8 +14,8 @@ predicates this is exactly Python ``re`` leftmost-greedy matching of
   position (one greedy match per start, overlaps allowed).
 
 Mixed-width branches (``(A | C D)+``) exercise branch-dependent
-iteration length — the shape the stride-L chain kernels can never
-compile (fast_loop_chain_applicable rejects loop_branches).
+iteration length, which the tier table serves on the regex tier
+(operators/regex_scan.py) over the same symbols.
 """
 
 from __future__ import annotations
@@ -233,13 +233,11 @@ def test_parser_produces_loop_branches():
     assert spec.loop_groups == ((0, 3),)
     assert spec.loop_branches == ((0, 1), (2, 3))
     assert spec.derivation == "longest"
-    from flink_cep_examples_spark.operators.fast_path import (
-        fast_loop_chain_applicable,
-    )
+    from flink_cep_examples_spark.operators.regex_scan import regex_plan
 
-    # EQUAL-width branches compile to the chain kernel (OR'd body
-    # validity + leftmost branch assignment); mixed widths stay NFA
-    assert fast_loop_chain_applicable(spec)
+    # equal and mixed branch widths both run on the regex tier, as a
+    # symbol-forced shape: one greedy (?:ab|cd)+ over the row symbols
+    assert regex_plan(spec) is not None
     mixed = parse_match_recognize(
         """
         PARTITION BY id ORDER BY event_time
@@ -250,7 +248,7 @@ def test_parser_produces_loop_branches():
         """
     )
     assert mixed.loop_branches == ((0, 0), (1, 2))
-    assert not fast_loop_chain_applicable(mixed)
+    assert regex_plan(mixed) is not None
 
 
 def test_validate_guards():
@@ -532,28 +530,25 @@ DEFINE A AS event_id IN (1, 8), C AS event_id IN (3, 8),
 """
 
 
-def test_mixed_branch_kernel_selected():
-    from flink_cep_examples_spark.operators.fast_path import (
-        fast_mixed_branch_applicable,
-    )
+def test_mixed_branch_kernel_selected(spark):
+    from flink_cep_examples_spark.operators.planner import choose_tier
 
-    assert fast_mixed_branch_applicable(
-        parse_match_recognize(MIXED_BODY)
-    )
-    assert fast_mixed_branch_applicable(
-        parse_match_recognize(MIXED_BODY_W3)
-    )
-    # equal widths keep the round-8 chain kernel
+    df0 = _events_df(spark, [(0, 0, 1)])
+    assert choose_tier(df0, parse_match_recognize(MIXED_BODY)).name == "regex"
+    assert choose_tier(
+        df0, parse_match_recognize(MIXED_BODY_W3)
+    ).name == "regex"
+    # equal widths and SKIP TO NEXT ROW run on the regex tier too
     eq = parse_match_recognize(
         MIXED_BODY_W3.replace(
             "PATTERN ((A B | C D E)+)", "PATTERN ((A B | C D)+)"
         ).replace(", E AS event_id % 6 = 5", "")
     )
-    assert not fast_mixed_branch_applicable(eq)
+    assert choose_tier(df0, eq).name == "regex"
     nxt = parse_match_recognize(
         MIXED_BODY.replace("SKIP PAST LAST ROW", "SKIP TO NEXT ROW")
     )
-    assert not fast_mixed_branch_applicable(nxt)
+    assert choose_tier(df0, nxt).name == "regex"
 
 
 def _mixed_diff(spark, rows, body):
@@ -726,9 +721,7 @@ def test_mixed_branch_aggregates_match_nfa(spark, seed):
     per-island reductions over each var's predicate-selected rows —
     exact under the kernel's runtime disjointness check; the NFA
     classify path is the differential oracle."""
-    from flink_cep_examples_spark.operators.fast_path import (
-        fast_mixed_branch_applicable,
-    )
+    from flink_cep_examples_spark.operators.planner import choose_tier
     from flink_cep_examples_spark.sql.match_recognize import (
         match_recognize,
     )
@@ -743,7 +736,6 @@ def test_mixed_branch_aggregates_match_nfa(spark, seed):
     DEFINE A AS event_id % 5 = 1, C AS event_id % 5 = 3,
            D AS event_id % 5 = 4
     """
-    assert fast_mixed_branch_applicable(parse_match_recognize(body))
     import random
 
     rng = random.Random(seed * 31 + 7)
@@ -753,6 +745,7 @@ def test_mixed_branch_aggregates_match_nfa(spark, seed):
         for i in range(rng.randrange(60, 110))
     ]
     df = _events_df(spark, rows)
+    assert choose_tier(df, parse_match_recognize(body)).name == "regex"
 
     def norm(rows_):
         out = []

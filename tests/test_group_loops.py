@@ -213,14 +213,16 @@ def test_validate_rejects_optional_group_end():
         spec.validate()
 
 
-def test_loop_group_not_fast_path_eligible():
-    from flink_cep_examples_spark.operators.fast_path import (
-        _fixed_counts,
-        fast_positional_applicable,
-    )
+def test_loop_group_not_fast_path_eligible(spark):
+    """An eager loop group has no start order a leftmost search could
+    follow (operators/regex_scan.py), so the NFA serves it."""
+    from flink_cep_examples_spark.operators.planner import choose_tier
 
-    assert _fixed_counts(_XYZ) is None
-    assert not fast_positional_applicable(_XYZ)
+    df = spark.createDataFrame(
+        [], "id string, event_time timestamp, seq long, px boolean, "
+        "py boolean, pz boolean"
+    )
+    assert choose_tier(df, _XYZ).name == "nfa"
 
 
 _SCHEMA = "id string, event_time timestamp, seq long, m long"

@@ -121,21 +121,21 @@ def _dsl_leftmost_spec():
     )
 
 
-def test_leftmost_spec_flag_and_fast_path_gate():
+def test_leftmost_spec_flag_and_fast_path_gate(spark):
     spec = parse_match_recognize(_BODY_TO_NEXT)
     assert isinstance(spec, AlternationSpec)
     assert spec.derivation == "leftmost"
-    from flink_cep_examples_spark.operators.fast_path import (
-        fast_alternation_applicable,
-    )
+    from flink_cep_examples_spark.operators.planner import choose_tier
 
-    # SQL group expansions ride the closed form too (round 5): their
-    # auto-SUBSET unions resolve to constant offsets per fixed branch
-    assert fast_alternation_applicable(spec)
+    # SQL group expansions run on the regex tier: leftmost-first over
+    # the branches in listed order, auto-SUBSET unions resolved by the
+    # shared emission
+    df = _df(spark, [])
+    assert choose_tier(df, spec).name == "regex"
     dsl = _dsl_leftmost_spec()
-    assert fast_alternation_applicable(dsl)
-    # ...unless it asks for MATCH_NUMBER (emission order is
-    # held-resolution order, not a window expression)
+    assert choose_tier(df, dsl).name == "regex"
+    # MATCH_NUMBER too: the operator numbers alternation matches by
+    # (start, end, alternative) whatever the matcher
     import dataclasses
 
     from flink_cep_examples_spark.plans.pattern import Measure
@@ -143,17 +143,15 @@ def test_leftmost_spec_flag_and_fast_path_gate():
     mn = dataclasses.replace(
         dsl, measures=dsl.measures + (Measure("mn", None, None, "match_number"),)
     )
-    assert not fast_alternation_applicable(mn)
+    assert choose_tier(df, mn).name == "regex"
 
 
 def test_leftmost_differential_fast_vs_coordinator(spark):
-    """Seeded random streams: the leftmost closed form and the
+    """Seeded random streams: the tier table (the regex tier) and the
     hold-and-wait coordinator must agree exactly on the subset-free
     DSL spec."""
     from flink_cep_examples_spark.operators.cep_batch import match_pattern
-    from flink_cep_examples_spark.operators.fast_path import (
-        match_pattern_alternation_fast,
-    )
+    from flink_cep_examples_spark.operators.planner import run_pattern
 
     spec = _dsl_leftmost_spec()
     rng = random.Random(20260814)
@@ -164,7 +162,7 @@ def test_leftmost_differential_fast_vs_coordinator(spark):
         df = _df(spark, flags)
         fast = sorted(
             (r.s, r.n2)
-            for r in match_pattern_alternation_fast(df, spec).collect()
+            for r in run_pattern(df, spec).collect()
         )
         slow = sorted(
             (r.s, r.n2)

@@ -376,18 +376,19 @@ def test_order_by_second_column_is_tiebreak():
 
 
 def test_permute_alternation_compilation_matches_closed_form(spark):
-    """permute_to_alternation (the streaming path's compilation) must
-    reproduce the batch PERMUTE closed form exactly on seeded random
-    streams — orderings as alternatives in lexicographic order, the
-    coordinator's leftmost preference = the closed form's
-    lexicographic binding."""
+    """permute_to_alternation (the streaming path's compilation) run on
+    the NFA coordinator must reproduce the tier table's batch PERMUTE
+    (the regex tier) exactly on seeded random streams — orderings as
+    alternatives in lexicographic order, the coordinator's leftmost
+    preference = the lexicographic binding."""
     import random
 
     import datetime as dt
 
     from flink_cep_examples_spark.operators.cep_batch import match_pattern
-    from flink_cep_examples_spark.operators.fast_path import (
-        match_pattern_permute,
+    from flink_cep_examples_spark.operators.planner import (
+        choose_tier,
+        run_pattern,
     )
     from flink_cep_examples_spark.plans.pattern import (
         Measure,
@@ -432,9 +433,10 @@ def test_permute_alternation_compilation_matches_closed_form(spark):
         "id string, event_time timestamp, seq long, "
         "fa boolean, fb boolean, fc boolean",
     )
+    assert choose_tier(df, spec).name == "regex"
     closed = sorted(
         (r.id, r.s, r.c_seq)
-        for r in match_pattern_permute(df, spec).drop("tag").collect()
+        for r in run_pattern(df, spec).drop("tag").collect()
     )
     alt = sorted(
         (r.id, r.s, r.c_seq)

@@ -379,134 +379,3 @@ def test_abc_kernel_gate_non_complement_b(spark):
         ).collect()
     )
     assert fast2 == nfa2 == [(0, 3.0, 2)]
-
-
-def test_abc_semantics_memo_lifecycle(spark):
-    """The group-predicate disjointness memo is keyed on the live
-    session OBJECT (WeakKeyDictionary — a recycled id() can't resurrect
-    a stale verdict), and a memo hit returns the stored verdict."""
-    from flink_cep_examples_spark.operators import fast_path as fp
-
-    df = _group_df(spark)
-    spec = parse_match_recognize(_OVERLAPPING_GROUP_BODY)
-    fp._DISJOINT_MEMO.pop(spark, None)
-    assert not fp.fast_group_preds_disjoint(df, spec)  # event_id 1: D and U
-    per_sess = fp._DISJOINT_MEMO.get(spark)
-    assert per_sess and list(per_sess.values()) == [False]
-    # memo hit: poison the stored verdict and observe it read back
-    key = next(iter(per_sess))
-    per_sess[key] = True
-    try:
-        assert fp.fast_group_preds_disjoint(df, spec) is True
-    finally:
-        per_sess[key] = False
-    # entries die with their session: the weak dict holds no strong ref
-    import weakref
-
-    assert isinstance(fp._DISJOINT_MEMO, weakref.WeakKeyDictionary)
-
-
-def test_disjoint_memo_sees_appended_files(spark, tmp_path):
-    """A parquet file appended under the same directory leaves the
-    analyzed plan's hash unchanged; the memo key's input file stamps
-    change, so the check re-runs and the verdict flips."""
-    from flink_cep_examples_spark.operators import fast_path as fp
-
-    spec = parse_match_recognize(_OVERLAPPING_GROUP_BODY)
-    base = dt.datetime(2024, 1, 1)
-    schema = "user_id long, ts timestamp, event_id long, value double"
-    # event ids 2 and 3 are U rows only: disjoint on this data
-    spark.createDataFrame(
-        [(1, base, 2, 0.0), (1, base + dt.timedelta(minutes=1), 3, 1.0)],
-        schema,
-    ).write.parquet(str(tmp_path / "events"))
-    assert fp.fast_group_preds_disjoint(
-        spark.read.parquet(str(tmp_path / "events")), spec
-    )
-    # event id 5 is both a D and a U row
-    spark.createDataFrame(
-        [(1, base + dt.timedelta(minutes=2), 5, 2.0)], schema
-    ).write.mode("append").parquet(str(tmp_path / "events"))
-    assert not fp.fast_group_preds_disjoint(
-        spark.read.parquet(str(tmp_path / "events")), spec
-    )
-
-
-#: every D row (event_id % 4 = 1) is also a U row, so the group's
-#: predicates are not disjoint
-_OVERLAPPING_GROUP_BODY = """
-PARTITION BY user_id ORDER BY ts, event_id
-MEASURES COUNT(D.*) AS nd
-ONE ROW PER MATCH
-AFTER MATCH SKIP PAST LAST ROW
-PATTERN ((D U)+)
-DEFINE D AS event_id % 4 = 1, U AS event_id % 2 = 1
-"""
-
-
-def _group_df(spark):
-    base = dt.datetime(2024, 1, 1)
-    return spark.createDataFrame(
-        [
-            (1, base + dt.timedelta(minutes=i), c, float(i))
-            for i, c in enumerate((1, 2, 3, 4))
-        ],
-        "user_id long, ts timestamp, event_id long, value double",
-    )
-
-
-def test_abc_semantics_memo_non_weakrefable_session(spark):
-    """ADVICE r12 low: ``WeakKeyDictionary.get`` calls ``ref(key)``, so
-    a non-weakref-able session raised TypeError on the memo READ path
-    (only the WRITE path caught it) — the documented 'skip the memo'
-    fallback was unreachable and the query crashed instead. Pin: the
-    memoized data check falls through to the actual check for such a
-    session, at both the read and write sites."""
-    import weakref
-
-    from flink_cep_examples_spark.operators import fast_path as fp
-    from flink_cep_examples_spark.sql.match_recognize import (
-        parse_match_recognize,
-    )
-
-    class _Sess:  # __slots__ without __weakref__: not weakref-able
-        __slots__ = ()
-
-    class _Df:
-        def __init__(self, df, sess):
-            self._df = df
-            self.sparkSession = sess
-
-        @property
-        def _jdf(self):
-            return self._df._jdf
-
-        def where(self, c):
-            return self._df.where(c)
-
-        def inputFiles(self):
-            return self._df.inputFiles()
-
-    sess = _Sess()
-    with pytest.raises(TypeError):
-        weakref.ref(sess)  # the hazard this pin exists for
-
-    df = _group_df(spark)
-    spec = parse_match_recognize(_OVERLAPPING_GROUP_BODY)
-    wrapped = _Df(df, sess)
-    # overlapping predicates — check runs, memo silently skipped
-    assert fp.fast_group_preds_disjoint(wrapped, spec) is False
-    assert fp.fast_group_preds_disjoint(wrapped, spec) is False  # again
-
-    spec_g = parse_match_recognize(
-        """
-        PARTITION BY user_id ORDER BY ts, event_id
-        MEASURES COUNT(D.*) AS nd
-        ONE ROW PER MATCH
-        AFTER MATCH SKIP PAST LAST ROW
-        PATTERN ((D U)+)
-        DEFINE D AS event_id % 4 = 1, U AS event_id % 4 = 2
-        """
-    )
-    assert fp.fast_group_preds_disjoint(wrapped, spec_g) is True
-    assert fp.fast_group_preds_disjoint(wrapped, spec_g) is True

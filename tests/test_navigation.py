@@ -121,9 +121,7 @@ def test_first_last_in_define_fixed_offset_now_compiles():
 
 
 def test_nav_disables_fast_paths():
-    from flink_cep_examples_spark.operators.fast_path import (
-        fast_positional_applicable,
-    )
+    from flink_cep_examples_spark.operators.regex_scan import regex_plan
 
     spec = parse_match_recognize(
         """
@@ -138,7 +136,7 @@ def test_nav_disables_fast_paths():
         """
     )
     assert spec.nav_cols
-    assert not fast_positional_applicable(spec)
+    assert regex_plan(spec) is None
 
 
 def test_nav_dedupes_identical_references():

@@ -247,16 +247,14 @@ DEFINE A AS event_id IN (1, 5), B AS event_id IN (2, 6),
 
 
 def test_nested_kernel_selected():
-    from flink_cep_examples_spark.operators.fast_path import (
-        fast_nested_chain_applicable,
-    )
+    from flink_cep_examples_spark.operators.regex_scan import regex_plan
 
     spec = parse_match_recognize(NESTED_BODY)
-    assert fast_nested_chain_applicable(spec)
+    assert regex_plan(spec).forced  # symbol-forced regex tier shape
     nxt = parse_match_recognize(
         NESTED_BODY.replace("SKIP PAST LAST ROW", "SKIP TO NEXT ROW")
     )
-    assert not fast_nested_chain_applicable(nxt)
+    assert regex_plan(nxt).forced
 
 
 @pytest.mark.parametrize("seed", [0, 1, 2, 3])
@@ -323,9 +321,7 @@ def test_nested_within_kernel_caps(spark):
     tiers: the second unit's C at exactly start+30min is out, one
     minute earlier is in; the deadline-cut unit then starts its own
     match (SKIP PAST LAST resumption)."""
-    from flink_cep_examples_spark.operators.fast_path import (
-        fast_nested_chain_applicable,
-    )
+    from flink_cep_examples_spark.operators.regex_scan import regex_plan
 
     body = NESTED_BODY.replace(
         "PATTERN (((A B)+ C)+)",
@@ -333,7 +329,7 @@ def test_nested_within_kernel_caps(spark):
     )
     spec = parse_match_recognize(body)
     assert spec.within is not None
-    assert fast_nested_chain_applicable(spec)
+    assert regex_plan(spec) is not None
 
     rows = [
         # user 1: unit2's C lands at exactly start+30 -> run 0 expires
@@ -528,20 +524,16 @@ def _burst_rows(seed, n_users=6):
 
 
 def test_nested3_kernel_selected():
-    from flink_cep_examples_spark.operators.fast_path import (
-        fast_nested3_chain_applicable,
-        fast_nested_chain_applicable,
-    )
+    from flink_cep_examples_spark.operators.regex_scan import regex_plan
 
     spec = parse_match_recognize(NESTED3_BODY)
-    assert fast_nested3_chain_applicable(spec)
-    assert not fast_nested_chain_applicable(spec)  # 3 groups, not 2
+    assert regex_plan(spec).forced
     nxt = parse_match_recognize(
         NESTED3_BODY.replace("SKIP PAST LAST ROW", "SKIP TO NEXT ROW")
     )
-    assert not fast_nested3_chain_applicable(nxt)
+    assert regex_plan(nxt).forced
     for b in (NESTED3_BODY_PREFIX, NESTED3_BODY_TWO_T):
-        assert fast_nested3_chain_applicable(parse_match_recognize(b))
+        assert regex_plan(parse_match_recognize(b)).forced
 
 
 def _diff(spark, rows, body):
@@ -1033,15 +1025,12 @@ DEFINE A AS event_id % 4 = 1, B AS event_id % 4 = 2,
 
 
 def test_nested_all_rows_running_kernel_selected(spark):
-    """Round 12: RUNNING measures compile on the nested-chain ALL-ROWS
-    kernel (segmented per-match series; the classify path measured
-    4.8x at 10x); SUM/AVG/MIN/MAX need the numeric dtype check —
-    decimals keep the NFA tier."""
+    """RUNNING measures over nested groups run on the regex tier for
+    any source type: the shared emission folds integers and decimals
+    exactly."""
     from pyspark.sql import functions as F
 
-    from flink_cep_examples_spark.operators.fast_path import (
-        fast_nested_chain_all_rows_applicable,
-    )
+    from flink_cep_examples_spark.operators.planner import choose_tier
     from flink_cep_examples_spark.sql.match_recognize import (
         parse_match_recognize,
     )
@@ -1051,12 +1040,11 @@ def test_nested_all_rows_running_kernel_selected(spark):
         [(0, __import__("datetime").datetime(2024, 1, 1), 1)],
         "user_id long, ts timestamp, event_id long",
     )
-    assert not fast_nested_chain_all_rows_applicable(spec)  # no df
-    assert fast_nested_chain_all_rows_applicable(spec, df0)
+    assert choose_tier(df0, spec).name == "regex"
     dec = df0.withColumn(
         "event_id", F.col("event_id").cast("decimal(20,2)")
     )
-    assert not fast_nested_chain_all_rows_applicable(spec, dec)
+    assert choose_tier(dec, spec).name == "regex"
 
 
 def test_nested_all_rows_running_battery_matches_nfa(spark):

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import pytest
 
+from flink_cep_examples_spark.operators import planner
 from flink_cep_examples_spark.operators.cep_batch import match_pattern
 from flink_cep_examples_spark.operators.planner import choose_tier, run_pattern
 from flink_cep_examples_spark.plans.pattern import billing_pattern
@@ -71,11 +72,11 @@ def test_null_balance_agrees_on_every_front_end(spark, tmp_path):
 @pytest.mark.parametrize(
     "spec, tier",
     [
-        (billing_pattern(), "nfa"),
+        (billing_pattern(), "regex"),
         (billing_pattern(emit_timeouts=True), "nfa"),
         (until_pattern_spec(), "nfa"),
         (absence_spec(), "absence"),
-        (skip_to_last_spec(), "positional"),
+        (skip_to_last_spec(), "regex"),
     ],
     ids=["billing", "billing_timeouts", "until", "absence", "skip_to_last"],
 )
@@ -84,3 +85,57 @@ def test_catalog_specs_choose_their_tier(spark, sf_small, spec, tier):
     assert choose_tier(df, spec).name == tier
     assert choose_tier(df, spec, use_fast_path=False).name == "nfa"
 
+
+
+#: the tier each catalog query runs on. A check that declines would fall
+#: back to the NFA silently, at a multiple of the time, so the routing
+#: is pinned: the shapes of the retired compiled kernels (and the billing
+#: pattern without timeouts) on the regex tier, one query per kept kernel
+CATALOG_TIERS = {
+    **dict.fromkeys(
+        [
+            "cep_group_star_greedy",
+            "cep_alternation_pattern",
+            "cep_group_alternation",
+            "cep_group_greedy_range",
+            "cep_group_range_or_fallback",
+            "cep_group_nested_all_rows",
+            "cep_group_alt_mixed",
+            "cep_group_alt_mixed_agg",
+            "cep_group_nested3",
+            "cep_group_nested",
+            "cep_group_nested_agg",
+            "cep_group_nested_within",
+            "cep_group_alt_agg",
+            "cep_group_alt_unbounded",
+            "cep_group_chain_within",
+            "cep_group_longest_chain",
+            "cep_group_unbounded",
+            "cep_skip_to_last",
+            "cep_permute_pattern",
+            "cep_match_recognize",
+            "cep_alert_reactions",
+        ],
+        "regex",
+    ),
+    "cep_group_alt_all_rows_running": "branch_all_rows",
+    "cep_group_loop_all_rows_extrema": "loop_chain_all_rows",
+    "cep_absence_not_followed_by": "absence",
+    "cep_group_absence": "group_absence",
+    "cep_alerts_with_timeouts": "nfa",
+}
+
+
+@pytest.mark.parametrize("name, tier", sorted(CATALOG_TIERS.items()))
+def test_catalog_queries_choose_their_tier(spark, sf_small, monkeypatch, name, tier):
+    chosen = []
+    real = planner.choose_tier
+
+    def record(df, spec, use_fast_path=True):
+        tier = real(df, spec, use_fast_path)
+        chosen.append(tier.name)
+        return tier
+
+    monkeypatch.setattr(planner, "choose_tier", record)
+    QUERIES[name](spark, sf_small)
+    assert chosen == [tier]

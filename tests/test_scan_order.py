@@ -1,7 +1,7 @@
 """One scan order for every tier: a key's rows are scanned by
 ``(order, tiebreak)`` ascending with NULLs last
-(operators/partition_scan.py::scan_order), on the NFA and on every
-compiled kernel. A NULL tiebreak on a timestamp tie, or on a match's
+(operators/partition_scan.py::scan_order), on the NFA, the regex tier
+and every compiled kernel. A NULL tiebreak on a timestamp tie, or on a match's
 last row, must not change a compiled tier's answer."""
 
 from __future__ import annotations
@@ -107,15 +107,15 @@ def _absence() -> PatternSpec:
 @pytest.mark.parametrize(
     "make, tier, want",
     [
-        (_permute, "permute", [
+        (_permute, "regex", [
             ("j", 1, 2, "match"), ("k", 1, 2, "match"),
             ("k", 4, 3, "match"), ("k", 4, 5, "match"),
         ]),
-        (_positional, "positional", [
+        (_positional, "regex", [
             ("j", 1, 2, "match"), ("k", 1, 2, "match"),
             ("k", 3, 4, "match"), ("m", 1, 2, "match"),
         ]),
-        (_alternation, "alternation", [
+        (_alternation, "regex", [
             ("j", 1, 2, None, 1), ("j", None, None, 2, 2),
             ("k", 1, 2, None, 1), ("k", None, None, 2, 2),
             ("k", 4, 5, None, 3),

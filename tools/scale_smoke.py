@@ -78,13 +78,13 @@ SMOKE = [
     "sources_kmv_jaccard",  # round-7 KMV set-op sketch
     "events_value_quantile_hist",  # round-7 mergeable histogram quantiles
     "ann_ivfadc_topk",  # round-7 IVF-pruned PQ/ADC composite
-    "cep_group_chain_within",  # round-8 WITHIN on the chain kernel
+    "cep_group_chain_within",  # round-8 WITHIN on a loop group (regex tier)
     "cep_group_absence",  # round-8 timeout channel x loop groups (NFA)
-    "cep_group_alt_unbounded",  # round-8 multi-branch loop group (NFA)
+    "cep_group_alt_unbounded",  # round-8 multi-branch loop group (regex tier)
     "cep_group_loop_all_rows_running",  # round-8 RUNNING x loop all-rows
-    "cep_group_nested",  # round-8 nested groups (two-level chain kernel)
+    "cep_group_nested",  # round-8 nested groups (regex tier)
     "docs_bm25_topk",  # round-8 BM25 lexical retrieval (filtered explode)
-    "cep_group_nested_within",  # round-9 deadline on the nested kernel
+    "cep_group_nested_within",  # round-9 deadline on nested groups (regex tier)
     "docs_token_budget_mix",  # round-13 bucket-prefiltered budget fill
     "docs_nb_quality_classifier",  # round-13 NB quality filter
     "docs_bigram_logprob",  # round-13 interpolated bigram LM
