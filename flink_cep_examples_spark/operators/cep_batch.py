@@ -604,6 +604,10 @@ def _append_one_row(cols, key_rows, lo, measures, found, tag, numbers) -> None:
     key_rows.extend([lo] * len(found))
 
 
+def _is_datetime64(dtype) -> bool:
+    return isinstance(dtype, np.dtype) and dtype.kind == "M"
+
+
 def _batch_frame(pdf, gathered, rows, cols, measure_list, out_schema):
     """The one output frame of a batch: the ``gathered`` input columns
     taken from ``pdf`` at batch rows ``rows`` (a key group's first row,
@@ -633,6 +637,10 @@ def _batch_frame(pdf, gathered, rows, cols, measure_list, out_schema):
                          dtype=np.float64),
                 np.array([f is None or bool(f) for f in flags], dtype=bool),
             )
+        elif m.fn in ("first", "last") and _is_datetime64(pdf[m.src].dtype):
+            # a list of datetime64 scalars (None: NaT) converts at C
+            # speed at the source's dtype; pandas would infer it per value
+            data[m.name] = np.array(cols[m.name], dtype=pdf[m.src].dtype)
     out = pd.DataFrame(data, columns=[f.name for f in out_schema.fields])
     _null_safe_agg_cast(out, measure_list, out_schema)
     return out
@@ -950,10 +958,10 @@ def match_pattern(df: DataFrame, spec: Spec) -> DataFrame:
     row. It requires strict contiguity, so each variable's rows
     reconstruct from its (first, last) span; no timeouts are emitted
     (SQL has no timeout channel)."""
-    return scan_pattern(df, spec)
+    return _scan_pattern(df, spec)
 
 
-def scan_pattern(df: DataFrame, spec: Spec, match_batch=None) -> DataFrame:
+def _scan_pattern(df: DataFrame, spec: Spec, match_batch=None) -> DataFrame:
     """:func:`match_pattern`'s staging, partition scan and emission with
     the per-batch matcher ``match_batch`` (:data:`MatchBatch`; the NFA
     when None) — the one batch operator every matcher shares."""

@@ -2,11 +2,13 @@
 
 Each kernel is exact, by a derivation from the NFA semantics
 (operators/nfa.py), on the shapes its ``*_applicable`` check admits:
-the timed-absence window closed form (one hash Exchange on the key, no
-Python), the group-absence scan, whose timeouts are partial matches a
-regex does not report, and the two ALL ROWS PER MATCH chain kernels
-(loop chain, branch islands), whose RUNNING measures are segmented numpy
-series rather than the NFA operator's per-row walk. The tier table
+the window closed forms with one hash Exchange on the key and no Python
+(timed absence; positional skips over dense all-true fixed-width
+patterns, which the regex tier matches too, but only after a Python
+scan of every row), the group-absence scan, whose timeouts are partial
+matches a regex does not report, and the two ALL ROWS PER MATCH chain
+kernels (loop chain, branch islands), whose RUNNING measures are
+segmented numpy series rather than the NFA operator's per-row walk. The tier table
 (operators/planner.py) is their only dispatcher: it runs a kernel after
 its structural and data checks pass, the regex tier
 (operators/regex_scan.py) or the NFA reference otherwise. Differential
@@ -36,8 +38,12 @@ from flink_cep_examples_spark.plans.pattern import (
     ONCE,
     RELAXED,
     SKIP_PAST_LAST_EVENT,
+    SKIP_TO_FIRST,
+    SKIP_TO_LAST,
     SKIP_TO_NEXT,
     STRICT,
+    TIMES,
+    Measure,
     PatternSpec,
 )
 from flink_cep_examples_spark.schemas import MATCH_TAG, TIMEOUT_TAG
@@ -115,6 +121,147 @@ def match_pattern_fast_absence(df: DataFrame, spec: PatternSpec) -> DataFrame:
         .select(
             *keys,
             *[F.col(m.src).alias(m.name) for m in spec.measures],
+            F.lit(MATCH_TAG).alias("tag"),
+        )
+    )
+    target = output_schema(df, spec)
+    return out.select(
+        *[F.col(f.name).cast(f.dataType).alias(f.name) for f in target.fields]
+    )
+
+
+# ---------------------------------------------------------------------------
+# Positional closed form: dense fixed-length patterns under any
+# positional AFTER MATCH SKIP strategy
+# ---------------------------------------------------------------------------
+
+
+def _fixed_counts(spec: PatternSpec) -> list[int] | None:
+    """Per-variable exact row counts when every variable is fixed-width
+    (ONCE, or times(n, n) with n >= 1); None otherwise."""
+    if spec.loop_groups:
+        return None  # unbounded iterations are never fixed-width
+    counts: list[int] = []
+    for v in spec.variables:
+        if v.negated or v.until is not None or v.combinations:
+            return None
+        if v.quantifier == ONCE:
+            counts.append(1)
+        elif v.quantifier == TIMES and v.times[1] == v.times[0] >= 1:
+            counts.append(v.times[0])
+        else:
+            return None
+    return counts
+
+
+def _is_const_true(pred: str) -> bool:
+    p = pred.strip().lower()
+    while p.startswith("(") and p.endswith(")"):
+        p = p[1:-1].strip()
+    return p == "true"
+
+
+def _positional_delta(spec: PatternSpec, counts: list[int]) -> int | None:
+    """Row stride between consecutive match starts for the spec's skip
+    strategy, or None when the strategy isn't positional / the stride
+    would be 0 (SKIP TO FIRST of the begin variable — Flink raises on
+    that loop; we leave it to the NFA tier)."""
+    total = sum(counts)
+    if spec.after_match == SKIP_PAST_LAST_EVENT:
+        return total
+    if spec.after_match in (SKIP_TO_NEXT, NO_SKIP):
+        # deterministic fixed-width all-true patterns yield exactly one
+        # match per start row, so NO_SKIP coincides with SKIP TO NEXT
+        return 1
+    if spec.after_match in (SKIP_TO_FIRST, SKIP_TO_LAST):
+        i = spec.var_index(spec.skip_var)
+        start = sum(counts[:i])
+        delta = start if spec.after_match == SKIP_TO_FIRST else start + counts[i] - 1
+        return delta if delta >= 1 else None
+    return None
+
+
+def fast_positional_applicable(spec: PatternSpec) -> bool:
+    """Dense fixed-length shape: every variable fixed-width with a
+    constant-true predicate (so every row plays every role and matching
+    is pure row arithmetic), no deadline, no timeouts, one row per
+    match, and a positional skip stride >= 1. With all-true predicates
+    relaxed contiguity degenerates to strict (there is never a
+    non-matching row to skip), so both contiguities qualify."""
+    counts = _fixed_counts(spec)
+    return (
+        counts is not None
+        and not spec.loop_groups  # iterations are not fixed-length rows
+        and all(_is_const_true(v.predicate) for v in spec.variables)
+        and spec.within is None
+        and not spec.emit_timeouts
+        and spec.rows_per_match == "one"
+        and _positional_delta(spec, counts) is not None
+        and not spec.nav_cols
+        and not spec.subsets  # SUBSET vars resolve only in the NFA tier
+        and all(m.fn in ("first", "last", "count") for m in spec.measures)
+    )
+
+
+def match_pattern_fast_positional(df: DataFrame, spec: PatternSpec) -> DataFrame:
+    """Closed form for the dense fixed-length shape, provable from the
+    NFA semantics (operators/nfa.py): with all-true predicates every
+    per-key position r (0-based, (order, tiebreak) rank) starts a
+    candidate match spanning rows ``[r, r + L)`` where ``L = sum of
+    the fixed variable widths``; the one-match-per-run resumption makes
+    the accepted starts exactly ``r ≡ 0 (mod delta)`` with ``delta``
+    the skip stride (SKIP PAST LAST → L, SKIP TO NEXT → 1, SKIP TO
+    FIRST/LAST v → v's first/last row offset — e.g. ``A B{2} C SKIP TO
+    LAST B`` resumes at the penultimate row, starts 0, 2, 4, ...).
+    Variable v's rows sit at constant offsets ``[start_v, start_v +
+    count_v)``, so first/last measures are ``lead(src, offset)`` and
+    count measures are literals. One window over one hash Exchange on
+    the key, zero Python — the same row-ordinal algebra as the DuckDB
+    oracle (queries/cep.py ORACLE_SKIP_TO_LAST); the NFA tier is the
+    differential-tested fallback for everything non-dense."""
+    if not fast_positional_applicable(spec):
+        raise ValueError("pattern not eligible for the positional fast path")
+    spec.validate()
+    counts = _fixed_counts(spec)
+    delta = _positional_delta(spec, counts)
+    total = sum(counts)
+    starts = {
+        v.name: sum(counts[:i]) for i, v in enumerate(spec.variables)
+    }
+    widths = {v.name: counts[i] for i, v in enumerate(spec.variables)}
+    keys = list(spec.key_cols)
+
+    srcs = sorted(
+        {m.src for m in spec.measures if m.fn != "count"} - set(keys)
+    )
+    base = df.select(
+        *keys,
+        F.unix_micros(F.col(spec.order_col).cast(T.TimestampType())).alias("__ts"),
+        F.col(spec.tiebreak_col).alias("__tb"),
+        *srcs,
+    )
+    w_ord = Window.partitionBy(*keys).orderBy(*scan_order("__ts", "__tb"))
+
+    def measure(m: Measure):
+        if m.fn == "count":
+            return F.lit(widths[m.var]).cast("long")
+        off = starts[m.var]
+        if m.fn == "last":
+            off += widths[m.var] - 1
+        return F.col(m.src) if off == 0 else F.lead(m.src, off).over(w_ord)
+
+    r0 = F.row_number().over(w_ord) - 1
+    # the match fits iff the last row exists: lead of a non-null
+    # literal at offset L-1 — avoids a second count() window frame
+    fits = F.lead(F.lit(True), total - 1).over(w_ord).isNotNull()
+    out = (
+        base.withColumn("__r0", r0)
+        .withColumn("__fits", fits)
+        .withColumns({f"__m_{m.name}": measure(m) for m in spec.measures})
+        .filter((F.col("__r0") % F.lit(delta) == 0) & F.col("__fits"))
+        .select(
+            *keys,
+            *[F.col(f"__m_{m.name}").alias(m.name) for m in spec.measures],
             F.lit(MATCH_TAG).alias("tag"),
         )
     )

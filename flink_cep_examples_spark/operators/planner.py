@@ -6,9 +6,11 @@ catalog. ``TIERS`` lists the specialised batch operators in preference
 order; each row is ``(name, applies(spec, df), build(df, spec))``.
 ``applies`` holds the structural check AND any data check the operator
 needs before it is exact on this input, so none runs without its checks.
-Four rows are the compiled kernels of operators/fast_path.py (two ALL
-ROWS chain kernels, timed absence, group absence); the last, ``regex``,
-is the batch NFA operator with a C-speed ``re`` matcher
+Five rows are the compiled kernels of operators/fast_path.py (two ALL
+ROWS chain kernels, timed absence, group absence, and the positional
+closed form, which matches dense all-true fixed-width patterns by row
+arithmetic in one window, with no Python scan); the last, ``regex``, is
+the batch NFA operator with a C-speed ``re`` matcher
 (operators/regex_scan.py), for every shape where regex preferment is
 provably the NFA's. When no row applies, or the caller asks for the
 reference (``use_fast_path=False``), the one ``REFERENCE`` row serves
@@ -33,10 +35,12 @@ from flink_cep_examples_spark.operators.fast_path import (
     fast_branch_all_rows_applicable,
     fast_group_absence_applicable,
     fast_loop_chain_all_rows_applicable,
+    fast_positional_applicable,
     match_pattern_fast_absence,
     match_pattern_fast_branch_all_rows,
     match_pattern_fast_group_absence,
     match_pattern_fast_loop_chain_all_rows,
+    match_pattern_fast_positional,
 )
 from flink_cep_examples_spark.operators.regex_scan import (
     match_pattern_regex,
@@ -122,6 +126,9 @@ TIERS: tuple[Tier, ...] = (
          match_pattern_fast_absence),
     Tier("group_absence", _one_row(fast_group_absence_applicable),
          match_pattern_fast_group_absence),
+    # dense all-true fixed-width shapes: one window, no Python scan
+    Tier("positional", _one_row(fast_positional_applicable),
+         match_pattern_fast_positional),
     Tier("regex", lambda s, df: regex_plan(s) is not None, match_pattern_regex),
 )
 

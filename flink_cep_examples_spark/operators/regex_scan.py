@@ -84,8 +84,8 @@ from pyspark.sql import functions as F
 
 from flink_cep_examples_spark.operators.cep_batch import (
     MatchBatch,
+    _scan_pattern,
     nfa_matcher,
-    scan_pattern,
 )
 from flink_cep_examples_spark.plans.pattern import (
     NO_SKIP,
@@ -590,7 +590,7 @@ def match_pattern_regex(df: DataFrame, spec: Spec) -> DataFrame:
     """``match_pattern(df, spec)`` on the regex matcher; the tier table
     (operators/planner.py) runs it where :func:`regex_plan` applies."""
     matched = _as_matched(spec)
-    out = scan_pattern(df, matched, regex_batch(matched, regex_plan(spec)))
+    out = _scan_pattern(df, matched, regex_batch(matched, regex_plan(spec)))
     if matched is not spec:  # PERMUTE: the single-pattern output's tag
         out = out.withColumn("tag", F.lit(MATCH_TAG))
     return out

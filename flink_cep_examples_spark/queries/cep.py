@@ -675,10 +675,10 @@ def skip_to_last_spec():
 
 
 def cep_skip_to_last(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The tier table picks the regex tier: the dense all-true
-    fixed-width shape places every row by its position, the same
-    row-ordinal algebra as the DuckDB oracle below. NFA twin kept as
-    the differential."""
+    """The tier table picks the compiled positional tier: the dense
+    all-true fixed-width shape is pure row-ordinal arithmetic — the same
+    algebra as the DuckDB oracle below. NFA twin kept as the
+    differential."""
     return _matches_only(
         run_pattern(events_as_billing(spark, sf_dir), skip_to_last_spec())
     )

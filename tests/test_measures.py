@@ -379,3 +379,58 @@ def test_abc_kernel_gate_non_complement_b(spark):
         ).collect()
     )
     assert fast2 == nfa2 == [(0, 3.0, 2)]
+
+
+_INT_AGG_BODY = """
+PARTITION BY k ORDER BY ts
+MEASURES SUM(A.v) AS sa, MIN(U.v) AS lo, MAX(D.v) AS hi, AVG(C.v) AS av,
+         COUNT(U.v) AS n, SUM(U.v) AS su
+ONE ROW PER MATCH
+AFTER MATCH SKIP PAST LAST ROW
+PATTERN {pattern}
+SUBSET U = (A, D)
+DEFINE A AS p = 1, B AS p = 2, C AS p = 3, D AS p = 4
+"""
+
+
+@pytest.mark.parametrize(
+    "pattern", ["((A B | C D)+)", "(A (C D)+ B)"], ids=["classified", "strided"]
+)
+def test_integer_aggregates_equal_numpy_reduction(pattern):
+    """FINAL aggregates over an integer source with classified (branch
+    group) or strided (loop group) rows take one Python pass per match
+    (operators/cep_batch.py::_int_aggregate); over the same values as
+    float64 they take the numpy reduction. Both must agree on every NFA
+    match of random rows, SUBSET unions included."""
+    import numpy as np
+
+    from flink_cep_examples_spark.operators import cep_batch
+
+    spec = parse_match_recognize(_INT_AGG_BODY.format(pattern=pattern))
+    match = cep_batch.nfa_matcher(spec)
+    rng = np.random.default_rng(7)
+    n, checked = 60, 0
+    chunks = [(1,), (2,), (3, 4), (3, 4), (1, 2), (1, 3, 4), (3, 4, 2), (0,)]
+    for _ in range(100):
+        # row classes in chunks, so that groups iterate several times
+        p = np.concatenate(
+            [chunks[i] for i in rng.integers(0, len(chunks), n)]
+        )[:n]
+        preds = np.stack(
+            [p == int(e.split("=")[1]) for e in spec.pred_exprs]
+        )
+        matches, _, _ = match(preds, np.arange(n, dtype=np.int64))
+        v = rng.integers(-50, 50, n)
+        ints, floats = (
+            cep_batch._make_measure_eval(
+                spec.measures, spec.subsets, {"v": arr},
+                {"v": np.zeros(n, dtype=bool)},
+                loop_stride=cep_batch._loop_strides(spec),
+                classify=cep_batch._classify_preds(spec, preds),
+            )
+            for arr in (v, v.astype(np.float64))
+        )
+        for m in matches:
+            assert [f(m, 1) for _, f in ints] == [f(m, 1) for _, f in floats]
+            checked += 1
+    assert checked > 100

@@ -209,16 +209,16 @@ def test_fast_all_rows_no_phantom_match_without_within(spark):
 
 
 def test_fast_positional_matches_nfa_all_strategies(spark, sf_small):
-    """The tier table (the regex tier) and the general NFA must agree
+    """The positional closed form and the general NFA must agree
     row-for-row on the events-derived billing stream for every
     positional AFTER MATCH strategy over a dense fixed-width pattern
     (A B{2} C, all-true predicates): SKIP PAST LAST (stride 4), SKIP TO
     NEXT (stride 1), SKIP TO FIRST B (stride 1), SKIP TO LAST B
     (stride 2), and a no-loop A C shape (stride 2)."""
     from flink_cep_examples_spark.operators.cep_batch import match_pattern
-    from flink_cep_examples_spark.operators.planner import (
-        choose_tier,
-        run_pattern,
+    from flink_cep_examples_spark.operators.fast_path import (
+        fast_positional_applicable,
+        match_pattern_fast_positional,
     )
     from flink_cep_examples_spark.plans.pattern import (
         SKIP_PAST_LAST_EVENT,
@@ -267,20 +267,20 @@ def test_fast_positional_matches_nfa_all_strategies(spark, sf_small):
         ac(SKIP_TO_FIRST, "C"),
     ]
     for spec in specs:
-        assert choose_tier(df, spec).name == "regex", spec.after_match
+        assert fast_positional_applicable(spec), spec.after_match
         fast = sorted(
-            map(tuple, run_pattern(df, spec).collect())
+            map(tuple, match_pattern_fast_positional(df, spec).collect())
         )
         nfa = sorted(map(tuple, match_pattern(df, spec).collect()))
         assert fast == nfa and fast, (spec.after_match, spec.skip_var)
 
 
 def test_fast_positional_rejects_non_dense_shapes():
-    """The dense shape, real predicates, a quantified variable, a
-    deadline and a zero stride (SKIP TO FIRST of the begin variable)
-    all run on the regex tier, which needs no dense rows: one variable-
-    width element at most, the rows placed by position."""
-    from flink_cep_examples_spark.operators.regex_scan import regex_plan
+    """Real predicates, loops, deadlines, or a zero stride (SKIP TO
+    FIRST of the begin variable) must fall back to the NFA tier."""
+    from flink_cep_examples_spark.operators.fast_path import (
+        fast_positional_applicable,
+    )
     from flink_cep_examples_spark.plans.pattern import (
         SKIP_TO_FIRST,
         Pattern,
@@ -289,44 +289,43 @@ def test_fast_positional_rejects_non_dense_shapes():
     dense = (
         Pattern.begin("A").where("true").next("C").where("true")
     ).build()
-    assert regex_plan(dense) is not None
+    assert fast_positional_applicable(dense)
 
     predicated = (
         Pattern.begin("A").where("balanceAfter < 10").next("C").where("true")
     ).build()
-    assert regex_plan(predicated) is not None
+    assert not fast_positional_applicable(predicated)
 
     looping = (
         Pattern.begin("A").where("true")
         .next("B").one_or_more().where("true")
         .next("C").where("true")
     ).build()
-    assert regex_plan(looping) is not None
+    assert not fast_positional_applicable(looping)
 
     deadlined = (
         Pattern.begin("A").where("true").next("C").where("true")
         .within("1 hour")
     ).build()
-    assert regex_plan(deadlined) is not None
+    assert not fast_positional_applicable(deadlined)
 
     zero_stride = (
         Pattern.begin("A", skip=SKIP_TO_FIRST, skip_var="A")
         .where("true").next("C").where("true")
     ).build()
-    assert regex_plan(zero_stride) is not None
+    assert not fast_positional_applicable(zero_stride)
 
 
 def test_fast_positional_random_shapes_match_nfa(spark):
     """Seeded sweep over random dense fixed-width shapes: var count,
     widths, skip strategy, skip var, and measure fns all vary; the
-    tier table (the regex tier) and the NFA must agree on a small
-    synthetic stream."""
+    closed form and the NFA must agree on a small synthetic stream."""
     import random
 
     from flink_cep_examples_spark.operators.cep_batch import match_pattern
-    from flink_cep_examples_spark.operators.planner import (
-        choose_tier,
-        run_pattern,
+    from flink_cep_examples_spark.operators.fast_path import (
+        fast_positional_applicable,
+        match_pattern_fast_positional,
     )
     from flink_cep_examples_spark.plans.pattern import (
         NO_SKIP,
@@ -374,9 +373,11 @@ def test_fast_positional_random_shapes_match_nfa(spark):
             key_cols=("id",), order_col="event_time", tiebreak_col="seq",
             measures=(Measure("m", rng.choice(names), "datetime", fn),),
         )
-        assert choose_tier(df, spec).name == "regex"
+        if not fast_positional_applicable(spec):
+            # zero-stride SKIP TO FIRST <first var> — NFA-only shape
+            continue
         fast = sorted(
-            map(tuple, run_pattern(df, spec).collect())
+            map(tuple, match_pattern_fast_positional(df, spec).collect())
         )
         nfa = sorted(map(tuple, match_pattern(df, spec).collect()))
         assert fast == nfa, (names, widths, strategy, skip_var, fn)

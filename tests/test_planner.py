@@ -76,7 +76,7 @@ def test_null_balance_agrees_on_every_front_end(spark, tmp_path):
         (billing_pattern(emit_timeouts=True), "nfa"),
         (until_pattern_spec(), "nfa"),
         (absence_spec(), "absence"),
-        (skip_to_last_spec(), "regex"),
+        (skip_to_last_spec(), "positional"),
     ],
     ids=["billing", "billing_timeouts", "until", "absence", "skip_to_last"],
 )
@@ -111,13 +111,13 @@ CATALOG_TIERS = {
             "cep_group_chain_within",
             "cep_group_longest_chain",
             "cep_group_unbounded",
-            "cep_skip_to_last",
             "cep_permute_pattern",
             "cep_match_recognize",
             "cep_alert_reactions",
         ],
         "regex",
     ),
+    "cep_skip_to_last": "positional",
     "cep_group_alt_all_rows_running": "branch_all_rows",
     "cep_group_loop_all_rows_extrema": "loop_chain_all_rows",
     "cep_absence_not_followed_by": "absence",

@@ -245,3 +245,39 @@ def test_within_boundary_and_greedy_overrun(spark):
     want = [(1.0, 0, 1, 1), (1.0, 2, 3, 1), (1.0, 4, 5, 1)]
     assert sorted(map(tuple, run_pattern(df, spec).drop("tag").collect())) == want
     assert sorted(map(tuple, match_pattern(df, spec).drop("tag").collect())) == want
+
+
+def test_permute_no_skip_runs_the_nfa(spark):
+    """PERMUTE under NO_SKIP is the NFA reference's eager alternation of
+    its orderings, which emits every ordering that completes from a
+    start: over two rows that each satisfy A and B, both ``A B`` and
+    ``B A`` bind. The regex tier serves PERMUTE only under SKIP TO NEXT
+    ROW (one binding per start, the lexicographic one), so NO_SKIP runs
+    the NFA."""
+    from flink_cep_examples_spark.plans.pattern import PatternSpec, PatternVar
+
+    spec = PatternSpec(
+        variables=(PatternVar("A", "fa"), PatternVar("B", "fb")),
+        key_cols=("id",),
+        order_col="event_time",
+        after_match=NO_SKIP,
+        permute=True,
+        measures=(
+            Measure("a", "A", "seq", "first"),
+            Measure("b", "B", "seq", "first"),
+        ),
+    )
+    df = spark.createDataFrame(
+        [
+            ("k", _T0, 0, True, True),
+            ("k", _T0 + timedelta(minutes=1), 1, True, True),
+            ("k", _T0 + timedelta(minutes=2), 2, False, True),
+        ],
+        "id string, event_time timestamp, seq long, fa boolean, fb boolean",
+    )
+    assert choose_tier(df, spec).name == "nfa"
+    got = sorted(map(tuple, run_pattern(df, spec).collect()))
+    assert got == sorted(map(tuple, run_pattern(df, spec, use_fast_path=False).collect()))
+    assert got == [
+        ("k", 0, 1, "match"), ("k", 1, 0, "match"), ("k", 1, 2, "match"),
+    ]

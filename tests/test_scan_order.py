@@ -111,7 +111,7 @@ def _absence() -> PatternSpec:
             ("j", 1, 2, "match"), ("k", 1, 2, "match"),
             ("k", 4, 3, "match"), ("k", 4, 5, "match"),
         ]),
-        (_positional, "regex", [
+        (_positional, "positional", [
             ("j", 1, 2, "match"), ("k", 1, 2, "match"),
             ("k", 3, 4, "match"), ("m", 1, 2, "match"),
         ]),
